@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_SMOKE
 from wiki_mysql_spark.operators.dedup import (
     exact_duplicates,
     minhash_lsh_pairs,
@@ -1555,6 +1556,76 @@ def test_lsh_multi_table_dominates_single_table(spark):
         assert n2[qid] >= n1[qid]
     with pytest.raises(ValueError):
         lsh_topk(emb, q, k=5, n_tables=0)
+
+
+def _signatures_both_ways(df, planes_per_table, dim):
+    """(Spark, numpy) signatures of every row of ``df`` (vec_id, embedding),
+    one list per table, id-ordered."""
+    from wiki_mysql_spark.operators.similarity import (
+        _elem_type,
+        _pack_nullable_np,
+        lsh_signature,
+        lsh_signature_np,
+    )
+
+    rows = df.select(
+        "vec_id",
+        "embedding",
+        *[lsh_signature(F.col("embedding"), p).alias(f"s{t}")
+          for t, p in enumerate(planes_per_table)],
+    ).orderBy("vec_id").collect()
+    V, null_rows = _pack_nullable_np(
+        [r["embedding"] for r in rows], dim, _elem_type(df, "embedding")
+    )
+    spark_sigs = [[r[f"s{t}"] for r in rows]
+                  for t in range(len(planes_per_table))]
+    np_sigs = [lsh_signature_np(V, p, null_rows).tolist()
+               for p in planes_per_table]
+    return spark_sigs, np_sigs
+
+
+@pytest.mark.parametrize("n_planes", [8, 4])
+def test_lsh_signature_np_matches_spark_expression(spark, n_planes):
+    """The driver-side twin that plans lsh_index_query's probes must hash
+    every vector to the bucket the build's Spark expression gives, at the
+    registry's 2x8 and the benchmark's 2x4 operating points."""
+    from wiki_mysql_spark.operators.similarity import lsh_table_planes
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    tables = lsh_table_planes(64, n_planes, 2)
+    got_spark, got_np = _signatures_both_ways(emb, tables, 64)
+    assert len(got_spark[0]) == emb.count()
+    assert got_np == got_spark
+    assert len(set(got_np[0])) > 1  # the fixture spreads over buckets
+
+
+@pytest.mark.parametrize("storage", ["double", "float"])
+def test_lsh_signature_np_edge_vectors(spark, storage):
+    """Edge rows: the twin gives bucket 0 wherever the expression's dot is
+    null or <= 0 (all-zero, null vector, a null element, an exact-zero dot
+    with one plane) and sets the bit for a NaN dot, as Spark orders NaN
+    above every number. ``float`` storage takes the same widening trip."""
+    nan = float("nan")
+    planes = [[1.0, -1.0, 0.0, 0.0], [0.5, 0.25, -1.0, 2.0],
+              [-1.0, -1.0, -1.0, -1.0]]
+    rows = [
+        (0, [0.0, 0.0, 0.0, 0.0]),        # all-zero: every dot 0
+        (1, None),                        # null vector
+        (2, [1.0, None, 2.0, 3.0]),       # null element nulls every dot
+        (3, [1.0, 1.0, 0.0, 0.0]),        # exact-zero dot with plane 0
+        (4, [0.1, -0.3, 0.7, 0.2]),       # float32 storage rounds these
+        (5, [-0.1, -0.2, -0.3, -0.4]),
+        (6, [nan, 1.0, 1.0, 1.0]),        # NaN dot sets every bit
+    ]
+    df = spark.createDataFrame(
+        rows, f"vec_id long, embedding array<{storage}>"
+    )
+    got_spark, got_np = _signatures_both_ways(df, [planes], 4)
+    assert got_np == got_spark
+    sig = got_np[0]  # indexed by vec_id
+    assert sig[0] == sig[1] == sig[2] == 0
+    assert sig[3] & 1 == 0 and sig[3] != 0
+    assert sig[6] == 0b111
 
 
 def test_pq_recall_high_on_clustered_data(spark):

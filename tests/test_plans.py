@@ -12,7 +12,7 @@ from contextlib import redirect_stdout
 
 import pytest
 
-from tests.conftest import SF_CORRECTNESS
+from tests.conftest import SF_CORRECTNESS, SF_SMOKE
 from wiki_mysql_spark.queries import QUERIES
 
 
@@ -603,6 +603,200 @@ def test_lsh_index_query_scan_prunes_to_probed_buckets(spark, tmp_path):
         f"index scan read {max(parts)} bucket partitions; probed-and-"
         f"existing = {want_parts} (of {len(existing)} total)"
     )
+
+
+def _executed_nodes(plan):
+    """Every node of an EXECUTED JVM SparkPlan, descending into the AQE
+    final plan and its query stages."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        yield node
+        it = node.children().iterator()
+        while it.hasNext():
+            stack.append(it.next())
+
+
+def _jobs_of(spark, action):
+    """(action's result, ids of the Spark jobs it ran), via a job group
+    read back from the status tracker. The group id is fresh per call:
+    the tracker keeps every earlier job of a reused group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4()}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.fixture(scope="module")
+def lsh_roots(spark, tmp_path_factory):
+    """sf0.001 LSH indexes at 1 and 2 tables x 8 planes, each with two
+    tombstoned ids: {n_tables: (root, dead ids)}."""
+    from wiki_mysql_spark.operators.similarity import (
+        lsh_index_build,
+        lsh_index_delete,
+    )
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    roots = {}
+    for n_tables in (1, 2):
+        root = str(tmp_path_factory.mktemp(f"lsh{n_tables}") / "idx")
+        lsh_index_build(emb, root, dim=64, n_planes=8, n_tables=n_tables)
+        lsh_index_delete(spark, root, [5, 7, 5])
+        roots[n_tables] = (root, {5, 7})
+    return roots
+
+
+def test_lsh_index_query_five_jobs_one_shuffle(spark, lsh_roots):
+    """A persisted-index knn plans its probe on the driver: on a root with
+    tombstones one query batch runs at most 5 Spark jobs (status-store
+    count), the executed plan has exactly ONE shuffle Exchange (the top-k
+    window's, which the final distinct reuses), and the broadcast probe
+    side is a LocalTableScan — no checkpoint of the caller's frame, no
+    distinct-buckets collect, no dedup shuffle."""
+    from pyspark.sql import functions as F
+
+    from wiki_mysql_spark.operators.similarity import lsh_index_query
+
+    root, dead = lsh_roots[2]
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+
+    def knn():  # building the frame runs the query-batch collect
+        res = lsh_index_query(
+            spark, root, emb.where(F.col("vec_id") < 8), k=10, probe_bits=1)
+        return res, res.collect()
+
+    (res, rows), jobs = _jobs_of(spark, knn)
+    assert rows and not {r["neighbor_id"] for r in rows} & dead
+    assert len(jobs) <= 5, f"knn ran {len(jobs)} Spark jobs"
+
+    nodes = list(_executed_nodes(res._jdf.queryExecution().executedPlan()))
+    kinds = [n.getClass().getSimpleName() for n in nodes]
+    assert kinds.count("ShuffleExchangeExec") == 1, kinds
+    probe = [n.child().getClass().getSimpleName() for n in nodes
+             if n.getClass().getSimpleName() == "BroadcastExchangeExec"
+             and "query_id" in n.output().toString()]
+    assert probe == ["LocalTableScanExec"], probe
+    assert "WindowGroupLimitExec" in kinds
+
+
+def test_lsh_index_query_schema_empty_batch_and_width(spark, lsh_roots):
+    """The output schema (names, order, types — the caller's id type
+    included) is the one the Spark-side query path had; an empty batch
+    gives an empty result; a query vector whose width is not the header's
+    dim fails loudly instead of hashing to bucket 0."""
+    from pyspark.sql import functions as F
+
+    from wiki_mysql_spark.operators.similarity import lsh_index_query
+
+    root, _ = lsh_roots[2]
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    q = emb.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").cast("int").alias("vec_id"), "embedding"
+    )
+    want = [("query_id", "int"), ("neighbor_id", "bigint"),
+            ("cos_sim", "double"), ("rank", "bigint")]
+    res = lsh_index_query(spark, root, q, k=5, probe_bits=1)
+    assert res.dtypes == want
+    assert len(res.collect()) == 15
+    empty = lsh_index_query(spark, root, q.where(F.lit(False)), k=5)
+    assert empty.dtypes == want and empty.collect() == []
+    narrow = q.select("vec_id", F.slice("embedding", 1, 32).alias("embedding"))
+    with pytest.raises(ValueError, match="dim=64"):
+        lsh_index_query(spark, root, narrow, k=5)
+
+
+@pytest.mark.parametrize("n_tables", [1, 2])
+def test_lsh_index_query_repeated_batch_row_returns_neighbour_once(
+    spark, lsh_roots, n_tables
+):
+    """A batch repeating an identical (id, vector) row — the benchmark's
+    stream can repeat an appended id inside one batch — returns each
+    neighbour once, with the ranks of the single-row batch."""
+    from pyspark.sql import functions as F
+
+    from wiki_mysql_spark.operators.similarity import lsh_index_query
+
+    root, _ = lsh_roots[n_tables]
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    q = emb.where(F.col("vec_id") < 3)
+    once = sorted(map(tuple, lsh_index_query(
+        spark, root, q, k=10, probe_bits=1).collect()))
+    twice = sorted(map(tuple, lsh_index_query(
+        spark, root, q.unionAll(q), k=10, probe_bits=1).collect()))
+    assert twice == once
+    assert len({(r[0], r[1]) for r in once}) == len(once) == 30
+
+
+@pytest.mark.parametrize("n_tables", [1, 2])
+def test_lsh_topk_matches_groupby_row_number_reference(spark, n_tables):
+    """lsh_topk's one-path top-k (dense_rank, rank <= k, distinct) equals
+    the two-shuffle reference: max() per (query, neighbour) pair, then
+    row_number — with a repeated query row in the batch."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from wiki_mysql_spark.functions.vectors import cosine
+    from wiki_mysql_spark.operators.similarity import (
+        _lsh_corpus_side,
+        _lsh_query_side,
+        lsh_table_planes,
+        lsh_topk,
+    )
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    q = emb.where(F.col("vec_id") < 5)
+    q = q.unionAll(q.where(F.col("vec_id") == 0))
+    got = sorted(map(tuple, lsh_topk(
+        emb, q, k=5, probe_bits=1, n_tables=n_tables).collect()))
+
+    tables = lsh_table_planes(64, 8, n_tables)
+    pairs = (
+        _lsh_query_side(q, tables, 8, 1, "vec_id", "embedding")
+        .join(_lsh_corpus_side(emb, tables, "vec_id", "embedding"),
+              ["tbl", "bucket"])
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.max(cosine(F.col("qv"), F.col("cv"))).alias("raw_sim"))
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("raw_sim").desc(), F.col("neighbor_id"))
+    want = sorted(map(tuple, pairs.select(
+        "query_id", "neighbor_id",
+        (F.round("raw_sim", 6) + 0.0).alias("cos_sim"),
+        F.row_number().over(w).cast("long").alias("rank"),
+    ).where(F.col("rank") <= 5).collect()))
+    assert got == want and len(got) == 25
+
+
+def test_index_delete_tombstones_dedup_one_job(spark, tmp_path):
+    """The shared delete primitive writes ``<id_name> long`` tombstones,
+    one per distinct id: an iterable of ids is deduped on the driver and
+    written in ONE Spark job (no scan of a Python RDD, no distinct
+    shuffle); a DataFrame of ids keeps its distinct()."""
+    from wiki_mysql_spark.operators.similarity import _index_delete
+
+    path = str(tmp_path / "root")
+    _, jobs = _jobs_of(spark, lambda: _index_delete(
+        spark, path, [9, 3, 3, 9], id_name="neighbor_id"))
+    assert len(jobs) == 1
+    _index_delete(spark, path, spark.range(2).union(spark.range(2)),
+                  id_name="neighbor_id")
+    tombs = spark.read.parquet(str(tmp_path / "root" / "tombstones"))
+    assert tombs.dtypes == [("neighbor_id", "bigint")]
+    assert sorted(r[0] for r in tombs.collect()) == [0, 1, 3, 9]
 
 
 def test_index_delete_compact_and_pointer_swap(spark, tmp_path):

@@ -589,6 +589,17 @@ def lsh_table_planes(
     ]
 
 
+def lsh_probe_masks(n_planes: int, probe_bits: int) -> list[int]:
+    """The XOR masks of the one multi-probe scheme: 0 (the query's own
+    bucket) plus, at probe_bits=1, every single-bit flip. Both the Spark
+    expansion (:func:`lsh_probe_buckets`) and the driver-side probe plan of
+    :func:`lsh_index_query` apply these masks, so the two probe the same
+    buckets by construction."""
+    if probe_bits not in (0, 1):
+        raise ValueError("probe_bits: only radius 0 or 1 is implemented")
+    return [0] + ([1 << i for i in range(n_planes)] if probe_bits else [])
+
+
 def lsh_probe_buckets(
     bucket: F.Column, n_planes: int, probe_bits: int
 ) -> list[F.Column]:
@@ -596,12 +607,9 @@ def lsh_probe_buckets(
     every single-bit flip — the one multi-probe expansion :func:`lsh_topk`
     implements. Shared with scripts/ann_recall.py so scanned-row accounting
     uses the operator's own probe scheme, never a transcription of it."""
-    if probe_bits not in (0, 1):
-        raise ValueError("probe_bits: only radius 0 or 1 is implemented")
-    if not probe_bits:
-        return [bucket]
-    return [bucket] + [
-        bucket.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)
+    return [
+        bucket if m == 0 else bucket.bitwiseXOR(F.lit(m))
+        for m in lsh_probe_masks(n_planes, probe_bits)
     ]
 
 
@@ -636,6 +644,26 @@ def lsh_signature(vec: F.Column, planes: list[list[float]]) -> F.Column:
     )
 
 
+def lsh_signature_np(V, planes: list[list[float]], null_rows):
+    """numpy twin of :func:`lsh_signature` for driver-side hashing: int64
+    signatures of the rows of ``V``, the (n, dim) float64 matrix widened
+    from storage as ``_as_double`` does (:func:`pack_any_np`). The dots
+    fold through :func:`seq_dot_np`, the same IEEE op sequence as the
+    expression's ``aggregate()``, so every bit matches. ``null_rows`` marks
+    rows whose vector is null or holds a null element: the expression's
+    dots are all null there, so the bucket is 0. A NaN dot sets its bit,
+    because Spark orders NaN above every number (``NaN > 0`` is true)."""
+    import numpy as np
+
+    from wiki_mysql_spark.functions.vectors import seq_dot_np
+
+    dots = seq_dot_np(V, np.asarray(planes, dtype=np.float64))
+    bits = ((dots > 0) | np.isnan(dots)) & ~np.asarray(null_rows)[:, None]
+    return bits.astype(np.int64) @ (
+        np.int64(1) << np.arange(len(planes), dtype=np.int64)
+    )
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -667,12 +695,10 @@ def lsh_topk(
     query in ANY table — P(candidate) = 1-(1-p^planes)^L for per-plane
     collision probability p = 1-θ/π. Storage cost is L copies of the
     (id, bucket) index — the standard trade; the raw vectors are stored
-    once. With one table each corpus vector lives in exactly one bucket
-    so a (query, neighbor) pair meets at most once and no dedup is
-    needed (the single-table plan is unchanged); with L>1 a pair can
-    meet in several tables, so candidates are deduped on
-    (query_id, neighbor_id) AFTER scoring — the dedup shuffle carries
-    only (long, long, double) rows, never the vectors."""
+    once. With L>1 a (query, neighbor) pair can meet in several tables;
+    every meeting scores to the same double, so the ranked rows are
+    deduped after the top-k window without a shuffle of their own
+    (:func:`_lsh_score_rank`)."""
     # BOTH inputs get the width probe (one union job, limit 1 per side):
     # a mismatched frame on EITHER side would null-pad zip_with, NULL
     # every dot product, collapse signatures to bucket 0, and silently
@@ -704,7 +730,7 @@ def lsh_topk(
     tables = lsh_table_planes(dim, n_planes, n_tables, seed)
     c = _lsh_corpus_side(corpus, tables, id_col, vec_col)
     q = _lsh_query_side(queries, tables, n_planes, probe_bits, id_col, vec_col)
-    return _lsh_score_rank(q, c, k=k, dedup=(n_tables > 1))
+    return _lsh_score_rank(q, c, k=k)
 
 
 def _lsh_corpus_side(
@@ -741,7 +767,9 @@ def _lsh_query_side(
     vec_col: str,
 ) -> DataFrame:
     """(query_id, qv, tbl, bucket): one row per (query, table, probed
-    bucket). Shared by the inline and persisted-index query paths.
+    bucket), hashed in Spark — the query side of :func:`lsh_topk`, whose
+    corpus is hashed in Spark anyway. The persisted-index path plans its
+    probes on the driver instead (:func:`_lsh_probe_side`).
 
     The signature is computed ONCE per table in its own projection and the
     probe buckets are single-bit XORs of that column: inlining
@@ -777,9 +805,19 @@ def _lsh_query_side(
     ).select("query_id", "qv", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
 
 
-def _lsh_score_rank(q: DataFrame, c: DataFrame, *, k: int, dedup: bool) -> DataFrame:
+def _lsh_score_rank(q: DataFrame, c: DataFrame, *, k: int) -> DataFrame:
     """Bucket-join candidates, exact cosine, per-query top-k — the common
-    tail of both LSH query paths."""
+    tail of both LSH query paths, one plan for every table count.
+
+    A (query, neighbor) pair can meet more than once: in several tables,
+    or when the batch repeats an identical query row. Every meeting scores
+    to the same double (same pure expression on the same vectors), so the
+    copies tie on the whole ``(raw_sim desc, neighbor_id)`` order:
+    ``dense_rank`` gives them one rank, and a ``distinct()`` after the
+    ``rank <= k`` filter keeps one row each. The ranks equal a
+    ``row_number`` over the deduped pairs. The plan has one shuffle
+    ``Exchange`` (on query_id, which the distinct reuses), fed by Spark's
+    partial ``WindowGroupLimit`` top-k."""
     scored = (
         F.broadcast(q)
         .join(c, ["tbl", "bucket"])
@@ -790,13 +828,6 @@ def _lsh_score_rank(q: DataFrame, c: DataFrame, *, k: int, dedup: bool) -> DataF
             cosine(F.col("qv"), F.col("cv")).alias("raw_sim"),
         )
     )
-    if dedup:
-        # a pair meeting in several tables scores identically each time
-        # (same pure expression on the same vectors) — max() dedups;
-        # only (long, long, double) rows shuffle
-        scored = scored.groupBy("query_id", "neighbor_id").agg(
-            F.max("raw_sim").alias("raw_sim")
-        )
     w = Window.partitionBy("query_id").orderBy(
         F.col("raw_sim").desc(), F.col("neighbor_id")
     )
@@ -805,9 +836,10 @@ def _lsh_score_rank(q: DataFrame, c: DataFrame, *, k: int, dedup: bool) -> DataF
             "query_id",
             "neighbor_id",
             (F.round("raw_sim", 6) + 0.0).alias("cos_sim"),
-            F.row_number().over(w).cast("long").alias("rank"),
+            F.dense_rank().over(w).cast("long").alias("rank"),
         )
         .where(F.col("rank") <= k)
+        .distinct()
     )
 
 
@@ -1035,20 +1067,31 @@ def _index_delete(
     partitions WITHOUT the dead rows and retires the tombstone set — the
     standard merge-on-read delete (Iceberg/Delta delete files, minus the
     manifest). Appending is idempotent for the anti-join (duplicate
-    tombstones change nothing), so a retried delete job is safe. ``ids``
-    is a one-column DataFrame or an iterable of ids. The anti-join's
-    physical strategy is picked per-query from the tombstone set's real
-    size (:func:`_live_rows`): broadcast while it is small (the common
-    takedown/dedup case), shuffle once it outgrows the byte gate — an
-    oversized delete set cannot OOM the executors."""
-    if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame(
-            [(int(i),) for i in ids], schema=f"{id_name} long"
-        )
+    tombstones change nothing), so a retried delete job is safe. The
+    anti-join's physical strategy is picked per-query from the tombstone
+    set's real size (:func:`_live_rows`): broadcast while it is small (the
+    common takedown/dedup case), shuffle once it outgrows the byte gate —
+    an oversized delete set cannot OOM the executors.
+
+    ``ids`` is a one-column DataFrame (deduped with ``distinct()``) or an
+    iterable of ids, deduped on the driver and written from a local
+    Arrow-built frame (one write job, no scan or shuffle). Either way the
+    tombstone files hold exactly one column, ``<id_name> long``: the
+    contract :func:`_live_rows` pins when it reads them with that static
+    schema."""
+    import pyarrow as pa
+
+    if isinstance(ids, DataFrame):
+        ids = ids.select(
+            F.col(ids.columns[0]).cast("long").alias(id_name)
+        ).distinct()
     else:
-        ids = ids.select(F.col(ids.columns[0]).cast("long").alias(id_name))
+        ids = spark.createDataFrame(
+            pa.table({id_name: pa.array(sorted({int(i) for i in ids}), pa.int64())}),
+            schema=f"{id_name} long",
+        )
     tpath = _index_child(path, "tombstones")
-    ids.distinct().coalesce(1).write.mode("append").parquet(tpath)
+    ids.coalesce(1).write.mode("append").parquet(tpath)
     # the tombstone set just grew — the next _live_rows must re-probe it
     _FS_BYTES_CACHE.pop(tpath, None)
 
@@ -1433,30 +1476,30 @@ def lsh_index_query(
 ) -> DataFrame:
     """Search a PERSISTED LSH index (:func:`lsh_index_build`) without
     touching the corpus: the plane parameters load from the index header,
-    the query set's probed (table, bucket) pairs collect to the driver
-    (one tiny job over the broadcast-small query side — its size is the
-    family contract), and the bucket scan carries a LITERAL per-table
-    ``tbl = t AND bucket IN (...)`` predicate over BOTH partition columns,
-    so parquet partition pruning reads exactly the probed buckets'
-    directories — at 100 TB, ``n_tables · (1 + probe_bits·n_planes)``
-    bucket partitions per query batch instead of the whole corpus
-    (plan-pinned in tests/test_plans.py). Output is identical to
-    :func:`lsh_topk` at the same operating point."""
+    the query batch collects to the driver in one job (it is
+    broadcast-small — its size is the family contract) and the probe is
+    planned there (:func:`_lsh_probe_side`). The bucket scan carries a
+    LITERAL per-table ``tbl = t AND bucket IN (...)`` predicate over BOTH
+    partition columns, so parquet partition pruning reads exactly the
+    probed buckets' directories — at 100 TB,
+    ``n_tables · (1 + probe_bits·n_planes)`` bucket partitions per query
+    batch instead of the whole corpus (plan-pinned in
+    tests/test_plans.py). Output is identical to :func:`lsh_topk` at the
+    same operating point. A query vector whose width is not the header's
+    ``dim`` raises ValueError; a null vector hashes to bucket 0, as in
+    :func:`lsh_signature`."""
     import json
 
     meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
     dim, n_planes = int(meta["dim"]), int(meta["n_planes"])
     seed, n_tables = int(meta["seed"]), int(meta["n_tables"])
     tables = lsh_table_planes(dim, n_planes, n_tables, seed)
-    q = _lsh_query_side(
-        queries, tables, n_planes, probe_bits, id_col, vec_col
-    ).localCheckpoint(eager=False)  # reused: probed collect + bucket join
-    by_tbl: dict[int, set[int]] = {}
-    for r in q.select("tbl", "bucket").distinct().collect():
-        by_tbl.setdefault(int(r["tbl"]), set()).add(int(r["bucket"]))
+    q, by_tbl = _lsh_probe_side(
+        spark, queries, tables, probe_bits, id_col, vec_col
+    )
     pred = None
     for t, buckets in sorted(by_tbl.items()):
-        clause = (F.col("tbl") == t) & F.col("bucket").isin(sorted(buckets))
+        clause = (F.col("tbl") == t) & F.col("bucket").isin(buckets)
         pred = clause if pred is None else (pred | clause)
     if pred is None:  # empty query set: no buckets probed, empty result
         pred = F.lit(False)
@@ -1475,7 +1518,80 @@ def lsh_index_query(
     # merge-on-read deletes: tombstoned ids (lsh_index_delete) drop from
     # the candidate set here; the next compaction makes them physical
     c = _live_rows(spark, c, path, "neighbor_id")
-    return _lsh_score_rank(q, c, k=k, dedup=(n_tables > 1))
+    return _lsh_score_rank(q, c, k=k)
+
+
+def _pack_nullable_np(vecs: list, dim: int, element_type: str):
+    """``(V, null_rows)`` for :func:`lsh_signature_np` from collected
+    vectors of width ``dim``: a row that is null or holds a null element
+    is marked in ``null_rows`` and zero-filled in ``V``; the rest widen
+    from storage as :func:`pack_any_np` does."""
+    import numpy as np
+
+    from wiki_mysql_spark.functions.vectors import pack_any_np
+
+    null_rows = np.array([v is None or None in v for v in vecs], dtype=bool)
+    V = pack_any_np(
+        [[0.0] * dim if null else v for v, null in zip(vecs, null_rows)],
+        element_type,
+    ).reshape(len(vecs), dim)
+    return V, null_rows
+
+
+def _lsh_probe_side(
+    spark,
+    queries: DataFrame,
+    tables: list[list[list[float]]],
+    probe_bits: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, dict[int, list[int]]]:
+    """The persisted-index probe, planned on the driver: the query batch
+    collects in ONE job, each table's signature is hashed with
+    :func:`lsh_signature_np` (bit-identical to the build's Spark
+    expression), and the probe masks (:func:`lsh_probe_masks`) expand it.
+    Returns the ``(query_id, qv, tbl, bucket)`` rows as an Arrow-built
+    local frame (it plans as a ``LocalTableScan``, with no scan of the
+    caller's frame and no checkpoint) and the sorted probed buckets per
+    table for the partition predicate. The id and vector columns keep the
+    caller's types."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    dim, n_planes = len(tables[0][0]), len(tables[0])
+    batch_df = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    )
+    batch = batch_df.toArrow()
+    vecs = batch.column("qv").to_pylist()
+    widths = sorted({len(v) for v in vecs if v is not None} - {dim})
+    if widths:
+        raise ValueError(
+            f"lsh_index_query: index dim={dim} but query '{vec_col}' "
+            f"vectors are {', '.join(map(str, widths))}-wide"
+        )
+    V, null_rows = _pack_nullable_np(vecs, dim, _elem_type(queries, vec_col))
+    masks = np.array(lsh_probe_masks(n_planes, probe_bits), dtype=np.int64)
+    # one probe row per (table, query, mask), in that order
+    buckets = [
+        (lsh_signature_np(V, planes, null_rows)[:, None] ^ masks).ravel()
+        for planes in tables
+    ]
+    qrow = np.repeat(np.arange(len(vecs)), len(masks))  # within one table
+    probe = (
+        batch.take(np.tile(qrow, len(tables)))
+        .append_column("tbl", pa.array(
+            np.repeat(np.arange(len(tables), dtype=np.int32), qrow.size)))
+        .append_column("bucket", pa.array(np.concatenate(buckets)))
+    )
+    by_tbl = {t: sorted(set(b.tolist())) for t, b in enumerate(buckets) if b.size}
+    schema = StructType(
+        batch_df.schema.fields
+        + [StructField("tbl", IntegerType(), False),
+           StructField("bucket", LongType(), False)]
+    )
+    return spark.createDataFrame(probe, schema=schema), by_tbl
 
 
 # ---------------------------------------------------------------------------

@@ -2961,12 +2961,13 @@ def minhash_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lsh_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search the PERSISTED LSH index (`operators/similarity.py:
     lsh_index_query`): plane parameters load from the index header, the
-    query set's probed (table, bucket) pairs collect to the driver (one
-    tiny job over the broadcast-small query side), and the bucket scan
-    carries literal partition filters on BOTH partition columns — parquet
-    partition pruning reads EXACTLY the probed buckets' directories
-    (plan-pinned: the scan's numPartitions metric equals the
-    probed-and-existing bucket count, tests/test_plans.py). Output is
+    broadcast-small query set collects to the driver in one job, its
+    probed (table, bucket) pairs are hashed there with the numpy twin of
+    the build's signature, and the bucket scan carries literal partition
+    filters on BOTH partition columns — parquet partition pruning reads
+    EXACTLY the probed buckets' directories (plan-pinned: the scan's
+    numPartitions metric equals the probed-and-existing bucket count,
+    tests/test_plans.py). Output is
     identical to `ann_topk_lsh` at the same operating point (2 tables x
     8 planes x 1-bit multi-probe — the r7 frontier knee), which is what
     the shared oracle replays; the plan is the part that changed — at
