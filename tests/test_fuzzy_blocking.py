@@ -334,3 +334,22 @@ def test_triangle_count_dense_and_sparse_paths_agree(spark, monkeypatch):
         [("x", "y"), ("y", "z"), ("x", "z")], "src string, dst string"
     )
     assert tuple(triangle_count(s_edges).collect()[0]) == (3, 3, 1)
+
+
+def test_triangle_dense_domain_knob_is_clamped():
+    """SPARK_GRAFT_TRI_DENSE_DOMAIN above the bitset ceiling clamps to it."""
+    from wiki_mysql_spark.operators.graph import (
+        _TRI_DENSE_DOMAIN_MAX,
+        _tri_dense_domain,
+    )
+
+    assert _tri_dense_domain("4096") == 4096
+    assert _tri_dense_domain(str(1 << 40)) == _TRI_DENSE_DOMAIN_MAX == 1 << 20
+
+
+def test_triangle_dense_domain_knob_rejects_non_positive():
+    from wiki_mysql_spark.operators.graph import _tri_dense_domain
+
+    for raw in ("0", "-64"):
+        with pytest.raises(ValueError, match="SPARK_GRAFT_TRI_DENSE_DOMAIN"):
+            _tri_dense_domain(raw)

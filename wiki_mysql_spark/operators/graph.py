@@ -157,8 +157,24 @@ _CC_DRIVER_EDGE_ROWS = int(
 # Node-id domain bound for triangle_count's dense-regime bitset intersects:
 # ids in [0, bound) pack into bound/64 longs per node (default 4096 -> 64
 # words, 512 B/node — broadcast-small at any node count the bound allows).
-# Bigger domains take the sparse array_intersect path.
-_TRI_DENSE_DOMAIN = int(
+# Bigger domains take the sparse array_intersect path. The knob is clamped
+# to 2^20 ids (16384 words, 128 KB/node): past that the per-word aggregate
+# list and the per-node bitset stop being small.
+_TRI_DENSE_DOMAIN_MAX = 1 << 20
+
+
+def _tri_dense_domain(raw: str) -> int:
+    """Validate ``SPARK_GRAFT_TRI_DENSE_DOMAIN``: a positive int, clamped
+    to :data:`_TRI_DENSE_DOMAIN_MAX`."""
+    n = int(raw)
+    if n <= 0:
+        raise ValueError(
+            f"SPARK_GRAFT_TRI_DENSE_DOMAIN must be positive, got {raw!r}"
+        )
+    return min(n, _TRI_DENSE_DOMAIN_MAX)
+
+
+_TRI_DENSE_DOMAIN = _tri_dense_domain(
     os.environ.get("SPARK_GRAFT_TRI_DENSE_DOMAIN", "4096")
 )
 
@@ -419,7 +435,7 @@ def triangle_count(edges: DataFrame, *, src: str = "src", dst: str = "dst") -> D
         n_words = (int(st["mx"]) >> 6) + 1
         word_aggs = [
             F.expr(
-                f"bit_or(CASE WHEN CAST(hi / 64 AS INT) = {w} "
+                f"bit_or(CASE WHEN hi DIV 64 = {w} "
                 f"THEN shiftleft(1L, CAST(hi % 64 AS INT)) ELSE 0L END)"
             ).alias(f"w{w}")
             for w in range(n_words)

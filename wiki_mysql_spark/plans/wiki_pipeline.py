@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from wiki_mysql_spark.functions.cleaning import (
@@ -34,6 +34,18 @@ from wiki_mysql_spark.functions.cleaning import (
 )
 from wiki_mysql_spark.operators.ids import dense_ids
 from wiki_mysql_spark.operators.redirects import resolve_redirects
+
+# Byte bound of the staged-frame small hint: 8 MB = the tightest downstream
+# gate (redirects._SMALL_EDGES_BYTES; dense_ids' bound is 64 MB).
+_STAGED_SMALL_BYTES = 8 << 20
+# The known-stats branch sees COMPRESSED on-disk leaf bytes while the
+# downstream gates bound estimated IN-MEMORY octet lengths; parquet+zstd
+# wiki text expands ~3-5x on decode, so the hint only fires when the
+# compressed leaves are under bound/4 — a staged frame in the ambiguous
+# band (bound/4 .. bound) falls through to hint None and the gates'
+# own in-memory probes decide (the r13 advice item: a <8MB-compressed
+# frame must not smuggle a >8MB edge set into a driver collect).
+_COMPRESSION_EXPANSION = 4
 
 
 def _build_wiki_frames(
@@ -74,7 +86,20 @@ def _build_wiki_frames(
     memory-or-parquet strategy); defaults to a block-manager
     localCheckpoint. If ``pages`` carries a ``corrupt_record`` column
     (project_pages_with_corrupt), corrupt captures ride through the same
-    single materialization and come back as the ``corrupt`` frame."""
+    single materialization and come back as the ``corrupt`` frame.
+
+    Small-hint pins: when the staged probe vouches the corpus is small
+    (``small_hint is True``), two narrow frames are lazily
+    localCheckpointed — ``ids`` (aid, title, body_id), read by the bodies
+    join, the redirect targets and the direct article rows, and the final
+    ``articles``, read by the ok set and both quarantine checks. Without
+    the pins each consumer re-runs the single-partition sort (and, for
+    ``articles``, the whole id/redirect/union lineage) in its own job.
+    Both frames are bounded by the staged probe, so pinning them is cheap.
+    The distributed path stays unpinned: there ``dense_ids`` already
+    checkpoints its input and its tagged layout, so a consumer re-pays
+    only a broadcast join, and a pin would hold a second copy of a frame
+    that may not be small."""
     # A dump that arrives as a single split (one modest .bz2 file — Spark's
     # XML source reads a compressed file whole) would serialize every
     # downstream stage; spread it across the cluster once up front. Bytes-
@@ -138,21 +163,11 @@ def _build_wiki_frames(
     # gated frame is a projection/filter/union of staged's rows (bytes and
     # rows both <= staged's). One bounded probe job on the checkpointed
     # staged (or a free stats read when a materializer made it a scan)
-    # replaces them. 8 MB = the tightest downstream gate
-    # (redirects._SMALL_EDGES_BYTES; dense_ids' bound is 64 MB), row cap =
-    # is_small_input's. Strategy only: a big corpus gets hint None and the
-    # gates behave exactly as before.
+    # replaces them (bound: _STAGED_SMALL_BYTES; row cap = is_small_input's).
+    # Strategy only: a big corpus gets hint None and the gates behave
+    # exactly as before.
     from wiki_mysql_spark.sources.tables import _row_bytes_estimate, leaf_bytes
 
-    _STAGED_SMALL_BYTES = 8 << 20
-    # The known-stats branch sees COMPRESSED on-disk leaf bytes while the
-    # downstream gates bound estimated IN-MEMORY octet lengths; parquet+zstd
-    # wiki text expands ~3-5x on decode, so the hint only fires when the
-    # compressed leaves are under bound/4 — a staged frame in the ambiguous
-    # band (bound/4 .. bound) falls through to hint None and the gates'
-    # own in-memory probes decide (the r13 advice item: a <8MB-compressed
-    # frame must not smuggle a >8MB edge set into a driver collect).
-    _COMPRESSION_EXPANSION = 4
     known, unknown = leaf_bytes(staged)
     if not unknown and known is not None:
         small_hint = (
@@ -188,6 +203,10 @@ def _build_wiki_frames(
         id_col="body_id",
         small_hint=small_hint,
     )
+    if small_hint:
+        # three consumers (bodies join, redirect targets, direct article
+        # rows) would each re-run the single-partition sort
+        ids = ids.localCheckpoint(eager=False)
     bodies_full = (
         articles_staged.select("aid", "body_text", "body_octets")
         .join(ids.select("aid", "body_id"), "aid")
@@ -211,6 +230,10 @@ def _build_wiki_frames(
     articles = dense_ids(
         all_articles, ["title", "aid"], id_col="id", small_hint=small_hint
     ).select("id", "aid", "title", F.col("body_id").alias("body"))
+    if small_hint:
+        # three consumers (articles_ok, title and orphan quarantine) would
+        # each re-run the id/redirect/union lineage
+        articles = articles.localCheckpoint(eager=False)
     corrupt = (
         staged.where(F.col("corrupt_record").isNotNull()).select(
             "corrupt_record"
@@ -304,7 +327,11 @@ def run_wiki_etl(
 ) -> dict[str, int]:
     """The full CLI workload (``/root/reference/dbfy.py:254-313`` analog):
     dump -> articles/bodies -> quarantine split -> parquet (always) ->
-    MySQL via JDBC (when a URL is given). Returns row counts.
+    MySQL via JDBC (when a URL is given). Returns the row counts WRITTEN
+    to each parquet table, observed during the writes themselves (one
+    ``Observation`` per sink frame, counted in the write job's result
+    stage, whose accumulator updates apply once per partition) — the
+    outputs are never read back to count them.
 
     ``limit`` caps the number of pages processed — exact-n ``df.limit``
     semantics (the reference's ``--limit`` was off-by-chunk between its
@@ -437,14 +464,19 @@ def run_wiki_etl(
     )
     quarantine = quarantine.unionByName(corrupt)
 
+    sinks = {"articles": articles, "bodies": bodies, "quarantine": quarantine}
+    observed = {name: Observation() for name in sinks}
     reporter = (
         job_progress(spark, "wiki-etl") if progress else nullcontext()
     )
     try:
         with reporter:
-            write_parquet(articles, f"{out_dir}/articles", row_group_bytes=rg_bytes)
-            write_parquet(bodies, f"{out_dir}/bodies", row_group_bytes=rg_bytes)
-            write_parquet(quarantine, f"{out_dir}/quarantine", row_group_bytes=rg_bytes)
+            for name, df in sinks.items():
+                write_parquet(
+                    df.observe(observed[name], F.count(F.lit(1)).alias("rows")),
+                    f"{out_dir}/{name}",
+                    row_group_bytes=rg_bytes,
+                )
 
             if jdbc_url:
                 write_jdbc(
@@ -471,11 +503,7 @@ def run_wiki_etl(
             else:
                 spark.conf.set(reader_batch_conf, saved_batch)
 
-    return {
-        "articles": spark.read.parquet(f"{out_dir}/articles").count(),
-        "bodies": spark.read.parquet(f"{out_dir}/bodies").count(),
-        "quarantine": spark.read.parquet(f"{out_dir}/quarantine").count(),
-    }
+    return {name: int(obs.get["rows"]) for name, obs in observed.items()}
 
 
 if __name__ == "__main__":  # pragma: no cover — thin CLI (dbfy.py analog)

@@ -60,10 +60,12 @@ PAGE_SCHEMA = StructType(
 def read_wiki_dump_raw(spark: SparkSession, path: str) -> DataFrame:
     """One XML parse of the dump with the FULL page schema including the
     corrupt-capture column — callers project pages and/or corrupt records
-    off this. ``run_wiki_etl`` localCheckpoints it so its three sinks plus
-    the corrupt audit share ONE parse (each sink's lineage would otherwise
-    re-tokenize the whole dump; the 4th parse the corrupt audit added was
-    measured at ~-18% ETL throughput before this refactor)."""
+    off this. ``run_wiki_etl`` materializes it only on its ``limit=`` path,
+    where the exact-n page limit needs the page and corrupt branches split
+    before staging; its production path feeds this parse straight into the
+    single staged parse+clean materialization, which the three sinks and
+    the corrupt audit then share (each sink's lineage would otherwise
+    re-tokenize the whole dump)."""
     return (
         spark.read.format("xml")
         .option("rowTag", "page")
