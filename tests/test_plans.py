@@ -1541,6 +1541,31 @@ def test_tombstone_gate_probe_cached_until_delete(spark, tmp_path, monkeypatch):
     assert len(calls) == 2, "delete must invalidate the cached probe"
 
 
+def test_minhash_index_read_without_header(spark, tmp_path):
+    """A minhash index root without ``meta.json`` (a headerless legacy
+    root, or a build that crashed before its header write) reads the same
+    live rows through schema inference instead of raising."""
+    import os
+
+    from wiki_mysql_spark.operators import dedup as dd
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    root = str(tmp_path / "mh_headerless")
+    dd.minhash_index_build(docs, root)
+
+    def rows():
+        df = dd.minhash_index_read(spark, root)
+        assert df.columns == ["doc_id", "band", "v0", "v1", "bk"]
+        return sorted(map(tuple, df.collect()))
+
+    with_header = rows()
+    assert with_header
+    os.remove(os.path.join(root, "meta.json"))
+    assert rows() == with_header
+
+
 def test_minhash_index_delete_query_and_compact_settles(spark, tmp_path):
     """The minhash signature index's DELETE path (r11 verdict item #2 —
     the one index family without takedown support): after

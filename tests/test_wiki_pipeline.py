@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from wiki_mysql_spark.operators.ids import dense_ids
 from wiki_mysql_spark.plans.wiki_pipeline import build_wiki_tables
+from wiki_mysql_spark.sources.tables import local_frame
 from wiki_mysql_spark.sources.wikixml import read_wiki_dump
 
 WIKI_XML = textwrap.dedent(
@@ -528,3 +529,114 @@ def test_staged_gate_both_sides(spark, monkeypatch):
     assert pinned and len(arts) == 4 and len(bods) == 2
     monkeypatch.setattr(wp, "_STAGED_SMALL_BYTES", 0)
     assert build(pages) == (False, arts, bods)
+
+
+def _sql_plans(spark) -> dict[int, str]:
+    """The physical plan of every SQL execution in the status store, by
+    execution id."""
+    xs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    execs = (xs.apply(i) for i in range(xs.size()))
+    return {int(x.executionId()): str(x.physicalPlanDescription()) for x in execs}
+
+
+def test_warm_etl_runs_no_python_row_scan(spark, tmp_path):
+    """No SQL plan of a warm run_wiki_etl scans a Python-row RDD
+    (``applySchemaToPythonRDD``): the frames it builds from driver data
+    (the small-path redirect mapping) are Arrow-built local relations, so
+    no stage starts a Python worker to read them."""
+    from wiki_mysql_spark.plans.wiki_pipeline import run_wiki_etl
+
+    dump = _quarantine_dump(tmp_path)
+    run_wiki_etl(spark, dump, str(tmp_path / "cold"), materialize="memory")
+    before = max(_sql_plans(spark), default=-1)
+    counts = run_wiki_etl(spark, dump, str(tmp_path / "warm"), materialize="memory")
+    assert counts == {"articles": 4, "bodies": 3, "quarantine": 2}
+    warm = {i: p for i, p in _sql_plans(spark).items() if i > before}
+    assert warm
+    assert [i for i, p in warm.items() if "applySchemaToPythonRDD" in p] == []
+
+
+def _leaf_kinds(df) -> list[str]:
+    """Class of every leaf of ``df``'s optimized plan; a LogicalRDD whose
+    lineage is a Python-row RDD reads ``PythonRDD``."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    kinds = []
+    for i in range(leaves.length()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRDD" and "applySchemaToPythonRDD" in str(
+            leaf.rdd().toDebugString()
+        ):
+            kind = "PythonRDD"
+        kinds.append(kind)
+    return kinds
+
+
+def _site_redirects(spark):
+    from wiki_mysql_spark.operators.redirects import resolve_redirects
+
+    redirects = local_frame(
+        spark,
+        [("A", "B"), ("B", "C"), ("X", "Y"), ("Y", "X"), ("D", "Nowhere")],
+        "title string, target string",
+    )
+    targets = local_frame(spark, [("C", 7)], "title string, body_id long")
+    out = resolve_redirects(redirects, targets, small_hint=True)
+    return out, [("A", "B", 7), ("B", "C", 7)]
+
+
+def _site_dense_ids(spark):
+    rows = [(c, i) for i, c in enumerate("zyxwvutsrq")]
+    df = local_frame(spark, rows, "k string, v long").repartition(4)
+    out = dense_ids(df, ["k"], id_col="id", small_hint=False)
+    by_k = dict(rows)
+    return out, [(i, k, by_k[k]) for i, k in enumerate(sorted(by_k), 1)]
+
+
+def _site_connected_components(spark):
+    from wiki_mysql_spark.operators.graph import connected_components
+
+    edges = local_frame(
+        spark, [(5, 4), (4, 3), (10, 11), (11, 10), (20, 20)], "src long, dst long"
+    )
+    out = connected_components(edges)
+    return out, [(3, 3), (4, 3), (5, 3), (10, 10), (11, 10), (20, 20)]
+
+
+def _site_bpe_train(spark):
+    from wiki_mysql_spark.operators.bpe import bpe_train
+
+    text = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
+    docs = local_frame(spark, [(1, text)], "doc_id long, text string")
+    out = bpe_train(docs, n_merges=3)
+    return out, [(1, "e", "s", 9), (2, "es", "t", 9), (3, "l", "o", 7)]
+
+
+def _site_empty_near_dups(spark):
+    from wiki_mysql_spark.operators.dedup import embedding_near_dup_pairs
+
+    emb = local_frame(spark, [], "vec_id long, embedding array<float>")
+    out = embedding_near_dup_pairs(emb, threshold=0.3)
+    assert out.columns == ["id_a", "id_b", "cos_sim"]
+    return out, []
+
+
+@pytest.mark.parametrize(
+    "site",
+    [
+        _site_redirects,
+        _site_dense_ids,
+        _site_connected_components,
+        _site_bpe_train,
+        _site_empty_near_dups,
+    ],
+    ids=lambda f: f.__name__[len("_site_"):],
+)
+def test_driver_built_frames_plan_as_local_relations(spark, site):
+    """Every engine site that turns driver-side data into a frame builds it
+    through Arrow: the frame is a LocalRelation leaf of the output's plan,
+    no leaf is a Python-row RDD, and the rows are unchanged."""
+    out, want = site(spark)
+    kinds = _leaf_kinds(out)
+    assert "LocalRelation" in kinds and "PythonRDD" not in kinds, kinds
+    assert sorted(map(tuple, out.collect())) == sorted(want)

@@ -101,8 +101,10 @@ def bpe_train(
             ).alias("syms"),
             "freq",
         ).localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        merges, "round: long, left: string, right: string, pair_count: long"
+    from wiki_mysql_spark.sources.tables import local_frame
+
+    return local_frame(
+        spark, merges, "round: long, left: string, right: string, pair_count: long"
     )
 
 

@@ -498,8 +498,16 @@ def minhash_index_read(spark, path: str) -> DataFrame:
     signature table (any streaming ``batch=`` delta layer folded in)
     minus tombstoned doc_ids — what :func:`minhash_index_query` actually
     collides the batch against, and the frame the health surface
-    (``minhash_index_stats``) describes."""
+    (``minhash_index_stats``) describes.
+
+    The header only pins the read schema, so a root without ``meta.json``
+    (a headerless legacy root, or a build that crashed between the bands
+    write and the header write) reads the same rows through schema
+    inference instead of failing. A header that exists but cannot be read
+    still raises."""
     import json
+
+    from py4j.protocol import Py4JJavaError
 
     from wiki_mysql_spark.operators.similarity import (
         _fs_read_text,
@@ -508,7 +516,12 @@ def minhash_index_read(spark, path: str) -> DataFrame:
         _read_layout,
     )
 
-    meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
+    try:
+        meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.io.FileNotFoundException":
+            raise
+        meta = None
     rows = _read_layout(spark, path, "bands", meta)
     if "batch" in rows.columns:
         rows = rows.drop("batch")
@@ -782,7 +795,7 @@ def embedding_near_dup_pairs(
         StructType,
     )
 
-    from wiki_mysql_spark.sources.tables import is_small_input
+    from wiki_mysql_spark.sources.tables import is_small_input, local_frame
 
     # byte_probe: this is a SAFETY gate against launching a corpus-squared
     # comparison, so unknown-stats inputs must be measured in bytes, not
@@ -806,8 +819,8 @@ def embedding_near_dup_pairs(
     if not corpus_rows:
         # np.array([]) is 1-D and would IndexError on B.shape[1] below; the
         # theta-join spelling this replaced returned an empty frame here
-        return emb.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cos_sim double"
+        return local_frame(
+            emb.sparkSession, [], "id_a long, id_b long, cos_sim double"
         )
     ids_b = np.array([r[id_col] for r in corpus_rows], dtype=np.int64)
     # float32 storage -> double, exactly as _as_double casts before folding

@@ -222,28 +222,34 @@ def connected_components(
     ``max_rounds`` bounds divergence on adversarial graphs; propagation
     normally exits at the fixpoint (a round with zero label changes).
 
-    Strategy is DATA-DRIVEN (r14): one bounded ``limit(N+1).collect()``
+    Strategy is DATA-DRIVEN (r14): one bounded ``limit(N+1).toArrow()``
     probe fetches the edge set, and when it fits
     (:data:`_CC_DRIVER_EDGE_ROWS`) the labels come from an exact
-    driver-side union-find — same (node, label) rows, ~3 jobs instead of
-    ~30 fixpoint barriers. The probe doubles as the data fetch, so the
-    gate costs no extra job; an over-limit graph pays one truncated
-    limit-scan and takes the distributed path below.
+    driver-side union-find fed from the probe's Arrow columns — same
+    (node, label) rows, ~3 jobs instead of ~30 fixpoint barriers. The probe
+    doubles as the data fetch, so the gate costs no extra job; an
+    over-limit graph pays one truncated limit-scan and takes the
+    distributed path below.
+
+    The call is EAGER: constructing the result (even to ``explain()`` it)
+    runs the probe job, which evaluates the upstream of ``edges`` and
+    holds up to ``_CC_DRIVER_EDGE_ROWS + 1`` edges (two longs each) in
+    driver memory. The driver-path result is an Arrow-built local frame
+    (:func:`~wiki_mysql_spark.sources.tables.local_frame`).
     """
+    from wiki_mysql_spark.sources.tables import local_frame
+
     e = edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
     )
     spark = edges.sparkSession
-    probe = e.limit(_CC_DRIVER_EDGE_ROWS + 1).collect()
-    if len(probe) <= _CC_DRIVER_EDGE_ROWS:
+    probe = e.limit(_CC_DRIVER_EDGE_ROWS + 1).toArrow()
+    if probe.num_rows <= _CC_DRIVER_EDGE_ROWS:
+        pairs = probe.drop_null()  # an edge with a null end joins nothing
         labels = _cc_union_find(
-            (r["a"], r["b"])
-            for r in probe
-            if r["a"] is not None and r["b"] is not None
+            zip(pairs.column("a").to_pylist(), pairs.column("b").to_pylist())
         )
-        return spark.createDataFrame(
-            list(labels.items()), schema="node long, label long"
-        )
+        return local_frame(spark, list(labels.items()), "node long, label long")
     sym = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()

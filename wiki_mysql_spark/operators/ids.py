@@ -100,6 +100,7 @@ def dense_ids(
         is_rdd_backed,
         is_small_input,
         leaf_bytes,
+        local_frame,
     )
 
     if small_hint is None:
@@ -180,7 +181,7 @@ def dense_ids(
         offsets.append((row["_pid"], acc))
         acc += row["_n"]
     offset_df = F.broadcast(
-        spark.createDataFrame(offsets, ["_pid", "_offset"])
+        local_frame(spark, offsets, "_pid long, _offset long")
     )
 
     out_cols = [F.col(c) for c in df.columns]

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 
 # Edge sets whose leaf inputs are estimated below this resolve driver-side
-# (one collect + one parallelize) instead of via the doubling loop. The exact
+# (one collect + one local frame) instead of via the doubling loop. The exact
 # analog of a broadcast-join threshold: the DATA decides the physical
 # strategy, the semantics are identical (tested both ways). Real corpora
 # blow past this (enwiki has ~10M redirect rows) and take the doubling path.
@@ -36,9 +36,15 @@ _SMALL_EDGES_BYTES = 8 << 20
 
 def _resolve_small(edges: DataFrame, max_depth: int) -> DataFrame:
     """Driver-side chain walk for a tiny edge set — the reference's own
-    algorithm (``dbfy.py:108-121``) minus the recursion: one collect in, one
-    parallelize out, zero fixpoint jobs. Gated by :data:`_SMALL_EDGES_BYTES`.
+    algorithm (``dbfy.py:108-121``) minus the recursion: one collect in,
+    zero fixpoint jobs. The ``(src, dst)`` mapping comes back as one
+    Arrow-built local frame (:func:`~wiki_mysql_spark.sources.tables.local_frame`,
+    a ``LocalTableScan`` with ``edges``' schema), not a parallelized list,
+    so the joins that read it start no Python worker. Gated by
+    :data:`_SMALL_EDGES_BYTES`.
     """
+    from wiki_mysql_spark.sources.tables import local_frame
+
     nxt = {r["src"]: r["dst"] for r in edges.collect()}
     out: list[tuple[str, str]] = []
     for src in nxt:
@@ -50,7 +56,7 @@ def _resolve_small(edges: DataFrame, max_depth: int) -> DataFrame:
         if cur not in nxt and len(seen) <= max_depth:
             out.append((src, cur))  # terminal reached: article or dangling
         # else: cycle or over-depth -> dropped, like RecursionError -> None
-    return edges.sparkSession.createDataFrame(out, schema=edges.schema)
+    return local_frame(edges.sparkSession, out, edges.schema)
 
 
 def resolve_redirects(

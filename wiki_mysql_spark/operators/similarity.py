@@ -1081,14 +1081,17 @@ def _index_delete(
     schema."""
     import pyarrow as pa
 
+    from wiki_mysql_spark.sources.tables import local_frame
+
     if isinstance(ids, DataFrame):
         ids = ids.select(
             F.col(ids.columns[0]).cast("long").alias(id_name)
         ).distinct()
     else:
-        ids = spark.createDataFrame(
+        ids = local_frame(
+            spark,
             pa.table({id_name: pa.array(sorted({int(i) for i in ids}), pa.int64())}),
-            schema=f"{id_name} long",
+            f"{id_name} long",
         )
     tpath = _index_child(path, "tombstones")
     ids.coalesce(1).write.mode("append").parquet(tpath)
@@ -1559,6 +1562,8 @@ def _lsh_probe_side(
     import pyarrow as pa
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+    from wiki_mysql_spark.sources.tables import local_frame
+
     dim, n_planes = len(tables[0][0]), len(tables[0])
     batch_df = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
@@ -1591,7 +1596,7 @@ def _lsh_probe_side(
         + [StructField("tbl", IntegerType(), False),
            StructField("bucket", LongType(), False)]
     )
-    return spark.createDataFrame(probe, schema=schema), by_tbl
+    return local_frame(spark, probe, schema), by_tbl
 
 
 # ---------------------------------------------------------------------------

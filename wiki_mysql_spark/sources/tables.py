@@ -65,6 +65,43 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _STATS_UNKNOWN = 1 << 50
 
 
+def local_frame(spark: SparkSession, data, schema) -> DataFrame:
+    """A DataFrame over driver-side data, always built through Arrow.
+
+    ``data`` is a ``pyarrow.Table`` or an iterable of row tuples in
+    ``schema`` order; ``schema`` is a ``StructType`` or a DDL string, and
+    the frame carries it as given (names, types, nullability). The rows
+    travel inside the plan as a ``LocalRelation`` (``LocalTableScan``), so
+    no consumer starts a Python worker. ``spark.createDataFrame`` over
+    Python rows is instead an RDD scan (``applySchemaToPythonRDD``): every
+    job that reads it runs a Python worker stage. Every engine frame built
+    from driver data goes through here.
+
+    The relation's plan statistics are ESTIMATED, not measured: Catalyst
+    sizes a ``LocalRelation`` as rows x (8 + each type's default size),
+    i.e. 20 bytes per string and one element per array. Because every leaf
+    then reports a size, :func:`is_small_input` decides on that estimate
+    and never runs its ``byte_probe``. A frame of wide strings or arrays
+    can therefore look smaller than it is: a byte-gated fast path that
+    consumes one must bound its real width some other way (today's callers
+    hold longs only, or a mapping already admitted by a byte-probed gate).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    if not isinstance(data, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        cols = list(zip(*data)) or [()] * len(arrow_schema)
+        data = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(data, schema=schema)
+
+
 def is_rdd_backed(df: DataFrame) -> bool:
     """True when the frame's whole plan is a (local)checkpointed /
     RDD-backed leaf (LogicalRDD) — i.e. it is already materialized (or
