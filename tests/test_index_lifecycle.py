@@ -1,0 +1,216 @@
+"""The persisted-index lifecycle core shared by the LSH, IVFADC and minhash
+families (``operators/similarity.py``: ``IndexSpec`` and the ``_index_*``
+functions): compaction into a root with old tombstones, the missing-header
+policy, the layout-split knob, and the guard that keeps the on-disk format
+in one place."""
+
+from __future__ import annotations
+
+import ast
+import os
+import pathlib
+import subprocess
+import sys
+
+import pytest
+
+from tests.conftest import SF_SMOKE
+from wiki_mysql_spark.operators import dedup as dd
+from wiki_mysql_spark.operators import similarity as sim
+
+OPERATORS = pathlib.Path(sim.__file__).resolve().parent
+
+# family -> (build, delete, read, compact, query, append, write_delta, read id)
+FAMILIES = {
+    "lsh": (
+        lambda df, root: sim.lsh_index_build(df, root, dim=64, n_planes=4),
+        sim.lsh_index_delete,
+        sim.lsh_index_read,
+        sim.lsh_index_compact,
+        lambda spark, root, df: sim.lsh_index_query(spark, root, df, k=3),
+        sim.lsh_index_append,
+        sim.lsh_index_write_delta,
+        "neighbor_id",
+    ),
+    "ivfpq": (
+        lambda df, root: sim.ivfpq_index_build(
+            df, root, n_coarse=4, coarse_iters=1, m=8, n_centroids=8
+        ),
+        sim.ivfpq_index_delete,
+        sim.ivfpq_index_read,
+        sim.ivfpq_index_compact,
+        lambda spark, root, df: sim.ivfpq_index_query(spark, root, df, k=3),
+        sim.ivfpq_index_append,
+        sim.ivfpq_index_write_delta,
+        "nid",
+    ),
+    "minhash": (
+        dd.minhash_index_build,
+        dd.minhash_index_delete,
+        dd.minhash_index_read,
+        dd.minhash_index_compact,
+        dd.minhash_index_query,
+        dd.minhash_index_append,
+        dd.minhash_index_write_delta,
+        "doc_id",
+    ),
+}
+
+
+def _input(spark, family):
+    if family == "minhash":
+        return spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
+            "doc_id", "text"
+        ).limit(50)
+    return spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+
+
+def _ids(df, col) -> set[int]:
+    return {int(r[0]) for r in df.select(col).distinct().collect()}
+
+
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_compact_into_root_with_deletes_keeps_every_row_live(
+    spark, tmp_path, family
+):
+    """Compaction starts a new generation at its destination: tombstones a
+    destination root received before (here: an older index at the same
+    root) must not suppress any compacted row, and no tombstone set is left
+    there."""
+    build, delete, read, compact, *_, id_col = FAMILIES[family]
+    data = _input(spark, family)
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    build(data, dst)
+    all_ids = _ids(read(spark, dst), id_col)
+    delete(spark, dst, sorted(all_ids)[:3])
+    build(data, src)
+
+    compact(spark, src, dst)
+
+    assert _ids(read(spark, dst), id_col) == all_ids
+    assert not os.path.exists(os.path.join(dst, "tombstones"))
+
+
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_headerless_root_reads_by_inference_and_frozen_ops_refuse(
+    spark, tmp_path, family
+):
+    """A root whose build crashed between its data write and its header
+    write: the read path infers the schema and returns the same live rows;
+    query, append, write_delta and compact, which need the frozen
+    parameters, raise a ValueError that names the root and meta.json."""
+    build, _, read, compact, query, append, write_delta, _ = FAMILIES[family]
+    data = _input(spark, family)
+    root = str(tmp_path / "idx")
+    build(data, root)
+
+    def rows():
+        df = read(spark, root)
+        return df.columns, sorted(map(tuple, df.collect()))
+
+    with_header = rows()
+    os.remove(os.path.join(root, "meta.json"))
+    assert rows() == with_header
+
+    few = data.limit(2)
+    ops = {
+        "query": lambda: query(spark, root, few),
+        "append": lambda: append(few, root),
+        "write_delta": lambda: write_delta(few, root, "batch=0"),
+        "compact": lambda: compact(spark, root, str(tmp_path / "dst")),
+    }
+    for name, op in ops.items():
+        with pytest.raises(ValueError) as err:
+            op()
+        assert root in str(err.value) and "meta.json" in str(err.value), name
+
+
+def test_layout_split_knob_rejects_and_clamps():
+    """SPARK_GRAFT_LAYOUT_SPLIT: below 1 or not an integer is a ValueError
+    naming the variable; above the maximum clamps to it."""
+    for raw in ("0", "-3", "four", ""):
+        with pytest.raises(ValueError, match="SPARK_GRAFT_LAYOUT_SPLIT"):
+            sim._layout_split(raw)
+    assert sim._layout_split("8") == 8
+    assert sim._layout_split(str(10**6)) == sim._LAYOUT_SPLIT_MAX
+
+
+def test_layout_split_knob_checked_at_import():
+    """A bad value fails the module import with an error that names the
+    variable."""
+    env = {**os.environ, "SPARK_GRAFT_LAYOUT_SPLIT": "four"}
+    res = subprocess.run(
+        [sys.executable, "-c", "import wiki_mysql_spark.operators.similarity"],
+        env=env, capture_output=True, text=True,
+        cwd=OPERATORS.parent.parent,
+    )
+    assert res.returncode != 0
+    last = res.stderr.strip().splitlines()[-1]
+    assert last.startswith("ValueError") and "SPARK_GRAFT_LAYOUT_SPLIT" in last
+
+
+def _sites(path: pathlib.Path, match) -> list[tuple[str, int]]:
+    """``(enclosing function, line)`` of every node in ``path`` for which
+    ``match(node)`` holds (``""`` at module level)."""
+    found = []
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if match(node):
+            found.append((fn, node.lineno))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(ast.parse(path.read_text(), str(path)), "")
+    return found
+
+
+def _is_header_name(node) -> bool:
+    return isinstance(node, ast.Constant) and node.value == "meta.json"
+
+
+def _is_writer_partition_by(node) -> bool:
+    """A ``.partitionBy(`` call whose receiver is not ``Window`` (the
+    ranking windows' ``Window.partitionBy`` is a different API)."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "partitionBy"
+        and not (
+            isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "Window"
+        )
+    )
+
+
+def test_index_format_lives_in_the_lifecycle_core():
+    """The index header name appears only in the core's header functions,
+    the layout writer's ``partitionBy`` only in ``_index_write``, and
+    dedup.py takes the core through its module-level import, not through
+    function-local imports."""
+    files = [OPERATORS / "similarity.py", OPERATORS / "dedup.py"]
+    header = [
+        (p.name, fn, line)
+        for p in files
+        for fn, line in _sites(p, _is_header_name)
+        if fn not in {"_index_header", "_index_new_generation"}
+    ]
+    assert not header, f"'meta.json' outside the header core: {header}"
+    writes = [
+        (p.name, fn, line)
+        for p in files
+        for fn, line in _sites(p, _is_writer_partition_by)
+        if fn != "_index_write"
+    ]
+    assert not writes, f"layout partitionBy outside _index_write: {writes}"
+    local = [
+        (fn, line)
+        for fn, line in _sites(
+            OPERATORS / "dedup.py",
+            lambda n: isinstance(n, ast.ImportFrom)
+            and n.module == "wiki_mysql_spark.operators.similarity",
+        )
+        if fn
+    ]
+    assert not local, f"function-local similarity imports in dedup.py: {local}"

@@ -27,6 +27,20 @@ from pyspark.sql import functions as F
 
 from wiki_mysql_spark.functions.text import HASH_PRIME, hash64, shingles_of, words
 from wiki_mysql_spark.functions.vectors import cosine
+from wiki_mysql_spark.operators.similarity import (
+    IndexSpec,
+    _hyperplanes,
+    _index_append,
+    _index_compact,
+    _index_delete,
+    _index_header,
+    _index_new_generation,
+    _index_rows,
+    _index_write_delta,
+    _probe_pred,
+    index_autocompact,
+    lsh_signature,
+)
 
 # Fixed affine minhash parameters (deterministic; generated once from a seeded
 # PRNG and frozen here so Spark and the SQL oracle share them).
@@ -247,7 +261,13 @@ def _minhash_bk() -> F.Column:
     )
 
 
-def _minhash_index_rows(docs, id_col: str, text_col: str) -> DataFrame:
+def _minhash_index_rows(
+    meta: dict, docs: DataFrame, id_col: str, text_col: str
+) -> DataFrame:
+    """The minhash index rows (doc_id, band, v0, v1, bk) of ``docs`` — the
+    family's :class:`IndexSpec` encode. The scheme is module constants
+    (checked against the header by :func:`_minhash_meta_check`), so
+    ``meta`` carries nothing to hash with."""
     base = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
@@ -266,6 +286,32 @@ def _minhash_scheme() -> dict:
     }
 
 
+def _minhash_meta_check(meta: dict, path: str) -> None:
+    """Fail loudly if the index header's scheme parameters don't match
+    this module's frozen constants — a mismatched module would silently
+    hash the same text to different signatures and every query would
+    return nothing."""
+    want = _minhash_scheme()
+    got = {k: int(meta.get(k, -1)) for k in want}
+    if got != want:
+        raise ValueError(
+            f"minhash index at {path} was built with scheme {got}, this "
+            f"module expects {want} — rebuild the index or use the build's "
+            "module version"
+        )
+
+
+_MINHASH_INDEX = IndexSpec(
+    family="minhash",
+    subdir="bands",
+    partition_cols=("band", "bk"),
+    id_col="doc_id",
+    n_dirs=lambda meta: N_BANDS * MINHASH_INDEX_BUCKETS,
+    encode=_minhash_index_rows,
+    check=_minhash_meta_check,
+)
+
+
 def minhash_index_build(
     docs: DataFrame, path: str, *, id_col: str = "doc_id",
     text_col: str = "text",
@@ -279,42 +325,14 @@ def minhash_index_build(
     daily 100 TB question — "which docs in TODAY'S batch duplicate the
     corpus" — without re-pairing the corpus with itself
     (:func:`minhash_index_query`). Rows are repartitioned on the layout
-    columns so each partition lands as ~one file. Returns the persisted
-    index read back from ``path``."""
-    import json
-
-    from wiki_mysql_spark.operators.similarity import (
-        _fs_write_text,
-        _index_child,
-        _index_clear_tombstones,
-        _layout_schema,
-        _layout_repartition,
-    )
-
-    spark = docs.sparkSession
-    rows = _minhash_index_rows(docs, id_col, text_col)
-    _layout_repartition(
-        rows, "band", "bk",
-        n_dirs=N_BANDS * MINHASH_INDEX_BUCKETS, id_col="doc_id",
-    ).write.mode(
-        "overwrite"
-    ).option("compression", "zstd").partitionBy("band", "bk").parquet(
-        _index_child(path, "bands")
-    )
-    # one inference read-back pins the layout schema into the header, so
-    # every later read of this root skips the footer-inference job
-    idx = spark.read.parquet(_index_child(path, "bands"))
+    columns so each partition lands as ~one file; the write, header and
+    tombstone clear are ``similarity._index_new_generation``. Returns the
+    persisted index read back from ``path``."""
     meta = _minhash_scheme()
-    meta["schema"] = _layout_schema(idx)
-    _fs_write_text(
-        spark,
-        _index_child(path, "meta.json"),
-        json.dumps(meta),
+    return _index_new_generation(
+        docs.sparkSession, _MINHASH_INDEX, path, meta,
+        _minhash_index_rows(meta, docs, id_col, text_col),
     )
-    # a prior generation's tombstones must not suppress rebuilt docs —
-    # tombstones belong to the data files they were issued against
-    _index_clear_tombstones(spark, path)
-    return idx
 
 
 def minhash_index_init(spark, path: str) -> None:
@@ -323,20 +341,7 @@ def minhash_index_init(spark, path: str) -> None:
     where every micro-batch is a :func:`minhash_index_write_delta` and no
     batch is privileged (the same lifecycle split as ``lsh_index_init``;
     the minhash scheme, like hyperplane LSH, needs no training)."""
-    import json
-
-    from wiki_mysql_spark.operators.similarity import (
-        _fs_write_text,
-        _index_child,
-        _index_clear_tombstones,
-    )
-
-    _fs_write_text(
-        spark,
-        _index_child(path, "meta.json"),
-        json.dumps(_minhash_scheme()),
-    )
-    _index_clear_tombstones(spark, path)
+    _index_new_generation(spark, _MINHASH_INDEX, path, _minhash_scheme())
 
 
 def minhash_index_write_delta(
@@ -352,22 +357,7 @@ def minhash_index_write_delta(
     replayed-micro-batch property (key by ``batch=<batch_id>``);
     :func:`minhash_index_compact` collapses the accumulated delta dirs
     back to the flat layout."""
-    from wiki_mysql_spark.operators.similarity import (
-        _index_child,
-        _layout_repartition,
-    )
-
-    spark = docs.sparkSession
-    _minhash_meta_check(spark, path)
-    rows = _minhash_index_rows(docs, id_col, text_col)
-    _layout_repartition(
-        rows, "band", "bk",
-        n_dirs=N_BANDS * MINHASH_INDEX_BUCKETS, id_col="doc_id",
-    ).write.mode(
-        "overwrite"
-    ).option("compression", "zstd").partitionBy("band", "bk").parquet(
-        _index_child(path, "bands/" + delta.strip("/"))
-    )
+    _index_write_delta(_MINHASH_INDEX, docs, path, delta, id_col, text_col)
 
 
 def minhash_index_compact(spark, src_path: str, dst_path: str) -> DataFrame:
@@ -377,12 +367,7 @@ def minhash_index_compact(spark, src_path: str, dst_path: str) -> DataFrame:
     root, any ``batch=`` delta layer retired, header copied verbatim —
     :func:`minhash_index_query` against the compacted root is identical
     to the streamed one, test-pinned."""
-    from wiki_mysql_spark.operators.similarity import _index_compact
-
-    return _index_compact(
-        spark, src_path, dst_path,
-        subdir="bands", partition_cols=["band", "bk"], id_name="doc_id",
-    )
+    return _index_compact(spark, _MINHASH_INDEX, src_path, dst_path)
 
 
 def minhash_index_autocompact(
@@ -395,37 +380,10 @@ def minhash_index_autocompact(
     compact → publish → retire as one move. A daily ingest loop calls it
     unconditionally after each append; below the threshold it is a pure
     driver-side read."""
-    from wiki_mysql_spark.operators.similarity import index_autocompact
-
     return index_autocompact(
         spark, pointer, new_root, compact=minhash_index_compact,
         subdir="bands", max_files_per_partition=max_files_per_partition,
     )
-
-
-def _minhash_meta_check(spark, path: str) -> dict:
-    """Fail loudly if the index header's scheme parameters don't match
-    this module's frozen constants — a mismatched module would silently
-    hash the same text to different signatures and every query would
-    return nothing. Returns the parsed header so callers reuse it (e.g.
-    the pinned layout schema) without a second driver-side read."""
-    import json
-
-    from wiki_mysql_spark.operators.similarity import (
-        _fs_read_text,
-        _index_child,
-    )
-
-    meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
-    want = _minhash_scheme()
-    got = {k: int(meta.get(k, -1)) for k in want}
-    if got != want:
-        raise ValueError(
-            f"minhash index at {path} was built with scheme {got}, this "
-            f"module expects {want} — rebuild the index or use the build's "
-            "module version"
-        )
-    return meta
 
 
 def minhash_index_append(
@@ -445,34 +403,7 @@ def minhash_index_append(
     ``band=`` dirs with ``batch=<id>/band=`` ones breaks every subsequent
     read) — compact first or ingest through
     :func:`minhash_index_write_delta`."""
-    from wiki_mysql_spark.operators.similarity import (
-        _has_delta_layer,
-        _index_child,
-        _layout_repartition,
-    )
-
-    spark = docs.sparkSession
-    if _has_delta_layer(spark, path, "bands"):
-        raise ValueError(
-            f"minhash_index_append: index at {path} carries a streaming "
-            "batch= delta layer; a flat append next to it would create "
-            "conflicting partition directory structures and break every "
-            "subsequent read — run minhash_index_compact first, or ingest "
-            "this batch via minhash_index_write_delta"
-        )
-    meta = _minhash_meta_check(spark, path)
-    rows = _minhash_index_rows(docs, id_col, text_col)
-    _layout_repartition(
-        rows, "band", "bk",
-        n_dirs=N_BANDS * MINHASH_INDEX_BUCKETS, id_col="doc_id",
-    ).write.mode(
-        "append"
-    ).option("compression", "zstd").partitionBy("band", "bk").parquet(
-        _index_child(path, "bands")
-    )
-    from wiki_mysql_spark.operators.similarity import _read_layout
-
-    return _read_layout(spark, path, "bands", meta)
+    return _index_append(_MINHASH_INDEX, docs, path, id_col, text_col)
 
 
 def minhash_index_delete(spark, path: str, ids) -> None:
@@ -488,8 +419,6 @@ def minhash_index_delete(spark, path: str, ids) -> None:
     :func:`minhash_index_compact` rewrites the touched partitions without
     the dead rows and retires the tombstone set. ``ids`` is a one-column
     DataFrame or an iterable of doc ids."""
-    from wiki_mysql_spark.operators.similarity import _index_delete
-
     _index_delete(spark, path, ids, id_name="doc_id")
 
 
@@ -505,34 +434,14 @@ def minhash_index_read(spark, path: str) -> DataFrame:
     write and the header write) reads the same rows through schema
     inference instead of failing. A header that exists but cannot be read
     still raises."""
-    import json
-
-    from py4j.protocol import Py4JJavaError
-
-    from wiki_mysql_spark.operators.similarity import (
-        _fs_read_text,
-        _index_child,
-        _live_rows,
-        _read_layout,
-    )
-
-    try:
-        meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
-    except Py4JJavaError as e:
-        if e.java_exception.getClass().getName() != "java.io.FileNotFoundException":
-            raise
-        meta = None
-    rows = _read_layout(spark, path, "bands", meta)
-    if "batch" in rows.columns:
-        rows = rows.drop("batch")
-    rows = rows.select(
+    meta = _index_header(spark, _MINHASH_INDEX, path, required=False)
+    return _index_rows(spark, _MINHASH_INDEX, path, meta).select(
         "doc_id",
         F.col("band").cast("long").alias("band"),
         "v0",
         "v1",
         F.col("bk").cast("long").alias("bk"),
     )
-    return _live_rows(spark, rows, path, "doc_id")
 
 
 def minhash_index_query(
@@ -562,10 +471,7 @@ def minhash_index_query(
     text is fetched ONLY for the candidate doc_indexed ids (semi-join
     before shingling), so at 100 TB verification reads the few colliding
     documents, not the corpus."""
-    meta = _minhash_meta_check(spark, path)
-
-    from wiki_mysql_spark.operators.similarity import _read_layout
-
+    meta = _index_header(spark, _MINHASH_INDEX, path)
     base_q = new_docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
@@ -578,26 +484,13 @@ def minhash_index_query(
     by_band: dict[int, set[int]] = {}
     for r in qb.select("band", "bk").distinct().collect():
         by_band.setdefault(int(r["band"]), set()).add(int(r["bk"]))
-    pred = None
-    for b, bks in sorted(by_band.items()):
-        clause = (F.col("band") == b) & F.col("bk").isin(sorted(bks))
-        pred = clause if pred is None else (pred | clause)
-    if pred is None:  # empty batch: nothing to dedup
-        pred = F.lit(False)
-    scan = _read_layout(spark, path, "bands", meta).where(pred)
-    if "batch" in scan.columns:
-        # stream-ingested root: a batch=<id> delta layer rides above the
-        # (band, bk) layout (minhash_index_write_delta) — pruning on the
-        # layout columns is unaffected, the extra partition column drops
-        scan = scan.drop("batch")
     # merge-on-read deletes: tombstoned doc_ids (minhash_index_delete) drop
-    # from the candidate set here — a taken-down document must stop
-    # matching future near-duplicates; the next compaction makes the
-    # removal physical. Byte-gated broadcast-vs-shuffle as everywhere.
-    from wiki_mysql_spark.operators.similarity import _live_rows
-
-    scan = _live_rows(spark, scan, path, "doc_id")
-    idx = scan.select(
+    # from the candidate set inside _index_rows — a taken-down document
+    # must stop matching future near-duplicates; the next compaction makes
+    # the removal physical. A streamed root's batch= column drops there too.
+    idx = _index_rows(
+        spark, _MINHASH_INDEX, path, meta, where=_probe_pred("band", "bk", by_band)
+    ).select(
         F.col("doc_id").alias("doc_indexed"),
         F.col("band").cast("int").alias("band"),
         "v0",
@@ -882,8 +775,6 @@ def embedding_lsh_pairs(
     reads co-located rows; the vectors themselves shuffle once (exploded by
     band), which is the unavoidable minimum for candidate generation.
     """
-    from wiki_mysql_spark.operators.similarity import _hyperplanes, lsh_signature
-
     sig_cols = [
         lsh_signature(F.col(vec_col), _hyperplanes(dim, n_planes, seed + b)).alias(
             f"sig{b}"

@@ -18,9 +18,12 @@ reproducible run-to-run and testable.
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import random
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -843,6 +846,249 @@ def _lsh_score_rank(q: DataFrame, c: DataFrame, *, k: int) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# Persisted index lifecycle core. The LSH, IVFADC and minhash indexes share
+# one on-disk shape: a partition-pruned parquet layout under
+# ``<root>/<subdir>/``, a JSON header at ``<root>/meta.json`` holding the
+# family's frozen parameters and the pinned layout schema, and a
+# merge-on-read tombstone set at ``<root>/tombstones/``. An
+# :class:`IndexSpec` names one family's part of that shape; the functions
+# below are the only code that writes a layout, parses a header or starts a
+# new generation. Training, hashing, scoring and read casts stay in family
+# code.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class IndexSpec:
+    """One persisted index family, as the lifecycle core sees it.
+
+    ``family`` prefixes error messages and names the family's public
+    functions (``lsh``, ``ivfpq``, ``minhash``); ``subdir`` is the layout
+    directory under the root; ``partition_cols`` its ``partitionBy``
+    columns; ``id_col`` the row id that tombstones and the split key use;
+    ``n_dirs(meta)`` the layout width that caps the write shuffle;
+    ``encode(meta, df, id_col, value_col)`` the family's index rows for a
+    caller frame under the header's frozen parameters; ``check(meta,
+    path)``, when set, raises ValueError on a header this module cannot
+    serve."""
+
+    family: str
+    subdir: str
+    partition_cols: tuple[str, ...]
+    id_col: str
+    n_dirs: Callable[[dict], int]
+    encode: Callable[[dict, DataFrame, str, str], DataFrame]
+    check: Callable[[dict, str], None] | None = None
+
+
+def _index_header(spark, spec: IndexSpec, path: str, *, required: bool = True):
+    """The index header at ``<path>/meta.json``, read and parsed once and
+    checked with ``spec.check``.
+
+    A missing header is a root that was never built or initialised, or a
+    build that crashed between its data write and its header write. With
+    ``required`` (query, append, write_delta, compact: the operations that
+    hash or encode with the frozen parameters) it raises a ValueError that
+    names the root and ``meta.json``. Without it (the ``*_index_read``
+    paths, where the header only pins the read schema) it returns None and
+    :func:`_read_layout` infers the schema instead. A header that exists
+    but cannot be read raises either way."""
+    from py4j.protocol import Py4JJavaError
+
+    hpath = _index_child(path, "meta.json")
+    try:
+        meta = json.loads(_fs_read_text(spark, hpath))
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.io.FileNotFoundException":
+            raise
+        if not required:
+            return None
+        raise ValueError(
+            f"{spec.family} index at {path} has no header ({hpath}): the "
+            "root was never built or initialised, or its build crashed "
+            f"before the header write — rebuild it with {spec.family}_index_build"
+        ) from None
+    if spec.check is not None:
+        spec.check(meta, path)
+    return meta
+
+
+def _index_write(
+    spec: IndexSpec, meta: dict, rows: DataFrame, path: str, mode: str,
+    delta: str | None = None,
+) -> None:
+    """THE layout write of every index family: ``rows`` repartitioned on
+    the layout columns (:func:`_layout_repartition`, width capped at
+    ``spec.n_dirs(meta)`` so each directory lands as ~one file), zstd
+    parquet ``partitionBy(spec.partition_cols)`` under
+    ``<path>/<subdir>/`` — or, for a streaming delta, under
+    ``<path>/<subdir>/<delta>/``, still partitioned below the delta key, so
+    the query side's partition pruning is untouched (Spark prunes on any
+    partition column regardless of directory depth)."""
+    target = spec.subdir if delta is None else f"{spec.subdir}/{delta.strip('/')}"
+    _layout_repartition(
+        rows, *spec.partition_cols, n_dirs=spec.n_dirs(meta), id_col=spec.id_col
+    ).write.mode(mode).option("compression", "zstd").partitionBy(
+        *spec.partition_cols
+    ).parquet(_index_child(path, target))
+
+
+def _index_new_generation(
+    spark, spec: IndexSpec, path: str, meta: dict, rows: DataFrame | None = None
+) -> DataFrame | None:
+    """Make ``meta`` (and ``rows``, when given) the new generation at
+    ``path`` — the one step build, init and compact share, in this order:
+
+      1. write the data (``overwrite``, :func:`_index_write`);
+      2. read it back once and pin its schema into the header
+         (:func:`_layout_schema`), so later reads skip footer inference;
+      3. write the header (temp sibling + rename, :func:`_fs_write_text`);
+      4. clear the root's tombstone set. Tombstones belong to the data
+         files they were issued against, never to the root: a rebuild or a
+         compaction into a root that earlier received deletes would
+         otherwise silently suppress every new row whose id was tombstoned
+         in the old generation. Last, so a crash mid-step leaves the OLD
+         generation's tombstones with it; the byte-gate cache is dropped so
+         the next :func:`_live_rows` sees the cleared state.
+
+    Returns the read-back layout, or None for a header-only init."""
+    idx = None
+    if rows is not None:
+        _index_write(spec, meta, rows, path, "overwrite")
+        idx = spark.read.parquet(_index_child(path, spec.subdir))
+        meta = {**meta, "schema": _layout_schema(idx)}
+    _fs_write_text(spark, _index_child(path, "meta.json"), json.dumps(meta))
+    tpath = _index_child(path, "tombstones")
+    fs, hpath = _fs(spark, tpath)
+    if fs.exists(hpath):
+        fs.delete(hpath, True)
+    _FS_BYTES_CACHE.pop(tpath, None)
+    return idx
+
+
+def _index_append(
+    spec: IndexSpec, df: DataFrame, path: str, id_col: str, value_col: str
+) -> DataFrame:
+    """Append ``df``'s index rows, encoded with the header's frozen
+    parameters, under the existing layout (``mode("append")``: one new
+    file per touched directory, nothing rewritten). Returns the full layout
+    read back from ``path``.
+
+    Refuses a stream-ingested root that still carries a ``batch=`` delta
+    layer: flat layout directories NEXT TO ``batch=<id>/...`` ones would
+    give the dataset two conflicting partition structures, and every later
+    read would fail with an AnalysisException."""
+    spark = df.sparkSession
+    f = spec.family
+    if _has_delta_layer(spark, path, spec.subdir):
+        raise ValueError(
+            f"{f}_index_append: index at {path} carries a streaming "
+            "batch= delta layer; a flat append next to it would create "
+            "conflicting partition directory structures and break every "
+            f"subsequent read — run {f}_index_compact first, or ingest "
+            f"this batch via {f}_index_write_delta"
+        )
+    meta = _index_header(spark, spec, path)
+    _index_write(spec, meta, spec.encode(meta, df, id_col, value_col), path, "append")
+    return _read_layout(spark, path, spec.subdir, meta)
+
+
+def _index_write_delta(
+    spec: IndexSpec, df: DataFrame, path: str, delta: str, id_col: str,
+    value_col: str,
+) -> None:
+    """The idempotent streaming ingest unit: ``df``'s index rows, encoded
+    with the header's frozen parameters, written ``mode("overwrite")``
+    under ``<path>/<subdir>/<delta>/``. Re-running the same delta key
+    rewrites its own directory with identical deterministic content — the
+    property a replayed micro-batch needs (key the delta by
+    ``batch=<batch_id>``; the foreachBatch contract guarantees a replay
+    reuses the batch id). Compaction folds the delta layer back in."""
+    meta = _index_header(df.sparkSession, spec, path)
+    _index_write(
+        spec, meta, spec.encode(meta, df, id_col, value_col), path, "overwrite",
+        delta,
+    )
+
+
+def _index_rows(
+    spark, spec: IndexSpec, path: str, meta: dict | None, where=None
+) -> DataFrame:
+    """The live layout rows every ``*_index_read`` and ``*_index_query``
+    scans: the layout read with the header's pinned schema (inferred when
+    ``meta`` is None), ``where`` applied as the literal partition predicate
+    that prunes the scan, any streaming ``batch=`` delta column dropped,
+    and tombstoned ids removed (:func:`_live_rows`)."""
+    rows = _read_layout(spark, path, spec.subdir, meta)
+    if where is not None:
+        rows = rows.where(where)
+    if "batch" in rows.columns:
+        rows = rows.drop("batch")
+    return _live_rows(spark, rows, path, spec.id_col)
+
+
+def _probe_pred(outer: str, inner: str, groups: dict) -> F.Column:
+    """OR over ``outer = o AND inner IN (...)`` per probed group — the
+    literal predicate that lets parquet partition pruning read only the
+    probed directories. No group (an empty query batch) is ``false``."""
+    pred = None
+    for o, vals in sorted(groups.items()):
+        clause = (F.col(outer) == o) & F.col(inner).isin(sorted(vals))
+        pred = clause if pred is None else (pred | clause)
+    return F.lit(False) if pred is None else pred
+
+
+def _lsh_meta(dim: int, n_planes: int, seed: int, n_tables: int) -> dict:
+    """The LSH index header for a build or init, validated: the header is
+    a promise about the partition layout every later write creates."""
+    if n_tables < 1:
+        raise ValueError("n_tables must be >= 1")
+    # partitionBy(tbl, bucket) lays out up to n_tables * 2^n_planes
+    # DIRECTORIES — n_planes=20 would silently attempt ~2M partition dirs
+    # (driver OOM / filesystem blowup). Fail fast like lsh_probe_buckets
+    # does for probe_bits; 16 planes = 65,536 buckets/table is already past
+    # any operating point this module ships.
+    if not 1 <= n_planes <= 16:
+        raise ValueError(
+            f"lsh index: n_planes={n_planes} out of range [1, 16] — "
+            f"the index creates n_tables * 2^n_planes partition directories"
+        )
+    return {"dim": dim, "n_planes": n_planes, "seed": seed, "n_tables": n_tables}
+
+
+def _lsh_tables(meta: dict) -> list[list[list[float]]]:
+    """The frozen per-table hyperplanes an LSH header describes."""
+    return lsh_table_planes(
+        int(meta["dim"]), int(meta["n_planes"]), int(meta["n_tables"]),
+        int(meta["seed"]),
+    )
+
+
+def _lsh_encode(meta: dict, corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The LSH index rows of ``corpus`` under the header's planes
+    (:func:`_lsh_corpus_side`); a corpus whose vectors are not the
+    header's ``dim`` wide is refused (one ``limit(1)`` probe job)."""
+    dim = int(meta["dim"])
+    d = corpus.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
+    if d and d[0]["d"] != dim:
+        raise ValueError(
+            f"lsh index: dim={dim} but corpus '{vec_col}' vectors are "
+            f"{d[0]['d']}-wide"
+        )
+    return _lsh_corpus_side(corpus, _lsh_tables(meta), id_col, vec_col)
+
+
+_LSH_INDEX = IndexSpec(
+    family="lsh",
+    subdir="buckets",
+    partition_cols=("tbl", "bucket"),
+    id_col="neighbor_id",
+    n_dirs=lambda meta: int(meta["n_tables"]) << int(meta["n_planes"]),
+    encode=_lsh_encode,
+)
+
+
 def lsh_index_build(
     corpus: DataFrame,
     path: str,
@@ -860,65 +1106,24 @@ def lsh_index_build(
     :func:`lsh_topk`'s 100 TB posture states ("at scale the corpus is
     written bucket-partitioned, so a query touches 1 + probe_bits·n_planes
     partitions per table"). The frozen plane parameters land in the index
-    header (meta.json) through the Hadoop FileSystem for ``path``'s
-    scheme, so :func:`lsh_index_query` regenerates EXACTLY the signatures
-    the build hashed with (seed + stride·t — the module's determinism
-    contract). Raw vectors ride in the index for exact rescoring inside
-    probed buckets; they are written once per table — the standard
-    OR-amplification storage trade (store L projections, scan 1/2^planes
-    of one).
+    header through the Hadoop FileSystem for ``path``'s scheme, so
+    :func:`lsh_index_query` regenerates EXACTLY the signatures the build
+    hashed with (seed + stride·t — the module's determinism contract). Raw
+    vectors ride in the index for exact rescoring inside probed buckets;
+    they are written once per table — the standard OR-amplification
+    storage trade (store L projections, scan 1/2^planes of one).
 
     Rows are repartitioned on (tbl, bucket) before the write so each
-    bucket lands as ~one file (the small-files guard — 32 write tasks ×
-    2^n_planes buckets would otherwise emit thousands of row-group-sized
-    files); a deployment whose buckets outgrow one task would add a
-    within-bucket split key to the repartition.
+    bucket lands as ~one file (the small-files guard); a deployment whose
+    buckets outgrow one task sets ``SPARK_GRAFT_LAYOUT_SPLIT``. The write,
+    header and tombstone clear are :func:`_index_new_generation`.
 
     Returns the persisted index read back from ``path``."""
-    import json
-
-    spark = corpus.sparkSession
-    d = corpus.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-    if d and d[0]["d"] != dim:
-        raise ValueError(
-            f"lsh_index_build: dim={dim} but corpus '{vec_col}' vectors "
-            f"are {d[0]['d']}-wide"
-        )
-    if n_tables < 1:
-        raise ValueError("n_tables must be >= 1")
-    # partitionBy(tbl, bucket) lays out up to n_tables * 2^n_planes
-    # DIRECTORIES — n_planes=20 would silently attempt ~2M partition dirs
-    # (driver OOM / filesystem blowup). Fail fast like lsh_probe_buckets
-    # does for probe_bits; 16 planes = 65,536 buckets/table is already past
-    # any operating point this module ships.
-    if not 1 <= n_planes <= 16:
-        raise ValueError(
-            f"lsh_index_build: n_planes={n_planes} out of range [1, 16] — "
-            f"the index creates n_tables * 2^n_planes partition directories"
-        )
-    tables = lsh_table_planes(dim, n_planes, n_tables, seed)
-    rows = _lsh_corpus_side(corpus, tables, id_col, vec_col)
-    _layout_repartition(
-        rows, "tbl", "bucket",
-        n_dirs=n_tables * (1 << n_planes), id_col="neighbor_id",
-    ).write.mode(
-        "overwrite"
-    ).option("compression", "zstd").partitionBy("tbl", "bucket").parquet(
-        _index_child(path, "buckets")
+    meta = _lsh_meta(dim, n_planes, seed, n_tables)
+    return _index_new_generation(
+        corpus.sparkSession, _LSH_INDEX, path, meta,
+        _lsh_encode(meta, corpus, id_col, vec_col),
     )
-    # one inference read-back pins the layout schema into the header, so
-    # every later read of this root skips the footer-inference job
-    idx = spark.read.parquet(_index_child(path, "buckets"))
-    _fs_write_text(
-        spark,
-        _index_child(path, "meta.json"),
-        json.dumps(
-            {"dim": dim, "n_planes": n_planes, "seed": seed,
-             "n_tables": n_tables, "schema": _layout_schema(idx)}
-        ),
-    )
-    _index_clear_tombstones(spark, path)
-    return idx
 
 
 def lsh_index_init(
@@ -936,24 +1141,9 @@ def lsh_index_init(
     privileged "first build" batch. Validates the same bounds as
     :func:`lsh_index_build` (the header is a promise about the partition
     layout every later write creates)."""
-    import json
-
-    if n_tables < 1:
-        raise ValueError("n_tables must be >= 1")
-    if not 1 <= n_planes <= 16:
-        raise ValueError(
-            f"lsh_index_init: n_planes={n_planes} out of range [1, 16] — "
-            f"the index creates n_tables * 2^n_planes partition directories"
-        )
-    _fs_write_text(
-        spark,
-        _index_child(path, "meta.json"),
-        json.dumps(
-            {"dim": dim, "n_planes": n_planes, "seed": seed,
-             "n_tables": n_tables}
-        ),
+    _index_new_generation(
+        spark, _LSH_INDEX, path, _lsh_meta(dim, n_planes, seed, n_tables)
     )
-    _index_clear_tombstones(spark, path)
 
 
 def lsh_index_write_delta(
@@ -967,37 +1157,12 @@ def lsh_index_write_delta(
     """IDEMPOTENT ingest unit for the persisted LSH index: hash ``corpus``
     with the header's frozen planes and write it ``mode("overwrite")``
     under ``<path>/buckets/<delta>/`` (still ``partitionBy(tbl, bucket)``
-    below the delta key, so the query side's partition pruning on
-    (tbl, bucket) is untouched — Spark prunes on any partition column
-    regardless of directory depth). Re-running the SAME delta key
-    overwrites its own directory with identical deterministic content
-    instead of blind-appending — the property a replayed streaming
-    micro-batch needs for exactly-once index ingest (key the delta by
-    ``batch=<batch_id>``; the foreachBatch contract guarantees a replay
-    reuses the batch id). A compaction collapses the accumulated delta
-    dirs back to the flat layout."""
-    import json
-
-    spark = corpus.sparkSession
-    meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
-    dim, n_planes = int(meta["dim"]), int(meta["n_planes"])
-    seed, n_tables = int(meta["seed"]), int(meta["n_tables"])
-    d = corpus.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-    if d and d[0]["d"] != dim:
-        raise ValueError(
-            f"lsh_index_write_delta: index dim={dim} but corpus "
-            f"'{vec_col}' vectors are {d[0]['d']}-wide"
-        )
-    tables = lsh_table_planes(dim, n_planes, n_tables, seed)
-    rows = _lsh_corpus_side(corpus, tables, id_col, vec_col)
-    _layout_repartition(
-        rows, "tbl", "bucket",
-        n_dirs=n_tables * (1 << n_planes), id_col="neighbor_id",
-    ).write.mode(
-        "overwrite"
-    ).option("compression", "zstd").partitionBy("tbl", "bucket").parquet(
-        _index_child(path, "buckets/" + delta.strip("/"))
-    )
+    below the delta key). Re-running the SAME delta key overwrites its own
+    directory with identical deterministic content instead of
+    blind-appending — exactly-once index ingest for a replayed streaming
+    micro-batch (see :func:`_index_write_delta`). A compaction collapses
+    the accumulated delta dirs back to the flat layout."""
+    _index_write_delta(_LSH_INDEX, corpus, path, delta, id_col, vec_col)
 
 
 def lsh_index_append(
@@ -1019,43 +1184,9 @@ def lsh_index_append(
     by test. Returns the full index read back from ``path``.
 
     Refuses a stream-ingested root that still carries a ``batch=`` delta
-    layer: appending flat ``tbl=/bucket=`` directories NEXT TO
-    ``batch=<id>/tbl=/bucket=`` ones would give the dataset two
-    conflicting partition structures and every subsequent read would
-    fail with an AnalysisException — compact first (compaction retires
-    the delta layer) or keep ingesting through
-    :func:`lsh_index_write_delta`."""
-    import json
-
-    spark = corpus.sparkSession
-    if _has_delta_layer(spark, path, "buckets"):
-        raise ValueError(
-            f"lsh_index_append: index at {path} carries a streaming "
-            "batch= delta layer; a flat append next to it would create "
-            "conflicting partition directory structures and break every "
-            "subsequent read — run lsh_index_compact first, or ingest "
-            "this batch via lsh_index_write_delta"
-        )
-    meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
-    dim, n_planes = int(meta["dim"]), int(meta["n_planes"])
-    seed, n_tables = int(meta["seed"]), int(meta["n_tables"])
-    d = corpus.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-    if d and d[0]["d"] != dim:
-        raise ValueError(
-            f"lsh_index_append: index dim={dim} but corpus '{vec_col}' "
-            f"vectors are {d[0]['d']}-wide"
-        )
-    tables = lsh_table_planes(dim, n_planes, n_tables, seed)
-    rows = _lsh_corpus_side(corpus, tables, id_col, vec_col)
-    _layout_repartition(
-        rows, "tbl", "bucket",
-        n_dirs=n_tables * (1 << n_planes), id_col="neighbor_id",
-    ).write.mode(
-        "append"
-    ).option("compression", "zstd").partitionBy("tbl", "bucket").parquet(
-        _index_child(path, "buckets")
-    )
-    return _read_layout(spark, path, "buckets", meta)
+    layer (:func:`_index_append`) — compact first (compaction retires the
+    delta layer) or keep ingesting through :func:`lsh_index_write_delta`."""
+    return _index_append(_LSH_INDEX, corpus, path, id_col, vec_col)
 
 
 def _index_delete(
@@ -1096,27 +1227,6 @@ def _index_delete(
     tpath = _index_child(path, "tombstones")
     ids.coalesce(1).write.mode("append").parquet(tpath)
     # the tombstone set just grew — the next _live_rows must re-probe it
-    _FS_BYTES_CACHE.pop(tpath, None)
-
-
-def _index_clear_tombstones(spark, path: str) -> None:
-    """Remove a PRIOR generation's tombstone set at ``<path>/tombstones``
-    — called by every ``*_index_build``/``*_index_init`` once the new
-    generation owns the root. Tombstones belong to the data files they
-    were issued against, never to the root: rebuilding in place at a root
-    that previously received deletes would otherwise silently suppress
-    any rebuilt row whose id was tombstoned in the old generation (the
-    r12 advice footgun — newly reachable for all three families once the
-    query paths became tombstone-aware). Ordered AFTER the new data/header
-    lands so a crash mid-build leaves the OLD generation's tombstones
-    intact (the old index stays correct); invalidates the byte-gate
-    cache so the next :func:`_live_rows` sees the cleared state."""
-    tpath = _index_child(path, "tombstones")
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(tpath)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
     _FS_BYTES_CACHE.pop(tpath, None)
 
 
@@ -1198,31 +1308,27 @@ def _live_rows(spark, rows: DataFrame, path: str, id_name: str) -> DataFrame:
 
 def lsh_index_read(spark, path: str) -> DataFrame:
     """The LIVE rows of a persisted LSH index: the bucket table minus any
-    tombstoned ids — what the query path actually scores against."""
-    import json
-
-    meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
-    rows = _read_layout(spark, path, "buckets", meta).select(
+    tombstoned ids — what the query path actually scores against. A root
+    without a header (a legacy root, or a build that crashed before its
+    header write) reads the same rows through schema inference."""
+    meta = _index_header(spark, _LSH_INDEX, path, required=False)
+    return _index_rows(spark, _LSH_INDEX, path, meta).select(
         "neighbor_id",
         "cv",
         F.col("tbl").cast("long").alias("tbl"),
         F.col("bucket").cast("long").alias("bucket"),
     )
-    return _live_rows(spark, rows, path, "neighbor_id")
 
 
 def ivfpq_index_read(spark, path: str) -> DataFrame:
     """The LIVE rows of a persisted IVFADC index: the code table (any
     streamed batch= delta layer dropped) minus tombstoned ids — what the
-    query path actually ranks against."""
-    import json
-
-    meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
-    rows = _read_layout(spark, path, "codes", meta)
-    if "batch" in rows.columns:
-        rows = rows.drop("batch")
-    rows = rows.withColumn("cell", F.col("cell").cast("long"))
-    return _live_rows(spark, rows, path, "nid")
+    query path actually ranks against. A headerless root reads through
+    schema inference, as for :func:`lsh_index_read`."""
+    meta = _index_header(spark, _IVFPQ_INDEX, path, required=False)
+    return _index_rows(spark, _IVFPQ_INDEX, path, meta).withColumn(
+        "cell", F.col("cell").cast("long")
+    )
 
 
 def index_publish(spark, pointer: str, root: str) -> None:
@@ -1235,16 +1341,12 @@ def index_publish(spark, pointer: str, root: str) -> None:
     queries finish against the old root undisturbed; the old generation
     is retired after a grace period. The pattern is a one-file version of
     Iceberg's metadata-pointer swap."""
-    import json
-
     _fs_write_text(spark, pointer, json.dumps({"root": root.rstrip("/")}))
 
 
 def index_current(spark, pointer: str) -> str:
     """Resolve the CURRENT index root behind ``pointer`` (see
     :func:`index_publish`)."""
-    import json
-
     return json.loads(_fs_read_text(spark, pointer))["root"]
 
 
@@ -1257,10 +1359,7 @@ def _fs_qualified_uri(spark, path) -> str:
     ``toString()``, not ``toUri()`` — the URI form preserves the
     empty-vs-absent authority distinction (``file:///x`` vs ``file:/x``)
     that path identity must ignore."""
-    jvm = spark._jvm
-    p = str(path).rstrip("/") or str(path)
-    hpath = jvm.org.apache.hadoop.fs.Path(p)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, str(path).rstrip("/") or str(path))
     return str(fs.makeQualified(hpath))
 
 
@@ -1281,8 +1380,6 @@ def index_retire(spark, pointer: str, roots) -> list[str]:
     removes it; this primitive narrows the window from the whole loop to
     one delete call. Returns the roots actually deleted. The caller owns
     the grace-period policy (time- or query-drain-based)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     deleted: list[str] = []
     for r in roots:
         rr = str(r).rstrip("/")
@@ -1291,8 +1388,7 @@ def index_retire(spark, pointer: str, roots) -> list[str]:
         current_uri = _fs_qualified_uri(spark, index_current(spark, pointer))
         if _fs_qualified_uri(spark, rr) == current_uri:
             continue
-        hpath = jvm.org.apache.hadoop.fs.Path(rr)
-        fs = hpath.getFileSystem(conf)
+        fs, hpath = _fs(spark, rr)
         if fs.exists(hpath):
             fs.delete(hpath, True)
             deleted.append(rr)
@@ -1300,53 +1396,32 @@ def index_retire(spark, pointer: str, roots) -> list[str]:
 
 
 def _index_compact(
-    spark, src_path: str, dst_path: str, *, subdir: str,
-    partition_cols: list[str], id_name: str,
+    spark, spec: IndexSpec, src_path: str, dst_path: str
 ) -> DataFrame:
     """Layout-PRESERVING compaction of a persisted index: every append
     adds one file per touched partition, so a long-lived index
     accumulates per-partition file counts equal to its append count —
     per-file open/footer overhead that grows without bound. Rewrite the
-    data repartitioned on the partition columns (each partition collapses
-    back to ~one file) under the SAME partitionBy layout at a new root,
-    and copy the header verbatim — the query path's partition pruning and
-    frozen parameters are untouched. ``sinks.compact_parquet`` is the
-    wrong tool here: it rewrites to a FLAT directory, destroying the
-    pruning layout the index exists for. Compact-to-new-root (never
-    in-place) so readers of the old root stay consistent mid-compaction;
-    the caller swaps roots when done — :func:`index_publish` makes that
-    swap a single atomic pointer write.
+    live rows repartitioned on the partition columns (each partition
+    collapses back to ~one file) under the SAME partitionBy layout at a new
+    root, with the header copied (its pinned schema refreshed) — the query
+    path's partition pruning and frozen parameters are untouched.
+    ``sinks.compact_parquet`` is the wrong tool here: it rewrites to a FLAT
+    directory, destroying the pruning layout the index exists for.
+    Compact-to-new-root (never in-place) so readers of the old root stay
+    consistent mid-compaction; the caller swaps roots when done —
+    :func:`index_publish` makes that swap a single atomic pointer write.
 
-    Compaction is also where DELETES become physical: tombstoned rows
-    (:func:`_index_delete`) are dropped during the rewrite and the
-    tombstone set is NOT copied to the new root — the merge-on-read debt
-    is settled."""
-    import json
-
-    meta = json.loads(_fs_read_text(spark, _index_child(src_path, "meta.json")))
-    rows = _read_layout(spark, src_path, subdir, meta)
-    if "batch" in rows.columns:
-        # a stream-ingested index carries a batch=<id> delta layer above
-        # the layout columns (lsh_index_write_delta); compaction is
-        # exactly the operation that retires it
-        rows = rows.drop("batch")
-    rows = _live_rows(spark, rows, src_path, id_name)
-    _layout_repartition(
-        rows, *partition_cols, id_col=id_name
-    ).write.mode(
-        "overwrite"
-    ).option("compression", "zstd").partitionBy(*partition_cols).parquet(
-        _index_child(dst_path, subdir)
+    Compaction is also where DELETES become physical and where a
+    streaming ``batch=`` delta layer is retired: :func:`_index_rows` drops
+    tombstoned rows and the delta column, and the rewrite is a new
+    generation (:func:`_index_new_generation`), so the destination ends
+    with no tombstone set — neither the source's (settled) nor one a
+    destination root held from earlier deletes."""
+    meta = _index_header(spark, spec, src_path)
+    return _index_new_generation(
+        spark, spec, dst_path, meta, _index_rows(spark, spec, src_path, meta)
     )
-    # (re)pin the layout schema from the compacted root's read-back: the
-    # header rides verbatim except the schema key, so a root built before
-    # the pin gains it at its first compaction
-    idx = spark.read.parquet(_index_child(dst_path, subdir))
-    meta["schema"] = _layout_schema(idx)
-    _fs_write_text(
-        spark, _index_child(dst_path, "meta.json"), json.dumps(meta)
-    )
-    return idx
 
 
 def lsh_index_compact(spark, src_path: str, dst_path: str) -> DataFrame:
@@ -1354,21 +1429,14 @@ def lsh_index_compact(spark, src_path: str, dst_path: str) -> DataFrame:
     (tbl, bucket) layout preserved, each bucket back to ~one file,
     header copied — :func:`lsh_index_query` against the compacted root
     is identical to the appended one, test-pinned."""
-    return _index_compact(
-        spark, src_path, dst_path,
-        subdir="buckets", partition_cols=["tbl", "bucket"],
-        id_name="neighbor_id",
-    )
+    return _index_compact(spark, _LSH_INDEX, src_path, dst_path)
 
 
 def ivfpq_index_compact(spark, src_path: str, dst_path: str) -> DataFrame:
     """Compact an appended IVFADC index (see :func:`_index_compact`):
     cell layout preserved, each cell back to ~one file, header (trained
     codebooks) copied verbatim."""
-    return _index_compact(
-        spark, src_path, dst_path, subdir="codes", partition_cols=["cell"],
-        id_name="nid",
-    )
+    return _index_compact(spark, _IVFPQ_INDEX, src_path, dst_path)
 
 
 def index_file_stats(spark, path: str, *, subdir: str) -> dict:
@@ -1381,10 +1449,7 @@ def index_file_stats(spark, path: str, *, subdir: str) -> dict:
     same listing cost compaction itself pays; run it from the maintenance
     loop (daily), not the query path. Returns ``{n_partitions, n_files,
     max_files, avg_files}`` over leaf directories holding parquet data."""
-    base = _index_child(path, subdir)
-    jvm = spark._jvm
-    hbase = jvm.org.apache.hadoop.fs.Path(base)
-    fs = hbase.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hbase = _fs(spark, _index_child(path, subdir))
     if not fs.exists(hbase):
         return {"n_partitions": 0, "n_files": 0, "max_files": 0,
                 "avg_files": 0.0}
@@ -1491,36 +1556,23 @@ def lsh_index_query(
     same operating point. A query vector whose width is not the header's
     ``dim`` raises ValueError; a null vector hashes to bucket 0, as in
     :func:`lsh_signature`."""
-    import json
-
-    meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
-    dim, n_planes = int(meta["dim"]), int(meta["n_planes"])
-    seed, n_tables = int(meta["seed"]), int(meta["n_tables"])
-    tables = lsh_table_planes(dim, n_planes, n_tables, seed)
+    meta = _index_header(spark, _LSH_INDEX, path)
     q, by_tbl = _lsh_probe_side(
-        spark, queries, tables, probe_bits, id_col, vec_col
-    )
-    pred = None
-    for t, buckets in sorted(by_tbl.items()):
-        clause = (F.col("tbl") == t) & F.col("bucket").isin(buckets)
-        pred = clause if pred is None else (pred | clause)
-    if pred is None:  # empty query set: no buckets probed, empty result
-        pred = F.lit(False)
-    c = (
-        _read_layout(spark, path, "buckets", meta)
-        .where(pred)
-        # partition-directory columns come back int32/int32; restore the
-        # long bucket the in-memory side carries so the join is cast-free
-        .select(
-            "neighbor_id",
-            "cv",
-            F.col("tbl").cast("int").alias("tbl"),
-            F.col("bucket").cast("long").alias("bucket"),
-        )
+        spark, queries, _lsh_tables(meta), probe_bits, id_col, vec_col
     )
     # merge-on-read deletes: tombstoned ids (lsh_index_delete) drop from
-    # the candidate set here; the next compaction makes them physical
-    c = _live_rows(spark, c, path, "neighbor_id")
+    # the candidate set inside _index_rows; the next compaction makes them
+    # physical
+    c = _index_rows(
+        spark, _LSH_INDEX, path, meta, where=_probe_pred("tbl", "bucket", by_tbl)
+    ).select(
+        # partition-directory columns come back int32/int32; restore the
+        # long bucket the in-memory side carries so the join is cast-free
+        "neighbor_id",
+        "cv",
+        F.col("tbl").cast("int").alias("tbl"),
+        F.col("bucket").cast("long").alias("bucket"),
+    )
     return _lsh_score_rank(q, c, k=k)
 
 
@@ -2253,6 +2305,27 @@ def _layout_write_partitions(spark, n_dirs: int | None = None) -> int:
     return max(1, min(int(n_dirs), par))
 
 
+#: Upper bound on :data:`_LAYOUT_SPLIT_FILES`: a layout directory gets at
+#: most this many writers and files. Past it, the per-file open/footer cost
+#: every scan of the directory pays (~15 ms per file on local disk)
+#: outweighs the write parallelism gained.
+_LAYOUT_SPLIT_MAX = 64
+
+
+def _layout_split(raw: str) -> int:
+    """Validate ``SPARK_GRAFT_LAYOUT_SPLIT``: an integer >= 1, clamped to
+    :data:`_LAYOUT_SPLIT_MAX`."""
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_LAYOUT_SPLIT must be an integer >= 1, got {raw!r}"
+        )
+    return min(n, _LAYOUT_SPLIT_MAX)
+
+
 #: Within-partition SPLIT for index layout writes: >1 spreads each layout
 #: directory's rows over up to this many tasks/files. The local default is
 #: 1 (each directory lands as ~one file — the small-files guard); a
@@ -2260,7 +2333,7 @@ def _layout_write_partitions(spark, n_dirs: int | None = None) -> int:
 #: one reasonable file) raises it — e.g. 8 gives each hot directory 8
 #: writers and 8 files, removing the single-task ceiling the r13 verdict
 #: flagged as docstring-only.
-_LAYOUT_SPLIT_FILES = int(os.environ.get("SPARK_GRAFT_LAYOUT_SPLIT", "1"))
+_LAYOUT_SPLIT_FILES = _layout_split(os.environ.get("SPARK_GRAFT_LAYOUT_SPLIT", "1"))
 
 
 def _layout_repartition(
@@ -2277,7 +2350,7 @@ def _layout_repartition(
     query side's partition pruning are untouched; each directory just
     gains up to ``split`` concurrent writers and files."""
     spark = df.sparkSession
-    split = max(1, _LAYOUT_SPLIT_FILES)
+    split = _LAYOUT_SPLIT_FILES
     keys = [F.col(c) for c in cols]
     if split > 1 and id_col:
         keys.append(F.pmod(F.xxhash64(F.col(id_col)), F.lit(split)))
@@ -2302,8 +2375,6 @@ def _layout_schema(df: DataFrame) -> dict:
     EXACTLY what inference would produce for this layout (including the
     int-typed partition directory columns) — downstream casts and plans are
     untouched."""
-    import json
-
     return json.loads(df.schema.json())
 
 
@@ -2353,8 +2424,7 @@ def _fs_write_text(spark, path: str, text: str) -> None:
     write), so no reader ever sees partial content on any path."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
+    fs, hpath = _fs(spark, path)
     tmp = jvm.org.apache.hadoop.fs.Path(
         path + ".tmp-" + __import__("uuid").uuid4().hex[:12]
     )
@@ -2392,12 +2462,19 @@ def _fs_write_text(spark, path: str, text: str) -> None:
             raise IOError(f"_fs_write_text: rename {tmp} -> {path} failed")
 
 
+def _fs(spark, path: str):
+    """``(fs, hpath)``: the Hadoop FileSystem resolved for ``path``'s
+    scheme, and ``path`` as a Hadoop Path — the layer every index file
+    operation goes through, so headers, tombstones and listings land next
+    to the parquet data on hdfs:// and s3a:// roots too (os.path would
+    only see local paths)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _fs_exists(spark, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem for ``path``'s scheme
-    (see :func:`_fs_write_text` — os.path would only see local paths)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Existence probe through :func:`_fs`."""
+    fs, hpath = _fs(spark, path)
     return bool(fs.exists(hpath))
 
 
@@ -2411,27 +2488,20 @@ def _fs_bytes(spark, path: str) -> int:
     plan is built, the same way
     :func:`wiki_mysql_spark.sources.tables.is_small_input` byte-gates
     driver-side collects."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     return int(fs.getContentSummary(hpath).getLength())
 
 
 def _has_delta_layer(spark, path: str, subdir: str) -> bool:
     """True when the index data under ``<path>/<subdir>/`` carries a
-    streaming ``batch=<id>/`` delta layer (:func:`lsh_index_write_delta` /
-    :func:`ivfpq_index_write_delta`) that compaction has not yet retired.
-    One driver-side directory listing, no job."""
-    dpath = _index_child(path, subdir)
-    if not _fs_exists(spark, dpath):
-        return False
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(dpath)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    for st in fs.listStatus(hpath):
-        if st.isDirectory() and st.getPath().getName().startswith("batch="):
-            return True
-    return False
+    streaming ``batch=<id>/`` delta layer (:func:`_index_write_delta`)
+    that compaction has not yet retired. One driver-side directory
+    listing, no job."""
+    fs, hpath = _fs(spark, _index_child(path, subdir))
+    return bool(fs.exists(hpath)) and any(
+        st.isDirectory() and st.getPath().getName().startswith("batch=")
+        for st in fs.listStatus(hpath)
+    )
 
 
 #: Minimum age (ms since last modification) before a ``.tmp-*`` sibling is
@@ -2475,19 +2545,16 @@ def _fs_read_text(spark, path: str) -> str:
     is: |driver - FS| must stay under :data:`_TMP_ADOPT_MIN_AGE_MS` for
     the age gate to mean anything — JSON validation remains the
     authoritative gate either way."""
-    import json as _json
-    import os as _os
     import time as _time
 
     jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     if not fs.exists(hpath):
         cands = fs.globStatus(jvm.org.apache.hadoop.fs.Path(path + ".tmp-*"))
         if cands:
             try:
                 probe = jvm.org.apache.hadoop.fs.Path(
-                    f"{path}.ageprobe-{_os.getpid()}"
+                    f"{path}.ageprobe-{os.getpid()}"
                 )
                 fs.create(probe, True).close()
                 now_ms = int(fs.getFileStatus(probe).getModificationTime())
@@ -2514,7 +2581,7 @@ def _fs_read_text(spark, path: str) -> str:
                 # to the next candidate / the real-path open below
                 continue
             try:
-                _json.loads(text)
+                json.loads(text)
             except ValueError:
                 continue  # truncated/partial crash residue — never adopt
             return text
@@ -2536,13 +2603,13 @@ def _ivfpq_train(
     vec_col: str,
     dim: int,
     driver_train_bytes: int,
-) -> tuple[list, list]:
+) -> dict:
     """Train the IVFADC quantizers (coarse Lloyd codebook + residual-PQ
     sub-books) on ``corpus`` — the shared front half of
     :func:`ivfpq_index_build` and :func:`ivfpq_index_init`. Byte-gated
     numpy twin under ``driver_train_bytes`` (FAISS trains on a bounded
     sample), fused distributed jobs past it; both paths are
-    parity-pinned."""
+    parity-pinned. Returns the index header ``{dim, m, coarse, books}``."""
     if driver_train_bytes and _fits_driver(corpus, id_col, vec_col, driver_train_bytes):
         import numpy as np
 
@@ -2554,7 +2621,7 @@ def _ivfpq_train(
         books = _pq_train_np(
             ids, V - Cc[_assign_cells_np(V, coarse)], m, n_centroids, dim
         )
-        return coarse, books
+        return {"dim": dim, "m": m, "coarse": coarse, "books": books}
     coarse = sorted(
         kmeans_codebook(
             corpus,
@@ -2588,7 +2655,40 @@ def _ivfpq_train(
         rescorp, m=m, n_centroids=n_centroids, id_col="nid",
         vec_col="rv", dim=dim, driver_train_bytes=driver_train_bytes,
     )
+    return {"dim": dim, "m": m, "coarse": coarse, "books": books}
+
+
+def _ivfpq_codebooks(meta: dict):
+    """``(coarse, books)`` from an IVFADC header: centroid ids as int,
+    values as float, the coarse codebook sorted by id."""
+    coarse = sorted((int(c), [float(x) for x in v]) for c, v in meta["coarse"])
+    books = [
+        [(int(c), [float(x) for x in v]) for c, v in b] for b in meta["books"]
+    ]
     return coarse, books
+
+
+def _ivfpq_index_encode(
+    meta: dict, corpus: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """The IVFADC code rows of ``corpus`` under the header's FROZEN
+    codebooks (:func:`_ivfpq_encode`) — build, append and write_delta all
+    encode through here, so they never differ."""
+    coarse, books = _ivfpq_codebooks(meta)
+    return _ivfpq_encode(
+        corpus, coarse, books, id_col=id_col, vec_col=vec_col,
+        dim=int(meta["dim"]),
+    )
+
+
+_IVFPQ_INDEX = IndexSpec(
+    family="ivfpq",
+    subdir="codes",
+    partition_cols=("cell",),
+    id_col="nid",
+    n_dirs=lambda meta: len(meta["coarse"]),
+    encode=_ivfpq_index_encode,
+)
 
 
 def ivfpq_index_build(
@@ -2614,46 +2714,24 @@ def ivfpq_index_build(
     scale: one directory per cell, each scanned ONLY when probed
     (PartitionFilters — plan-pinned in tests/test_plans.py).
 
-    Raw vectors ride along in the code table for the family's
-    exact-cosine verifier column; a deployment that wants codes-only
-    partitions would store vectors in a separate cell-partitioned table
-    and join them back for the returned top-k only.
+    Each cell is co-located before the partitioned write (~one file per
+    cell, :func:`_index_write`); a deployment whose cells outgrow one task
+    sets ``SPARK_GRAFT_LAYOUT_SPLIT``. Raw vectors ride along in the code
+    table for the family's exact-cosine verifier column; a deployment that
+    wants codes-only partitions would store vectors in a separate
+    cell-partitioned table and join them back for the returned top-k only.
 
     Returns the persisted code table read back from ``path`` (nid, cv,
     cell, c0..c{m-1})."""
-    import json
-
-    spark = corpus.sparkSession
-    coarse, books = _ivfpq_train(
+    meta = _ivfpq_train(
         corpus, n_coarse=n_coarse, coarse_iters=coarse_iters, m=m,
         n_centroids=n_centroids, id_col=id_col, vec_col=vec_col, dim=dim,
         driver_train_bytes=driver_train_bytes,
     )
-    codes = _ivfpq_encode(
-        corpus, coarse, books, id_col=id_col, vec_col=vec_col, dim=dim
+    return _index_new_generation(
+        corpus.sparkSession, _IVFPQ_INDEX, path, meta,
+        _ivfpq_index_encode(meta, corpus, id_col, vec_col),
     )
-    # co-locate each cell before the partitioned write: without it every
-    # write task emits one file per cell it happens to hold (32 tasks x 8
-    # cells = hundreds of row-group-sized files — the classic small-files
-    # failure mode). Hash-partitioning on cell gives ~one file per cell;
-    # a deployment whose cells outgrow one task sets SPARK_GRAFT_LAYOUT_SPLIT
-    # (the within-cell split key in _layout_repartition).
-    _layout_repartition(
-        codes, "cell", n_dirs=n_coarse, id_col="nid"
-    ).write.mode("overwrite").option(
-        "compression", "zstd"
-    ).partitionBy("cell").parquet(_index_child(path, "codes"))
-    # one inference read-back pins the layout schema into the header, so
-    # every later read of this root skips the footer-inference job
-    idx = spark.read.parquet(_index_child(path, "codes"))
-    _fs_write_text(
-        spark,
-        _index_child(path, "meta.json"),
-        json.dumps({"dim": dim, "m": m, "coarse": coarse, "books": books,
-                    "schema": _layout_schema(idx)}),
-    )
-    _index_clear_tombstones(spark, path)
-    return idx
 
 
 def ivfpq_index_query(
@@ -2676,32 +2754,24 @@ def ivfpq_index_query(
     identical to :func:`ivfpq_topk` at the same operating point. Header
     and codes go through the Hadoop FileSystem for ``path``'s scheme, so
     build and query compose on non-local index roots too."""
-    import json
-
-    meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
-    coarse = sorted((int(c), [float(x) for x in v]) for c, v in meta["coarse"])
-    books = [
-        [(int(c), [float(x) for x in v]) for c, v in b] for b in meta["books"]
-    ]
-    dim, m = int(meta["dim"]), int(meta["m"])
+    meta = _index_header(spark, _IVFPQ_INDEX, path)
+    coarse, books = _ivfpq_codebooks(meta)
     probes = _ivfpq_probes(
         queries, coarse, n_probe, id_col=id_col, vec_col=vec_col
     ).localCheckpoint(eager=False)  # reused: cells collect + candidate join
     probed = sorted(
         r["cell"] for r in probes.select("cell").distinct().collect()
     )
-    codes = _read_layout(spark, path, "codes", meta).where(
-        F.col("cell").isin([int(c) for c in probed])
+    # a stream-ingested root's batch= delta column and the tombstoned ids
+    # (ivfpq_index_delete) drop inside _index_rows; pruning on cell is
+    # unaffected, and the next compaction makes the deletes physical
+    codes = _index_rows(
+        spark, _IVFPQ_INDEX, path, meta,
+        where=F.col("cell").isin([int(c) for c in probed]),
     )
-    if "batch" in codes.columns:
-        # stream-ingested index: a batch=<id> delta layer rides above the
-        # cell layout (ivfpq_index_write_delta) — pruning on cell is
-        # unaffected, the extra partition column just drops here
-        codes = codes.drop("batch")
-    # merge-on-read deletes: tombstoned ids (ivfpq_index_delete) drop from
-    # the candidate set here; the next compaction makes them physical
-    codes = _live_rows(spark, codes, path, "nid")
-    return _ivfpq_rank(probes, codes, books, subdim=dim // m, k=k)
+    return _ivfpq_rank(
+        probes, codes, books, subdim=int(meta["dim"]) // int(meta["m"]), k=k
+    )
 
 
 def ivfpq_index_append(
@@ -2722,36 +2792,9 @@ def ivfpq_index_append(
     is unchanged. Returns the full code table read back from ``path``.
 
     Refuses a stream-ingested root that still carries a ``batch=`` delta
-    layer (same contract as :func:`lsh_index_append`: mixing flat
-    ``cell=`` dirs with ``batch=<id>/cell=`` ones breaks every
-    subsequent read) — compact first or ingest through
+    layer (:func:`_index_append`) — compact first or ingest through
     :func:`ivfpq_index_write_delta`."""
-    import json
-
-    spark = corpus.sparkSession
-    if _has_delta_layer(spark, path, "codes"):
-        raise ValueError(
-            f"ivfpq_index_append: index at {path} carries a streaming "
-            "batch= delta layer; a flat append next to it would create "
-            "conflicting partition directory structures and break every "
-            "subsequent read — run ivfpq_index_compact first, or ingest "
-            "this batch via ivfpq_index_write_delta"
-        )
-    meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
-    coarse = sorted((int(c), [float(x) for x in v]) for c, v in meta["coarse"])
-    books = [
-        [(int(c), [float(x) for x in v]) for c, v in b] for b in meta["books"]
-    ]
-    dim = int(meta["dim"])
-    codes = _ivfpq_encode(
-        corpus, coarse, books, id_col=id_col, vec_col=vec_col, dim=dim
-    )
-    _layout_repartition(
-        codes, "cell", n_dirs=len(coarse), id_col="nid"
-    ).write.mode("append").option(
-        "compression", "zstd"
-    ).partitionBy("cell").parquet(_index_child(path, "codes"))
-    return _read_layout(spark, path, "codes", meta)
+    return _index_append(_IVFPQ_INDEX, corpus, path, id_col, vec_col)
 
 
 def ivfpq_index_init(
@@ -2774,20 +2817,14 @@ def ivfpq_index_init(
     books — and it is the zero-data starting point of the streaming
     ingest path, where every micro-batch is an
     :func:`ivfpq_index_write_delta` and no batch is privileged."""
-    import json
-
-    spark = train_corpus.sparkSession
-    coarse, books = _ivfpq_train(
-        train_corpus, n_coarse=n_coarse, coarse_iters=coarse_iters, m=m,
-        n_centroids=n_centroids, id_col=id_col, vec_col=vec_col, dim=dim,
-        driver_train_bytes=driver_train_bytes,
+    _index_new_generation(
+        train_corpus.sparkSession, _IVFPQ_INDEX, path,
+        _ivfpq_train(
+            train_corpus, n_coarse=n_coarse, coarse_iters=coarse_iters, m=m,
+            n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
+            dim=dim, driver_train_bytes=driver_train_bytes,
+        ),
     )
-    _fs_write_text(
-        spark,
-        _index_child(path, "meta.json"),
-        json.dumps({"dim": dim, "m": m, "coarse": coarse, "books": books}),
-    )
-    _index_clear_tombstones(spark, path)
 
 
 def ivfpq_index_write_delta(
@@ -2807,22 +2844,4 @@ def ivfpq_index_write_delta(
     blind-appending — the replayed-micro-batch property (key by
     ``batch=<batch_id>``); :func:`ivfpq_index_compact` collapses the
     accumulated delta dirs back to the flat cell layout."""
-    import json
-
-    spark = corpus.sparkSession
-    meta = json.loads(_fs_read_text(spark, _index_child(path, "meta.json")))
-    coarse = sorted((int(c), [float(x) for x in v]) for c, v in meta["coarse"])
-    books = [
-        [(int(c), [float(x) for x in v]) for c, v in b] for b in meta["books"]
-    ]
-    dim = int(meta["dim"])
-    codes = _ivfpq_encode(
-        corpus, coarse, books, id_col=id_col, vec_col=vec_col, dim=dim
-    )
-    _layout_repartition(
-        codes, "cell", n_dirs=len(coarse), id_col="nid"
-    ).write.mode("overwrite").option(
-        "compression", "zstd"
-    ).partitionBy("cell").parquet(
-        _index_child(path, "codes/" + delta.strip("/"))
-    )
+    _index_write_delta(_IVFPQ_INDEX, corpus, path, delta, id_col, vec_col)
