@@ -1,7 +1,7 @@
 """The persisted-index lifecycle core shared by the LSH, IVFADC and minhash
 families (``operators/similarity.py``: ``IndexSpec`` and the ``_index_*``
 functions): compaction into a root with old tombstones, the missing-header
-policy, the layout-split knob, and the guard that keeps the on-disk format
+policy, the layout-split and listing-threshold knobs, and the guard that keeps the on-disk format
 in one place."""
 
 from __future__ import annotations
@@ -147,6 +147,28 @@ def test_layout_split_knob_checked_at_import():
     assert res.returncode != 0
     last = res.stderr.strip().splitlines()[-1]
     assert last.startswith("ValueError") and "SPARK_GRAFT_LAYOUT_SPLIT" in last
+
+
+def test_list_job_threshold_knob_rejects_bad_values():
+    """SPARK_GRAFT_LIST_JOB_THRESHOLD (the partition-discovery threshold
+    every index read lists under): not an integer or below 1 is a
+    ValueError naming the variable, at import too, instead of a conf error
+    that configure() swallows, leaving Spark's default of 32."""
+    from wiki_mysql_spark.session import _list_job_threshold
+
+    for raw in ("4k", "0", "-1", ""):
+        with pytest.raises(ValueError, match="SPARK_GRAFT_LIST_JOB_THRESHOLD"):
+            _list_job_threshold(raw)
+    assert _list_job_threshold("32") == "32"
+    env = {**os.environ, "SPARK_GRAFT_LIST_JOB_THRESHOLD": "4k"}
+    res = subprocess.run(
+        [sys.executable, "-c", "import wiki_mysql_spark.session"],
+        env=env, capture_output=True, text=True,
+        cwd=OPERATORS.parent.parent,
+    )
+    last = res.stderr.strip().splitlines()[-1]
+    assert res.returncode != 0
+    assert last.startswith("ValueError") and "SPARK_GRAFT_LIST_JOB_THRESHOLD" in last
 
 
 def _sites(path: pathlib.Path, match) -> list[tuple[str, int]]:

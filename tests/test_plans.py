@@ -528,15 +528,20 @@ def test_ann_index_header_rides_hadoop_filesystem(spark, tmp_path):
     assert got == want
 
 
-def test_lsh_index_query_scan_prunes_to_probed_buckets(spark, tmp_path):
+def test_lsh_index_query_scan_prunes_to_probed_buckets(
+    spark, tmp_path, monkeypatch
+):
     """The persisted LSH index's 100 TB claim as behavior (the lsh_topk
     docstring's "at scale the corpus is written bucket-partitioned, so a
     query touches 1 + probe_bits*n_planes partitions per table"): the
     bucket scan must carry partition filters on BOTH partition columns
     (tbl, bucket) and the EXECUTED scan must read exactly the probed
-    buckets that exist on disk — never the whole index."""
+    buckets that exist on disk — never the whole index. Pinned to the
+    distributed plan (one-task bound 0); the one-task plan has its own
+    twin below."""
     from pyspark.sql import functions as F
 
+    from wiki_mysql_spark.operators import similarity
     from wiki_mysql_spark.operators.similarity import (
         lsh_index_build,
         lsh_index_query,
@@ -570,6 +575,7 @@ def test_lsh_index_query_scan_prunes_to_probed_buckets(spark, tmp_path):
     want_parts = len(probed & existing)
     assert 0 < want_parts < len(existing), "fixture probes must be selective"
 
+    monkeypatch.setattr(similarity, "_LSH_ONE_TASK_BYTES", 0)
     res = lsh_index_query(spark, path, queries, k=10, probe_bits=probe_bits)
     assert len(res.collect()) > 0
     plan = res._jdf.queryExecution().executedPlan()
@@ -642,34 +648,254 @@ def _jobs_of(spark, action):
 
 @pytest.fixture(scope="module")
 def lsh_roots(spark, tmp_path_factory):
-    """sf0.001 LSH indexes at 1 and 2 tables x 8 planes, each with two
-    tombstoned ids: {n_tables: (root, dead ids)}."""
+    """sf0.001 LSH indexes at 1 and 2 tables x 8 planes (float vectors, as
+    stored in the fixture), plus a 2-table index of the same vectors
+    stored as doubles, each with two tombstoned ids:
+    {1 | 2 | "double": (root, dead ids)}."""
+    from pyspark.sql import functions as F
+
     from wiki_mysql_spark.operators.similarity import (
         lsh_index_build,
         lsh_index_delete,
     )
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    wide = emb.select("vec_id", F.col("embedding").cast("array<double>"))
     roots = {}
-    for n_tables in (1, 2):
-        root = str(tmp_path_factory.mktemp(f"lsh{n_tables}") / "idx")
-        lsh_index_build(emb, root, dim=64, n_planes=8, n_tables=n_tables)
+    for key, n_tables, corpus in ((1, 1, emb), (2, 2, emb), ("double", 2, wide)):
+        root = str(tmp_path_factory.mktemp(f"lsh{key}") / "idx")
+        lsh_index_build(corpus, root, dim=64, n_planes=8, n_tables=n_tables)
         lsh_index_delete(spark, root, [5, 7, 5])
-        roots[n_tables] = (root, {5, 7})
+        roots[key] = (root, {5, 7})
     return roots
 
 
-def test_lsh_index_query_five_jobs_one_shuffle(spark, lsh_roots):
+def _one_task(res) -> bool:
+    """True when ``res`` is lsh_index_query's one-task plan (a mapInArrow
+    over the pruned scan), False for the distributed bucket join."""
+    return "MapInArrow" in res._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _knn_both_paths(spark, monkeypatch, root, queries, **kw):
+    """lsh_index_query of one batch with the one-task gate open, then with
+    its bound at 0: ((rows, schema, one task?) per path)."""
+    from wiki_mysql_spark.operators import similarity
+
+    out = []
+    for bound in (similarity._LSH_ONE_TASK_BYTES, 0):
+        with monkeypatch.context() as m:
+            m.setattr(similarity, "_LSH_ONE_TASK_BYTES", bound)
+            res = similarity.lsh_index_query(spark, root, queries, **kw)
+        out.append((sorted(map(tuple, res.collect())), res.schema, _one_task(res)))
+    return out
+
+
+@pytest.mark.parametrize("key", [1, 2, "double"])
+def test_lsh_index_query_one_task_gate_parity(spark, lsh_roots, monkeypatch, key):
+    """Both sides of lsh_index_query's byte gate return identical rows and
+    an identical StructType (the caller's query_id type and nullability
+    included), on batches that stress the ranking rules: self-queries of
+    live and tombstoned ids, a repeated identical row, one query_id with
+    two vectors (at k=10 and k=2), an int id column, an empty batch and k
+    past the candidate count."""
+    from pyspark.sql import functions as F
+
+    root, _ = lsh_roots[key]
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
+        "vec_id", "embedding")
+    q = emb.where(F.col("vec_id") < 4)
+    two_vectors = emb.where(F.col("vec_id").isin(1, 2)).select(
+        F.lit(9).cast("long").alias("vec_id"), "embedding")
+    batches = {
+        "self": (q, 10),
+        "self_tombstoned": (emb.where(F.col("vec_id").isin(5, 6)), 10),
+        "repeated_row": (q.unionAll(q.where(F.col("vec_id") == 0)), 10),
+        "one_id_two_vectors": (two_vectors, 10),
+        "one_id_two_vectors_k2": (two_vectors, 2),
+        "int_id": (q.select(F.col("vec_id").cast("int").alias("vec_id"),
+                            "embedding"), 10),
+        "empty": (q.where(F.lit(False)), 10),
+        "k_past_candidates": (q, 100_000),
+    }
+    for name, (batch, k) in batches.items():
+        (rows, schema, one), (d_rows, d_schema, d_one) = _knn_both_paths(
+            spark, monkeypatch, root, batch, k=k, probe_bits=1)
+        assert one and not d_one, name
+        assert rows == d_rows, name
+        assert schema == d_schema, name
+        assert name == "empty" or rows, name
+
+
+def test_lsh_index_query_degenerate_batches_take_distributed_path(
+    spark, lsh_roots, tmp_path
+):
+    """A null or zero query vector, and a root with a streaming batch=
+    delta layer, take the distributed plan: its Spark semantics (a null
+    similarity, a division by zero) stay Spark's."""
+    from pyspark.sql import functions as F
+
+    from wiki_mysql_spark.operators.similarity import (
+        lsh_index_init,
+        lsh_index_query,
+        lsh_index_write_delta,
+    )
+
+    root, _ = lsh_roots[2]
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
+        "vec_id", "embedding")
+    q = emb.where(F.col("vec_id") < 2)
+    null_vec = q.select("vec_id", F.lit(None).cast("array<float>").alias("embedding"))
+    zero_vec = q.select("vec_id", F.array_repeat(
+        F.lit(0.0).cast("float"), 64).alias("embedding"))
+    res = lsh_index_query(spark, root, null_vec, k=5)
+    assert not _one_task(res)
+    assert all(r["cos_sim"] is None for r in res.collect())
+    assert not _one_task(lsh_index_query(spark, root, zero_vec, k=5))
+
+    delta_root = str(tmp_path / "delta")
+    lsh_index_init(spark, delta_root, dim=64, n_planes=8, n_tables=2)
+    lsh_index_write_delta(emb, delta_root, "batch=0")
+    res = lsh_index_query(spark, delta_root, q, k=5, probe_bits=1)
+    assert not _one_task(res)
+    assert len(res.collect()) == 10
+
+
+def test_lsh_index_query_one_task_degenerate_index_rows(
+    spark, tmp_path, monkeypatch
+):
+    """Index rows the numpy scorer must treat as Spark does: a null vector,
+    a null element, a vector of another width (all null similarity,
+    ranked last), a NaN element (NaN, ranked first) and a zero vector (a
+    null similarity without ANSI, a DIVIDE_BY_ZERO error with it). One
+    plane and probe_bits=1 make every row a candidate of every query."""
+    from wiki_mysql_spark.operators import similarity
+    from wiki_mysql_spark.operators.similarity import lsh_index_build
+
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0]), (2, [0.5, 0.5, 0.0, 0.0]), (3, None),
+        (4, [1.0, None, 0.0, 0.0]), (5, [float("nan"), 0.0, 0.0, 0.0]),
+        (6, [1.0, 2.0, 3.0]), (7, [0.0, 1.0, 0.0, 0.0]),
+        (8, [0.0, 0.0, 0.0, 0.0]),
+    ]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    root = str(tmp_path / "idx")
+    lsh_index_build(corpus, root, dim=4, n_planes=1, n_tables=2)
+    queries = spark.createDataFrame(
+        [(1, [1.0, 1.0, 0.0, 0.0]), (100, [0.0, 1.0, 1.0, 0.0])],
+        "vec_id long, embedding array<double>")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        (got, schema, one), (want, d_schema, d_one) = _knn_both_paths(
+            spark, monkeypatch, root, queries, k=20, probe_bits=1)
+        assert one and not d_one
+        assert schema == d_schema
+        assert len(got) == 15
+        # NaN rows carry the same NaN; compare them through repr
+        assert repr(got) == repr(want)
+        # ANSI set, and unset (Spark 4's default is ANSI)
+        for ansi in ("true", None):
+            if ansi is None:
+                spark.conf.unset("spark.sql.ansi.enabled")
+            else:
+                spark.conf.set("spark.sql.ansi.enabled", ansi)
+            for bound in (similarity._LSH_ONE_TASK_BYTES, 0):
+                with monkeypatch.context() as m:
+                    m.setattr(similarity, "_LSH_ONE_TASK_BYTES", bound)
+                    res = similarity.lsh_index_query(
+                        spark, root, queries, k=20, probe_bits=1)
+                with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                    res.collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_lsh_index_query_one_task_two_jobs_no_shuffle(spark, lsh_roots):
+    """Under the byte gate a knn on a root with tombstones runs at most 2
+    Spark jobs (the batch collect, then the scan at the action): its
+    executed plan has no exchange, no join and no window, and the
+    tombstoned ids never return."""
+    from pyspark.sql import functions as F
+
+    from wiki_mysql_spark.operators.similarity import lsh_index_query
+
+    root, dead = lsh_roots[2]
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+
+    def knn():
+        res = lsh_index_query(
+            spark, root, emb.where(F.col("vec_id") < 8), k=10, probe_bits=1)
+        return res, res.collect()
+
+    (res, rows), jobs = _jobs_of(spark, knn)
+    assert _one_task(res)
+    assert rows and not {r["neighbor_id"] for r in rows} & dead
+    assert len(jobs) <= 2, f"knn ran {len(jobs)} Spark jobs"
+    kinds = {n.getClass().getSimpleName()
+             for n in _executed_nodes(res._jdf.queryExecution().executedPlan())}
+    assert not {k for k in kinds
+                if "Exchange" in k or "Join" in k or "Window" in k}, kinds
+
+
+def test_lsh_index_query_one_task_scan_prunes_to_probed_buckets(
+    spark, lsh_roots
+):
+    """The one-task plan's candidate scan carries partition filters on
+    both tbl and bucket and reads exactly the probed directories that
+    exist on disk."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from wiki_mysql_spark.operators.similarity import (
+        lsh_index_query,
+        lsh_probe_buckets,
+        lsh_signature,
+        lsh_table_planes,
+    )
+
+    root, _ = lsh_roots[2]
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    queries = emb.where(F.col("vec_id") == 0)
+    existing = {
+        (int(t.split("=")[1]), int(b.split("=")[1]))
+        for t in os.listdir(f"{root}/buckets") if t.startswith("tbl=")
+        for b in os.listdir(f"{root}/buckets/{t}") if b.startswith("bucket=")
+    }
+    probed = set()
+    for t, planes in enumerate(lsh_table_planes(64, 8, 2)):
+        row = queries.select(F.array(*lsh_probe_buckets(
+            lsh_signature(F.col("embedding"), planes), 8, 1)).alias("bs")
+        ).collect()[0]
+        probed |= {(t, int(b)) for b in row["bs"]}
+    want_parts = len(probed & existing)
+    assert 0 < want_parts < len(existing), "fixture probes must be selective"
+
+    res = lsh_index_query(spark, root, queries, k=10, probe_bits=1)
+    assert _one_task(res) and res.collect()
+    scans = [n for n in _executed_nodes(res._jdf.queryExecution().executedPlan())
+             if n.getClass().getSimpleName() == "FileSourceScanExec"
+             and "bucket" in n.output().toString()]
+    assert len(scans) == 1, scans
+    text = scans[0].toString()
+    assert "PartitionFilters: [" in text and "tbl#" in text and "bucket#" in text
+    assert scans[0].metrics().apply("numPartitions").value() == want_parts
+
+
+def test_lsh_index_query_five_jobs_one_shuffle(spark, lsh_roots, monkeypatch):
     """A persisted-index knn plans its probe on the driver: on a root with
     tombstones one query batch runs at most 5 Spark jobs (status-store
     count), the executed plan has exactly ONE shuffle Exchange (the top-k
     window's, which the final distinct reuses), and the broadcast probe
     side is a LocalTableScan — no checkpoint of the caller's frame, no
-    distinct-buckets collect, no dedup shuffle."""
+    distinct-buckets collect, no dedup shuffle. Pinned to the distributed
+    plan (one-task bound 0)."""
     from pyspark.sql import functions as F
 
+    from wiki_mysql_spark.operators import similarity
     from wiki_mysql_spark.operators.similarity import lsh_index_query
 
+    monkeypatch.setattr(similarity, "_LSH_ONE_TASK_BYTES", 0)
     root, dead = lsh_roots[2]
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
 

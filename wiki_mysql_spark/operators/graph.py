@@ -150,7 +150,28 @@ def pagerank(
 # barriers to label a graph that fits in one page — the same byte-gated
 # driver-twin posture as kmeans_codebook/_fits_driver. Past the bound the
 # small-star + min-label propagation below runs unchanged.
-_CC_DRIVER_EDGE_ROWS = int(
+#: Upper bound on :data:`_CC_DRIVER_EDGE_ROWS`: 2^22 edges of two longs
+#: are 64 MiB of Arrow on the driver, the bound the other driver-side
+#: vector collects use (``similarity._DRIVER_TRAIN_BYTES``).
+_CC_DRIVER_EDGES_MAX = 1 << 22
+
+
+def _cc_driver_edges(raw: str) -> int:
+    """Validate ``SPARK_GRAFT_CC_DRIVER_EDGES``: an integer >= 0 (0 sends
+    every graph down the distributed path), clamped to
+    :data:`_CC_DRIVER_EDGES_MAX`."""
+    try:
+        n = int(raw)
+    except ValueError:
+        n = -1
+    if n < 0:
+        raise ValueError(
+            f"SPARK_GRAFT_CC_DRIVER_EDGES must be an integer >= 0, got {raw!r}"
+        )
+    return min(n, _CC_DRIVER_EDGES_MAX)
+
+
+_CC_DRIVER_EDGE_ROWS = _cc_driver_edges(
     os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", str(1 << 18))
 )
 

@@ -1265,6 +1265,15 @@ _TOMBSTONE_BROADCAST_BYTES = 32 << 20
 _FS_BYTES_CACHE: dict[str, int] = {}
 
 
+def _tombstone_bytes(spark, tpath: str) -> int:
+    """On-disk bytes of the existing tombstone set at ``tpath``, probed once
+    and then served from :data:`_FS_BYTES_CACHE`."""
+    size = _FS_BYTES_CACHE.get(tpath)
+    if size is None:
+        size = _FS_BYTES_CACHE[tpath] = _fs_bytes(spark, tpath)
+    return size
+
+
 def _live_rows(spark, rows: DataFrame, path: str, id_name: str) -> DataFrame:
     """Filter index rows through the tombstone set when one exists.
 
@@ -1293,11 +1302,7 @@ def _live_rows(spark, rows: DataFrame, path: str, id_name: str) -> DataFrame:
     tombs = spark.read.schema(f"{id_name} long").parquet(tpath).select(
         F.col(id_name).cast("long").alias("__dead_id")
     )
-    size = _FS_BYTES_CACHE.get(tpath)
-    if size is None:
-        size = _fs_bytes(spark, tpath)
-        _FS_BYTES_CACHE[tpath] = size
-    if size < _TOMBSTONE_BROADCAST_BYTES:
+    if _tombstone_bytes(spark, tpath) < _TOMBSTONE_BROADCAST_BYTES:
         tombs = F.broadcast(tombs)
     return rows.join(
         tombs,
@@ -1552,19 +1557,43 @@ def lsh_index_query(
     probed buckets' directories — at 100 TB,
     ``n_tables · (1 + probe_bits·n_planes)`` bucket partitions per query
     batch instead of the whole corpus (plan-pinned in
-    tests/test_plans.py). Output is identical to :func:`lsh_topk` at the
-    same operating point. A query vector whose width is not the header's
+    tests/test_plans.py).
+
+    Two plans give the same rows and schema; a byte gate picks one before
+    either is built (:func:`_lsh_one_task_fits`):
+
+    * one task: the on-disk bytes of the probed directories plus the
+      tombstone set (driver listings, no job) are under
+      :data:`_LSH_ONE_TASK_BYTES` (16 MiB, set from a measured sweep of
+      both plans). The pruned scan and the tombstone ids
+      are read together (a ``unionByName`` with a ``dead`` flag) into ONE
+      task, which scores and ranks them with the numpy twins of
+      :func:`cosine` (:func:`_lsh_score_batches`): no join, no window, no
+      shuffle. A knn runs 2 Spark jobs: the batch collect inside this
+      call, and the scan at the caller's action.
+    * distributed: past the bound, or for a root that carries a streaming
+      ``batch=`` delta layer, a query id column that is not integral, or a
+      query vector that is null, holds a null or non-finite element or has
+      zero norm. The broadcast bucket join of :func:`_lsh_score_rank`
+      runs, 5 jobs (3 at the action).
+
+    Either way the returned frame is lazy and its plan holds the pruned
+    bucket scan. Output is identical to :func:`lsh_topk` at the same
+    operating point. A query vector whose width is not the header's
     ``dim`` raises ValueError; a null vector hashes to bucket 0, as in
     :func:`lsh_signature`."""
     meta = _index_header(spark, _LSH_INDEX, path)
-    q, by_tbl = _lsh_probe_side(
+    probe = _lsh_probe_side(
         spark, queries, _lsh_tables(meta), probe_bits, id_col, vec_col
     )
+    if _lsh_one_task_fits(spark, path, probe):
+        return _lsh_score_one_task(spark, path, meta, probe, k)
     # merge-on-read deletes: tombstoned ids (lsh_index_delete) drop from
     # the candidate set inside _index_rows; the next compaction makes them
     # physical
     c = _index_rows(
-        spark, _LSH_INDEX, path, meta, where=_probe_pred("tbl", "bucket", by_tbl)
+        spark, _LSH_INDEX, path, meta,
+        where=_probe_pred("tbl", "bucket", probe.by_tbl),
     ).select(
         # partition-directory columns come back int32/int32; restore the
         # long bucket the in-memory side carries so the join is cast-free
@@ -1573,7 +1602,7 @@ def lsh_index_query(
         F.col("tbl").cast("int").alias("tbl"),
         F.col("bucket").cast("long").alias("bucket"),
     )
-    return _lsh_score_rank(q, c, k=k)
+    return _lsh_score_rank(_lsh_probe_frame(spark, probe), c, k=k)
 
 
 def _pack_nullable_np(vecs: list, dim: int, element_type: str):
@@ -1593,6 +1622,24 @@ def _pack_nullable_np(vecs: list, dim: int, element_type: str):
     return V, null_rows
 
 
+@dataclass(frozen=True)
+class _LshProbe:
+    """A query batch as :func:`_lsh_probe_side` collected and hashed it.
+    ``batch`` holds the ``(query_id, qv)`` rows in the caller's types
+    (``schema``); ``V`` and ``null_rows`` pack the vectors
+    (:func:`_pack_nullable_np`); ``buckets[t]`` holds table ``t``'s probed
+    buckets, ``n_masks`` per query row in row order; ``by_tbl`` the sorted
+    probed buckets per table, for the partition predicate."""
+
+    batch: object
+    schema: object
+    V: object
+    null_rows: object
+    buckets: list
+    n_masks: int
+    by_tbl: dict
+
+
 def _lsh_probe_side(
     spark,
     queries: DataFrame,
@@ -1600,21 +1647,13 @@ def _lsh_probe_side(
     probe_bits: int,
     id_col: str,
     vec_col: str,
-) -> tuple[DataFrame, dict[int, list[int]]]:
+) -> _LshProbe:
     """The persisted-index probe, planned on the driver: the query batch
     collects in ONE job, each table's signature is hashed with
     :func:`lsh_signature_np` (bit-identical to the build's Spark
     expression), and the probe masks (:func:`lsh_probe_masks`) expand it.
-    Returns the ``(query_id, qv, tbl, bucket)`` rows as an Arrow-built
-    local frame (it plans as a ``LocalTableScan``, with no scan of the
-    caller's frame and no checkpoint) and the sorted probed buckets per
-    table for the partition predicate. The id and vector columns keep the
-    caller's types."""
+    The id and vector columns keep the caller's types."""
     import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    from wiki_mysql_spark.sources.tables import local_frame
 
     dim, n_planes = len(tables[0][0]), len(tables[0])
     batch_df = queries.select(
@@ -1630,25 +1669,294 @@ def _lsh_probe_side(
         )
     V, null_rows = _pack_nullable_np(vecs, dim, _elem_type(queries, vec_col))
     masks = np.array(lsh_probe_masks(n_planes, probe_bits), dtype=np.int64)
-    # one probe row per (table, query, mask), in that order
+    # one probe row per (query, mask) within each table, in that order
     buckets = [
         (lsh_signature_np(V, planes, null_rows)[:, None] ^ masks).ravel()
         for planes in tables
     ]
-    qrow = np.repeat(np.arange(len(vecs)), len(masks))  # within one table
-    probe = (
-        batch.take(np.tile(qrow, len(tables)))
-        .append_column("tbl", pa.array(
-            np.repeat(np.arange(len(tables), dtype=np.int32), qrow.size)))
-        .append_column("bucket", pa.array(np.concatenate(buckets)))
-    )
     by_tbl = {t: sorted(set(b.tolist())) for t, b in enumerate(buckets) if b.size}
+    return _LshProbe(
+        batch, batch_df.schema, V, null_rows, buckets, len(masks), by_tbl
+    )
+
+
+def _lsh_probe_frame(spark, probe: _LshProbe) -> DataFrame:
+    """The distributed path's ``(query_id, qv, tbl, bucket)`` probe rows,
+    one per (table, query, mask), as an Arrow-built local frame: it plans
+    as a ``LocalTableScan``, with no scan of the caller's frame and no
+    checkpoint."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    from wiki_mysql_spark.sources.tables import local_frame
+
+    n_tables = len(probe.buckets)
+    qrow = np.repeat(np.arange(probe.batch.num_rows), probe.n_masks)
+    rows = (
+        probe.batch.take(np.tile(qrow, n_tables))
+        .append_column("tbl", pa.array(
+            np.repeat(np.arange(n_tables, dtype=np.int32), qrow.size)))
+        .append_column("bucket", pa.array(np.concatenate(probe.buckets)))
+    )
     schema = StructType(
-        batch_df.schema.fields
+        probe.schema.fields
         + [StructField("tbl", IntegerType(), False),
            StructField("bucket", LongType(), False)]
     )
-    return local_frame(spark, probe, schema), by_tbl
+    return local_frame(spark, rows, schema)
+
+
+#: Bound of :func:`lsh_index_query`'s one-task plan, on
+#: :func:`_lsh_probed_bytes`. Measured with scripts/lsh_gate_crossover.py
+#: (LSH_GATE_CROSSOVER.json, 4-core host): the one task beats the
+#: distributed bucket join at every point from 0.2 to 55 MB probed and 1
+#: to 128 query rows. Its lead grows with the batch (-61 % at 32 rows and
+#: -77 % at 128 rows, 9 MB probed) and shrinks with size at one row (-17 %
+#: at 6 MB, -15 % at 11 MB, -3 % at 24 MB). The PySpark worker, which
+#: Spark's executor memory does not bound, peaked at 254 MB after 11 MB
+#: probed, 341 MB after 26 MB and 516 MB after 55 MB. The bound sits below
+#: the one-row near-parity point and keeps that peak near 300 MB.
+_LSH_ONE_TASK_BYTES = 16 << 20
+
+
+def _lsh_probed_bytes(spark, path: str, probe: _LshProbe) -> int:
+    """On-disk bytes of the probed ``(tbl, bucket)`` directories plus the
+    tombstone set: one glob per probed table (the tombstone size is
+    cached in :data:`_FS_BYTES_CACHE`). File bytes from driver listings,
+    never plan statistics: a path-based file index prunes partitions only
+    at execution, so the optimized plan reports the whole layout's
+    size."""
+    tpath = _index_child(path, "tombstones")
+    size = _tombstone_bytes(spark, tpath) if _fs_exists(spark, tpath) else 0
+    fs, _ = _fs(spark, path)
+    base = _index_child(path, _LSH_INDEX.subdir)
+    for t, bs in probe.by_tbl.items():
+        pattern = f"{base}/tbl={t}/bucket={{{','.join(map(str, bs))}}}/*"
+        for st in fs.globStatus(spark._jvm.org.apache.hadoop.fs.Path(pattern)) or []:
+            size += st.getLen()
+    return size
+
+
+def _lsh_one_task_fits(spark, path: str, probe: _LshProbe) -> bool:
+    """The gate of :func:`lsh_index_query`: True when
+    :func:`_lsh_probed_bytes` is under :data:`_LSH_ONE_TASK_BYTES` and the
+    batch is one the one-task scorer serves exactly (integral ids; every
+    query vector non-null, finite and of non-zero norm). A root with a
+    streaming ``batch=`` delta layer is refused, since the per-table globs
+    cannot see under it."""
+    import numpy as np
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+    from wiki_mysql_spark.functions.vectors import seq_norm_np
+
+    integral = (ByteType, ShortType, IntegerType, LongType)
+    if not isinstance(probe.schema["query_id"].dataType, integral):
+        return False
+    V = probe.V
+    if probe.null_rows.any() or not np.isfinite(V).all() or (seq_norm_np(V) == 0).any():
+        return False
+    if _has_delta_layer(spark, path, _LSH_INDEX.subdir):
+        return False
+    return _lsh_probed_bytes(spark, path, probe) < _LSH_ONE_TASK_BYTES
+
+
+def _lsh_score_one_task(
+    spark, path: str, meta: dict, probe: _LshProbe, k: int
+) -> DataFrame:
+    """The one-task plan of :func:`lsh_index_query`: the partition-pruned
+    bucket scan and the tombstone ids, unioned with a ``dead`` flag and
+    coalesced into one task that runs :func:`_lsh_score_batches`. The
+    ``cos_sim`` projection is the one :func:`_lsh_score_rank` applies."""
+    from functools import partial
+
+    import numpy as np
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        DoubleType, LongType, StructField, StructType,
+    )
+
+    rows = _read_layout(spark, path, _LSH_INDEX.subdir, meta).where(
+        _probe_pred("tbl", "bucket", probe.by_tbl)
+    )
+    cv_type = rows.schema["cv"].dataType
+    cand = rows.select(
+        F.col("neighbor_id").cast("long").alias("neighbor_id"),
+        "cv",
+        F.col("tbl").cast("long").alias("tbl"),
+        F.col("bucket").cast("long").alias("bucket"),
+        F.lit(False).alias("dead"),
+    )
+    tpath = _index_child(path, "tombstones")
+    if _fs_exists(spark, tpath):
+        cand = cand.unionByName(
+            spark.read.schema("neighbor_id long").parquet(tpath).select(
+                "neighbor_id",
+                F.lit(None).cast(cv_type).alias("cv"),
+                F.lit(None).cast("long").alias("tbl"),
+                F.lit(None).cast("long").alias("bucket"),
+                F.lit(True).alias("dead"),
+            )
+        )
+    out = StructType([
+        probe.schema["query_id"],
+        StructField("neighbor_id", rows.schema["neighbor_id"].dataType, True),
+        StructField("raw_sim", DoubleType(), True),
+        StructField("rank", LongType(), False),
+    ])
+    R, stride = probe.batch.num_rows, 1 << int(meta["n_planes"])
+    # per query row, its probed (tbl, bucket) keys as tbl * 2^n_planes + bucket
+    probed = np.concatenate(
+        [t * stride + b.reshape(R, probe.n_masks)
+         for t, b in enumerate(probe.buckets)], axis=1,
+    )
+    score = partial(
+        _lsh_score_batches,
+        qids=probe.batch.column("query_id").to_pylist(),
+        Q=probe.V,
+        probed=probed,
+        stride=stride,
+        k=k,
+        # the effective mode (Spark 4 defaults to ANSI), read when the frame
+        # is built, as the distributed plan binds its division's mode then
+        ansi=spark.conf.get("spark.sql.ansi.enabled").lower() == "true",
+        out_schema=to_arrow_schema(out),
+    )
+    return cand.coalesce(1).mapInArrow(score, out).select(
+        "query_id",
+        "neighbor_id",
+        (F.round("raw_sim", 6) + 0.0).alias("cos_sim"),
+        "rank",
+    )
+
+
+def _lsh_score_batches(batches, *, qids, Q, probed, stride, k, ansi, out_schema):
+    """Score and rank one task's candidate rows (the ``mapInArrow`` body of
+    :func:`_lsh_score_one_task`) with exactly :func:`_lsh_score_rank`'s
+    semantics, so both plans return the same rows:
+
+    * a row whose id is tombstoned (``dead``) never scores; a query row
+      scores the live rows of its probed ``(tbl, bucket)`` keys
+      (``probed[r]``), except its own id;
+    * ``raw_sim`` is :func:`cosine` through its numpy twins
+      (:func:`seq_dot_np` over :func:`seq_norm_np` ⊗ :func:`seq_norm_np`,
+      the same IEEE fold). A candidate vector that is null, holds a null
+      element or has another width scores null; a zero norm product scores
+      null, or raises ``[DIVIDE_BY_ZERO]`` under ANSI, as Spark's division
+      does;
+    * per ``query_id``: order by ``(raw_sim desc, neighbor_id)`` with NaN
+      first and nulls last, ``dense_rank``, keep ``rank <= k``, drop
+      duplicate rows.
+
+    The query vectors ``Q`` are finite, non-null and of non-zero norm (the
+    gate's promise)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from wiki_mysql_spark.functions.vectors import seq_dot_np, seq_norm_np
+
+    batches = [b for b in batches if b.num_rows]
+    if not batches or not qids:
+        return
+    # the input batches stay chunks; ONE filter copies the live rows out
+    t = pa.Table.from_batches(batches)
+    del batches
+    valid = pc.is_valid(t["neighbor_id"]).to_numpy(zero_copy_only=False)
+    nid = pc.fill_null(t["neighbor_id"], 0).to_numpy(zero_copy_only=False)
+    dead = t["dead"].to_numpy(zero_copy_only=False) & valid
+    t = t.filter(pa.array(valid & ~dead & ~np.isin(nid, nid[dead])))
+    n, dim = t.num_rows, Q.shape[1]
+    nid = t["neighbor_id"].to_numpy(zero_copy_only=False)
+    key = (t["tbl"].to_numpy(zero_copy_only=False) * stride
+           + t["bucket"].to_numpy(zero_copy_only=False))
+    cv = t["cv"].combine_chunks()
+    del t
+    # per-row shape: null-like rows (null vector or a null element) have a
+    # null norm; the rest have one, but only width-dim rows have a dot
+    lens = pc.fill_null(pc.list_value_length(cv), -1).to_numpy(zero_copy_only=False)
+    ends = np.cumsum(np.maximum(lens, 0))  # row i's values end at ends[i]
+    flat = pc.list_flatten(cv)  # the values of the non-null rows, in order
+    null_like = lens < 0
+    if flat.null_count:
+        nulls = np.nonzero(pc.is_null(flat).to_numpy(zero_copy_only=False))[0]
+        null_like[np.searchsorted(ends, nulls, "right")] = True
+    ok = (lens == dim) & ~null_like
+    vals = pc.fill_null(flat, 0).to_numpy(zero_copy_only=False).astype(
+        np.float64, copy=False)
+    del cv, flat
+    if ok.all():  # every row a width-dim vector: the values are the matrix
+        C = vals.reshape(n, dim)
+    else:
+        C = np.zeros((n, dim))
+        C[ok] = vals[np.repeat(ok, np.maximum(lens, 0))].reshape(-1, dim)
+    nc = np.where(ok, seq_norm_np(C), np.nan)
+    for i in np.nonzero(~ok & ~null_like)[0]:
+        acc = 0.0
+        for x in vals[ends[i] - lens[i]:ends[i]]:
+            acc += x * x
+        nc[i] = math.sqrt(acc)
+    nq = seq_norm_np(Q)
+    # rows sorted by key once: a query row's candidates are the runs of its
+    # probed keys, so scoring costs the candidates it meets, not R x n
+    order = np.argsort(key, kind="stable")
+    skey = key[order]
+
+    def top_k(g_nid, g_sim, g_valid):
+        # order key: class (NaN 0, number 1, null 2), -raw_sim, neighbor_id;
+        # -x + 0.0 folds -0.0 into 0.0, as Spark's ordering does. Keeps one
+        # row per distinct key among the k best, in order, and its rank
+        cls = np.where(~g_valid, 2, np.where(np.isnan(g_sim), 0, 1))
+        val = np.where(cls == 1, -g_sim + 0.0, 0.0)
+        o = np.lexsort((g_nid, val, cls))
+        cls, val, g_nid, g_sim, g_valid = cls[o], val[o], g_nid[o], g_sim[o], g_valid[o]
+        new = np.ones(o.size, dtype=bool)
+        new[1:] = (cls[1:] != cls[:-1]) | (val[1:] != val[:-1]) | (g_nid[1:] != g_nid[:-1])
+        rank = np.cumsum(new)
+        keep = new & (rank <= k)
+        return g_nid[keep], g_sim[keep], g_valid[keep], rank[keep]
+
+    groups: dict = {}
+    for r, q in enumerate(qids):
+        if q is None:
+            continue
+        lo = np.searchsorted(skey, probed[r], "left")
+        cnt = np.searchsorted(skey, probed[r], "right") - lo
+        idx = order[np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())]
+        idx = idx[nid[idx] != q]
+        den = nq[r] * nc[idx]
+        zero = ~null_like[idx] & (den == 0)
+        if ansi and zero.any():
+            raise ArithmeticError(
+                "[DIVIDE_BY_ZERO] Division by zero: a probed index vector "
+                "has zero norm"
+            )
+        good = ok[idx] & ~zero
+        sim = np.full(idx.size, np.nan)
+        sim[good] = seq_dot_np(Q[r:r + 1], C[idx[good]])[0] / den[good]
+        # a query_id's k best keys lie within its rows' k best: each row
+        # keeps only those, so memory grows with R x k, not R x candidates
+        groups.setdefault(q, []).append(top_k(nid[idx], sim, good)[:3])
+
+    out = ([], [], [], [], [])  # query_id, neighbor_id, raw_sim, valid, rank
+    for q, parts in groups.items():
+        ranked = top_k(*(np.concatenate(x) for x in zip(*parts)))
+        out[0].extend([q] * ranked[0].size)
+        for col, x in zip(out[1:], ranked):
+            col.append(x)
+    if not out[0]:
+        return
+    g_nid, g_sim, g_valid, rank = (np.concatenate(c) for c in out[1:])
+    f = out_schema
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(out[0], type=f.field("query_id").type),
+            pa.array(g_nid, type=f.field("neighbor_id").type),
+            pa.array(g_sim, mask=~g_valid, type=pa.float64()),
+            pa.array(rank, type=pa.int64()),
+        ],
+        schema=f,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -2967,7 +2967,14 @@ def lsh_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters on BOTH partition columns — parquet partition pruning reads
     EXACTLY the probed buckets' directories (plan-pinned: the scan's
     numPartitions metric equals the probed-and-existing bucket count,
-    tests/test_plans.py). Output is
+    tests/test_plans.py). A byte gate picks the plan: while the probed
+    directories plus the tombstone set hold under 16 MiB on disk (every
+    fixture SF), one task reads them and ranks with the numpy twins of
+    the cosine fold — 2 Spark jobs, the batch collect inside the call and
+    the scan at the action; past it, or for a delta-layer root, a
+    non-integral id or a null, zero or non-finite query vector, the
+    broadcast bucket join ranks with a window (5 jobs). Rows and schema
+    are the same on both sides (tests/test_plans.py). Output is
     identical to `ann_topk_lsh` at the same operating point (2 tables x
     8 planes x 1-bit multi-probe — the r7 frontier knee), which is what
     the shared oracle replays; the plan is the part that changed — at
@@ -3004,7 +3011,10 @@ def lsh_index_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     root THROUGH `index_current` and search it. The oracle is the same
     brute-force LSH replay as `lsh_index_query`, so the hash proves the
     publish→resolve→query composition returns byte-identical results to
-    querying the root directly — the swap is pure indirection. A second
+    querying the root directly — the swap is pure indirection. The
+    search is `lsh_index_query`'s, so the same byte gate picks its plan
+    (one task and 2 Spark jobs under 16 MiB of probed bytes, the
+    distributed bucket join past it). A second
     publish over the EXISTING pointer exercises the overwrite path (the
     lifecycle's steady state: every compaction retargets the same
     pointer). At 100 TB this is how a fleet of query jobs flips to a

@@ -325,8 +325,11 @@ def hybrid_search_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     `lsh_index_query` over the cached bucket-partitioned index root, so
     the vector half of the fusion reads ONLY the probed buckets'
     directories via literal partition filters (plan-pinned in
-    tests/test_plans.py) instead of brute-force scanning the corpus. The
-    lexical half and the RRF fusion tail are byte-identical to
+    tests/test_plans.py) instead of brute-force scanning the corpus.
+    While those directories and the tombstone set hold under 16 MiB, one
+    task scores and ranks them with numpy twins of the cosine fold (2
+    Spark jobs, no window); past that byte gate the distributed bucket
+    join runs, with the same rows. The lexical half and the RRF fusion tail are byte-identical to
     `hybrid_search_rrf` (shared helpers). Candidate semantics are the
     `ann_topk_lsh` operating point (2 tables x 8 planes x 1-bit
     multi-probe), so ranks past the LSH pool differ from brute-force by

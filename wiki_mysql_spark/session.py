@@ -35,6 +35,24 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
 }
 
+
+def _list_job_threshold(raw: str) -> str:
+    """Validate ``SPARK_GRAFT_LIST_JOB_THRESHOLD``: an integer >= 1. A bad
+    value would otherwise reach ``spark.conf.set``, whose error
+    :func:`configure` swallows, silently leaving Spark's default of 32:
+    every index read over 32 directories would then launch a listing
+    job."""
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_LIST_JOB_THRESHOLD must be an integer >= 1, got {raw!r}"
+        )
+    return str(n)
+
+
 # Partition-discovery strategy for multi-directory reads (the persisted
 # index layouts here are 16-512 partition directories). Past this many
 # paths Spark launches a distributed LISTING JOB — one tiny task per
@@ -47,7 +65,7 @@ RUNTIME_CONFS: dict[str, str] = {
 # abfs sets SPARK_GRAFT_LIST_JOB_THRESHOLD back down (e.g. to Spark's
 # default 32) where the per-dir latency is ms, not μs.
 RUNTIME_CONFS["spark.sql.sources.parallelPartitionDiscovery.threshold"] = (
-    os.environ.get("SPARK_GRAFT_LIST_JOB_THRESHOLD", "4096")
+    _list_job_threshold(os.environ.get("SPARK_GRAFT_LIST_JOB_THRESHOLD", "4096"))
 )
 
 
