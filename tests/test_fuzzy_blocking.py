@@ -334,54 +334,3 @@ def test_triangle_count_dense_and_sparse_paths_agree(spark, monkeypatch):
         [("x", "y"), ("y", "z"), ("x", "z")], "src string, dst string"
     )
     assert tuple(triangle_count(s_edges).collect()[0]) == (3, 3, 1)
-
-
-def test_cc_driver_edges_knob_rejects_and_clamps():
-    """SPARK_GRAFT_CC_DRIVER_EDGES: not an integer or below 0 is a
-    ValueError naming the variable, at import too (a negative bound used
-    as is would reach limit(-4)); 0 (every graph distributed) is valid;
-    above the maximum clamps to it."""
-    import os
-    import pathlib
-    import subprocess
-    import sys
-
-    from wiki_mysql_spark.operators.graph import (
-        _CC_DRIVER_EDGES_MAX,
-        _cc_driver_edges,
-    )
-
-    for raw in ("-5", "1e3", ""):
-        with pytest.raises(ValueError, match="SPARK_GRAFT_CC_DRIVER_EDGES"):
-            _cc_driver_edges(raw)
-    assert _cc_driver_edges("0") == 0
-    assert _cc_driver_edges(str(1 << 18)) == 1 << 18
-    assert _cc_driver_edges(str(1 << 40)) == _CC_DRIVER_EDGES_MAX
-    env = {**os.environ, "SPARK_GRAFT_CC_DRIVER_EDGES": "-5"}
-    res = subprocess.run(
-        [sys.executable, "-c", "import wiki_mysql_spark.operators.graph"],
-        env=env, capture_output=True, text=True,
-        cwd=pathlib.Path(__file__).resolve().parent.parent,
-    )
-    last = res.stderr.strip().splitlines()[-1]
-    assert res.returncode != 0
-    assert last.startswith("ValueError") and "SPARK_GRAFT_CC_DRIVER_EDGES" in last
-
-
-def test_triangle_dense_domain_knob_is_clamped():
-    """SPARK_GRAFT_TRI_DENSE_DOMAIN above the bitset ceiling clamps to it."""
-    from wiki_mysql_spark.operators.graph import (
-        _TRI_DENSE_DOMAIN_MAX,
-        _tri_dense_domain,
-    )
-
-    assert _tri_dense_domain("4096") == 4096
-    assert _tri_dense_domain(str(1 << 40)) == _TRI_DENSE_DOMAIN_MAX == 1 << 20
-
-
-def test_triangle_dense_domain_knob_rejects_non_positive():
-    from wiki_mysql_spark.operators.graph import _tri_dense_domain
-
-    for raw in ("0", "-64"):
-        with pytest.raises(ValueError, match="SPARK_GRAFT_TRI_DENSE_DOMAIN"):
-            _tri_dense_domain(raw)

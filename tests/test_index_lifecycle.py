@@ -1,8 +1,9 @@
 """The persisted-index lifecycle core shared by the LSH, IVFADC and minhash
 families (``operators/similarity.py``: ``IndexSpec`` and the ``_index_*``
 functions): compaction into a root with old tombstones, the missing-header
-policy, the layout-split and listing-threshold knobs, and the guard that keeps the on-disk format
-in one place."""
+policy, the two deployment knobs (layout split and listing threshold),
+the guard that keeps the on-disk format in one place, and the guard that
+keeps environment reads out of the engine layers."""
 
 from __future__ import annotations
 
@@ -11,10 +12,12 @@ import os
 import pathlib
 import subprocess
 import sys
+from unittest import mock
 
 import pytest
 
 from tests.conftest import SF_SMOKE
+from wiki_mysql_spark import session
 from wiki_mysql_spark.operators import dedup as dd
 from wiki_mysql_spark.operators import similarity as sim
 
@@ -125,50 +128,78 @@ def test_headerless_root_reads_by_inference_and_frozen_ops_refuse(
         assert root in str(err.value) and "meta.json" in str(err.value), name
 
 
+# deployment knob -> (module that reads it at import, the expression there
+# that holds its value, its clamp)
+DEPLOYMENT_KNOBS = {
+    "SPARK_GRAFT_LAYOUT_SPLIT": (
+        "wiki_mysql_spark.operators.similarity", "_LAYOUT_SPLIT_FILES",
+        sim._LAYOUT_SPLIT_MAX,
+    ),
+    "SPARK_GRAFT_LIST_JOB_THRESHOLD": (
+        "wiki_mysql_spark.session",
+        "RUNTIME_CONFS['spark.sql.sources.parallelPartitionDiscovery.threshold']",
+        None,
+    ),
+}
+
+
+def _assert_knob_rejects_and_clamps(name: str) -> None:
+    """``session.env_int`` reads the knob ``name``: a value that is not an
+    integer or is below 1 is a ValueError naming the variable; an in-range
+    value reads as is; a value above the clamp reads as the clamp."""
+    hi = DEPLOYMENT_KNOBS[name][2]
+    for raw in ("0", "-3", "four", "4k", ""):
+        with mock.patch.dict(os.environ, {name: raw}):
+            with pytest.raises(ValueError, match=name):
+                session.env_int(name, 1, lo=1, hi=hi)
+    for raw, want in (("8", 8), (str(10**6), hi or 10**6)):
+        with mock.patch.dict(os.environ, {name: raw}):
+            assert session.env_int(name, 1, lo=1, hi=hi) == want
+
+
+def _assert_knob_checked_at_import(name: str) -> None:
+    """A bad value of the knob ``name`` fails the import of the module that
+    reads it with a ValueError naming the variable; a value above the
+    clamp imports and reads as the clamp."""
+    module, expr, hi = DEPLOYMENT_KNOBS[name]
+
+    def imported(raw: str) -> subprocess.CompletedProcess:
+        return subprocess.run(
+            [sys.executable, "-c", f"import {module} as m; print(m.{expr})"],
+            env={**os.environ, name: raw}, capture_output=True, text=True,
+            cwd=OPERATORS.parent.parent,
+        )
+
+    res = imported("four")
+    assert res.returncode != 0
+    last = res.stderr.strip().splitlines()[-1]
+    assert last.startswith("ValueError") and name in last
+    res = imported(str(10**6))
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.strip() == str(hi or 10**6)
+
+
 def test_layout_split_knob_rejects_and_clamps():
     """SPARK_GRAFT_LAYOUT_SPLIT: below 1 or not an integer is a ValueError
     naming the variable; above the maximum clamps to it."""
-    for raw in ("0", "-3", "four", ""):
-        with pytest.raises(ValueError, match="SPARK_GRAFT_LAYOUT_SPLIT"):
-            sim._layout_split(raw)
-    assert sim._layout_split("8") == 8
-    assert sim._layout_split(str(10**6)) == sim._LAYOUT_SPLIT_MAX
+    _assert_knob_rejects_and_clamps("SPARK_GRAFT_LAYOUT_SPLIT")
 
 
 def test_layout_split_knob_checked_at_import():
-    """A bad value fails the module import with an error that names the
-    variable."""
-    env = {**os.environ, "SPARK_GRAFT_LAYOUT_SPLIT": "four"}
-    res = subprocess.run(
-        [sys.executable, "-c", "import wiki_mysql_spark.operators.similarity"],
-        env=env, capture_output=True, text=True,
-        cwd=OPERATORS.parent.parent,
-    )
-    assert res.returncode != 0
-    last = res.stderr.strip().splitlines()[-1]
-    assert last.startswith("ValueError") and "SPARK_GRAFT_LAYOUT_SPLIT" in last
+    """A bad SPARK_GRAFT_LAYOUT_SPLIT fails the import of similarity.py
+    with an error that names the variable; a huge one reads as
+    ``_LAYOUT_SPLIT_MAX``."""
+    _assert_knob_checked_at_import("SPARK_GRAFT_LAYOUT_SPLIT")
 
 
-def test_list_job_threshold_knob_rejects_bad_values():
-    """SPARK_GRAFT_LIST_JOB_THRESHOLD (the partition-discovery threshold
-    every index read lists under): not an integer or below 1 is a
-    ValueError naming the variable, at import too, instead of a conf error
-    that configure() swallows, leaving Spark's default of 32."""
-    from wiki_mysql_spark.session import _list_job_threshold
-
-    for raw in ("4k", "0", "-1", ""):
-        with pytest.raises(ValueError, match="SPARK_GRAFT_LIST_JOB_THRESHOLD"):
-            _list_job_threshold(raw)
-    assert _list_job_threshold("32") == "32"
-    env = {**os.environ, "SPARK_GRAFT_LIST_JOB_THRESHOLD": "4k"}
-    res = subprocess.run(
-        [sys.executable, "-c", "import wiki_mysql_spark.session"],
-        env=env, capture_output=True, text=True,
-        cwd=OPERATORS.parent.parent,
-    )
-    last = res.stderr.strip().splitlines()[-1]
-    assert res.returncode != 0
-    assert last.startswith("ValueError") and "SPARK_GRAFT_LIST_JOB_THRESHOLD" in last
+@pytest.mark.parametrize("name", ["SPARK_GRAFT_LIST_JOB_THRESHOLD"])
+def test_deployment_knob_rejects_bad_values_and_clamps(name):
+    """The same contract for the other deployment knobs read through
+    ``session.env_int``, at import too: a bad listing threshold would
+    otherwise reach a conf error that configure() swallows, leaving
+    Spark's default of 32."""
+    _assert_knob_rejects_and_clamps(name)
+    _assert_knob_checked_at_import(name)
 
 
 def _sites(path: pathlib.Path, match) -> list[tuple[str, int]]:
@@ -236,3 +267,33 @@ def test_index_format_lives_in_the_lifecycle_core():
         if fn
     ]
     assert not local, f"function-local similarity imports in dedup.py: {local}"
+
+
+def _is_environment_read(node) -> bool:
+    """``os.environ`` / ``os.getenv`` (any receiver), or ``from os import``
+    either name."""
+    names = {"environ", "getenv"}
+    if isinstance(node, ast.Attribute):
+        return node.attr in names
+    return isinstance(node, ast.ImportFrom) and any(
+        a.name in names for a in node.names
+    )
+
+
+def test_engine_layers_read_no_environment():
+    """No module under ``operators/``, ``plans/``, ``sources/`` or
+    ``functions/`` reads the environment: a strategy gate is picked by the
+    data against a module bound, and the deployment knobs are read once,
+    through ``session.env_int``."""
+    package = OPERATORS.parent
+    files = [
+        p for layer in ("operators", "plans", "sources", "functions")
+        for p in sorted((package / layer).rglob("*.py"))
+    ]
+    assert any(p.name == "graph.py" for p in files)
+    reads = [
+        (str(p.relative_to(package)), fn, line)
+        for p in files
+        for fn, line in _sites(p, _is_environment_read)
+    ]
+    assert not reads, f"environment reads in engine layers: {reads}"

@@ -1289,7 +1289,7 @@ def test_jpeg_progressive_bit_identical_to_baseline():
         ).all(), (h, w, gray, q)
 
 
-def test_nearest_cell_literal_and_arrow_paths_identical(spark):
+def test_nearest_cell_literal_and_arrow_paths_identical(spark, monkeypatch):
     """The two physical strategies for nearest-center assignment (inlined
     literal expression for small k, Arrow-blocked numpy for large k) must
     produce byte-identical assignments — the blocked path accumulates
@@ -1297,6 +1297,7 @@ def test_nearest_cell_literal_and_arrow_paths_identical(spark):
     id-sorted centers reproduces the ties→lower-id rule."""
     import random
 
+    from wiki_mysql_spark.operators import similarity
     from wiki_mysql_spark.operators.similarity import (
         kmeans_codebook,
         with_nearest_cell,
@@ -1308,12 +1309,12 @@ def test_nearest_cell_literal_and_arrow_paths_identical(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     book = kmeans_codebook(df, n_centroids=80, n_iters=1)
-    lit = with_nearest_cell(
-        df, book, vec_col="embedding", literal_k_max=1000
-    )
-    arw = with_nearest_cell(
-        df, book, vec_col="embedding", literal_k_max=8
-    )
+    monkeypatch.setattr(similarity, "_LITERAL_K_MAX", 1000)
+    lit = with_nearest_cell(df, book, vec_col="embedding")
+    monkeypatch.setattr(similarity, "_LITERAL_K_MAX", 8)
+    arw = with_nearest_cell(df, book, vec_col="embedding")
+    plans = [x._jdf.queryExecution().optimizedPlan().toString() for x in (lit, arw)]
+    assert ["MapInPandas" in x for x in plans] == [False, True]
     a = sorted((r["vec_id"], r["cell"]) for r in lit.collect())
     b = sorted((r["vec_id"], r["cell"]) for r in arw.collect())
     assert a == b
@@ -1706,13 +1707,14 @@ def test_ivfpq_recall_high_on_clustered_data(spark):
     assert sum(recalls) / len(recalls) >= 0.7, recalls
 
 
-def test_codebook_driver_and_distributed_paths_agree(spark):
-    """The driver_train_bytes byte gate picks the PHYSICAL training
+def test_codebook_driver_and_distributed_paths_agree(spark, monkeypatch):
+    """The _DRIVER_TRAIN_BYTES byte gate picks the PHYSICAL training
     strategy only (the FAISS sample-training posture under the gate, the
     distributed Lloyd/PQ jobs past it): both paths must produce the SAME
     codebooks and the same IVFADC output on one fixture — the empirical
     backing for the numpy-twin bit-equality argument (dimension-ordered
     folds + HALF_UP round twin, functions/vectors.py)."""
+    from wiki_mysql_spark.operators import similarity
     from wiki_mysql_spark.operators.similarity import (
         ivfpq_topk,
         kmeans_codebook,
@@ -1720,27 +1722,32 @@ def test_codebook_driver_and_distributed_paths_agree(spark):
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-
-    k_driver = kmeans_codebook(emb, n_centroids=8, n_iters=2)
-    k_dist = kmeans_codebook(emb, n_centroids=8, n_iters=2, driver_train_bytes=0)
-    assert k_driver == k_dist
-
-    b_driver = pq_codebooks(emb, m=8, n_centroids=16)
-    b_dist = pq_codebooks(emb, m=8, n_centroids=16, driver_train_bytes=0)
-    assert b_driver == b_dist
-
     q = emb.where(F.col("vec_id") < 3)
-    out_driver = sorted(
-        map(tuple, ivfpq_topk(emb, q, k=5, n_coarse=8, n_probe=2).collect())
+
+    collects = []
+    collect_vectors = similarity._collect_vectors
+    monkeypatch.setattr(
+        similarity, "_collect_vectors",
+        lambda *a: collects.append(1) or collect_vectors(*a),
     )
-    out_dist = sorted(
-        map(
-            tuple,
-            ivfpq_topk(
-                emb, q, k=5, n_coarse=8, n_probe=2, driver_train_bytes=0
-            ).collect(),
+
+    def train():
+        collects.clear()
+        out = (
+            kmeans_codebook(emb, n_centroids=8, n_iters=2),
+            pq_codebooks(emb, m=8, n_centroids=16),
+            sorted(map(tuple, ivfpq_topk(
+                emb, q, k=5, n_coarse=8, n_probe=2).collect())),
         )
-    )
+        return out, len(collects)
+
+    (k_driver, b_driver, out_driver), driver_collects = train()
+    monkeypatch.setattr(similarity, "_DRIVER_TRAIN_BYTES", 0)
+    (k_dist, b_dist, out_dist), dist_collects = train()
+    # one training collect per trainer under the gate, none past it
+    assert (driver_collects, dist_collects) == (3, 0)
+    assert k_driver == k_dist
+    assert b_driver == b_dist
     assert out_driver == out_dist
 
 

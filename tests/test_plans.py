@@ -8,6 +8,7 @@ its load-bearing claims as tests.)
 from __future__ import annotations
 
 import io
+import math
 from contextlib import redirect_stdout
 
 import pytest
@@ -729,9 +730,9 @@ def test_lsh_index_query_one_task_gate_parity(spark, lsh_roots, monkeypatch, key
 def test_lsh_index_query_degenerate_batches_take_distributed_path(
     spark, lsh_roots, tmp_path
 ):
-    """A null or zero query vector, and a root with a streaming batch=
-    delta layer, take the distributed plan: its Spark semantics (a null
-    similarity, a division by zero) stay Spark's."""
+    """A null query vector, and a root with a streaming batch= delta
+    layer, take the distributed plan: its Spark semantics (a null
+    similarity) stay Spark's."""
     from pyspark.sql import functions as F
 
     from wiki_mysql_spark.operators.similarity import (
@@ -745,12 +746,9 @@ def test_lsh_index_query_degenerate_batches_take_distributed_path(
         "vec_id", "embedding")
     q = emb.where(F.col("vec_id") < 2)
     null_vec = q.select("vec_id", F.lit(None).cast("array<float>").alias("embedding"))
-    zero_vec = q.select("vec_id", F.array_repeat(
-        F.lit(0.0).cast("float"), 64).alias("embedding"))
     res = lsh_index_query(spark, root, null_vec, k=5)
     assert not _one_task(res)
     assert all(r["cos_sim"] is None for r in res.collect())
-    assert not _one_task(lsh_index_query(spark, root, zero_vec, k=5))
 
     delta_root = str(tmp_path / "delta")
     lsh_index_init(spark, delta_root, dim=64, n_planes=8, n_tables=2)
@@ -766,9 +764,10 @@ def test_lsh_index_query_one_task_degenerate_index_rows(
     """Index rows the numpy scorer must treat as Spark does: a null vector,
     a null element, a vector of another width (all null similarity,
     ranked last), a NaN element (NaN, ranked first) and a zero vector (a
-    null similarity without ANSI, a DIVIDE_BY_ZERO error with it). One
-    plane and probe_bits=1 make every row a candidate of every query."""
-    from wiki_mysql_spark.operators import similarity
+    zero norm product: null similarity), plus a zero query vector (null
+    against every row but the NaN one). Both plans return the same rows
+    with ANSI on, off and unset (Spark 4's default is ANSI). One plane and
+    probe_bits=1 make every row a candidate of every query."""
     from wiki_mysql_spark.operators.similarity import lsh_index_build
 
     rows = [
@@ -781,31 +780,29 @@ def test_lsh_index_query_one_task_degenerate_index_rows(
     root = str(tmp_path / "idx")
     lsh_index_build(corpus, root, dim=4, n_planes=1, n_tables=2)
     queries = spark.createDataFrame(
-        [(1, [1.0, 1.0, 0.0, 0.0]), (100, [0.0, 1.0, 1.0, 0.0])],
+        [(1, [1.0, 1.0, 0.0, 0.0]), (100, [0.0, 1.0, 1.0, 0.0]),
+         (200, [0.0, 0.0, 0.0, 0.0])],
         "vec_id long, embedding array<double>")
     prev = spark.conf.get("spark.sql.ansi.enabled")
     try:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        (got, schema, one), (want, d_schema, d_one) = _knn_both_paths(
-            spark, monkeypatch, root, queries, k=20, probe_bits=1)
-        assert one and not d_one
-        assert schema == d_schema
-        assert len(got) == 15
-        # NaN rows carry the same NaN; compare them through repr
-        assert repr(got) == repr(want)
-        # ANSI set, and unset (Spark 4's default is ANSI)
-        for ansi in ("true", None):
+        for ansi in ("true", "false", None):
             if ansi is None:
                 spark.conf.unset("spark.sql.ansi.enabled")
             else:
                 spark.conf.set("spark.sql.ansi.enabled", ansi)
-            for bound in (similarity._LSH_ONE_TASK_BYTES, 0):
-                with monkeypatch.context() as m:
-                    m.setattr(similarity, "_LSH_ONE_TASK_BYTES", bound)
-                    res = similarity.lsh_index_query(
-                        spark, root, queries, k=20, probe_bits=1)
-                with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-                    res.collect()
+            (got, schema, one), (want, d_schema, d_one) = _knn_both_paths(
+                spark, monkeypatch, root, queries, k=20, probe_bits=1)
+            assert one and not d_one, ansi
+            assert schema == d_schema, ansi
+            assert len(got) == 23, ansi
+            # NaN rows carry the same NaN; compare them through repr
+            assert repr(got) == repr(want), ansi
+            # the zero query meets a zero norm product everywhere but at
+            # the NaN row, where the product is NaN
+            zero_query = {r[1]: r[2] for r in got if r[0] == 200}
+            assert len(zero_query) == 8 and math.isnan(zero_query.pop(5)), ansi
+            assert set(zero_query.values()) == {None}, ansi
+            assert [r[2] for r in got if r[1] == 8] == [None, None, None], ansi
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from wiki_mysql_spark.operators import redirects as redirects_mod
 from wiki_mysql_spark.operators.redirects import resolve_redirects
 
 
@@ -19,14 +20,15 @@ def _run(spark, edges, articles, **kw):
     targets = spark.createDataFrame(articles, ["title", "body_id"])
     # run ALL physical strategies — the size-gated driver fast path, the
     # caller-hinted fast path (skips the gate's checkpoint+probe jobs), and
-    # the pointer-doubling loop — and require them to agree on every case
+    # the pointer-doubling loop (the gate's bound at 0) — and require them
+    # to agree on every case
     fast = resolve_redirects(redirects, targets, **kw).collect()
     hinted = resolve_redirects(
         redirects, targets, small_hint=True, **kw
     ).collect()
-    dist = resolve_redirects(
-        redirects, targets, force_distributed=True, **kw
-    ).collect()
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(redirects_mod, "_SMALL_EDGES_BYTES", 0)
+        dist = resolve_redirects(redirects, targets, **kw).collect()
     as_map = lambda rows: {r["title"]: r["body_id"] for r in rows}  # noqa: E731
     assert as_map(fast) == as_map(dist), "fast/distributed paths disagree"
     assert as_map(hinted) == as_map(dist), "hinted/distributed paths disagree"

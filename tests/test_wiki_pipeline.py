@@ -127,25 +127,24 @@ def test_bz2_dump_reads_identically(spark, tmp_path):
     assert a == b and len(a) == 7
 
 
-def test_etl_disk_materialization_identical(spark, tmp_path):
+def test_etl_disk_materialization_identical(spark, tmp_path, monkeypatch, capsys):
     """The byte-gated disk materialization (r7 — the 24M-page OOM fix):
-    materialize='disk' stages the raw parse and the cleaned+numbered
-    frame as temp parquet instead of block-manager checkpoints. Results
-    must be byte-identical to the memory path, the scratch dirs must be
-    gone afterwards, and a bogus mode must fail loudly."""
+    with the heap bound at 0 the staged frame lands as temp parquet
+    instead of a block-manager checkpoint. Results must be byte-identical
+    to the memory path and the scratch dirs must be gone afterwards."""
     import bz2
 
-    import pytest as _pytest
-
-    from wiki_mysql_spark.plans.wiki_pipeline import run_wiki_etl
+    import wiki_mysql_spark.plans.wiki_pipeline as wp
 
     dump = tmp_path / "d.xml.bz2"
     dump.write_bytes(bz2.compress(WIKI_XML.encode()))
 
     outs = {}
-    for mode in ("memory", "disk"):
+    for mode, fraction in (("memory", wp._MAT_HEAP_FRACTION), ("disk", 0)):
+        monkeypatch.setattr(wp, "_MAT_HEAP_FRACTION", fraction)
         out = tmp_path / f"out_{mode}"
-        counts = run_wiki_etl(spark, str(dump), str(out), materialize=mode)
+        counts = wp.run_wiki_etl(spark, str(dump), str(out))
+        assert f"# wiki-etl materialize: {mode}" in capsys.readouterr().err
         arts = sorted(
             map(tuple, spark.read.parquet(f"{out}/articles").collect())
         )
@@ -157,11 +156,6 @@ def test_etl_disk_materialization_identical(spark, tmp_path):
             d for d in os.listdir(out) if d.startswith("_mat_")
         ], "scratch materialization dirs must be cleaned up"
     assert outs["memory"] == outs["disk"]
-
-    with _pytest.raises(ValueError, match="materialize"):
-        run_wiki_etl(
-            spark, str(dump), str(tmp_path / "out_bad"), materialize="bogus"
-        )
 
 
 def test_fetch_stage_roundtrip(tmp_path):
@@ -428,23 +422,25 @@ def _quarantine_dump(tmp_path):
     return str(path)
 
 
-def test_etl_counts_are_rows_written(spark, tmp_path):
+def test_etl_counts_are_rows_written(spark, tmp_path, monkeypatch):
     """run_wiki_etl's counts are observed during the sink writes; they must
     equal what a read-back of each output finds, on both materializations
     and on the limit= path, with the quarantine rows carrying their
     reasons."""
-    from wiki_mysql_spark.plans.wiki_pipeline import run_wiki_etl
+    import wiki_mysql_spark.plans.wiki_pipeline as wp
     from wiki_mysql_spark.sinks import TITLE_MAX_CHARS
 
     dump = _quarantine_dump(tmp_path)
     title_reason = f"title exceeds VARCHAR({TITLE_MAX_CHARS})"
-    for tag, kw in (
-        ("memory", {"materialize": "memory"}),
-        ("disk", {"materialize": "disk"}),
-        ("limit", {"materialize": "memory", "limit": 3}),
+    # the heap bound at 0 puts the staged frame on disk
+    for tag, fraction, kw in (
+        ("memory", wp._MAT_HEAP_FRACTION, {}),
+        ("disk", 0, {}),
+        ("limit", wp._MAT_HEAP_FRACTION, {"limit": 3}),
     ):
+        monkeypatch.setattr(wp, "_MAT_HEAP_FRACTION", fraction)
         out = str(tmp_path / f"out_{tag}")
-        counts = run_wiki_etl(spark, dump, out, **kw)
+        counts = wp.run_wiki_etl(spark, dump, out, **kw)
         assert counts == {
             k: spark.read.parquet(f"{out}/{k}").count() for k in counts
         }, tag
@@ -472,7 +468,7 @@ def test_warm_etl_job_budget_and_no_read_back(spark, tmp_path, monkeypatch):
     from wiki_mysql_spark.plans.wiki_pipeline import run_wiki_etl
 
     dump = _quarantine_dump(tmp_path)
-    run_wiki_etl(spark, dump, str(tmp_path / "cold"), materialize="memory")
+    run_wiki_etl(spark, dump, str(tmp_path / "cold"))
 
     sc = spark.sparkContext
     group = "test-warm-etl-job-budget"
@@ -486,9 +482,7 @@ def test_warm_etl_job_budget_and_no_read_back(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sinks, "write_parquet", recording_write)
     sc.setJobGroup(group, group)
     try:
-        counts = run_wiki_etl(
-            spark, dump, str(tmp_path / "warm"), materialize="memory"
-        )
+        counts = run_wiki_etl(spark, dump, str(tmp_path / "warm"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -547,9 +541,9 @@ def test_warm_etl_runs_no_python_row_scan(spark, tmp_path):
     from wiki_mysql_spark.plans.wiki_pipeline import run_wiki_etl
 
     dump = _quarantine_dump(tmp_path)
-    run_wiki_etl(spark, dump, str(tmp_path / "cold"), materialize="memory")
+    run_wiki_etl(spark, dump, str(tmp_path / "cold"))
     before = max(_sql_plans(spark), default=-1)
-    counts = run_wiki_etl(spark, dump, str(tmp_path / "warm"), materialize="memory")
+    counts = run_wiki_etl(spark, dump, str(tmp_path / "warm"))
     assert counts == {"articles": 4, "bodies": 3, "quarantine": 2}
     warm = {i: p for i, p in _sql_plans(spark).items() if i > before}
     assert warm
@@ -586,9 +580,16 @@ def _site_redirects(spark):
 
 
 def _site_dense_ids(spark):
+    from wiki_mysql_spark.operators import ids
+
     rows = [(c, i) for i, c in enumerate("zyxwvutsrq")]
     df = local_frame(spark, rows, "k string, v long").repartition(4)
-    out = dense_ids(df, ["k"], id_col="id", small_hint=False)
+    # the bound at 0 takes the distributed path, whose offsets are the
+    # driver-built frame
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(ids, "_SMALL_SORT_BYTES", 0)
+        out = dense_ids(df, ["k"], id_col="id")
+    assert "Join" in out._jdf.queryExecution().optimizedPlan().toString()
     by_k = dict(rows)
     return out, [(i, k, by_k[k]) for i, k in enumerate(sorted(by_k), 1)]
 

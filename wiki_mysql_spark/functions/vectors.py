@@ -30,7 +30,9 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """Cosine similarity; null when the norm product is zero, whatever
+    ``spark.sql.ansi.enabled`` says."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def l2_distance(a: Column, b: Column) -> Column:

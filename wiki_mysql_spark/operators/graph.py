@@ -20,8 +20,6 @@ the simple propagation wins because its per-round shuffle is smaller.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -143,61 +141,20 @@ def pagerank(
 # under this many RAW edge rows the whole edge set collects to the driver
 # and components come from an exact union-find (min-id representative —
 # identical labels to the propagation below). Two longs per edge -> the
-# bound caps the collect at a few tens of MB of driver memory by
-# construction. The dup-cluster graphs this operator exists for are
+# bound caps the collect at 4 MiB of Arrow on the driver by construction.
+# The dup-cluster graphs this operator exists for are
 # CONTRACTED name/candidate graphs (dedup_fuzzy_clusters: 64 nodes at sf1
 # over a bounded vocabulary), where a distributed fixpoint pays ~30 job
 # barriers to label a graph that fits in one page — the same byte-gated
 # driver-twin posture as kmeans_codebook/_fits_driver. Past the bound the
 # small-star + min-label propagation below runs unchanged.
-#: Upper bound on :data:`_CC_DRIVER_EDGE_ROWS`: 2^22 edges of two longs
-#: are 64 MiB of Arrow on the driver, the bound the other driver-side
-#: vector collects use (``similarity._DRIVER_TRAIN_BYTES``).
-_CC_DRIVER_EDGES_MAX = 1 << 22
-
-
-def _cc_driver_edges(raw: str) -> int:
-    """Validate ``SPARK_GRAFT_CC_DRIVER_EDGES``: an integer >= 0 (0 sends
-    every graph down the distributed path), clamped to
-    :data:`_CC_DRIVER_EDGES_MAX`."""
-    try:
-        n = int(raw)
-    except ValueError:
-        n = -1
-    if n < 0:
-        raise ValueError(
-            f"SPARK_GRAFT_CC_DRIVER_EDGES must be an integer >= 0, got {raw!r}"
-        )
-    return min(n, _CC_DRIVER_EDGES_MAX)
-
-
-_CC_DRIVER_EDGE_ROWS = _cc_driver_edges(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", str(1 << 18))
-)
+_CC_DRIVER_EDGE_ROWS = 1 << 18
 
 # Node-id domain bound for triangle_count's dense-regime bitset intersects:
-# ids in [0, bound) pack into bound/64 longs per node (default 4096 -> 64
-# words, 512 B/node — broadcast-small at any node count the bound allows).
-# Bigger domains take the sparse array_intersect path. The knob is clamped
-# to 2^20 ids (16384 words, 128 KB/node): past that the per-word aggregate
-# list and the per-node bitset stop being small.
-_TRI_DENSE_DOMAIN_MAX = 1 << 20
-
-
-def _tri_dense_domain(raw: str) -> int:
-    """Validate ``SPARK_GRAFT_TRI_DENSE_DOMAIN``: a positive int, clamped
-    to :data:`_TRI_DENSE_DOMAIN_MAX`."""
-    n = int(raw)
-    if n <= 0:
-        raise ValueError(
-            f"SPARK_GRAFT_TRI_DENSE_DOMAIN must be positive, got {raw!r}"
-        )
-    return min(n, _TRI_DENSE_DOMAIN_MAX)
-
-
-_TRI_DENSE_DOMAIN = _tri_dense_domain(
-    os.environ.get("SPARK_GRAFT_TRI_DENSE_DOMAIN", "4096")
-)
+# ids in [0, bound) pack into bound/64 longs per node (4096 -> 64 words,
+# 512 B/node — broadcast-small at any node count the bound allows).
+# Bigger domains take the sparse array_intersect path.
+_TRI_DENSE_DOMAIN = 4096
 
 
 def _cc_union_find(pairs) -> dict[int, int]:

@@ -35,36 +35,11 @@ _LOW33 = (1 << 33) - 1
 _DISK_LEVEL_HEAP_FRACTION = 0.15
 
 
-def _jvm_max_heap(spark) -> int:
-    try:
-        return int(spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
-    except Exception:
-        return 8 << 30
-
-
 # Inputs whose optimizer-estimated size is below this skip the range
 # exchange entirely (see fast path in dense_ids). Generous on purpose:
 # a single-partition sort of 64 MB is milliseconds, while the range path
 # costs a boundary-sampling job + a shuffle + a counts collect.
 _SMALL_SORT_BYTES = 64 << 20
-
-
-def _probed_bytes_estimate(df: DataFrame, sample_rows: int = 100_000) -> int:
-    """Total-bytes estimate for an unknown-stats frame: exact summed row
-    widths when the frame fits in the sample cap, else mean sampled width
-    x an exact count. Two bounded jobs; call only on frames that are
-    already materialized (checkpoint blocks), so neither re-runs the
-    upstream DAG."""
-    from wiki_mysql_spark.sources.tables import _row_bytes_estimate
-
-    probe = df.limit(sample_rows + 1).select(
-        F.count(F.lit(1)).alias("_n"),
-        F.coalesce(F.sum(_row_bytes_estimate(df)), F.lit(0)).alias("_bytes"),
-    ).collect()[0]
-    n, b = int(probe["_n"]), int(probe["_bytes"])
-    if n <= sample_rows:
-        return b
-    return int(b / n * df.count())
 
 
 def dense_ids(
@@ -73,7 +48,7 @@ def dense_ids(
     *,
     id_col: str = "id",
     start: int = 1,
-    small_hint: bool | None = None,
+    small_hint: bool = False,
 ) -> DataFrame:
     """Add a dense, deterministic ``start``-based id column ordered by
     ``order_by`` (which must be a total order — include a unique tiebreaker,
@@ -83,12 +58,9 @@ def dense_ids(
     upstream (e.g. the wiki build probes its single ``staged`` frame once
     for all downstream gates) and vouches it is under the fast-path bound —
     skip this function's own checkpoint + byte-probe jobs and take the
-    single-partition path directly. ``small_hint=False`` is an explicit
-    FORCE-DISTRIBUTED hint: the probe is skipped too and the parallel path
-    runs regardless of size (the same contract as
-    ``resolve_redirects(small_hint=False)``). Strategy only; results are
-    identical on every path (pinned in tests). ``None`` keeps the
-    self-probing behavior."""
+    single-partition path directly. ``False`` (default): this function
+    sizes the frame itself against :data:`_SMALL_SORT_BYTES`. Strategy
+    only; results are identical on every path (pinned in tests)."""
     spark = df.sparkSession
     # Small-input fast path (see sources.tables.is_small_input): merge to ONE
     # partition and sort locally. monotonically_increasing_id on a single
@@ -97,13 +69,16 @@ def dense_ids(
     # collect all disappear. At real scale the leaves are TBs of parquet and
     # the parallel path below runs.
     from wiki_mysql_spark.sources.tables import (
+        PROBE_ROWS,
         is_rdd_backed,
         is_small_input,
+        jvm_max_heap,
         leaf_bytes,
         local_frame,
+        probe_size,
     )
 
-    if small_hint is None:
+    if not small_hint:
         # For unknown-stats inputs (RDD/checkpoint-backed, e.g. the wiki
         # pipeline's frames) materialize BEFORE the gate: both strategies
         # consume the frame fully anyway, and the checkpoint makes the byte
@@ -115,10 +90,7 @@ def dense_ids(
         _, stats_unknown = leaf_bytes(df)
         if stats_unknown and not is_rdd_backed(df):
             df = df.localCheckpoint(eager=True)
-        small = is_small_input(df, max_bytes=_SMALL_SORT_BYTES, byte_probe=True)
-    else:
-        small = bool(small_hint)
-    if small:
+    if small_hint or is_small_input(df, max_bytes=_SMALL_SORT_BYTES, byte_probe=True):
         # repartition (not coalesce): coalesce(1) would drag the upstream
         # narrow ops (e.g. the regex cleaning chain) into the single task;
         # a round-robin exchange keeps them parallel and only the tiny
@@ -160,14 +132,16 @@ def dense_ids(
     known_bytes, unknown = leaf_bytes(df)
     if unknown:
         # Checkpoint/RDD-backed frames report no leaf stats — exactly the
-        # wiki-pipeline frames this gate exists for (a `--materialize
-        # memory` run on a big dump must still get DISK_ONLY here, or the
-        # sink-stage OOM returns). The frame was eagerly localCheckpointed
-        # above (or arrived checkpoint-backed), so a sampled-width x count
-        # estimate reads materialized blocks, not the upstream DAG.
-        known_bytes = _probed_bytes_estimate(df)
-    heap = _jvm_max_heap(spark)
-    big = known_bytes is not None and known_bytes > _DISK_LEVEL_HEAP_FRACTION * heap
+        # wiki-pipeline frames this gate exists for (a big dump whose staged
+        # frame stays in the block manager must still get DISK_ONLY here,
+        # or the sink-stage OOM returns). The frame was eagerly localCheckpointed
+        # above (or arrived checkpoint-backed), so the probe reads
+        # materialized blocks, not the upstream DAG: exact summed widths
+        # when the frame fits the row cap, else mean width x exact count.
+        n, known_bytes = probe_size(df)
+        if n > PROBE_ROWS:
+            known_bytes = int(known_bytes / n * df.count())
+    big = known_bytes > _DISK_LEVEL_HEAP_FRACTION * jvm_max_heap(spark)
     tagged = tagged.localCheckpoint(
         eager=False,
         storageLevel=StorageLevel.DISK_ONLY if big else None,

@@ -21,6 +21,7 @@ doubles per iteration and Catalyst analysis itself becomes the bottleneck.
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -64,9 +65,7 @@ def resolve_redirects(
     targets: DataFrame,
     *,
     max_depth: int = 1024,
-    eager_checkpoint: bool = True,
-    force_distributed: bool = False,
-    small_hint: bool | None = None,
+    small_hint: bool = False,
 ) -> DataFrame:
     """Resolve redirect chains transitively.
 
@@ -82,8 +81,12 @@ def resolve_redirects(
             so the small/driver path and the distributed path agree on
             results for every input. (The reference's implicit bound is
             Python's recursion limit, ~1000.)
-        force_distributed: skip the small-input driver fast path (tests use
-            this to pin the pointer-doubling loop's behavior).
+        small_hint: ``True`` when the caller has already sized the shared
+            upstream frame (the wiki build's single staged probe) and
+            vouches the edge set is under :data:`_SMALL_EDGES_BYTES`: the
+            checkpoint and the probe jobs are skipped and the chains are
+            walked driver-side directly. ``False`` (default): the edge set
+            is checkpointed and sized here, and the data picks the path.
 
     Returns:
         ``redirects``'s carried columns + ``body_id`` for every redirect
@@ -99,14 +102,23 @@ def resolve_redirects(
     edges = redirects.select(
         F.col("title").alias("src"), F.col("target").alias("dst")
     )
-    # ``small_hint=True``: the caller already sized the shared upstream
-    # frame (the wiki build's single staged probe) and vouches the edge set
-    # is under _SMALL_EDGES_BYTES — skip the checkpoint and the probe jobs
-    # and walk driver-side directly (the collect reads the caller's
-    # materialized blocks through a narrow filter). Strategy only; both
-    # paths are pinned result-identical in tests.
-    hinted_small = small_hint is True and not force_distributed
-    if eager_checkpoint and not hinted_small:
+
+    def attach(mapping: DataFrame) -> DataFrame:
+        # (src, terminal dst) -> redirects' columns + the dst's body_id;
+        # the inner join drops dangling terminals
+        resolved = mapping.join(
+            targets.select(F.col("title").alias("t_title"), "body_id"),
+            mapping.dst == F.col("t_title"),
+            "inner",
+        ).select(F.col("src"), "body_id")
+        return redirects.join(
+            resolved, redirects.title == resolved.src, "inner"
+        ).drop("src")
+
+    # With small_hint the collect reads the caller's materialized blocks
+    # through a narrow filter. Strategy only; both paths are pinned
+    # result-identical in tests.
+    if not small_hint:
         # Materialize BEFORE the size gate: both strategies consume `edges`
         # repeatedly (the small path collects it, the doubling loop joins it
         # every round), and checkpointing first makes the gate's probe jobs
@@ -120,26 +132,17 @@ def resolve_redirects(
     # a narrow-count frame of pathologically wide titles must not slip
     # through on row count alone; the sampled byte estimate reads the
     # checkpoint, not the upstream DAG.
-    if hinted_small or (
-        not force_distributed
-        and small_hint is None
-        and is_small_input(edges, max_bytes=_SMALL_EDGES_BYTES, byte_probe=True)
+    if small_hint or is_small_input(
+        edges, max_bytes=_SMALL_EDGES_BYTES, byte_probe=True
     ):
-        mapping = _resolve_small(edges, eff_depth)
-        resolved = mapping.join(
-            targets.select(F.col("title").alias("t_title"), "body_id"),
-            mapping.dst == F.col("t_title"),
-            "inner",
-        ).select(F.col("src"), "body_id")
-        return redirects.join(
-            resolved, redirects.title == resolved.src, "inner"
-        ).drop("src")
-    sources = edges.select(F.col("src").alias("open_src")).distinct()
-    if eager_checkpoint:
-        # referenced by every is_open/is_closed split (2 per round + 2 final):
-        # checkpoint once instead of re-running the distinct aggregation each
-        # time. Tiny relative to the edge set (one row per redirect title).
-        sources = sources.localCheckpoint(eager=False)
+        return attach(_resolve_small(edges, eff_depth))
+    # referenced by every is_open/is_closed split (2 per round + 2 final):
+    # checkpoint once instead of re-running the distinct aggregation each
+    # time. Tiny relative to the edge set (one row per redirect title).
+    sources = (
+        edges.select(F.col("src").alias("open_src")).distinct()
+        .localCheckpoint(eager=False)
+    )
 
     # Invariant per round r: `chained` rows still point at a redirect source
     # after following 2^r hops; `done` rows have reached a terminal (article
@@ -170,17 +173,13 @@ def resolve_redirects(
             break
         # the doubling step joins `chained` against the CURRENT cumulative
         # mapping (done ∪ chained) — that's what squares covered distance
-        mapping = done_parts[0]
-        for p in done_parts[1:]:
-            mapping = mapping.unionByName(p)
-        mapping = mapping.unionByName(chained)
+        mapping = reduce(DataFrame.unionByName, [*done_parts, chained])
         hop = mapping.select(F.col("src").alias("h_src"), F.col("dst").alias("h_dst"))
         stepped = (
             chained.join(hop, chained.dst == hop.h_src, "left")
             .select("src", F.coalesce("h_dst", "dst").alias("dst"))
+            .localCheckpoint(eager=False)  # n.count() materializes
         )
-        if eager_checkpoint:
-            stepped = stepped.localCheckpoint(eager=False)  # n.count() materializes
         done_parts.append(is_closed(stepped))
         chained = is_open(stepped)
         n = chained.count()
@@ -188,16 +187,4 @@ def resolve_redirects(
             break  # no progress => only cycles remain; drop them
         prev_n = n
 
-    mapping = done_parts[0]
-    for p in done_parts[1:]:
-        mapping = mapping.unionByName(p)
-
-    resolved = mapping.join(
-        targets.select(F.col("title").alias("t_title"), "body_id"),
-        mapping.dst == F.col("t_title"),
-        "inner",  # inner join drops dangling remnants
-    ).select(F.col("src"), "body_id")
-
-    return redirects.join(
-        resolved, redirects.title == resolved.src, "inner"
-    ).drop("src")
+    return attach(reduce(DataFrame.unionByName, done_parts))

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wiki_mysql_spark.functions.vectors import cosine
+from wiki_mysql_spark.session import env_int
 
 
 def brute_force_topk(
@@ -343,7 +344,6 @@ def with_nearest_cell(
     *,
     vec_col: str,
     cell_col: str = "cell",
-    literal_k_max: int = _LITERAL_K_MAX,
 ) -> DataFrame:
     """Attach each row's nearest-center id (cosine, ties → lower id),
     picking the physical strategy by center count:
@@ -364,7 +364,7 @@ def with_nearest_cell(
 
     Semantics are identical either way — the data picks the plan, the
     same posture as the broadcast-join threshold."""
-    if len(centers) <= literal_k_max:
+    if len(centers) <= _LITERAL_K_MAX:
         return df.withColumn(
             cell_col, F.element_at(nearest_cells(F.col(vec_col), centers, 1), 1)
         )
@@ -415,7 +415,6 @@ def kmeans_codebook(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 6,
-    driver_train_bytes: int = _DRIVER_TRAIN_BYTES,
 ) -> list[tuple[int, list[float]]]:
     """Train a coarse-quantizer codebook with Lloyd k-means, distributed the
     way MLlib does it: centers live on the driver (tiny — k × dim doubles)
@@ -429,7 +428,7 @@ def kmeans_codebook(
     replays the identical iterations in SQL). A cell that captures no
     vectors drops out, matching the SQL semantics.
 
-    Byte-gated physical strategy: under ``driver_train_bytes`` the corpus
+    Byte-gated physical strategy: under :data:`_DRIVER_TRAIN_BYTES` the corpus
     is collected ONCE and the iterations run as numpy twins on the driver
     (the FAISS posture — quantizers train on a bounded sample; see the
     driver-training comment block above); past the gate the distributed
@@ -439,8 +438,7 @@ def kmeans_codebook(
     # distributed spelling (no current caller asks for one)
     if (
         round_digits == 6
-        and driver_train_bytes
-        and _fits_driver(corpus, id_col, vec_col, driver_train_bytes)
+        and _fits_driver(corpus, id_col, vec_col, _DRIVER_TRAIN_BYTES)
     ):
         ids, V = _collect_vectors(corpus, id_col, vec_col)
         if len(ids) == 0:
@@ -1573,12 +1571,13 @@ def lsh_index_query(
       call, and the scan at the caller's action.
     * distributed: past the bound, or for a root that carries a streaming
       ``batch=`` delta layer, a query id column that is not integral, or a
-      query vector that is null, holds a null or non-finite element or has
-      zero norm. The broadcast bucket join of :func:`_lsh_score_rank`
-      runs, 5 jobs (3 at the action).
+      query vector that is null or holds a null or non-finite element. The
+      broadcast bucket join of :func:`_lsh_score_rank` runs, 5 jobs (3 at
+      the action).
 
     Either way the returned frame is lazy and its plan holds the pruned
-    bucket scan. Output is identical to :func:`lsh_topk` at the same
+    bucket scan, and a zero norm product scores a null ``cos_sim`` under
+    every ANSI setting. Output is identical to :func:`lsh_topk` at the same
     operating point. A query vector whose width is not the header's
     ``dim`` raises ValueError; a null vector hashes to bucket 0, as in
     :func:`lsh_signature`."""
@@ -1742,19 +1741,17 @@ def _lsh_one_task_fits(spark, path: str, probe: _LshProbe) -> bool:
     """The gate of :func:`lsh_index_query`: True when
     :func:`_lsh_probed_bytes` is under :data:`_LSH_ONE_TASK_BYTES` and the
     batch is one the one-task scorer serves exactly (integral ids; every
-    query vector non-null, finite and of non-zero norm). A root with a
+    query vector non-null and finite). A root with a
     streaming ``batch=`` delta layer is refused, since the per-table globs
     cannot see under it."""
     import numpy as np
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
-    from wiki_mysql_spark.functions.vectors import seq_norm_np
-
     integral = (ByteType, ShortType, IntegerType, LongType)
     if not isinstance(probe.schema["query_id"].dataType, integral):
         return False
     V = probe.V
-    if probe.null_rows.any() or not np.isfinite(V).all() or (seq_norm_np(V) == 0).any():
+    if probe.null_rows.any() or not np.isfinite(V).all():
         return False
     if _has_delta_layer(spark, path, _LSH_INDEX.subdir):
         return False
@@ -1817,9 +1814,6 @@ def _lsh_score_one_task(
         probed=probed,
         stride=stride,
         k=k,
-        # the effective mode (Spark 4 defaults to ANSI), read when the frame
-        # is built, as the distributed plan binds its division's mode then
-        ansi=spark.conf.get("spark.sql.ansi.enabled").lower() == "true",
         out_schema=to_arrow_schema(out),
     )
     return cand.coalesce(1).mapInArrow(score, out).select(
@@ -1830,7 +1824,7 @@ def _lsh_score_one_task(
     )
 
 
-def _lsh_score_batches(batches, *, qids, Q, probed, stride, k, ansi, out_schema):
+def _lsh_score_batches(batches, *, qids, Q, probed, stride, k, out_schema):
     """Score and rank one task's candidate rows (the ``mapInArrow`` body of
     :func:`_lsh_score_one_task`) with exactly :func:`_lsh_score_rank`'s
     semantics, so both plans return the same rows:
@@ -1841,15 +1835,15 @@ def _lsh_score_batches(batches, *, qids, Q, probed, stride, k, ansi, out_schema)
     * ``raw_sim`` is :func:`cosine` through its numpy twins
       (:func:`seq_dot_np` over :func:`seq_norm_np` ⊗ :func:`seq_norm_np`,
       the same IEEE fold). A candidate vector that is null, holds a null
-      element or has another width scores null; a zero norm product scores
-      null, or raises ``[DIVIDE_BY_ZERO]`` under ANSI, as Spark's division
-      does;
+      element or has another width scores null, and so does a zero norm
+      product, as :func:`cosine`'s ``try_divide`` does under every ANSI
+      setting;
     * per ``query_id``: order by ``(raw_sim desc, neighbor_id)`` with NaN
       first and nulls last, ``dense_rank``, keep ``rank <= k``, drop
       duplicate rows.
 
-    The query vectors ``Q`` are finite, non-null and of non-zero norm (the
-    gate's promise)."""
+    The query vectors ``Q`` are finite and non-null (the gate's
+    promise); one of zero norm scores null against every candidate."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -1925,13 +1919,7 @@ def _lsh_score_batches(batches, *, qids, Q, probed, stride, k, ansi, out_schema)
         idx = order[np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())]
         idx = idx[nid[idx] != q]
         den = nq[r] * nc[idx]
-        zero = ~null_like[idx] & (den == 0)
-        if ansi and zero.any():
-            raise ArithmeticError(
-                "[DIVIDE_BY_ZERO] Division by zero: a probed index vector "
-                "has zero norm"
-            )
-        good = ok[idx] & ~zero
+        good = ok[idx] & (den != 0)
         sim = np.full(idx.size, np.nan)
         sim[good] = seq_dot_np(Q[r:r + 1], C[idx[good]])[0] / den[good]
         # a query_id's k best keys lie within its rows' k best: each row
@@ -1998,7 +1986,6 @@ def pq_codebooks(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    driver_train_bytes: int = _DRIVER_TRAIN_BYTES,
 ) -> list[list[tuple[int, list[float]]]]:
     """Train one sub-codebook per subspace: seeds are the first
     ``n_centroids`` corpus vectors' slices, refined by ONE Lloyd
@@ -2011,10 +1998,10 @@ def pq_codebooks(
     structs; the update groups on (subspace, cell, pos)) — the per-
     subspace spelling cost m sequential job barriers for identical
     math. Byte-gated like :func:`kmeans_codebook`: under
-    ``driver_train_bytes`` the slices train as numpy twins on the
+    :data:`_DRIVER_TRAIN_BYTES` the slices train as numpy twins on the
     driver (FAISS trains PQ books on a bounded sample); past it, the
     fused distributed job below runs."""
-    if driver_train_bytes and _fits_driver(corpus, id_col, vec_col, driver_train_bytes):
+    if _fits_driver(corpus, id_col, vec_col, _DRIVER_TRAIN_BYTES):
         ids, V = _collect_vectors(corpus, id_col, vec_col)
         if len(ids) == 0:
             raise ValueError(
@@ -2367,7 +2354,6 @@ def ivfpq_topk(
     dim: int = 64,
     coarse_codebook: list[tuple[int, list[float]]] | None = None,
     coarse_iters: int = 2,
-    driver_train_bytes: int = _DRIVER_TRAIN_BYTES,
 ) -> DataFrame:
     """IVFADC (Jégou et al. 2011, §IV — the billion-vector index shape):
     coarse cells bound the candidate set, PQ codes of the RESIDUAL compress
@@ -2428,7 +2414,7 @@ def ivfpq_topk(
     not vectors. Exact cosine is attached to every returned pair (the ANN
     family's verifier invariant)."""
     subdim = dim // m
-    if driver_train_bytes and _fits_driver(corpus, id_col, vec_col, driver_train_bytes):
+    if _fits_driver(corpus, id_col, vec_col, _DRIVER_TRAIN_BYTES):
         # driver training path (see the byte-gate comment block above):
         # ONE collect feeds coarse Lloyd, residuals, AND residual-PQ
         # training as numpy twins — the distributed spelling below ran
@@ -2460,7 +2446,6 @@ def ivfpq_topk(
                 n_iters=coarse_iters,
                 id_col=id_col,
                 vec_col=vec_col,
-                driver_train_bytes=driver_train_bytes,
             )
         coarse = sorted(coarse_codebook)
         if not coarse:
@@ -2494,7 +2479,6 @@ def ivfpq_topk(
             id_col="nid",
             vec_col="rv",
             dim=dim,
-            driver_train_bytes=driver_train_bytes,
         )
     codes = _ivfpq_encode(
         corpus, coarse, books, id_col=id_col, vec_col=vec_col, dim=dim
@@ -2620,20 +2604,6 @@ def _layout_write_partitions(spark, n_dirs: int | None = None) -> int:
 _LAYOUT_SPLIT_MAX = 64
 
 
-def _layout_split(raw: str) -> int:
-    """Validate ``SPARK_GRAFT_LAYOUT_SPLIT``: an integer >= 1, clamped to
-    :data:`_LAYOUT_SPLIT_MAX`."""
-    try:
-        n = int(raw)
-    except ValueError:
-        n = 0
-    if n < 1:
-        raise ValueError(
-            f"SPARK_GRAFT_LAYOUT_SPLIT must be an integer >= 1, got {raw!r}"
-        )
-    return min(n, _LAYOUT_SPLIT_MAX)
-
-
 #: Within-partition SPLIT for index layout writes: >1 spreads each layout
 #: directory's rows over up to this many tasks/files. The local default is
 #: 1 (each directory lands as ~one file — the small-files guard); a
@@ -2641,7 +2611,7 @@ def _layout_split(raw: str) -> int:
 #: one reasonable file) raises it — e.g. 8 gives each hot directory 8
 #: writers and 8 files, removing the single-task ceiling the r13 verdict
 #: flagged as docstring-only.
-_LAYOUT_SPLIT_FILES = _layout_split(os.environ.get("SPARK_GRAFT_LAYOUT_SPLIT", "1"))
+_LAYOUT_SPLIT_FILES = env_int("SPARK_GRAFT_LAYOUT_SPLIT", 1, lo=1, hi=_LAYOUT_SPLIT_MAX)
 
 
 def _layout_repartition(
@@ -2910,15 +2880,14 @@ def _ivfpq_train(
     id_col: str,
     vec_col: str,
     dim: int,
-    driver_train_bytes: int,
 ) -> dict:
     """Train the IVFADC quantizers (coarse Lloyd codebook + residual-PQ
     sub-books) on ``corpus`` — the shared front half of
     :func:`ivfpq_index_build` and :func:`ivfpq_index_init`. Byte-gated
-    numpy twin under ``driver_train_bytes`` (FAISS trains on a bounded
+    numpy twin under :data:`_DRIVER_TRAIN_BYTES` (FAISS trains on a bounded
     sample), fused distributed jobs past it; both paths are
     parity-pinned. Returns the index header ``{dim, m, coarse, books}``."""
-    if driver_train_bytes and _fits_driver(corpus, id_col, vec_col, driver_train_bytes):
+    if _fits_driver(corpus, id_col, vec_col, _DRIVER_TRAIN_BYTES):
         import numpy as np
 
         ids, V = _collect_vectors(corpus, id_col, vec_col)
@@ -2937,7 +2906,6 @@ def _ivfpq_train(
             n_iters=coarse_iters,
             id_col=id_col,
             vec_col=vec_col,
-            driver_train_bytes=driver_train_bytes,
         )
     )
     rescmap = _lit_center_map(coarse)
@@ -2961,7 +2929,7 @@ def _ivfpq_train(
     )
     books = pq_codebooks(
         rescorp, m=m, n_centroids=n_centroids, id_col="nid",
-        vec_col="rv", dim=dim, driver_train_bytes=driver_train_bytes,
+        vec_col="rv", dim=dim,
     )
     return {"dim": dim, "m": m, "coarse": coarse, "books": books}
 
@@ -3010,7 +2978,6 @@ def ivfpq_index_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    driver_train_bytes: int = _DRIVER_TRAIN_BYTES,
 ) -> DataFrame:
     """PERSIST an IVFADC index: the code table is written
     ``partitionBy("cell")`` (parquet) so a query's scan prunes to its
@@ -3034,7 +3001,6 @@ def ivfpq_index_build(
     meta = _ivfpq_train(
         corpus, n_coarse=n_coarse, coarse_iters=coarse_iters, m=m,
         n_centroids=n_centroids, id_col=id_col, vec_col=vec_col, dim=dim,
-        driver_train_bytes=driver_train_bytes,
     )
     return _index_new_generation(
         corpus.sparkSession, _IVFPQ_INDEX, path, meta,
@@ -3116,7 +3082,6 @@ def ivfpq_index_init(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    driver_train_bytes: int = _DRIVER_TRAIN_BYTES,
 ) -> None:
     """Train the IVFADC quantizers on ``train_corpus`` and write ONLY the
     index header (trained codebooks) at ``path`` — no codes. This is the
@@ -3130,7 +3095,7 @@ def ivfpq_index_init(
         _ivfpq_train(
             train_corpus, n_coarse=n_coarse, coarse_iters=coarse_iters, m=m,
             n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
-            dim=dim, driver_train_bytes=driver_train_bytes,
+            dim=dim,
         ),
     )
 

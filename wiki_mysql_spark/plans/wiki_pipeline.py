@@ -23,6 +23,8 @@ Differences from the reference, by design:
 from __future__ import annotations
 
 import os
+import sys
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -42,8 +44,8 @@ _STAGED_SMALL_BYTES = 8 << 20
 # downstream gates bound estimated IN-MEMORY octet lengths; parquet+zstd
 # wiki text expands ~3-5x on decode, so the hint only fires when the
 # compressed leaves are under bound/4 — a staged frame in the ambiguous
-# band (bound/4 .. bound) falls through to hint None and the gates'
-# own in-memory probes decide (the r13 advice item: a <8MB-compressed
+# band (bound/4 .. bound) gets no hint and the gates' own in-memory
+# probes decide (the r13 advice item: a <8MB-compressed
 # frame must not smuggle a >8MB edge set into a driver collect).
 _COMPRESSION_EXPANSION = 4
 
@@ -56,7 +58,7 @@ def _build_wiki_frames(
     invalid_unicodes: tuple[tuple[int, int], ...] = (),
     max_redirect_depth: int = 1024,
     exact_templates: bool = False,
-    materializer=None,
+    materializer: Callable[[DataFrame, str], DataFrame] | None = None,
 ) -> dict[str, DataFrame | None]:
     """The wiki build with its internal frames exposed: returns
     ``{"articles", "bodies_full" (id, body, body_octets), "corrupt"}``.
@@ -89,7 +91,7 @@ def _build_wiki_frames(
     single materialization and come back as the ``corrupt`` frame.
 
     Small-hint pins: when the staged probe vouches the corpus is small
-    (``small_hint is True``), two narrow frames are lazily
+    (``small_hint``), two narrow frames are lazily
     localCheckpointed — ``ids`` (aid, title, body_id), read by the bodies
     join, the redirect targets and the direct article rows, and the final
     ``articles``, read by the ok set and both quarantine checks. Without
@@ -163,29 +165,17 @@ def _build_wiki_frames(
     # gated frame is a projection/filter/union of staged's rows (bytes and
     # rows both <= staged's). One bounded probe job on the checkpointed
     # staged (or a free stats read when a materializer made it a scan)
-    # replaces them (bound: _STAGED_SMALL_BYTES; row cap = is_small_input's).
-    # Strategy only: a big corpus gets hint None and the gates behave
-    # exactly as before.
-    from wiki_mysql_spark.sources.tables import _row_bytes_estimate, leaf_bytes
+    # replaces them (bound: _STAGED_SMALL_BYTES; row cap: PROBE_ROWS).
+    # Strategy only: a big corpus gets no hint and the gates probe their
+    # own inputs.
+    from wiki_mysql_spark.sources.tables import PROBE_ROWS, leaf_bytes, probe_size
 
     known, unknown = leaf_bytes(staged)
     if not unknown and known is not None:
-        small_hint = (
-            True
-            if known * _COMPRESSION_EXPANSION < _STAGED_SMALL_BYTES
-            else None
-        )
+        small_hint = known * _COMPRESSION_EXPANSION < _STAGED_SMALL_BYTES
     else:
-        _probe = staged.limit(100_001).select(
-            F.count(F.lit(1)).alias("_n"),
-            F.coalesce(F.sum(_row_bytes_estimate(staged)), F.lit(0)).alias("_b"),
-        ).collect()[0]
-        small_hint = (
-            True
-            if int(_probe["_n"]) <= 100_000
-            and int(_probe["_b"]) < _STAGED_SMALL_BYTES
-            else None
-        )
+        n, size = probe_size(staged)
+        small_hint = n <= PROBE_ROWS and size < _STAGED_SMALL_BYTES
 
     redirect_pages = staged.where(F.col("is_redirect")).select(
         "title", F.col("redirect_target").alias("target"), "aid"
@@ -252,7 +242,6 @@ def build_wiki_tables(
     invalid_unicodes: tuple[tuple[int, int], ...] = (),
     max_redirect_depth: int = 1024,
     exact_templates: bool = False,
-    materializer=None,
 ) -> tuple[DataFrame, DataFrame]:
     """pages ``(aid, title, ns, text[, redirect_title])`` ->
     ``(articles, bodies)`` exactly shaped like ``sql/init.sql:5-19``.
@@ -266,7 +255,6 @@ def build_wiki_tables(
         invalid_unicodes=invalid_unicodes,
         max_redirect_depth=max_redirect_depth,
         exact_templates=exact_templates,
-        materializer=materializer,
     )
     return frames["articles"], frames["bodies_full"].select("id", "body")
 
@@ -277,14 +265,6 @@ def parse_unichr_range(txt: str) -> tuple[int, int]:
     lo, hi = txt.split(",")
     as_int = lambda s: int(s, 16) if "x" in s else int(s)  # noqa: E731
     return as_int(lo), as_int(hi)
-
-
-def _heap_bytes(spark) -> int:
-    """The driver JVM's max heap (local mode: the only JVM)."""
-    try:
-        return int(spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
-    except Exception:
-        return 8 << 30
 
 
 def _dump_bytes(dump_path: str) -> int:
@@ -320,9 +300,7 @@ def run_wiki_etl(
     jdbc_user: str = "root",
     jdbc_password: str = "",
     limit: int | None = None,
-    splittable: bool = True,
     progress: bool = False,
-    materialize: str = "auto",
     **build_kwargs,
 ) -> dict[str, int]:
     """The full CLI workload (``/root/reference/dbfy.py:254-313`` analog):
@@ -337,28 +315,28 @@ def run_wiki_etl(
     semantics (the reference's ``--limit`` was off-by-chunk between its
     1-proc and MP paths; SURVEY documents choosing exact-n).
 
-    ``splittable=True`` (default) parses via the text-source/``from_xml``
-    reader, which splits WITHIN bz2 files (the XML source reads one task
-    per file — a single-file dump would serialize the whole parse onto one
-    core no matter the cluster size) and bounds structural-corruption loss
-    to the broken page instead of the rest of its file.
+    The dump is parsed by the text-source/``from_xml`` reader, which
+    splits WITHIN bz2 files (the XML source reads one task per file — a
+    single-file dump would serialize the whole parse onto one core no
+    matter the cluster size) and bounds structural-corruption loss to the
+    broken page instead of the rest of its file.
 
     ``progress=True`` reports live task progress to stderr while the ETL
     runs — the reference's tqdm bars (``dbfy.py:158,191,231``), Spark-native
     (`plans/progress.py:job_progress` over StatusTracker telemetry).
 
-    ``materialize`` picks where the compute-once STAGED frame (the fused
-    parse+clean+split pass — the pipeline's only full-text
-    materialization since r8) lives: ``"memory"`` = block-manager
-    localCheckpoint (fastest while the frame fits), ``"disk"`` = zstd
-    temp parquet under ``out_dir`` (bounded memory: writes stream,
-    re-reads are scan-speed columnar with COLUMN PRUNING — every
-    downstream consumer except the bodies join reads only narrow
-    columns; the stage boundary a real 100 TB pipeline puts on durable
-    storage), ``"auto"`` (default) = byte-gated on estimated expanded
-    size vs the JVM heap. Measured necessity: 24M pages (1.3 GB bz2) on
-    an 8 GB heap OOMs in the sink stage under "memory"; 10M survives
-    with the heap pinned at its ceiling — the r6 5M→10M p/s dip."""
+    The compute-once STAGED frame (the fused parse+clean+split pass — the
+    pipeline's only full-text materialization since r8) lives where the
+    dump's size puts it: while the dump's bytes x :data:`_MAT_EXPANSION`
+    stay within :data:`_MAT_HEAP_FRACTION` of the JVM heap, in memory (a
+    block-manager localCheckpoint, fastest while the frame fits); past
+    that, on disk (zstd temp parquet under ``out_dir``, removed when the
+    run ends: writes stream, re-reads are scan-speed columnar with COLUMN
+    PRUNING — every downstream consumer except the bodies join reads only
+    narrow columns; the stage boundary a real 100 TB pipeline puts on
+    durable storage). Measured necessity: 24M pages (1.3 GB bz2) on an
+    8 GB heap OOMs in the sink stage in memory; 10M survives with the
+    heap pinned at its ceiling — the r6 5M→10M p/s dip."""
     from contextlib import nullcontext
 
     from wiki_mysql_spark.plans.progress import job_progress
@@ -369,30 +347,17 @@ def run_wiki_etl(
         write_jdbc,
         write_parquet,
     )
+    from wiki_mysql_spark.sources.tables import jvm_max_heap
     from wiki_mysql_spark.sources.wikixml import (
         project_corrupt,
         project_pages,
         project_pages_with_corrupt,
-        read_wiki_dump_raw,
         read_wiki_dump_raw_splittable,
     )
 
-    mode = materialize
-    if mode == "auto":
-        est = _dump_bytes(dump_path) * _MAT_EXPANSION
-        mode = (
-            "disk"
-            if est > _MAT_HEAP_FRACTION * _heap_bytes(spark)
-            else "memory"
-        )
-    if mode not in ("memory", "disk"):
-        raise ValueError(
-            f"materialize must be auto|memory|disk, got {materialize!r}"
-        )
-    if materialize == "auto":
-        import sys
-
-        print(f"# wiki-etl materialize: {mode} (auto)", file=sys.stderr)
+    est = _dump_bytes(dump_path) * _MAT_EXPANSION
+    mode = "disk" if est > _MAT_HEAP_FRACTION * jvm_max_heap(spark) else "memory"
+    print(f"# wiki-etl materialize: {mode}", file=sys.stderr)
     mat_paths: list[str] = []
     # big-dump runs bound the PER-TASK parquet writer buffer (see
     # sinks.write_parquet): 32 concurrent text writers at the 128 MB
@@ -425,8 +390,7 @@ def run_wiki_etl(
         mat_paths.append(path)
         return spark.read.parquet(path)
 
-    reader = read_wiki_dump_raw_splittable if splittable else read_wiki_dump_raw
-    raw = reader(spark, dump_path)
+    raw = read_wiki_dump_raw_splittable(spark, dump_path)
     if limit is not None:
         # exact-n limit must count ns-0 PAGES only, which needs the page
         # and corrupt branches separated before staging — so a sampling
@@ -540,11 +504,6 @@ if __name__ == "__main__":  # pragma: no cover — thin CLI (dbfy.py analog)
     p.add_argument("--progress", action="store_true",
                    help="print live task progress to stderr (the "
                         "reference's tqdm bars, Spark-native)")
-    p.add_argument("--materialize", choices=("auto", "memory", "disk"),
-                   default="auto",
-                   help="where the compute-once full-text frames live: "
-                        "block manager (memory), temp parquet (disk), or "
-                        "byte-gated on dump size vs heap (auto, default)")
     args = p.parse_args()
     counts = run_wiki_etl(
         get_session("wiki-etl"),
@@ -555,7 +514,6 @@ if __name__ == "__main__":  # pragma: no cover — thin CLI (dbfy.py analog)
         jdbc_password=args.jdbc_password,
         limit=args.limit,
         progress=args.progress,
-        materialize=args.materialize,
         remove_html=bool(args.remove_html),
         valid_unicodes=tuple(args.valid_unichrs or ()),
         invalid_unicodes=tuple(args.invalid_unichrs or ()),

@@ -2972,7 +2972,7 @@ def lsh_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture SF), one task reads them and ranks with the numpy twins of
     the cosine fold — 2 Spark jobs, the batch collect inside the call and
     the scan at the action; past it, or for a delta-layer root, a
-    non-integral id or a null, zero or non-finite query vector, the
+    non-integral id or a null or non-finite query vector, the
     broadcast bucket join ranks with a window (5 jobs). Rows and schema
     are the same on both sides (tests/test_plans.py). Output is
     identical to `ann_topk_lsh` at the same operating point (2 tables x

@@ -36,21 +36,19 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-def _list_job_threshold(raw: str) -> str:
-    """Validate ``SPARK_GRAFT_LIST_JOB_THRESHOLD``: an integer >= 1. A bad
-    value would otherwise reach ``spark.conf.set``, whose error
-    :func:`configure` swallows, silently leaving Spark's default of 32:
-    every index read over 32 directories would then launch a listing
-    job."""
+def env_int(name: str, default: int, *, lo: int, hi: int | None = None) -> int:
+    """A deployment knob read from the environment variable ``name``
+    (``default`` when unset): a value that is not an integer or is below
+    ``lo`` raises a ValueError naming the variable, at import of the module
+    that reads it; a value above ``hi`` is clamped to it."""
+    raw = os.environ.get(name, str(default))
     try:
         n = int(raw)
     except ValueError:
-        n = 0
-    if n < 1:
-        raise ValueError(
-            f"SPARK_GRAFT_LIST_JOB_THRESHOLD must be an integer >= 1, got {raw!r}"
-        )
-    return str(n)
+        n = lo - 1
+    if n < lo:
+        raise ValueError(f"{name} must be an integer >= {lo}, got {raw!r}")
+    return n if hi is None else min(n, hi)
 
 
 # Partition-discovery strategy for multi-directory reads (the persisted
@@ -63,9 +61,11 @@ def _list_job_threshold(raw: str) -> str:
 # wins on high-latency object stores with tens of thousands of partitions,
 # so the local default keeps listing driver-side and a deployment on s3a/
 # abfs sets SPARK_GRAFT_LIST_JOB_THRESHOLD back down (e.g. to Spark's
-# default 32) where the per-dir latency is ms, not μs.
-RUNTIME_CONFS["spark.sql.sources.parallelPartitionDiscovery.threshold"] = (
-    _list_job_threshold(os.environ.get("SPARK_GRAFT_LIST_JOB_THRESHOLD", "4096"))
+# default 32) where the per-dir latency is ms, not μs. Validated at import:
+# a bad value would otherwise reach spark.conf.set, whose error configure()
+# swallows, silently leaving Spark's default of 32.
+RUNTIME_CONFS["spark.sql.sources.parallelPartitionDiscovery.threshold"] = str(
+    env_int("SPARK_GRAFT_LIST_JOB_THRESHOLD", 4096, lo=1)
 )
 
 

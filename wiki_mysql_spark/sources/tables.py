@@ -64,6 +64,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # bounded probes (row-capped) still answer correctly for it.
 _STATS_UNKNOWN = 1 << 50
 
+# Row cap of the bounded probes below: a probe job materializes at most
+# this many rows plus one.
+PROBE_ROWS = 100_000
+
 
 def local_frame(spark: SparkSession, data, schema) -> DataFrame:
     """A DataFrame over driver-side data, always built through Arrow.
@@ -132,7 +136,7 @@ def leaf_bytes(df: DataFrame) -> tuple[int | None, bool]:
 
 
 def is_small_input(
-    df: DataFrame, *, max_bytes: int, max_rows: int = 100_000,
+    df: DataFrame, *, max_bytes: int, max_rows: int = PROBE_ROWS,
     byte_probe: bool = False,
 ) -> bool:
     """Decide whether a frame is small enough for a single-task fast path.
@@ -174,16 +178,32 @@ def is_small_input(
         )
         return n <= max_rows
     # Safety-critical byte gate: sum real widths over ALL rows up to the
-    # row cap (one bounded job — the limit caps materialization at
-    # max_rows+1 rows). No sampling/extrapolation: a frame whose wide rows
-    # sit past any prefix sample can no longer sneak under the gate.
+    # row cap. No sampling/extrapolation: a frame whose wide rows sit past
+    # any prefix sample can no longer sneak under the gate.
+    n, size = probe_size(df, max_rows)
+    return n <= max_rows and size < max_bytes
+
+
+def probe_size(df: DataFrame, max_rows: int = PROBE_ROWS) -> tuple[int, int]:
+    """``(rows, bytes)`` over the first ``max_rows + 1`` rows of ``df``:
+    one bounded job (the limit caps materialization at ``max_rows + 1``
+    rows), bytes summed with :func:`_row_bytes_estimate`. ``rows >
+    max_rows`` means the frame holds more rows than were measured. The
+    probe cannot be column-pruned, so run it on a materialized frame."""
     probe = df.limit(max_rows + 1).select(
         F.count(F.lit(1)).alias("_n"),
         F.coalesce(F.sum(_row_bytes_estimate(df)), F.lit(0)).alias("_bytes"),
     ).collect()[0]
-    if int(probe["_n"]) > max_rows:
-        return False
-    return int(probe["_bytes"]) < max_bytes
+    return int(probe["_n"]), int(probe["_bytes"])
+
+
+def jvm_max_heap(spark: SparkSession) -> int:
+    """The driver JVM's max heap (local mode: the only JVM); 8 GiB when it
+    cannot be read (e.g. Spark Connect)."""
+    try:
+        return int(spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
+    except Exception:
+        return 8 << 30
 
 
 def _row_bytes_estimate(df: DataFrame) -> "F.Column":
