@@ -1320,6 +1320,40 @@ def test_nearest_cell_literal_and_arrow_paths_identical(spark, monkeypatch):
     assert a == b
 
 
+@pytest.mark.parametrize(
+    "centers, want",
+    [
+        ({0: [0.0, 0.0], 1: [1.0, 0.0], 2: [0.0, 1.0]}, [1, 0, 1, 0, 1]),
+        ({9: [0.0, 0.0], 1: [1.0, 0.0], 2: [0.0, 1.0]}, [1, 1, 1, 1, 1]),
+    ],
+)
+def test_nearest_cell_zero_norm_center_ranks_last(spark, monkeypatch, centers, want):
+    """A zero-norm center scores below every real cosine on both sides of
+    _LITERAL_K_MAX and in the driver twin: rows with a real score never
+    pick it, and a zero-norm row takes the lowest center id."""
+    import numpy as np
+
+    from wiki_mysql_spark.operators import similarity
+    from wiki_mysql_spark.operators.similarity import (
+        _assign_cells_np,
+        with_nearest_cell,
+    )
+
+    rows = [[1.0, 0.0], [0.0, 0.0], [0.5, 0.5], [0.0, 0.0], [1.0, 0.01]]
+    df = spark.createDataFrame(
+        list(enumerate(rows)), "vec_id long, embedding array<double>"
+    )
+    book = sorted(centers.items())
+    got = {}
+    for path, k_max in (("literal", 16), ("blocked", 2)):
+        monkeypatch.setattr(similarity, "_LITERAL_K_MAX", k_max)
+        out = with_nearest_cell(df, book, vec_col="embedding")
+        got[path] = [r["cell"] for r in out.orderBy("vec_id").collect()]
+    ids = np.array([cid for cid, _ in book])
+    got["driver"] = ids[_assign_cells_np(np.array(rows), book)].tolist()
+    assert got == {"literal": want, "blocked": want, "driver": want}
+
+
 def test_wav_float_and_g711_formats_decode():
     """WAV format coverage beyond PCM16 (r5): IEEE-float32 (format 3)
     round-trips exactly; G.711 A-law/mu-law (formats 6/7) expand against

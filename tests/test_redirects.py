@@ -18,20 +18,23 @@ def _run(spark, edges, articles, **kw):
         [(t, d, i) for i, (t, d) in enumerate(edges)], ["title", "target", "aid"]
     )
     targets = spark.createDataFrame(articles, ["title", "body_id"])
-    # run ALL physical strategies — the size-gated driver fast path, the
-    # caller-hinted fast path (skips the gate's checkpoint+probe jobs), and
-    # the pointer-doubling loop (the gate's bound at 0) — and require them
-    # to agree on every case
-    fast = resolve_redirects(redirects, targets, **kw).collect()
-    hinted = resolve_redirects(
-        redirects, targets, small_hint=True, **kw
-    ).collect()
+    # run both physical strategies — the driver walk the size gate picks on
+    # these tiny fixtures (its mapping is a local relation) and the
+    # pointer-doubling loop (the gate's bound at 0) — and require them to
+    # agree on every case
+    fast_df = resolve_redirects(redirects, targets, **kw)
+    fast = fast_df.collect()
     with pytest.MonkeyPatch.context() as m:
         m.setattr(redirects_mod, "_SMALL_EDGES_BYTES", 0)
-        dist = resolve_redirects(redirects, targets, **kw).collect()
+        dist_df = resolve_redirects(redirects, targets, **kw)
+        dist = dist_df.collect()
+    plans = [
+        df._jdf.queryExecution().optimizedPlan().toString()
+        for df in (fast_df, dist_df)
+    ]
+    assert ["LocalRelation" in p for p in plans] == [True, False], plans
     as_map = lambda rows: {r["title"]: r["body_id"] for r in rows}  # noqa: E731
     assert as_map(fast) == as_map(dist), "fast/distributed paths disagree"
-    assert as_map(hinted) == as_map(dist), "hinted/distributed paths disagree"
     return as_map(fast)
 
 

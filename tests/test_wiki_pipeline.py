@@ -100,18 +100,25 @@ def test_aid_preserved(wiki_tables):
 
 
 def test_dense_ids_deterministic_and_dense(spark):
+    from wiki_mysql_spark.operators import ids as ids_mod
+
     df = spark.createDataFrame(
         [(c, i) for i, c in enumerate("zyxwvutsrq")], ["k", "v"]
     ).repartition(4)
-    out = dense_ids(df, ["k"], id_col="id").orderBy("id").collect()
+    small = dense_ids(df, ["k"], id_col="id")
+    out = small.orderBy("id").collect()
     assert [r["k"] for r in out] == sorted("zyxwvutsrq")
     assert [r["id"] for r in out] == list(range(1, 11))
-    # caller-hinted small path (skips the gate's checkpoint + probe jobs)
-    # must be row-identical to the self-probed decision
-    hinted = dense_ids(df, ["k"], id_col="id", small_hint=True).orderBy(
-        "id"
-    ).collect()
-    assert hinted == out
+    # the size gate takes the single-partition path on this tiny frame (no
+    # offsets join), and the range path (the bound at 0) is row-identical
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(ids_mod, "_SMALL_SORT_BYTES", 0)
+        ranged = dense_ids(df, ["k"], id_col="id")
+    plans = [
+        x._jdf.queryExecution().optimizedPlan().toString() for x in (small, ranged)
+    ]
+    assert ["Join" in p for p in plans] == [False, True], plans
+    assert ranged.orderBy("id").collect() == out
 
 
 def test_bz2_dump_reads_identically(spark, tmp_path):
@@ -488,41 +495,120 @@ def test_warm_etl_job_budget_and_no_read_back(spark, tmp_path, monkeypatch):
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert counts == {"articles": 4, "bodies": 3, "quarantine": 2}
-    # 11 jobs measured on this fixture at 1, 4 and 8 local cores (13 on the
-    # 3000-page, 4-shard benchmark dump)
-    assert len(jobs) <= 11, sorted(jobs)
+    # the driver plan: the staged probe, the narrow Arrow collect and the
+    # three sink writes — 5 jobs on this fixture and on the 3000-page,
+    # 4-shard benchmark dump
+    assert len(jobs) <= 5, sorted(jobs)
     assert sorted(jobs) == sorted(at_last_write)
 
 
-def test_staged_gate_both_sides(spark, monkeypatch):
-    """Both sides of the staged-frame small hint: with the bound at 0 the
-    hint is None and the frames stay unpinned, yet articles and bodies
-    match the hinted, pinned path row for row."""
-    import wiki_mysql_spark.plans.wiki_pipeline as wp
-    from wiki_mysql_spark.sources.tables import is_rdd_backed
+def _gate_dump(tmp_path):
+    """A dump holding one of each case the build handles apart: a 2-hop
+    redirect chain, a cycle, a dangling target, an empty ``#REDIRECT
+    [[]]``, a chain past a max_redirect_depth of 2, an over-long title with
+    a redirect to it, a body of 60 octets (over a patched
+    ``BODY_MAX_BYTES``) with a redirect to it, a corrupt capture and a
+    page outside namespace 0."""
+    from wiki_mysql_spark.sinks import TITLE_MAX_CHARS
 
-    def build(pages):
-        frames = wp._build_wiki_frames(pages)
-        arts = sorted(map(tuple, frames["articles"].collect()))
-        bods = sorted(
-            map(tuple, frames["bodies_full"].select("id", "body").collect())
+    long_title = "L" * (TITLE_MAX_CHARS + 1)
+    pages = [
+        ("Alpha", "alpha body"),
+        ("Beta", "beta body &amp; more"),
+        ("Alpha redirect", "#REDIRECT [[Alpha]]"),
+        ("Chain start", "#REDIRECT [[Alpha redirect]]"),
+        ("Cycle one", "#REDIRECT [[Cycle two]]"),
+        ("Cycle two", "#REDIRECT [[Cycle one]]"),
+        ("Dangler", "#REDIRECT [[Nowhere]]"),
+        ("Empty target", "#REDIRECT [[]]"),
+        ("Deep 0", "#REDIRECT [[Deep 1]]"),
+        ("Deep 1", "#REDIRECT [[Deep 2]]"),
+        ("Deep 2", "#REDIRECT [[Deep 3]]"),
+        ("Deep 3", "#REDIRECT [[Beta]]"),
+        (long_title, "long titled body"),
+        ("To long", f"#REDIRECT [[{long_title}]]"),
+        ("Huge", "h" * 60),
+        ("To huge", "#REDIRECT [[Huge]]"),
+    ]
+    doc = ["<mediawiki>"]
+    for aid, (title, text) in enumerate(pages, 1):
+        doc.append(
+            f"<page><title>{title}</title><ns>0</ns><id>{aid}</id>"
+            f"<revision><text>{text}</text></revision></page>"
         )
-        return is_rdd_backed(frames["articles"]), arts, bods
-
-    pages = spark.createDataFrame(
-        [
-            (1, "Alpha", 0, "Alpha body with a [[Beta|link]].", None),
-            (2, "Beta", 0, "Beta body &amp; more.", None),
-            (3, "Alpha redirect", 0, "#REDIRECT [[Alpha]]", "Alpha"),
-            (4, "Chain start", 0, "#REDIRECT [[Alpha redirect]]", None),
-            (5, "Dangler", 0, "#REDIRECT [[Nowhere]]", None),
-        ],
-        "aid long, title string, ns int, text string, redirect_title string",
+        if aid == 5:
+            doc.append(
+                "<page><title>Nest</title><ns>0</ns><id>90</id>"
+                "<revision><text>never closed</revision></page>"
+            )
+    doc.append(
+        "<page><title>Talk:x</title><ns>1</ns><id>91</id>"
+        "<revision><text>talk</text></revision></page>"
     )
-    pinned, arts, bods = build(pages)
-    assert pinned and len(arts) == 4 and len(bods) == 2
-    monkeypatch.setattr(wp, "_STAGED_SMALL_BYTES", 0)
-    assert build(pages) == (False, arts, bods)
+    doc.append("</mediawiki>")
+    path = tmp_path / "gate.xml"
+    path.write_text("\n".join(doc))
+    return str(path)
+
+
+def test_wiki_plans_agree_both_sides_of_the_gate(spark, tmp_path, monkeypatch, capsys):
+    """The staged probe's two plans — driver (the default bound) and
+    distributed (the bound at 0) — write identical articles, bodies and
+    quarantine rows and schemas from run_wiki_etl under memory and disk
+    materialization and limit=, and build identical build_wiki_tables
+    frames. The run names its plan on stderr, and the driver plan reads
+    BODY_MAX_BYTES when called."""
+    import wiki_mysql_spark.plans.wiki_pipeline as wp
+    from wiki_mysql_spark import sinks
+    from wiki_mysql_spark.sources.wikixml import read_wiki_dump
+
+    monkeypatch.setattr(sinks, "BODY_MAX_BYTES", 50)
+    dump = _gate_dump(tmp_path)
+
+    def tables(frames):
+        return [
+            (df.schema, sorted(map(tuple, df.collect()), key=repr))
+            for df in frames
+        ]
+
+    got = {}
+    for plan, bound in (("driver", wp._STAGED_SMALL_BYTES), ("distributed", 0)):
+        monkeypatch.setattr(wp, "_STAGED_SMALL_BYTES", bound)
+        for tag, fraction, kw in (
+            ("memory", wp._MAT_HEAP_FRACTION, {}),
+            ("disk", 0, {}),
+            ("limit", wp._MAT_HEAP_FRACTION, {"limit": 12}),
+        ):
+            with monkeypatch.context() as m:
+                m.setattr(wp, "_MAT_HEAP_FRACTION", fraction)
+                out = tmp_path / f"{plan}_{tag}"
+                counts = wp.run_wiki_etl(
+                    spark, dump, str(out), max_redirect_depth=2, **kw
+                )
+            assert f"# wiki-etl plan: {plan}" in capsys.readouterr().err
+            got[plan, tag] = (counts, tables(
+                spark.read.parquet(str(out / name))
+                for name in ("articles", "bodies", "quarantine")
+            ))
+        got[plan, "build"] = tables(
+            wp.build_wiki_tables(read_wiki_dump(spark, dump), max_redirect_depth=2)
+        )
+
+    for tag in ("memory", "disk", "limit", "build"):
+        assert got["driver", tag] == got["distributed", tag], tag
+    counts, (articles, bodies, quarantine) = got["driver", "memory"]
+    titles = {r[2] for r in articles[1]}
+    assert {"Chain start", "Deep 2", "Deep 3", "To long"} <= titles
+    assert not titles & {"Cycle one", "Dangler", "Empty target", "Deep 0", "Huge"}
+    reasons = sorted(r[2].split(":")[0] for r in quarantine[1])
+    assert reasons == [
+        "body exceeds MEDIUMTEXT",
+        "corrupt xml record",
+        "references quarantined body",
+        "references quarantined body",
+        f"title exceeds VARCHAR({sinks.TITLE_MAX_CHARS})",
+    ], reasons
+    assert counts == {"articles": len(articles[1]), "bodies": 3, "quarantine": 5}
 
 
 def _sql_plans(spark) -> dict[int, str]:
@@ -575,7 +661,7 @@ def _site_redirects(spark):
         "title string, target string",
     )
     targets = local_frame(spark, [("C", 7)], "title string, body_id long")
-    out = resolve_redirects(redirects, targets, small_hint=True)
+    out = resolve_redirects(redirects, targets)
     return out, [("A", "B", 7), ("B", "C", 7)]
 
 

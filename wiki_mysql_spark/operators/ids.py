@@ -48,19 +48,14 @@ def dense_ids(
     *,
     id_col: str = "id",
     start: int = 1,
-    small_hint: bool = False,
 ) -> DataFrame:
     """Add a dense, deterministic ``start``-based id column ordered by
     ``order_by`` (which must be a total order — include a unique tiebreaker,
     or ids within ties become partition-placement-dependent).
 
-    ``small_hint=True``: the caller has already sized this frame's shared
-    upstream (e.g. the wiki build probes its single ``staged`` frame once
-    for all downstream gates) and vouches it is under the fast-path bound —
-    skip this function's own checkpoint + byte-probe jobs and take the
-    single-partition path directly. ``False`` (default): this function
-    sizes the frame itself against :data:`_SMALL_SORT_BYTES`. Strategy
-    only; results are identical on every path (pinned in tests)."""
+    The frame is sized against :data:`_SMALL_SORT_BYTES` to pick the
+    single-partition or the range-partitioned path. Strategy only; results
+    are identical on every path (pinned in tests)."""
     spark = df.sparkSession
     # Small-input fast path (see sources.tables.is_small_input): merge to ONE
     # partition and sort locally. monotonically_increasing_id on a single
@@ -78,19 +73,18 @@ def dense_ids(
         probe_size,
     )
 
-    if not small_hint:
-        # For unknown-stats inputs (RDD/checkpoint-backed, e.g. the wiki
-        # pipeline's frames) materialize BEFORE the gate: both strategies
-        # consume the frame fully anyway, and the checkpoint makes the byte
-        # probe read materialized blocks instead of re-running the upstream
-        # DAG — which lets the gate measure BYTES (the single-task sort bound)
-        # rather than trusting row count alone. Skip when the frame is ALREADY
-        # checkpoint-backed (e.g. global_ntile checkpoints before its count):
-        # re-checkpointing would hold a second full copy in the block manager.
-        _, stats_unknown = leaf_bytes(df)
-        if stats_unknown and not is_rdd_backed(df):
-            df = df.localCheckpoint(eager=True)
-    if small_hint or is_small_input(df, max_bytes=_SMALL_SORT_BYTES, byte_probe=True):
+    # For unknown-stats inputs (RDD/checkpoint-backed, e.g. the wiki
+    # pipeline's frames) materialize BEFORE the gate: both strategies
+    # consume the frame fully anyway, and the checkpoint makes the byte
+    # probe read materialized blocks instead of re-running the upstream
+    # DAG — which lets the gate measure BYTES (the single-task sort bound)
+    # rather than trusting row count alone. Skip when the frame is ALREADY
+    # checkpoint-backed (e.g. global_ntile checkpoints before its count):
+    # re-checkpointing would hold a second full copy in the block manager.
+    _, stats_unknown = leaf_bytes(df)
+    if stats_unknown and not is_rdd_backed(df):
+        df = df.localCheckpoint(eager=True)
+    if is_small_input(df, max_bytes=_SMALL_SORT_BYTES, byte_probe=True):
         # repartition (not coalesce): coalesce(1) would drag the upstream
         # narrow ops (e.g. the regex cleaning chain) into the single task;
         # a round-robin exchange keeps them parallel and only the tiny

@@ -21,6 +21,7 @@ doubles per iteration and Catalyst analysis itself becomes the bottleneck.
 from __future__ import annotations
 
 import math
+from collections.abc import Iterable
 from functools import reduce
 
 from pyspark.sql import DataFrame
@@ -35,29 +36,51 @@ from pyspark.sql import functions as F
 _SMALL_EDGES_BYTES = 8 << 20
 
 
+def _depth_rounds(max_depth: int) -> int:
+    """Doubling rounds that cover ``max_depth`` hops: the pointer-doubling
+    loop covers exactly ``2 ** rounds`` hops, so every strategy bounds
+    chains by that rounded figure."""
+    return max(1, math.ceil(math.log2(max_depth)))
+
+
+def resolve_chains(
+    edges: Iterable[tuple[str | None, str | None]], max_depth: int
+) -> dict[str, str | None]:
+    """Driver-side chain walk — the reference's own algorithm
+    (``dbfy.py:108-121``) minus the recursion: ``{src: terminal}`` for every
+    redirect source whose chain reaches a non-redirect title (an article or
+    a dangling target) within ``max_depth`` hops, rounded up the way
+    :func:`resolve_redirects` rounds it. Cycle members and over-depth chains
+    get no entry (RecursionError -> None); a null source never matches, as
+    in a join. A source listed twice keeps its last target."""
+    eff_depth = 1 << _depth_rounds(max_depth)
+    nxt = {src: dst for src, dst in edges if src is not None}
+    out: dict[str, str | None] = {}
+    for src in nxt:
+        seen: set[str] = set()
+        cur = src
+        while cur in nxt and cur not in seen and len(seen) <= eff_depth:
+            seen.add(cur)
+            cur = nxt[cur]
+        if cur not in nxt and len(seen) <= eff_depth:
+            out[src] = cur
+    return out
+
+
 def _resolve_small(edges: DataFrame, max_depth: int) -> DataFrame:
-    """Driver-side chain walk for a tiny edge set — the reference's own
-    algorithm (``dbfy.py:108-121``) minus the recursion: one collect in,
-    zero fixpoint jobs. The ``(src, dst)`` mapping comes back as one
-    Arrow-built local frame (:func:`~wiki_mysql_spark.sources.tables.local_frame`,
-    a ``LocalTableScan`` with ``edges``' schema), not a parallelized list,
-    so the joins that read it start no Python worker. Gated by
+    """:func:`resolve_chains` over a tiny edge set: one collect in, zero
+    fixpoint jobs. The ``(src, dst)`` mapping comes back as one Arrow-built
+    local frame (:func:`~wiki_mysql_spark.sources.tables.local_frame`, a
+    ``LocalTableScan`` with ``edges``' schema), not a parallelized list, so
+    the joins that read it start no Python worker. Gated by
     :data:`_SMALL_EDGES_BYTES`.
     """
     from wiki_mysql_spark.sources.tables import local_frame
 
-    nxt = {r["src"]: r["dst"] for r in edges.collect()}
-    out: list[tuple[str, str]] = []
-    for src in nxt:
-        seen: set[str] = set()
-        cur = src
-        while cur in nxt and cur not in seen and len(seen) <= max_depth:
-            seen.add(cur)
-            cur = nxt[cur]
-        if cur not in nxt and len(seen) <= max_depth:
-            out.append((src, cur))  # terminal reached: article or dangling
-        # else: cycle or over-depth -> dropped, like RecursionError -> None
-    return local_frame(edges.sparkSession, out, edges.schema)
+    ends = resolve_chains(
+        ((r["src"], r["dst"]) for r in edges.collect()), max_depth
+    )
+    return local_frame(edges.sparkSession, list(ends.items()), edges.schema)
 
 
 def resolve_redirects(
@@ -65,7 +88,6 @@ def resolve_redirects(
     targets: DataFrame,
     *,
     max_depth: int = 1024,
-    small_hint: bool = False,
 ) -> DataFrame:
     """Resolve redirect chains transitively.
 
@@ -81,24 +103,15 @@ def resolve_redirects(
             so the small/driver path and the distributed path agree on
             results for every input. (The reference's implicit bound is
             Python's recursion limit, ~1000.)
-        small_hint: ``True`` when the caller has already sized the shared
-            upstream frame (the wiki build's single staged probe) and
-            vouches the edge set is under :data:`_SMALL_EDGES_BYTES`: the
-            checkpoint and the probe jobs are skipped and the chains are
-            walked driver-side directly. ``False`` (default): the edge set
-            is checkpointed and sized here, and the data picks the path.
 
     Returns:
         ``redirects``'s carried columns + ``body_id`` for every redirect
         whose chain ends in a loaded article. Cycle members and dangling
         chains produce no row (``dbfy.py:118-121,161-166``).
     """
-    # ONE effective bound for both strategies: the doubling loop covers
-    # exactly 2^rounds hops, so the driver path must use the same rounded
-    # figure or the two plans would disagree on chains in
-    # (max_depth, 2^ceil(log2(max_depth))]
-    rounds = max(1, math.ceil(math.log2(max_depth)))
-    eff_depth = 1 << rounds
+    # ONE effective bound for both strategies (_depth_rounds), or the two
+    # plans would disagree on chains in (max_depth, 2^ceil(log2(max_depth))]
+    rounds = _depth_rounds(max_depth)
     edges = redirects.select(
         F.col("title").alias("src"), F.col("target").alias("dst")
     )
@@ -115,27 +128,22 @@ def resolve_redirects(
             resolved, redirects.title == resolved.src, "inner"
         ).drop("src")
 
-    # With small_hint the collect reads the caller's materialized blocks
-    # through a narrow filter. Strategy only; both paths are pinned
+    # Materialize BEFORE the size gate: both strategies consume `edges`
+    # repeatedly (the small path collects it, the doubling loop joins it
+    # every round), and checkpointing first makes the gate's probe jobs
+    # read the materialized blocks instead of re-running the upstream
+    # XML/cleaning DAG per probe (measured ~3s of re-execution per probe
+    # at sf0.1 before this ordering). Strategy only; both paths are pinned
     # result-identical in tests.
-    if not small_hint:
-        # Materialize BEFORE the size gate: both strategies consume `edges`
-        # repeatedly (the small path collects it, the doubling loop joins it
-        # every round), and checkpointing first makes the gate's probe jobs
-        # read the materialized blocks instead of re-running the upstream
-        # XML/cleaning DAG per probe (measured ~3s of re-execution per probe
-        # at sf0.1 before this ordering).
-        edges = edges.localCheckpoint(eager=True)
+    edges = edges.localCheckpoint(eager=True)
     from wiki_mysql_spark.sources.tables import is_small_input
 
     # byte_probe: this gate feeds a DRIVER-side collect (_resolve_small), so
     # a narrow-count frame of pathologically wide titles must not slip
     # through on row count alone; the sampled byte estimate reads the
     # checkpoint, not the upstream DAG.
-    if small_hint or is_small_input(
-        edges, max_bytes=_SMALL_EDGES_BYTES, byte_probe=True
-    ):
-        return attach(_resolve_small(edges, eff_depth))
+    if is_small_input(edges, max_bytes=_SMALL_EDGES_BYTES, byte_probe=True):
+        return attach(_resolve_small(edges, max_depth))
     # referenced by every is_open/is_closed split (2 per round + 2 final):
     # checkpoint once instead of re-running the distinct aggregation each
     # time. Tiny relative to the edge set (one row per redirect title).

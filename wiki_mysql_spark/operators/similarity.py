@@ -250,17 +250,31 @@ def _collect_vectors(df: DataFrame, id_col: str, vec_col: str):
     return ids, V
 
 
-def _assign_cells_np(V, centers):
-    """Row-wise argmax-cosine CENTER INDEX against cid-sorted centers —
-    numpy first-max == the ties→lower-cid rule of :func:`nearest_cells`;
-    cosine via the dimension-ordered folds of functions/vectors.py."""
+def _nearest_center_np(A, C, norm_c):
+    """Row-wise argmax-cosine index into the rows of ``C`` (``norm_c`` its
+    row norms) — numpy first-max == the ties→lower-cid rule of
+    :func:`nearest_cells` over cid-sorted centers; cosine via the
+    dimension-ordered folds of functions/vectors.py. A zero norm product
+    scores -inf, below every real score, as ``cosine``'s null (try_divide)
+    sorts last there; a zero-norm row thus takes the first center."""
     import numpy as np
 
     from wiki_mysql_spark.functions.vectors import seq_dot_np, seq_norm_np
 
-    C = np.array([cv for _, cv in centers], dtype=np.float64)
-    cos = seq_dot_np(V, C) / np.multiply.outer(seq_norm_np(V), seq_norm_np(C))
+    den = np.multiply.outer(seq_norm_np(A), norm_c)
+    zero = den == 0
+    cos = np.where(zero, -np.inf, seq_dot_np(A, C) / np.where(zero, 1.0, den))
     return np.argmax(cos, axis=1)
+
+
+def _assign_cells_np(V, centers):
+    """Row-wise argmax-cosine CENTER INDEX against cid-sorted centers."""
+    import numpy as np
+
+    from wiki_mysql_spark.functions.vectors import seq_norm_np
+
+    C = np.array([cv for _, cv in centers], dtype=np.float64)
+    return _nearest_center_np(V, C, seq_norm_np(C))
 
 
 def _kmeans_np(ids, V, n_centroids: int, n_iters: int):
@@ -376,11 +390,7 @@ def with_nearest_cell(
 
     from wiki_mysql_spark.sources.tables import map_in_pandas_spread
 
-    from wiki_mysql_spark.functions.vectors import (
-        pack_rows_np,
-        seq_dot_np,
-        seq_norm_np,
-    )
+    from wiki_mysql_spark.functions.vectors import pack_rows_np, seq_norm_np
 
     cents = sorted((int(cid), [float(x) for x in cv]) for cid, cv in centers)
     cent_ids = np.array([cid for cid, _ in cents], dtype=np.int64)
@@ -395,11 +405,8 @@ def with_nearest_cell(
             if len(pdf) == 0:
                 yield pdf.assign(**{cell_col: pd.Series([], dtype="int64")})
                 continue
-            A = pack_rows_np(pdf[vec_col])
-            cos = seq_dot_np(A, C) / np.multiply.outer(seq_norm_np(A), ncent)
-            # argmax returns the FIRST max -> centers sorted by id give the
-            # ties->lower-id rule of nearest_cells
-            best = cent_ids[np.argmax(cos, axis=1)]
+            # centers sorted by id give the ties->lower-id rule
+            best = cent_ids[_nearest_center_np(pack_rows_np(pdf[vec_col]), C, ncent)]
             out = pdf.copy()
             out[cell_col] = best
             yield out

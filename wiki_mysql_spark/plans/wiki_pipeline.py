@@ -6,12 +6,26 @@ per-page ``_process`` (redirect branch / clean+insert branch, ``dbfy.py:
 (``dbfy.py:155-176``). Two tables out: ``bodies(id, body)`` and
 ``articles(id, aid, title, body->bodies.id)`` (``sql/init.sql:5-19``).
 
-Spark plan — one scan, two branches, no per-row control flow:
+Spark plan — one scan, one staged materialization, then one of two plans
+picked by a probe of the staged frame's size:
 
-    pages ──ns filter──┬─ redirects (title, target, aid)        [F7 split]
-                       └─ articles  ──clean F1-F6──┬─ bodies    [dense ids]
-                                                   └─ articles rows
-    redirects ──pointer-doubling fixpoint──> extra articles rows [A3]
+    pages ──ns filter + F7 split + clean F1-F6──> staged (aid, title,
+        is_redirect, redirect_target, body_text, body_octets[, corrupt])
+
+    driver (small staged frame):
+    staged ──narrow Arrow collect──> driver: body ids, redirect walk [A3],
+        article ids, quarantine rules ──> local articles / quarantine
+    staged ⋈ broadcast local (aid, body_id) ──> bodies
+
+    distributed:
+    staged ──dense ids──> bodies ⋈ text;  redirects ──pointer-doubling
+        fixpoint [A3]──> extra article rows ──dense ids──> articles
+        ──split_quarantine──> articles_ok / bodies_ok / quarantine
+
+A warm ``run_wiki_etl`` on the driver plan runs 5 Spark jobs: the staged
+probe (which computes the staged frame), the collect and the three sink
+writes. The distributed plan adds the id sorts, the fixpoint rounds and the
+quarantine joins.
 
 Differences from the reference, by design:
   * ids are deterministic (ordered by title) instead of insertion-ordered —
@@ -25,8 +39,9 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from wiki_mysql_spark.functions.cleaning import (
@@ -37,17 +52,47 @@ from wiki_mysql_spark.functions.cleaning import (
 from wiki_mysql_spark.operators.ids import dense_ids
 from wiki_mysql_spark.operators.redirects import resolve_redirects
 
-# Byte bound of the staged-frame small hint: 8 MB = the tightest downstream
-# gate (redirects._SMALL_EDGES_BYTES; dense_ids' bound is 64 MB).
+# Byte bound of the staged frame for the driver plan: 8 MB, the bound of
+# the distributed path's tightest driver collect (redirects._SMALL_EDGES_BYTES).
 _STAGED_SMALL_BYTES = 8 << 20
-# The known-stats branch sees COMPRESSED on-disk leaf bytes while the
-# downstream gates bound estimated IN-MEMORY octet lengths; parquet+zstd
-# wiki text expands ~3-5x on decode, so the hint only fires when the
-# compressed leaves are under bound/4 — a staged frame in the ambiguous
-# band (bound/4 .. bound) gets no hint and the gates' own in-memory
-# probes decide (the r13 advice item: a <8MB-compressed
-# frame must not smuggle a >8MB edge set into a driver collect).
+# The known-stats branch sees COMPRESSED on-disk leaf bytes while the bound
+# is on estimated IN-MEMORY octet lengths; parquet+zstd wiki text expands
+# ~3-5x on decode, so the driver plan is only picked when the compressed
+# leaves are under bound/4 — a staged frame in the ambiguous band
+# (bound/4 .. bound) takes the distributed plan, whose gates probe their
+# own in-memory inputs (a <8MB-compressed frame must not smuggle a >8MB
+# frame into a driver collect).
 _COMPRESSION_EXPANSION = 4
+
+
+class _WikiFrames(NamedTuple):
+    """The wiki build's outputs: ``articles`` and ``bodies`` (id, body,
+    body_octets) are the whole tables, the ``*_ok`` frames and
+    ``quarantine`` their :func:`~wiki_mysql_spark.sinks.split_quarantine`
+    split, with the staged frame's corrupt captures in ``quarantine``.
+    ``plan`` names the plan the staged probe picked."""
+
+    plan: str
+    articles: DataFrame
+    bodies: DataFrame
+    articles_ok: DataFrame
+    bodies_ok: DataFrame
+    quarantine: DataFrame
+
+
+def _corrupt_rows(df: DataFrame) -> DataFrame:
+    """Quarantine rows for the corrupt page records of ``df``."""
+    return df.where(F.col("corrupt_record").isNotNull()).select(
+        F.lit("pages").alias("table_name"),
+        F.lit(None).cast("long").alias("id"),
+        _corrupt_reason().alias("reject_reason"),
+    )
+
+
+def _corrupt_reason() -> Column:
+    return F.concat(
+        F.lit("corrupt xml record: "), F.substring("corrupt_record", 1, 200)
+    )
 
 
 def _build_wiki_frames(
@@ -59,49 +104,38 @@ def _build_wiki_frames(
     max_redirect_depth: int = 1024,
     exact_templates: bool = False,
     materializer: Callable[[DataFrame, str], DataFrame] | None = None,
-) -> dict[str, DataFrame | None]:
-    """The wiki build with its internal frames exposed: returns
-    ``{"articles", "bodies_full" (id, body, body_octets), "corrupt"}``.
+) -> _WikiFrames:
+    """The wiki build, split and quarantined: see :class:`_WikiFrames`.
 
     Scratch-IO design (the r8 rework — r7's 24M-page throughput dip was
     scratch-IO amplification): the ONLY full-text materialization is the
     ``staged`` frame — parse + redirect split + cleaning fused into one
-    pass, holding CLEANED text once (raw text never lands on scratch; the
-    pre-r8 shape wrote raw parse AND the cleaned+numbered frame, plus a
-    full-text layout checkpoint inside dense_ids). Everything downstream
-    of ``staged`` is narrow except exactly one join that re-attaches the
-    text to its body id:
-
-      * ids: dense_ids over the (aid, title) projection — a columnar read
-        that never touches the text column, a narrow range exchange, a
-        narrow layout checkpoint;
-      * bodies: staged ⋈ ids on aid — the single full-text shuffle (at
-        cluster scale, bucket both sides by aid to make it co-located);
-        its output feeds the bodies sink directly, so the text is read
-        from staged exactly once;
-      * body_octets is computed AT STAGING so the quarantine split and
-        the orphan checks are narrow column reads — pre-r8 they re-read
-        the full text column once per consumer (3-4 extra text scans).
+    pass, holding CLEANED text once (raw text never lands on scratch).
+    Everything downstream of ``staged`` is narrow except exactly one join
+    that re-attaches the text to its body id by aid; body_octets is
+    computed AT STAGING so the quarantine split is a narrow column read.
 
     ``materializer``: optional ``(df, name) -> df`` that pins the staged
     frame somewhere durable (run_wiki_etl passes its byte-gated
     memory-or-parquet strategy); defaults to a block-manager
     localCheckpoint. If ``pages`` carries a ``corrupt_record`` column
     (project_pages_with_corrupt), corrupt captures ride through the same
-    single materialization and come back as the ``corrupt`` frame.
+    single materialization into ``quarantine``.
 
-    Small-hint pins: when the staged probe vouches the corpus is small
-    (``small_hint``), two narrow frames are lazily
-    localCheckpointed — ``ids`` (aid, title, body_id), read by the bodies
-    join, the redirect targets and the direct article rows, and the final
-    ``articles``, read by the ok set and both quarantine checks. Without
-    the pins each consumer re-runs the single-partition sort (and, for
-    ``articles``, the whole id/redirect/union lineage) in its own job.
-    Both frames are bounded by the staged probe, so pinning them is cheap.
-    The distributed path stays unpinned: there ``dense_ids`` already
-    checkpoints its input and its tagged layout, so a consumer re-pays
-    only a broadcast join, and a pin would hold a second copy of a frame
-    that may not be small."""
+    One probe of the staged frame picks the plan (bound:
+    :data:`_STAGED_SMALL_BYTES`, row cap ``PROBE_ROWS``):
+
+      * ``driver`` (small corpus): one Arrow collect of the staged frame's
+        narrow columns, then ids, the redirect walk and the quarantine
+        rules run on the driver (:func:`_driver_frames`); the text is
+        re-attached by a broadcast join of local ``(aid, body_id)`` rows;
+      * ``distributed``: ``dense_ids`` and ``resolve_redirects`` size
+        their own inputs, and the split is
+        :func:`~wiki_mysql_spark.sinks.split_quarantine`
+        (:func:`_distributed_frames`).
+
+    The written tables are row- and schema-identical either way (pinned in
+    tests)."""
     # A dump that arrives as a single split (one modest .bz2 file — Spark's
     # XML source reads a compressed file whole) would serialize every
     # downstream stage; spread it across the cluster once up front. Bytes-
@@ -158,46 +192,137 @@ def _build_wiki_frames(
         else staged.localCheckpoint(eager=False)
     )
 
-    # Size the SHARED staged frame once and hand the verdict to every
-    # downstream strategy gate: dense_ids (x2) and resolve_redirects would
-    # otherwise each localCheckpoint + byte-probe their own derived input —
-    # four bounded jobs whose answer is implied by this one, since every
-    # gated frame is a projection/filter/union of staged's rows (bytes and
-    # rows both <= staged's). One bounded probe job on the checkpointed
-    # staged (or a free stats read when a materializer made it a scan)
-    # replaces them (bound: _STAGED_SMALL_BYTES; row cap: PROBE_ROWS).
-    # Strategy only: a big corpus gets no hint and the gates probe their
-    # own inputs.
+    # One bounded probe job on the checkpointed staged frame (or a free
+    # stats read when a materializer made it a scan) sizes the whole build:
+    # every later frame is a projection/filter/union of staged's rows.
     from wiki_mysql_spark.sources.tables import PROBE_ROWS, leaf_bytes, probe_size
 
     known, unknown = leaf_bytes(staged)
     if not unknown and known is not None:
-        small_hint = known * _COMPRESSION_EXPANSION < _STAGED_SMALL_BYTES
+        small = known * _COMPRESSION_EXPANSION < _STAGED_SMALL_BYTES
     else:
         n, size = probe_size(staged)
-        small_hint = n <= PROBE_ROWS and size < _STAGED_SMALL_BYTES
+        small = n <= PROBE_ROWS and size < _STAGED_SMALL_BYTES
+    build = _driver_frames if small else _distributed_frames
+    return build(staged, has_corrupt, max_redirect_depth)
+
+
+def _driver_frames(
+    staged: DataFrame, has_corrupt: bool, max_redirect_depth: int
+) -> _WikiFrames:
+    """The driver plan: ONE Arrow collect of the narrow staged columns (the
+    text stays in Spark), then body ids ordered by title, the redirect walk
+    (:func:`~wiki_mysql_spark.operators.redirects.resolve_chains`, the same
+    rounded depth bound as the distributed fixpoint), article ids ordered
+    by (title, aid) and the quarantine rules
+    (:func:`~wiki_mysql_spark.sinks.split_quarantine_rows`) as plain
+    Python. ``articles*`` and ``quarantine`` are local frames; the bodies
+    are the staged text joined to broadcast local ``(aid, body_id)`` rows.
+    Ties sort nulls first, like Spark's ascending sort."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from wiki_mysql_spark.operators.redirects import resolve_chains
+    from wiki_mysql_spark.sinks import split_quarantine_rows
+    from wiki_mysql_spark.sources.tables import local_frame
+
+    cols = ["aid", "title", "is_redirect", "redirect_target", "body_octets"]
+    if has_corrupt:
+        cols.append(_corrupt_reason().alias("corrupt_reason"))
+    rows = staged.select(*cols).toArrow().to_pylist()
+
+    def asc(*vals):
+        return tuple((v is not None, v) for v in vals)
+
+    # (body id, row) for each page with a cleaned body, numbered by title
+    with_body = (r for r in rows if r["body_octets"] is not None)
+    by_title = sorted(with_body, key=lambda r: asc(r["title"], r["aid"]))
+    pages = list(enumerate(by_title, 1))
+    body_ids: dict[str, list[int]] = {}
+    for bid, r in pages:
+        if r["title"] is not None:
+            body_ids.setdefault(r["title"], []).append(bid)
+    redirects = [r for r in rows if r["is_redirect"]]
+    ends = resolve_chains(
+        ((r["title"], r["redirect_target"]) for r in redirects),
+        max_redirect_depth,
+    )
+    unnumbered = [(r["aid"], r["title"], bid) for bid, r in pages]
+    unnumbered += [
+        (r["aid"], r["title"], bid)
+        for r in redirects
+        if r["title"] in ends
+        for bid in body_ids.get(ends[r["title"]], ())
+    ]
+    unnumbered.sort(key=lambda a: asc(a[1], a[0]))
+    articles = [(i, *a) for i, a in enumerate(unnumbered, 1)]
+    articles_ok, bad_bodies, quarantine = split_quarantine_rows(
+        articles, {bid: r["body_octets"] for bid, r in pages}
+    )
+    if has_corrupt:
+        quarantine += [
+            ("pages", None, r["corrupt_reason"])
+            for r in rows
+            if r["corrupt_reason"] is not None
+        ]
+
+    spark = staged.sparkSession
+    long_ = lambda name, nullable=False: StructField(name, LongType(), nullable)  # noqa: E731
+    art_schema = StructType(
+        [long_("id"), staged.schema["aid"], staged.schema["title"], long_("body")]
+    )
+    texts = staged.where(F.col("body_text").isNotNull()).select(
+        "aid", "body_text", "body_octets"
+    )
+
+    def bodies(ids: list[tuple]) -> DataFrame:
+        ids_df = local_frame(
+            spark, ids, StructType([staged.schema["aid"], long_("body_id")])
+        )
+        return texts.join(F.broadcast(ids_df), "aid").select(
+            F.col("body_id").alias("id"),
+            F.col("body_text").alias("body"),
+            "body_octets",
+        )
+
+    body_rows = [(r["aid"], bid) for bid, r in pages]
+    return _WikiFrames(
+        plan="driver",
+        articles=local_frame(spark, articles, art_schema),
+        bodies=bodies(body_rows),
+        articles_ok=local_frame(spark, articles_ok, art_schema),
+        bodies_ok=bodies(
+            [(aid, bid) for aid, bid in body_rows if bid not in bad_bodies]
+        ).select("id", "body"),
+        quarantine=local_frame(
+            spark,
+            quarantine,
+            "table_name string not null, id long, reject_reason string",
+        ),
+    )
+
+
+def _distributed_frames(
+    staged: DataFrame, has_corrupt: bool, max_redirect_depth: int
+) -> _WikiFrames:
+    """The distributed plan. Bodies: one row per non-redirect page (the
+    reference does NOT content-dedup bodies — two identical texts get two
+    rows, README.md:49-54). Ids are assigned over the NARROW (aid, title)
+    projection — the text column never enters the range exchange or the
+    layout checkpoint — then joined back by aid (unique per page), the one
+    full-text shuffle (at cluster scale, bucket both sides by aid to make
+    it co-located); its output feeds the bodies sink directly, so the text
+    is read from staged exactly once."""
+    from wiki_mysql_spark.sinks import split_quarantine
 
     redirect_pages = staged.where(F.col("is_redirect")).select(
         "title", F.col("redirect_target").alias("target"), "aid"
     )
     # non-redirect ns-0 pages are exactly the rows with a cleaned body
     articles_staged = staged.where(F.col("body_text").isNotNull())
-    # bodies: one row per non-redirect page (the reference does NOT content-
-    # dedup bodies — two identical texts get two rows, README.md:49-54).
-    # Ids are assigned over the NARROW (aid, title) projection — the text
-    # column never enters the range exchange or the layout checkpoint —
-    # then joined back by aid (unique per page), the one full-text shuffle.
     ids = dense_ids(
-        articles_staged.select("aid", "title"),
-        ["title"],
-        id_col="body_id",
-        small_hint=small_hint,
+        articles_staged.select("aid", "title"), ["title"], id_col="body_id"
     )
-    if small_hint:
-        # three consumers (bodies join, redirect targets, direct article
-        # rows) would each re-run the single-partition sort
-        ids = ids.localCheckpoint(eager=False)
-    bodies_full = (
+    bodies = (
         articles_staged.select("aid", "body_text", "body_octets")
         .join(ids.select("aid", "body_id"), "aid")
         .select(
@@ -206,32 +331,23 @@ def _build_wiki_frames(
             "body_octets",
         )
     )
-    article_rows = ids.select("title", "body_id")
-    direct_articles = ids.select("aid", "title", "body_id")
-
     resolved_redirects = resolve_redirects(
         redirect_pages,
-        article_rows,
+        ids.select("title", "body_id"),
         max_depth=max_redirect_depth,
-        small_hint=small_hint,
     ).select("aid", "title", "body_id")
-
-    all_articles = direct_articles.unionByName(resolved_redirects)
-    articles = dense_ids(
-        all_articles, ["title", "aid"], id_col="id", small_hint=small_hint
-    ).select("id", "aid", "title", F.col("body_id").alias("body"))
-    if small_hint:
-        # three consumers (articles_ok, title and orphan quarantine) would
-        # each re-run the id/redirect/union lineage
-        articles = articles.localCheckpoint(eager=False)
-    corrupt = (
-        staged.where(F.col("corrupt_record").isNotNull()).select(
-            "corrupt_record"
-        )
-        if has_corrupt
-        else None
+    all_articles = ids.select("aid", "title", "body_id").unionByName(
+        resolved_redirects
     )
-    return {"articles": articles, "bodies_full": bodies_full, "corrupt": corrupt}
+    articles = dense_ids(all_articles, ["title", "aid"], id_col="id").select(
+        "id", "aid", "title", F.col("body_id").alias("body")
+    )
+    articles_ok, bodies_ok, quarantine = split_quarantine(articles, bodies)
+    if has_corrupt:
+        quarantine = quarantine.unionByName(_corrupt_rows(staged))
+    return _WikiFrames(
+        "distributed", articles, bodies, articles_ok, bodies_ok, quarantine
+    )
 
 
 def build_wiki_tables(
@@ -246,8 +362,7 @@ def build_wiki_tables(
     """pages ``(aid, title, ns, text[, redirect_title])`` ->
     ``(articles, bodies)`` exactly shaped like ``sql/init.sql:5-19``.
     Thin wrapper over :func:`_build_wiki_frames` (which run_wiki_etl uses
-    directly for the precomputed-octets quarantine split and the fused
-    corrupt audit)."""
+    directly for the quarantine split and the fused corrupt audit)."""
     frames = _build_wiki_frames(
         pages,
         remove_html=remove_html,
@@ -256,7 +371,7 @@ def build_wiki_tables(
         max_redirect_depth=max_redirect_depth,
         exact_templates=exact_templates,
     )
-    return frames["articles"], frames["bodies_full"].select("id", "body")
+    return frames.articles, frames.bodies.select("id", "body")
 
 
 def parse_unichr_range(txt: str) -> tuple[int, int]:
@@ -321,6 +436,12 @@ def run_wiki_etl(
     matter the cluster size) and bounds structural-corruption loss to the
     broken page instead of the rest of its file.
 
+    The build runs one of two plans (:func:`_build_wiki_frames`), named on
+    stderr as ``# wiki-etl plan: driver|distributed``. On the driver plan
+    (a small staged frame) a warm call runs 5 Spark jobs: the staged probe,
+    one narrow Arrow collect and the three sink writes; the outputs are the
+    same on either plan.
+
     ``progress=True`` reports live task progress to stderr while the ETL
     runs — the reference's tqdm bars (``dbfy.py:158,191,231``), Spark-native
     (`plans/progress.py:job_progress` over StatusTracker telemetry).
@@ -343,7 +464,6 @@ def run_wiki_etl(
     from wiki_mysql_spark.sinks import (
         ARTICLES_DDL,
         BODIES_DDL,
-        split_quarantine,
         write_jdbc,
         write_parquet,
     )
@@ -410,25 +530,19 @@ def run_wiki_etl(
         src = project_pages_with_corrupt(raw)
         corrupt_src = None
     frames = _build_wiki_frames(src, materializer=mat, **build_kwargs)
-    articles, bodies, quarantine = split_quarantine(
-        frames["articles"], frames["bodies_full"]
-    )
-    # structurally-corrupt page records join the quarantine audit (the
-    # reference silently drops erroring pages, dbfy.py:142-143); folded
-    # into the quarantine WRITE's lineage, so no extra job materializes
-    if corrupt_src is None:
-        corrupt_src = frames["corrupt"]
-    corrupt = corrupt_src.select(
-        F.lit("pages").alias("table_name"),
-        F.lit(None).cast("long").alias("id"),
-        F.concat(
-            F.lit("corrupt xml record: "),
-            F.substring("corrupt_record", 1, 200),
-        ).alias("reject_reason"),
-    )
-    quarantine = quarantine.unionByName(corrupt)
+    print(f"# wiki-etl plan: {frames.plan}", file=sys.stderr)
+    quarantine = frames.quarantine
+    if corrupt_src is not None:
+        # structurally-corrupt page records join the quarantine audit (the
+        # reference silently drops erroring pages, dbfy.py:142-143); folded
+        # into the quarantine WRITE's lineage, so no extra job materializes
+        quarantine = quarantine.unionByName(_corrupt_rows(corrupt_src))
 
-    sinks = {"articles": articles, "bodies": bodies, "quarantine": quarantine}
+    sinks = {
+        "articles": frames.articles_ok,
+        "bodies": frames.bodies_ok,
+        "quarantine": quarantine,
+    }
     observed = {name: Observation() for name in sinks}
     reporter = (
         job_progress(spark, "wiki-etl") if progress else nullcontext()

@@ -39,6 +39,13 @@ BODIES_DDL = (
     ") ENGINE=InnoDB DEFAULT CHARSET=utf8mb4"
 )
 
+_BODY_REASON = "body exceeds MEDIUMTEXT"
+_ORPHAN_REASON = "references quarantined body"
+
+
+def _title_reason() -> str:
+    return f"title exceeds VARCHAR({TITLE_MAX_CHARS})"
+
 
 def split_quarantine(
     articles: DataFrame, bodies: DataFrame
@@ -68,12 +75,12 @@ def split_quarantine(
     articles_bad = articles.where(bad_title).select(
         F.lit("articles").alias("table_name"),
         F.col("id"),
-        F.lit(f"title exceeds VARCHAR({TITLE_MAX_CHARS})").alias("reject_reason"),
+        F.lit(_title_reason()).alias("reject_reason"),
     )
     bodies_bad = bodies.where(bad_body).select(
         F.lit("bodies").alias("table_name"),
         F.col("id"),
-        F.lit("body exceeds MEDIUMTEXT").alias("reject_reason"),
+        F.lit(_BODY_REASON).alias("reject_reason"),
     )
     bad_body_ids = bodies.where(bad_body).select(F.col("id").alias("_bad"))
     # articles referencing a quarantined body are ALSO dropped from the ok
@@ -86,7 +93,7 @@ def split_quarantine(
         .select(
             F.lit("articles").alias("table_name"),
             F.col("id"),
-            F.lit("references quarantined body").alias("reject_reason"),
+            F.lit(_ORPHAN_REASON).alias("reject_reason"),
         )
     )
     quarantine = articles_bad.unionByName(bodies_bad).unionByName(
@@ -98,6 +105,32 @@ def split_quarantine(
         bad_body_ids, articles.body == F.col("_bad"), "left_anti"
     )
     return articles_ok, bodies_ok, quarantine
+
+
+def split_quarantine_rows(
+    articles: list[tuple], body_octets: dict[int, int]
+) -> tuple[list[tuple], set[int], list[tuple]]:
+    """Driver-side twin of :func:`split_quarantine`, same three rules, for
+    a corpus already on the driver. ``articles`` are ``(id, aid, title,
+    body)`` tuples, ``body_octets`` maps each body id to its octet length.
+    Returns ``(articles_ok, bad_body_ids, quarantine)`` with quarantine rows
+    ``(table_name, id, reject_reason)``. The limits are read when called.
+    An article with a null title lands in neither output, as a null
+    ``length`` filters it out of both sides of the Spark split."""
+    bad_bodies = {i for i, n in body_octets.items() if n > BODY_MAX_BYTES}
+    ok: list[tuple] = []
+    quarantine = [("bodies", i, _BODY_REASON) for i in sorted(bad_bodies)]
+    for a in articles:
+        title, body = a[2], a[3]
+        if title is None:
+            continue
+        if len(title) > TITLE_MAX_CHARS:
+            quarantine.append(("articles", a[0], _title_reason()))
+        elif body in bad_bodies:
+            quarantine.append(("articles", a[0], _ORPHAN_REASON))
+        else:
+            ok.append(a)
+    return ok, bad_bodies, quarantine
 
 
 def write_parquet(
