@@ -1785,6 +1785,99 @@ def test_codebook_driver_and_distributed_paths_agree(spark, monkeypatch):
     assert out_driver == out_dist
 
 
+@pytest.mark.parametrize("n_iters", [1, 2])
+def test_kmeans_paths_agree_when_a_cell_averages_to_zero(spark, monkeypatch, n_iters):
+    """Cell 0's members (ids 0, 3 and the zero row 4) average to a vector
+    that rounds to zero, so the next assignment and the returned codebook
+    hold a zero-norm center. The driver trainer and the distributed one,
+    with its assignment on both sides of _LITERAL_K_MAX, give the same
+    codebook, and every path gives the same with_nearest_cell cells:
+    only the zero row lands in the zero center's cell."""
+    import numpy as np
+
+    from wiki_mysql_spark.operators import similarity
+    from wiki_mysql_spark.operators.similarity import (
+        _assign_cells_np,
+        kmeans_codebook,
+        with_nearest_cell,
+    )
+
+    rows = [[4e-7, 0.0], [0.0, 1.0], [-1.0, 0.0], [2e-7, 1e-7],
+            [0.0, 0.0], [1.0, 2.0], [-1.0, 1.0], [-0.5, -2.0]]
+    df = spark.createDataFrame(
+        list(enumerate(rows)), "vec_id long, embedding array<double>"
+    )
+
+    def cells(book):
+        out = with_nearest_cell(df, book, vec_col="embedding")
+        return [r["cell"] for r in out.orderBy("vec_id").collect()]
+
+    books, got = {}, {}
+    books["driver"] = kmeans_codebook(df, n_centroids=3, n_iters=n_iters)
+    monkeypatch.setattr(similarity, "_DRIVER_TRAIN_BYTES", 0)
+    for path, k_max in (("literal", 16), ("blocked", 0)):
+        monkeypatch.setattr(similarity, "_LITERAL_K_MAX", k_max)
+        books[path] = kmeans_codebook(df, n_centroids=3, n_iters=n_iters)
+        got[path] = cells(books["driver"])
+    assert books["literal"] == books["blocked"] == books["driver"]
+    book = books["driver"]
+    assert book[0] == (0, [0.0, 0.0])
+    ids = np.array([cid for cid, _ in book])
+    got["driver"] = ids[_assign_cells_np(np.array(rows), book)].tolist()
+    assert got["literal"] == got["blocked"] == got["driver"]
+    assert [i for i, c in enumerate(got["driver"]) if c == 0] == [4]
+
+
+def test_numpy_cosine_lives_in_cosine_np():
+    """Every cosine needs a dot product, so keeping ``seq_dot_np`` calls
+    outside functions/vectors.py to ``lsh_signature_np`` (a sign of a dot,
+    no division) keeps every numpy cosine inside ``cosine_np``: one place
+    decides what a zero norm product scores."""
+    import ast
+    import pathlib
+
+    package = pathlib.Path(__file__).resolve().parent.parent / "wiki_mysql_spark"
+    calls = []
+
+    def visit(node, rel, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name == "seq_dot_np":
+                calls.append((rel, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn)
+
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        if rel != "functions/vectors.py":
+            visit(ast.parse(path.read_text(), str(path)), rel, "")
+    assert calls == [("operators/similarity.py", "lsh_signature_np")]
+
+
+def test_cosine_np_flags_zero_norm_products():
+    """``cosine_np`` is ``seq_dot_np`` over the norm product, with
+    ``valid`` False exactly where that product is 0 (``cosine``'s null);
+    a NaN element stays a valid NaN, as Spark's division gives."""
+    import numpy as np
+
+    from wiki_mysql_spark.functions.vectors import (
+        cosine_np,
+        seq_dot_np,
+        seq_norm_np,
+    )
+
+    A = np.array([[1.0, 2.0], [0.0, 0.0], [np.nan, 1.0]])
+    B = np.array([[3.0, -1.0], [0.0, 0.0]])
+    cos, valid = cosine_np(A, B, seq_norm_np(A), seq_norm_np(B))
+    assert valid.tolist() == [[True, False], [False, False], [True, True]]
+    want = seq_dot_np(A[:1], B[:1])[0, 0] / (seq_norm_np(A[:1]) * seq_norm_np(B[:1]))[0]
+    assert cos[0, 0] == want
+    assert np.isnan(cos[2]).all()
+
+
 def test_fits_driver_byte_gate_rejects_wide_unknown_stats_corpus(spark):
     """r8 advice (medium): _fits_driver must byte-probe unknown-stats
     corpora. Vector width is caller-controlled, so a rows-only check would

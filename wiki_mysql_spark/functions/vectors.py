@@ -56,11 +56,15 @@ def l2_sq(a: Column, b: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# numpy twins of the folds above, for the Arrow-blocked fast paths.
-# ONE definition, shared by operators/dedup.py (embedding_near_dup_pairs)
-# and operators/similarity.py (with_nearest_cell): the bit-equality argument
-# both rely on — "same IEEE op sequence per element as the sequential
-# aggregate() fold" — must not live in two copies that can drift apart.
+# numpy twins of the folds above, for the Arrow-blocked and driver paths.
+# ONE definition of each: the bit-equality argument every caller relies on
+# — "same IEEE op sequence per element as the sequential aggregate() fold"
+# — must not live in copies that can drift apart. Every numpy cosine goes
+# through cosine_np: operators/similarity.py's _nearest_center_np (the
+# codebook trainers and with_nearest_cell) and _lsh_score_batches (the
+# one-task knn), and operators/dedup.py's embedding_near_dup_pairs. The
+# only other seq_dot_np caller is lsh_signature_np, a sign of a dot with no
+# division (pinned by an ast test).
 # ---------------------------------------------------------------------------
 
 
@@ -83,6 +87,19 @@ def seq_norm_np(A):
     for k in range(A.shape[1]):
         acc += A[:, k] * A[:, k]
     return np.sqrt(acc)
+
+
+def cosine_np(A, B, norm_a, norm_b):
+    """Twin of :func:`cosine` for every (row of ``A``, row of ``B``) pair,
+    given the rows' :func:`seq_norm_np` norms: ``(cos, valid)``, with
+    ``valid`` False where the norm product is 0, where ``cosine``'s
+    ``try_divide`` gives null (``cos`` holds the bare dot there). Each
+    caller decides how such a pair ranks; a NaN element stays NaN."""
+    import numpy as np
+
+    den = np.multiply.outer(norm_a, norm_b)
+    valid = den != 0
+    return seq_dot_np(A, B) / np.where(valid, den, 1.0), valid
 
 
 def seq_l2sq_np(A, B):

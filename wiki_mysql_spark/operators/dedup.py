@@ -703,8 +703,8 @@ def embedding_near_dup_pairs(
         )
 
     from wiki_mysql_spark.functions.vectors import (
+        cosine_np,
         pack_rows_np,
-        seq_dot_np,
         seq_norm_np,
     )
 
@@ -733,8 +733,9 @@ def embedding_near_dup_pairs(
         for pdf in batches:
             ids_a = pdf[id_col].to_numpy(dtype=np.int64)
             A = pack_rows_np(pdf[vec_col])
-            cos = seq_dot_np(A, B) / np.multiply.outer(seq_norm_np(A), nb)
-            keep = (ids_a[:, None] < ids_b[None, :]) & (cos >= pre_cut)
+            cos, valid = cosine_np(A, B, seq_norm_np(A), nb)
+            # a zero norm product is cosine's null: never a pair
+            keep = (ids_a[:, None] < ids_b[None, :]) & valid & (cos >= pre_cut)
             ai, bi = np.nonzero(keep)
             yield pd.DataFrame(
                 {"id_a": ids_a[ai], "id_b": ids_b[bi], "cos_raw": cos[ai, bi]}

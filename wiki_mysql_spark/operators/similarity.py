@@ -211,6 +211,7 @@ def derived_n_centroids(
 # ---------------------------------------------------------------------------
 
 _DRIVER_TRAIN_BYTES = 64 << 20
+_EMPTY_CORPUS = "training corpus is empty — cannot seed any centroid"
 
 
 def _elem_type(df: DataFrame, vec_col: str) -> str:
@@ -235,7 +236,8 @@ def _fits_driver(df: DataFrame, id_col: str, vec_col: str, max_bytes: int) -> bo
 
 def _collect_vectors(df: DataFrame, id_col: str, vec_col: str):
     """ONE bounded collect of (id, vector), id-ascending; float32 storage
-    takes the same widening trip as ``_as_double`` (pack_any_np)."""
+    takes the same widening trip as ``_as_double`` (pack_any_np). Raises
+    the trainers' empty-corpus error, as :func:`_seed_rows` does."""
     import numpy as np
 
     from wiki_mysql_spark.functions.vectors import pack_any_np
@@ -244,27 +246,44 @@ def _collect_vectors(df: DataFrame, id_col: str, vec_col: str):
     rows = df.select(
         F.col(id_col).cast("long").alias("i"), F.col(vec_col).alias("v")
     ).collect()
+    if not rows:
+        raise ValueError(_EMPTY_CORPUS)
     rows.sort(key=lambda r: r.i)
     ids = np.array([r.i for r in rows], dtype=np.int64)
-    V = pack_any_np([r.v for r in rows], elem) if rows else np.empty((0, 0))
-    return ids, V
+    return ids, pack_any_np([r.v for r in rows], elem)
+
+
+def _seed_rows(
+    corpus: DataFrame, n: int, id_col: str, vec_col: str
+) -> list[tuple[int, list[float]]]:
+    """The distributed trainers' seeds: the first ``n`` rows BY ID ORDER
+    (not ``id < n``, which silently under-seeds or empties the codebook on
+    sparse/offset ids), collected as cid-sorted ``(id, vector)`` pairs.
+    On dense 0-based ids this is what the SQL oracles replay."""
+    rows = (
+        corpus.orderBy(F.col(id_col))
+        .limit(n)
+        .select(F.col(id_col).cast("long").alias("cid"), F.col(vec_col).alias("v"))
+        .collect()
+    )
+    if not rows:
+        raise ValueError(_EMPTY_CORPUS)
+    return sorted((int(r.cid), [float(x) for x in r.v]) for r in rows)
 
 
 def _nearest_center_np(A, C, norm_c):
     """Row-wise argmax-cosine index into the rows of ``C`` (``norm_c`` its
     row norms) — numpy first-max == the ties→lower-cid rule of
-    :func:`nearest_cells` over cid-sorted centers; cosine via the
-    dimension-ordered folds of functions/vectors.py. A zero norm product
-    scores -inf, below every real score, as ``cosine``'s null (try_divide)
-    sorts last there; a zero-norm row thus takes the first center."""
+    :func:`nearest_cells` over cid-sorted centers; cosine via
+    :func:`cosine_np`. A zero norm product scores -inf, below every real
+    score, as ``cosine``'s null (try_divide) sorts last there; a zero-norm
+    row thus takes the first center."""
     import numpy as np
 
-    from wiki_mysql_spark.functions.vectors import seq_dot_np, seq_norm_np
+    from wiki_mysql_spark.functions.vectors import cosine_np, seq_norm_np
 
-    den = np.multiply.outer(seq_norm_np(A), norm_c)
-    zero = den == 0
-    cos = np.where(zero, -np.inf, seq_dot_np(A, C) / np.where(zero, 1.0, den))
-    return np.argmax(cos, axis=1)
+    cos, valid = cosine_np(A, C, seq_norm_np(A), norm_c)
+    return np.argmax(np.where(valid, cos, -np.inf), axis=1)
 
 
 def _assign_cells_np(V, centers):
@@ -277,29 +296,39 @@ def _assign_cells_np(V, centers):
     return _nearest_center_np(V, C, seq_norm_np(C))
 
 
+def _first_rows_np(ids, X, n: int):
+    """Driver twin of :func:`_seed_rows` over an id-sorted collect."""
+    n = min(n, len(ids))
+    return [(int(ids[i]), [float(x) for x in X[i]]) for i in range(n)]
+
+
+def _lloyd_means_np(X, best, centers):
+    """Driver twin of :func:`_lloyd_means`: center ``j``'s new value is
+    the mean of the rows of ``X`` with ``best == j``, rounded HALF_UP to
+    6; a center no row picked drops (GROUP BY semantics). Summation is
+    numpy's — a different association order than Spark's partial-Average
+    merge, itself already partition-order-dependent; both land on the
+    same value after the 6-decimal round except at ulp-of-a-.5-boundary
+    cases (the class the 4-SF hash sweeps check empirically)."""
+    from wiki_mysql_spark.functions.vectors import round6_half_up_np
+
+    out = []
+    for j, (cid, _) in enumerate(centers):
+        mask = best == j
+        if mask.any():
+            mean = X[mask].sum(axis=0) / int(mask.sum())
+            out.append((cid, [float(x) for x in round6_half_up_np(mean)]))
+    return out
+
+
 def _kmeans_np(ids, V, n_centroids: int, n_iters: int):
     """Driver twin of the distributed Lloyd loop in :func:`kmeans_codebook`:
     seeds = first n vectors by id, assignment = cosine argmax (ties→lower
-    id), update = per-position mean rounded HALF_UP to 6; empty cells drop
-    (GROUP BY semantics). Mean summation is numpy's — a different
-    association order than Spark's partial-Average merge, itself already
-    partition-order-dependent; both land on the same value after the
-    6-decimal round except at ulp-of-a-.5-boundary cases (the class the
-    4-SF hash sweeps check empirically)."""
-    from wiki_mysql_spark.functions.vectors import round6_half_up_np
-
-    n = min(n_centroids, len(ids))
-    centers = [(int(ids[i]), [float(x) for x in V[i]]) for i in range(n)]
+    id), update = :func:`_lloyd_means_np`. ``n_iters=0`` returns the
+    untrained seeds."""
+    centers = _first_rows_np(ids, V, n_centroids)
     for _ in range(n_iters):
-        best = _assign_cells_np(V, centers)
-        new = []
-        for j, (cid, _) in enumerate(centers):
-            mask = best == j
-            if not mask.any():
-                continue
-            mean = V[mask].sum(axis=0) / int(mask.sum())
-            new.append((cid, [float(x) for x in round6_half_up_np(mean)]))
-        centers = new
+        centers = _lloyd_means_np(V, _assign_cells_np(V, centers), centers)
     return centers
 
 
@@ -319,26 +348,26 @@ def _pq_assign_np(S, book):
 
 def _pq_train_np(ids, R, m: int, n_centroids: int, dim: int):
     """Driver twin of :func:`pq_codebooks`: per subspace, seeds = first-n
-    slices by id, ONE Lloyd iteration under rounded squared-L2, means
-    rounded HALF_UP to 6, empty cells drop."""
-    from wiki_mysql_spark.functions.vectors import round6_half_up_np
-
+    slices by id, ONE Lloyd iteration under rounded squared-L2
+    (:func:`_lloyd_means_np`)."""
     subdim = dim // m
-    nseed = min(n_centroids, len(ids))
     books = []
     for s in range(m):
         S = R[:, s * subdim : (s + 1) * subdim]
-        seeds = [(int(ids[i]), [float(x) for x in S[i]]) for i in range(nseed)]
-        best = _pq_assign_np(S, seeds)
-        book = []
-        for j, (cid, _) in enumerate(seeds):
-            mask = best == j
-            if not mask.any():
-                continue
-            mean = S[mask].sum(axis=0) / int(mask.sum())
-            book.append((cid, [float(x) for x in round6_half_up_np(mean)]))
-        books.append(book)
+        seeds = _first_rows_np(ids, S, n_centroids)
+        books.append(_lloyd_means_np(S, _pq_assign_np(S, seeds), seeds))
     return books
+
+
+def _pq_code_cols(out, R, books, bids, subdim: int, prefix: str = "c"):
+    """Set ``out``'s m PQ code columns ``{prefix}{s}`` from the rows of
+    ``R``: per subspace, the cid (``bids[s]``) of the nearest code in the
+    cid-sorted ``books[s]`` (:func:`_pq_assign_np`). A ``(0, dim)`` ``R``
+    gives empty int64 columns, so an empty Arrow batch needs no branch."""
+    for s, (book, ids) in enumerate(zip(books, bids)):
+        S = R[:, s * subdim : (s + 1) * subdim]
+        out[f"{prefix}{s}"] = ids[_pq_assign_np(S, book)]
+    return out
 
 
 # Above this center count, the literal-expression argmax (k structs x a
@@ -421,7 +450,6 @@ def kmeans_codebook(
     n_iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> list[tuple[int, list[float]]]:
     """Train a coarse-quantizer codebook with Lloyd k-means, distributed the
     way MLlib does it: centers live on the driver (tiny — k × dim doubles)
@@ -429,9 +457,9 @@ def kmeans_codebook(
     partial-aggregatable per-(cell, position) mean, so the only data that
     moves per iteration is k × dim × n_partitions partial sums — the corpus
     itself is never shuffled. Assignment metric is cosine (ties → lower id);
-    seeds are the first ``n_centroids`` corpus vectors; centroid values are
-    rounded to ``round_digits`` each iteration so the result is
-    deterministic across engines and summation orders (the DuckDB oracle
+    seeds are the first ``n_centroids`` corpus vectors by id; centroid
+    values are rounded HALF_UP to 6 decimals each iteration so the result
+    is deterministic across engines and summation orders (the DuckDB oracle
     replays the identical iterations in SQL). A cell that captures no
     vectors drops out, matching the SQL semantics.
 
@@ -441,58 +469,46 @@ def kmeans_codebook(
     driver-training comment block above); past the gate the distributed
     Lloyd below runs. Semantics identical either way (test-pinned).
     """
-    # round6_half_up_np is the scale-6 twin; other digits take the
-    # distributed spelling (no current caller asks for one)
-    if (
-        round_digits == 6
-        and _fits_driver(corpus, id_col, vec_col, _DRIVER_TRAIN_BYTES)
-    ):
+    if _fits_driver(corpus, id_col, vec_col, _DRIVER_TRAIN_BYTES):
         ids, V = _collect_vectors(corpus, id_col, vec_col)
-        if len(ids) == 0:
-            raise ValueError(
-                "kmeans_codebook: corpus is empty — cannot seed any centroid"
-            )
         return _kmeans_np(ids, V, n_centroids, n_iters)
-    # first n_centroids rows BY ID ORDER (not `id < n`, which silently
-    # under-seeds a corpus with sparse/offset ids); cent_id keeps the seed
-    # row's id value — on dense 0-based ids this is byte-identical to the
-    # old spelling, which is what keeps the SQL oracles' replay in step
-    seeds = (
-        corpus.orderBy(F.col(id_col))
-        .limit(n_centroids)
-        .select(F.col(id_col).cast("long").alias("cent_id"), F.col(vec_col).alias("v"))
-        .collect()
-    )
-    if not seeds:
-        raise ValueError(
-            "kmeans_codebook: corpus is empty — cannot seed any centroid"
-        )
-    centers = sorted((int(r.cent_id), [float(x) for x in r.v]) for r in seeds)
+    centers = _seed_rows(corpus, n_centroids, id_col, vec_col)
     vecs = corpus.select(F.col(vec_col).alias("v"))
     for _ in range(n_iters):
-        updated = (
-            # two projections: putting the generator (posexplode) in the same
-            # select as the lambda-bearing struct argmax trips a Spark
-            # analyzer bug that strips struct field names (FIELD_NOT_FOUND).
-            with_nearest_cell(vecs, centers, vec_col="v", cell_col="cell")
-            .select("cell", "v")
-            .select(
-                "cell",
-                F.posexplode(F.col("v").cast("array<double>")).alias("pos", "x"),
-            )
-            .groupBy("cell", "pos")
-            .agg(F.round(F.avg("x"), round_digits).alias("m"))
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("centv")
-            )
-            .collect()
-        )
-        centers = sorted((int(r.cell), [float(x) for x in r.centv]) for r in updated)
+        # two projections: putting the generator (posexplode) in the same
+        # select as the lambda-bearing struct argmax trips a Spark
+        # analyzer bug that strips struct field names (FIELD_NOT_FOUND).
+        cells = with_nearest_cell(vecs, centers, vec_col="v").select("cell", "v")
+        centers = _lloyd_means(cells, ["cell"])
     return centers
+
+
+def _lloyd_means(rows: DataFrame, keys: list[str]) -> list[tuple]:
+    """The distributed Lloyd update shared by :func:`kmeans_codebook` and
+    :func:`pq_codebooks`: ``rows`` holds the ``keys`` columns and a vector
+    ``v``; per distinct key, the per-position mean of ``v`` rounded to 6,
+    as a partial-aggregatable (keys, pos) average — only key count × dim ×
+    n_partitions partial sums move. A key no row carries has no mean (the
+    GROUP BY semantics :func:`_lloyd_means_np` twins). Returns sorted
+    ``(*keys, vector)`` tuples from ONE collect."""
+    means = (
+        rows.select(
+            *keys, F.posexplode(F.col("v").cast("array<double>")).alias("pos", "x")
+        )
+        .groupBy(*keys, "pos")
+        .agg(F.round(F.avg("x"), 6).alias("m"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                lambda s: s["m"],
+            ).alias("centv")
+        )
+        .collect()
+    )
+    return sorted(
+        (*(int(r[k]) for k in keys), [float(x) for x in r.centv]) for r in means
+    )
 
 
 def ivf_topk(
@@ -511,31 +527,16 @@ def ivf_topk(
     ``n_probe`` closest cells.
 
     ``codebook`` is a driver-side center list (from :func:`kmeans_codebook`);
-    when omitted, the first ``n_centroids`` corpus vectors stand in as an
-    untrained codebook. Either way, assignment is a literal-centers argmax
-    expression (:func:`nearest_cells`) — no join and no shuffle; the only
-    shuffle in the whole operator is the per-query top-k window. At 100 TB
+    when omitted, the first ``n_centroids`` corpus vectors by id
+    (:func:`_seed_rows`) stand in as an untrained codebook. Either way,
+    assignment is a literal-centers argmax expression
+    (:func:`nearest_cells`) — no join and no shuffle; the only shuffle in
+    the whole operator is the per-query top-k window. At 100 TB
     the corpus is written partitioned by ``cell`` so a query touches
     n_probe partitions instead of the full scan.
     """
     if codebook is None:
-        # first n_centroids rows BY ID ORDER — `id < n` (the old spelling,
-        # and the bug kmeans_codebook/pq_codebooks already fixed) silently
-        # under-seeds or EMPTIES the codebook on sparse/offset ids, turning
-        # every cell NULL and the result empty with no error. On dense
-        # 0-based ids this is byte-identical, keeping the oracles in step.
-        seeds = (
-            corpus.orderBy(F.col(id_col))
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).cast("long").alias("cent_id"),
-                F.col(vec_col).alias("v"),
-            )
-            .collect()
-        )
-        if not seeds:
-            raise ValueError("ivf_topk: corpus is empty — cannot seed cells")
-        codebook = sorted((int(r.cent_id), [float(x) for x in r.v]) for r in seeds)
+        codebook = _seed_rows(corpus, n_centroids, id_col, vec_col)
 
     cells = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -1839,12 +1840,12 @@ def _lsh_score_batches(batches, *, qids, Q, probed, stride, k, out_schema):
     * a row whose id is tombstoned (``dead``) never scores; a query row
       scores the live rows of its probed ``(tbl, bucket)`` keys
       (``probed[r]``), except its own id;
-    * ``raw_sim`` is :func:`cosine` through its numpy twins
-      (:func:`seq_dot_np` over :func:`seq_norm_np` ⊗ :func:`seq_norm_np`,
-      the same IEEE fold). A candidate vector that is null, holds a null
+    * ``raw_sim`` is :func:`cosine` through its numpy twin
+      :func:`cosine_np` (the same IEEE fold), one query row against only
+      its own candidates. A candidate vector that is null, holds a null
       element or has another width scores null, and so does a zero norm
-      product, as :func:`cosine`'s ``try_divide`` does under every ANSI
-      setting;
+      product (``cosine_np``'s ``valid``), as :func:`cosine`'s
+      ``try_divide`` does under every ANSI setting;
     * per ``query_id``: order by ``(raw_sim desc, neighbor_id)`` with NaN
       first and nulls last, ``dense_rank``, keep ``rank <= k``, drop
       duplicate rows.
@@ -1855,7 +1856,7 @@ def _lsh_score_batches(batches, *, qids, Q, probed, stride, k, out_schema):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from wiki_mysql_spark.functions.vectors import seq_dot_np, seq_norm_np
+    from wiki_mysql_spark.functions.vectors import cosine_np, seq_norm_np
 
     batches = [b for b in batches if b.num_rows]
     if not batches or not qids:
@@ -1925,10 +1926,8 @@ def _lsh_score_batches(batches, *, qids, Q, probed, stride, k, out_schema):
         cnt = np.searchsorted(skey, probed[r], "right") - lo
         idx = order[np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())]
         idx = idx[nid[idx] != q]
-        den = nq[r] * nc[idx]
-        good = ok[idx] & (den != 0)
-        sim = np.full(idx.size, np.nan)
-        sim[good] = seq_dot_np(Q[r:r + 1], C[idx[good]])[0] / den[good]
+        cos, valid = cosine_np(Q[r:r + 1], C[idx], nq[r:r + 1], nc[idx])
+        sim, good = cos[0], ok[idx] & valid[0]
         # a query_id's k best keys lie within its rows' k best: each row
         # keeps only those, so memory grows with R x k, not R x candidates
         groups.setdefault(q, []).append(top_k(nid[idx], sim, good)[:3])
@@ -2010,62 +2009,29 @@ def pq_codebooks(
     fused distributed job below runs."""
     if _fits_driver(corpus, id_col, vec_col, _DRIVER_TRAIN_BYTES):
         ids, V = _collect_vectors(corpus, id_col, vec_col)
-        if len(ids) == 0:
-            raise ValueError(
-                "pq_codebooks: corpus is empty — cannot seed any codebook centroid"
-            )
         return _pq_train_np(ids, V, m, n_centroids, dim)
     subdim = dim // m
-    # seed from the first n_centroids rows BY ID ORDER, not `id < n`: a
-    # corpus whose ids don't cover 0..n-1 (post-filter slices, sparse ids)
-    # would otherwise silently train a smaller codebook
-    seed_rows = (
-        corpus.orderBy(F.col(id_col))
-        .limit(n_centroids)
-        .select(F.col(id_col).cast("long").alias("cid"), F.col(vec_col).alias("v"))
-        .collect()
-    )
-    if not seed_rows:
-        raise ValueError(
-            "pq_codebooks: corpus is empty — cannot seed any codebook centroid"
-        )
-    seeds_by_s = [
-        sorted(
-            (int(r["cid"]), [float(x) for x in r["v"]][s * subdim : (s + 1) * subdim])
-            for r in seed_rows
-        )
-        for s in range(m)
-    ]
+    seeds = _seed_rows(corpus, n_centroids, id_col, vec_col)
     per_s = F.array(
         *[
             F.struct(
                 F.lit(s).alias("s"),
                 _nearest_code_l2(
-                    _slice_col(vec_col, s, subdim), seeds_by_s[s]
+                    _slice_col(vec_col, s, subdim),
+                    [(cid, v[s * subdim : (s + 1) * subdim]) for cid, v in seeds],
                 ).alias("cell"),
                 _slice_col(vec_col, s, subdim).alias("v"),
             )
             for s in range(m)
         ]
     )
-    cents = (
-        corpus.select(F.explode(per_s).alias("t"))
-        .select(
-            F.col("t.s").alias("s"),
-            F.col("t.cell").alias("cell"),
-            F.posexplode("t.v").alias("pos", "x"),
-        )
-        .groupBy("s", "cell", "pos")
-        .agg(F.round(F.avg("x"), 6).alias("mpos"))
-        .groupBy("s", "cell")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "mpos"))).alias("pm"))
-        .select("s", "cell", F.transform("pm", lambda t: t["mpos"]).alias("centv"))
-        .collect()
-    )
     books: list[list[tuple[int, list[float]]]] = [[] for _ in range(m)]
-    for r in cents:
-        books[int(r["s"])].append((int(r["cell"]), [float(x) for x in r["centv"]]))
-    return [sorted(b) for b in books]
+    for s, cell, v in _lloyd_means(
+        corpus.select(F.explode(per_s).alias("t")).select("t.s", "t.cell", "t.v"),
+        ["s", "cell"],
+    ):
+        books[s].append((cell, v))
+    return books
 
 
 def with_pq_codes(
@@ -2107,17 +2073,8 @@ def with_pq_codes(
 
     def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = pdf.copy()
-            if len(pdf) == 0:
-                for s in range(m):
-                    out[f"{prefix}{s}"] = pd.Series([], dtype="int64")
-                yield out
-                continue
-            A = pack_any_np(pdf[vec_col], elem)
-            for s in range(m):
-                S = A[:, s * subdim : (s + 1) * subdim]
-                out[f"{prefix}{s}"] = bids[s][_pq_assign_np(S, books[s])]
-            yield out
+            A = pack_any_np(pdf[vec_col], elem) if len(pdf) else np.empty((0, dim))
+            yield _pq_code_cols(pdf.copy(), A, books, bids, subdim, prefix)
 
     return map_in_pandas_spread(df, _enc, out_schema)
 
@@ -2166,21 +2123,10 @@ def _ivfpq_encode(
 
     def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = pdf.copy()
-            if len(pdf) == 0:
-                out["cell"] = pd.Series([], dtype="int64")
-                for s in range(m):
-                    out[f"c{s}"] = pd.Series([], dtype="int64")
-                yield out
-                continue
-            A = pack_any_np(pdf["cv"], elem)
+            A = pack_any_np(pdf["cv"], elem) if len(pdf) else np.empty((0, dim))
             idx = _assign_cells_np(A, coarse)
-            out["cell"] = coarse_ids[idx]
-            R = A - Cc[idx]
-            for s in range(m):
-                S = R[:, s * subdim : (s + 1) * subdim]
-                out[f"c{s}"] = bids[s][_pq_assign_np(S, books[s])]
-            yield out
+            out = pdf.assign(cell=coarse_ids[idx])
+            yield _pq_code_cols(out, A - Cc[idx], books, bids, subdim)
 
     return map_in_pandas_spread(src, _enc, out_schema)
 
@@ -2359,7 +2305,6 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    coarse_codebook: list[tuple[int, list[float]]] | None = None,
     coarse_iters: int = 2,
 ) -> DataFrame:
     """IVFADC (Jégou et al. 2011, §IV — the billion-vector index shape):
@@ -2380,8 +2325,7 @@ def ivfpq_topk(
         untrained first-``n_coarse``-by-id point at recall@10 = 0.009,
         a decorative index; residual PQ only works when the coarse
         centroids actually sit in the data's density. Pass
-        ``coarse_iters=0`` to reproduce the untrained point, or supply
-        ``coarse_codebook`` directly to skip training;
+        ``coarse_iters=0`` to reproduce the untrained point;
       * one PQ codebook set is trained ON THE RESIDUALS (first-k residual
         slices + one Lloyd iteration under rounded squared-L2 — exactly
         ``pq_codebooks``), and each vector stores only ``(cell, m codes)``
@@ -2419,81 +2363,21 @@ def ivfpq_topk(
     m x k x subdim partial sums. At 100 TB the code table is written
     partitioned by cell, so a query reads n_probe partitions of codes —
     not vectors. Exact cosine is attached to every returned pair (the ANN
-    family's verifier invariant)."""
-    subdim = dim // m
-    if _fits_driver(corpus, id_col, vec_col, _DRIVER_TRAIN_BYTES):
-        # driver training path (see the byte-gate comment block above):
-        # ONE collect feeds coarse Lloyd, residuals, AND residual-PQ
-        # training as numpy twins — the distributed spelling below ran
-        # the same math as a cascade of six tiny jobs whose Catalyst
-        # analysis dominated (12.4 s at sf0.1, the r7 registry's
-        # slowest entry; this path + the fused Arrow encode is ~4x).
-        import numpy as np
-
-        ids, V = _collect_vectors(corpus, id_col, vec_col)
-        if len(ids) == 0:
-            raise ValueError("ivfpq_topk: corpus is empty — cannot seed cells")
-        if coarse_codebook is None:
-            # _kmeans_np with n_iters=0 returns exactly the first-k-by-id
-            # seeds, so coarse_iters=0 IS the r6 untrained operating
-            # point — one code path, two operating points
-            coarse_codebook = _kmeans_np(ids, V, n_coarse, coarse_iters)
-        coarse = sorted(coarse_codebook)
-        if not coarse:
-            raise ValueError("ivfpq_topk: coarse codebook is empty")
-        Cc = np.array([cv for _, cv in coarse], dtype=np.float64)
-        books = _pq_train_np(
-            ids, V - Cc[_assign_cells_np(V, coarse)], m, n_centroids, dim
-        )
-    else:
-        if coarse_codebook is None:
-            coarse_codebook = kmeans_codebook(
-                corpus,
-                n_centroids=n_coarse,
-                n_iters=coarse_iters,
-                id_col=id_col,
-                vec_col=vec_col,
-            )
-        coarse = sorted(coarse_codebook)
-        if not coarse:
-            raise ValueError("ivfpq_topk: coarse codebook is empty")
-        rescmap = _lit_center_map(coarse)
-        rescorp = (
-            corpus.select(
-                F.col(id_col).alias("nid"),
-                F.col(vec_col).alias("cv"),
-                F.element_at(
-                    nearest_cells(F.col(vec_col), coarse, 1), 1
-                ).alias("cell"),
-            )
-            .withColumn(
-                "rv",
-                F.zip_with(
-                    F.col("cv").cast("array<double>"),
-                    F.element_at(rescmap, F.col("cell")),
-                    lambda x, y: x - y,
-                ),
-            )
-            # one materialization: PQ training reads the residuals once
-            # (the encode below recomputes cell+residual inside its own
-            # Arrow pass, so nothing else consumes this frame)
-            .localCheckpoint(eager=False)
-        )
-        books = pq_codebooks(
-            rescorp,
-            m=m,
-            n_centroids=n_centroids,
-            id_col="nid",
-            vec_col="rv",
-            dim=dim,
-        )
+    family's verifier invariant). Both quantizers train through
+    :func:`_ivfpq_train`, the trainer of the persisted index, so this and
+    :func:`ivfpq_index_build` learn the same codebooks."""
+    meta = _ivfpq_train(
+        corpus, n_coarse=n_coarse, coarse_iters=coarse_iters, m=m,
+        n_centroids=n_centroids, id_col=id_col, vec_col=vec_col, dim=dim,
+    )
+    coarse, books = meta["coarse"], meta["books"]
     codes = _ivfpq_encode(
         corpus, coarse, books, id_col=id_col, vec_col=vec_col, dim=dim
     )
     probes = _ivfpq_probes(
         queries, coarse, n_probe, id_col=id_col, vec_col=vec_col
     )
-    return _ivfpq_rank(probes, codes, books, subdim=subdim, k=k)
+    return _ivfpq_rank(probes, codes, books, subdim=dim // m, k=k)
 
 
 def _ivfpq_probes(
@@ -2889,7 +2773,7 @@ def _ivfpq_train(
     dim: int,
 ) -> dict:
     """Train the IVFADC quantizers (coarse Lloyd codebook + residual-PQ
-    sub-books) on ``corpus`` — the shared front half of
+    sub-books) on ``corpus`` — the one trainer of :func:`ivfpq_topk`,
     :func:`ivfpq_index_build` and :func:`ivfpq_index_init`. Byte-gated
     numpy twin under :data:`_DRIVER_TRAIN_BYTES` (FAISS trains on a bounded
     sample), fused distributed jobs past it; both paths are
@@ -2898,8 +2782,7 @@ def _ivfpq_train(
         import numpy as np
 
         ids, V = _collect_vectors(corpus, id_col, vec_col)
-        if len(ids) == 0:
-            raise ValueError("ivfpq training corpus is empty")
+        # n_iters=0 returns the first-k-by-id seeds: the untrained point
         coarse = sorted(_kmeans_np(ids, V, n_coarse, coarse_iters))
         Cc = np.array([cv for _, cv in coarse], dtype=np.float64)
         books = _pq_train_np(

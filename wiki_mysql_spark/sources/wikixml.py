@@ -60,12 +60,11 @@ PAGE_SCHEMA = StructType(
 def read_wiki_dump_raw(spark: SparkSession, path: str) -> DataFrame:
     """One XML parse of the dump with the FULL page schema including the
     corrupt-capture column — callers project pages and/or corrupt records
-    off this. ``run_wiki_etl`` materializes it only on its ``limit=`` path,
-    where the exact-n page limit needs the page and corrupt branches split
-    before staging; its production path feeds this parse straight into the
-    single staged parse+clean materialization, which the three sinks and
-    the corrupt audit then share (each sink's lineage would otherwise
-    re-tokenize the whole dump)."""
+    off this. Its users are the standalone readers :func:`read_wiki_dump`
+    and :func:`read_wiki_dump_corrupt`, and the splittable source's parity
+    test (``tests/test_splittable_source.py``). ``run_wiki_etl`` does not
+    use it: it reads through :func:`read_wiki_dump_raw_splittable` on both
+    of its paths."""
     return (
         spark.read.format("xml")
         .option("rowTag", "page")
