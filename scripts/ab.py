@@ -16,7 +16,8 @@ favour either side.
 
 Printed per pair: every end-to-end metric of ``BENCHMARK.json`` for both
 sides and which side won it, whether both runs were correct, the CPU steal
-of each run and each run's ``setup_parts``. Then, per metric, each side's
+of each run and each run's ``setup_parts``. The ``--out`` record also keeps
+each run's workload ``detail`` block. Then, per metric, each side's
 median and quartiles, the change's win count, the median gap in percent and
 whether that gap exceeds the base's interquartile range. The script only
 reads ``perfbench/`` and ``BENCHMARK.json``.
@@ -75,7 +76,10 @@ def checkout_uncommitted(dest: str) -> None:
 
 def run_side(root: str, workload: str, seed: int, seconds: float) -> dict:
     """One ``perfbench/run.py`` run in ``root``: its result line, its
-    detail line, or the error that stopped it."""
+    detail line, or the error that stopped it. ``detail`` is the
+    workload's own block as the run printed it (for ``etl_dump`` the
+    per-call ``etl_call_s`` list, which shows the warm-up a median
+    hides)."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
@@ -96,6 +100,7 @@ def run_side(root: str, workload: str, seed: int, seconds: float) -> dict:
         "metrics": {k: v["value"] for k, v in result["metrics"].items()},
         "steal_pct": window.get("steal_pct"),
         "setup_parts": window.get("setup_parts"),
+        "detail": detail.get("detail", {}),
     }
 
 

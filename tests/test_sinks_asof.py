@@ -9,7 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from wiki_mysql_spark.operators.asof import asof_join
-from wiki_mysql_spark.sinks import TITLE_MAX_CHARS, split_quarantine, write_parquet
+from wiki_mysql_spark.sinks import (
+    TITLE_MAX_CHARS,
+    split_quarantine,
+    write_arrow_parquet,
+    write_parquet,
+)
 
 
 def test_parquet_roundtrip_partitioned(spark, tmp_path):
@@ -31,6 +36,43 @@ def test_parquet_roundtrip_partitioned(spark, tmp_path):
     assert pruned.count() == 1
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "= y" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
+
+
+def test_arrow_parquet_sink_layout_and_overwrite(spark, tmp_path):
+    """A driver-side Arrow table is written as Spark's writer lays a table
+    out: one ``part-*.zstd.parquet`` file plus ``_SUCCESS`` and no temp
+    file, read back with its rows and types; a second write into the same
+    directory replaces the first one's rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "t")
+    first = pa.table({"id": pa.array([1, 2, 3], pa.int64()),
+                      "v": ["a", None, "c"]})
+    assert write_arrow_parquet(spark, first, out) == 3
+    visible = sorted(f for f in os.listdir(out) if not f.startswith("."))
+    assert len(visible) == 2 and visible[0] == "_SUCCESS", visible
+    assert visible[1].startswith("part-00000-")
+    assert visible[1].endswith("-c000.zstd.parquet")
+    meta = pq.ParquetFile(os.path.join(out, visible[1])).metadata
+    assert meta.row_group(0).column(0).compression == "ZSTD"
+    back = spark.read.parquet(out)
+    assert back.dtypes == [("id", "bigint"), ("v", "string")]
+    assert sorted(map(tuple, back.collect()), key=repr) == sorted(
+        [(1, "a"), (2, None), (3, "c")], key=repr
+    )
+
+    second = pa.table({"id": pa.array([9], pa.int64()), "v": ["z"]})
+    assert write_arrow_parquet(spark, second, out) == 1
+    assert [tuple(r) for r in spark.read.parquet(out).collect()] == [(9, "z")]
+    assert len([f for f in os.listdir(out) if f.startswith("part-")]) == 1
+    # an empty table still writes a readable file with the schema
+    empty = second.slice(0, 0)
+    assert write_arrow_parquet(spark, empty, out) == 0
+    assert spark.read.parquet(out).dtypes == [("id", "bigint"), ("v", "string")]
+    assert spark.read.parquet(out).count() == 0
 
 
 def test_quarantine_split(spark):

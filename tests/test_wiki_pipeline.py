@@ -496,9 +496,9 @@ def test_warm_etl_job_budget_and_no_read_back(spark, tmp_path, monkeypatch):
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert counts == {"articles": 4, "bodies": 3, "quarantine": 2}
     # the driver plan: the staged probe, the narrow Arrow collect and the
-    # three sink writes — 5 jobs on this fixture and on the 3000-page,
-    # 4-shard benchmark dump
-    assert len(jobs) <= 5, sorted(jobs)
+    # bodies write (articles and quarantine are written from the driver) —
+    # 3 jobs on this fixture and on the 3000-page, 4-shard benchmark dump
+    assert len(jobs) <= 3, sorted(jobs)
     assert sorted(jobs) == sorted(at_last_write)
 
 
@@ -551,12 +551,31 @@ def _gate_dump(tmp_path):
     return str(path)
 
 
+def _writer(path) -> str:
+    """``driver`` when every part file under ``path`` was written by
+    pyarrow (the driver-side sink), ``spark`` when all were written by
+    Spark's parquet writer."""
+    import pyarrow.parquet as pq
+
+    kinds = {
+        "driver" if "parquet-cpp" in pq.ParquetFile(f).metadata.created_by
+        else "spark"
+        for f in path.glob("part-*.parquet")
+    }
+    assert len(kinds) == 1, (path, kinds)
+    return kinds.pop()
+
+
 def test_wiki_plans_agree_both_sides_of_the_gate(spark, tmp_path, monkeypatch, capsys):
     """The staged probe's two plans — driver (the default bound) and
     distributed (the bound at 0) — write identical articles, bodies and
     quarantine rows and schemas from run_wiki_etl under memory and disk
     materialization and limit=, and build identical build_wiki_tables
-    frames. The run names its plan on stderr, and the driver plan reads
+    frames. The driver plan writes articles and quarantine from the driver
+    (quarantine under limit= is a Spark write: it unions the raw parse's
+    corrupt rows), the distributed plan writes every table with Spark, so
+    the comparison holds driver-written tables against Spark-written ones.
+    The run names its plan on stderr, and the driver plan reads
     BODY_MAX_BYTES when called."""
     import wiki_mysql_spark.plans.wiki_pipeline as wp
     from wiki_mysql_spark import sinks
@@ -586,6 +605,16 @@ def test_wiki_plans_agree_both_sides_of_the_gate(spark, tmp_path, monkeypatch, c
                     spark, dump, str(out), max_redirect_depth=2, **kw
                 )
             assert f"# wiki-etl plan: {plan}" in capsys.readouterr().err
+            from_driver = {"articles"} if plan == "driver" else set()
+            if plan == "driver" and tag != "limit":
+                from_driver.add("quarantine")
+            assert {
+                name: _writer(out / name)
+                for name in ("articles", "bodies", "quarantine")
+            } == {
+                name: "driver" if name in from_driver else "spark"
+                for name in ("articles", "bodies", "quarantine")
+            }, (plan, tag)
             got[plan, tag] = (counts, tables(
                 spark.read.parquet(str(out / name))
                 for name in ("articles", "bodies", "quarantine")

@@ -17,7 +17,9 @@ Chain order is the reference's (``filters.py:52-64``):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import operator
+from collections.abc import Callable, Iterator
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import Column
@@ -200,24 +202,27 @@ MARKUP_PASSES: list[tuple[str, str, str]] = [
     # string lets the generic-tag arm span a later comment/<ref> before the
     # dedicated pass ever sees it (fuzz-caught). Sequential order pins the
     # same interactions gensim has.
-    ("re", r"(?s)<!--.*?-->", ""),                      # RE_P0 comments
-    ("re", r"(?s)<ref([> ].*?)(</ref>|/>)", ""),        # RE_P1 footnotes
-    ("re", r"(?s)<nowiki([> ].*?)(</nowiki>|/>)", ""),  # RE_P9
-    ("re", r"(?s)<math([> ].*?)(</math>|/>)", ""),      # RE_P10
-    ("re", r"(?s)<(.*?)>", ""),                         # RE_P11 any tag
-    ("re", r"\[\[Category:[^\]\[]*\]\]", ""),           # RE_P14
-    # external links: keep description incl. its leading space (RE_P5 -> \3)
+    # "needs" names the literal a pass cannot match without; every one of
+    # them is in _NESTED_TRIGGERS, which gates iterations 2..n.
+    ("re", r"(?s)<!--.*?-->", ""),                      # RE_P0; needs <
+    ("re", r"(?s)<ref([> ].*?)(</ref>|/>)", ""),        # RE_P1; needs <
+    ("re", r"(?s)<nowiki([> ].*?)(</nowiki>|/>)", ""),  # RE_P9; needs <
+    ("re", r"(?s)<math([> ].*?)(</math>|/>)", ""),      # RE_P10; needs <
+    ("re", r"(?s)<(.*?)>", ""),                         # RE_P11; needs <
+    ("re", r"\[\[Category:[^\]\[]*\]\]", ""),  # RE_P14; needs [[Category:
+    # external links: keep description incl. its leading space (RE_P5 ->
+    # \3); needs ://
     ("re", r"\[(\w+)://([^ \]]*)( ([^\]]*))?\]", "$3"),
     # piped links: keep the last pipe segment (RE_P6 -> \2; greedy first
     # group, so [[a|b|c]] -> c; single-bracket form reaches [[..]] innards).
     # NOTE: plain [[link]] brackets are deliberately NOT stripped here —
     # gensim leaves them as protective structure until the final promote
     # pass, and stripping them early lets later table/link passes match
-    # content gensim never exposes (fuzz-caught).
+    # content gensim never exposes (fuzz-caught). Needs |
     ("re", r"\[([^\]\[]*)\|([^\]\[|]*)\]", "$2"),
     # ---- table markup, gensim order ----
-    ("lit", "!!", "\n|"),          # each head cell on its own line
-    ("lit", "|-||", "\n|"),        # '-'-filled cell
+    ("lit", "!!", "\n|"),          # each head cell on its own line; needs !
+    ("lit", "|-||", "\n|"),        # '-'-filled cell; needs |
     # RE_P12 ({| / |} / |- lines up to \n), one alternation; the '|-' arms
     # encode gensim's (?!\d) without lookahead: '|-' matches only before \n
     # or a non-digit. The replacement re-emits the newline this consuming
@@ -227,9 +232,10 @@ MARKUP_PASSES: list[tuple[str, str, str]] = [
     # stray '| ' cell marker in the cleaned text — a real gensim-parity
     # break the well-formed-span fuzz never generated. The extra newline
     # itself is invisible in final output (F6 collapses whitespace runs).
+    # Needs |
     ("re", r"(\{\||\|\})[^\n]*\n|\|-(\n|[^\d\n][^\n]*\n)", "\n\n"),
-    ("lit", "|||", "|\n|"),        # each cell on its own line
-    ("lit", "||", "\n|"),
+    ("lit", "|||", "|\n|"),        # each cell on its own line; needs |
+    ("lit", "||", "\n|"),          # needs |
     # RE_P13 (cell-marker strip). gensim's fixed-width lookbehind becomes a
     # consumed-and-reemitted capture ($1). One subtlety: a Python
     # lookbehind can assert over characters a PREVIOUS match consumed
@@ -237,19 +243,28 @@ MARKUP_PASSES: list[tuple[str, str, str]] = [
     # cannot — so the pass runs twice: the re-emitted "$1\n" newline of
     # the first application provides the context for the cascaded marker
     # (e.g. the final "|}" of a table with no trailing newline) on the
-    # second. Fuzz-pinned.
+    # second. Fuzz-pinned. Both need | or !
     ("re", r"((\n )|(\n\n)|(  )|(.\n)|(.\t))(\||!)([^\[\]\n]*?\|)*", "$1\n"),
     ("re", r"((\n )|(\n\n)|(  )|(.\n)|(.\t))(\||!)([^\[\]\n]*?\|)*", "$1\n"),
-    # RE_P17 (table formatting lines)
+    # RE_P17 (table formatting lines); needs one of its seven keywords
     (
         "re",
         r"\n.{0,4}(bgcolor|\d{0,1} ?colspan|rowspan|style=|class=|align=|scope=).*"
         r"|^.{0,4}(bgcolor|\d{0,1} ?colspan|rowspan|style=|class=|align=|scope=).*",
         "\n",
     ),
-    # empty brackets left behind (gensim does this inside the loop)
+    # empty brackets left behind (gensim does this inside the loop); needs []
     ("lit", "[]", ""),
 ]
+
+# The literals MARKUP_PASSES entries need (see "needs" above): an input
+# that holds none of them goes through a whole iteration unchanged, so
+# iterations 2..n run only on inputs that hold one. A bare [[x]] remnant
+# holds none — gensim leaves those to the promote pass.
+_NESTED_TRIGGERS = (
+    "<", "|", "!", "[]", "://", "[[Category:",
+    "bgcolor", "colspan", "rowspan", "style=", "class=", "align=", "scope=",
+)
 
 # Iterations 2..n run the FULL pass list — gensim's exact loop semantics.
 # An earlier optimization ran only the nesting passes (links/tags) here,
@@ -289,6 +304,46 @@ def _apply_pass(col: Column, kind: str, pat: str, repl: str) -> Column:
     return F.regexp_replace(col, pat, repl)
 
 
+def _passes(col: Column, passes: list[tuple[str, str, str]]) -> Column:
+    for kind, pat, repl in passes:
+        col = _apply_pass(col, kind, pat, repl)
+    return col
+
+
+def _let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(x)`` with ``x`` bound ONCE to ``value``: ``element_at(
+    transform(array(value), x -> body(x)), 1)``. A CASE WHEN over
+    ``value`` itself would copy ``value``'s whole expression into the
+    predicate and both branches; the lambda variable refers to its value
+    once, so the tree holds each pass exactly once however deep the gates
+    nest."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def _holds_any(col: Column, literals: tuple[str, ...]) -> Column:
+    """True where ``col`` contains one of ``literals``: one substring
+    search per literal, OR-ed with short-circuit. On text that holds none
+    of them this scan measured about half the cost of the same literals as
+    one ``rlike`` alternation (which tries every arm at every offset)."""
+    return reduce(operator.or_, (col.contains(s) for s in literals))
+
+
+def _markup_iterations(col: Column, rounds: int) -> Column:
+    """Markup iterations 2..``rounds + 1`` over ``col``. Each runs only
+    where its input holds one of :data:`_NESTED_TRIGGERS`, and the next
+    one is nested inside it: an input without a trigger comes out of an
+    iteration unchanged, so every later iteration would skip it too."""
+    if rounds <= 0:
+        return col
+    return _let(
+        col,
+        lambda x: F.when(
+            _holds_any(x, _NESTED_TRIGGERS),
+            _markup_iterations(_passes(x, MARKUP_NESTED_PASSES), rounds - 1),
+        ).otherwise(x),
+    )
+
+
 def strip_wiki_markup(
     col: Column, iterations: int = 3, *, exact_templates: bool = False
 ) -> Column:
@@ -301,15 +356,24 @@ def strip_wiki_markup(
     comments / <ref> / <math> / <nowiki> / tags / category / file / template
     / link simplification / table-cell markup, then unbalanced-template
     cleanup and bracket promotion. Nested constructs resolve innermost-out,
-    so the chain runs up to ``iterations`` passes (gensim caps at 3 too) —
-    (gensim also exits the loop early once a pass changes nothing; a per-row
-    CASE WHEN gate on later iterations was measured 2x SLOWER here — the
-    guard triples the expression tree per level and blows whole-stage
-    codegen's method limits — so the chain runs the fixed count and relies
-    on the caller-level trigger gate in :func:`clean_wiki_body` instead).
+    so the chain runs up to ``iterations`` passes (gensim caps at 3 too).
+
+    gensim also exits its loop once an iteration changes nothing. Here each
+    later iteration is gated on its own input instead (:func:`_let` binds
+    the input once): template passes 2..n and the tail pass run only on a
+    value that still holds ``{{``, and markup iteration k only on a value
+    that holds one of :data:`_NESTED_TRIGGERS`, the literals the markup
+    passes need before they can match; iteration k+1 is tried only after
+    iteration k ran (:func:`_markup_iterations`). Exact by construction: a
+    skipped iteration would have changed nothing. On generated wiki bodies
+    iterations 2..n almost never run. (An earlier per-row CASE WHEN over
+    the inline expression measured 2x SLOWER than the fixed count: it
+    copies the expression into the predicate and both branches, tripling
+    the tree per level; the lambda variable does not copy it.) The
+    expression holds the same ``regexp_replace``/``replace`` nodes as the
+    fixed-count chain (pinned in ``tests/test_cleaning.py``).
     """
-    for kind, pat, repl in MARKUP_PRE_PASSES:
-        col = _apply_pass(col, kind, pat, repl)
+    col = _passes(col, MARKUP_PRE_PASSES)
     # templates to fixpoint BEFORE any other pass (gensim order) —
     # innermost-out x iterations, then drop any '{{' remnant to end
     if exact_templates:
@@ -321,21 +385,15 @@ def strip_wiki_markup(
         # out of the conditional and runs it on every row; measured)
         col = remove_templates_exact_udf()(col)
     else:
-        for _ in range(iterations):
-            for kind, pat, repl in TEMPLATE_PASSES:
-                col = _apply_pass(col, kind, pat, repl)
-        for kind, pat, repl in TEMPLATE_TAIL_PASSES:
-            col = _apply_pass(col, kind, pat, repl)
-    for kind, pat, repl in FILE_PASSES:
-        col = _apply_pass(col, kind, pat, repl)
-    for kind, pat, repl in MARKUP_PASSES:
-        col = _apply_pass(col, kind, pat, repl)
-    for _ in range(iterations - 1):
-        for kind, pat, repl in MARKUP_NESTED_PASSES:
-            col = _apply_pass(col, kind, pat, repl)
-    for kind, pat, repl in PROMOTE_PASSES:
-        col = _apply_pass(col, kind, pat, repl)
-    return col
+        col = _passes(col, TEMPLATE_PASSES * min(iterations, 1))
+        rest = TEMPLATE_PASSES * (iterations - 1) + TEMPLATE_TAIL_PASSES
+        col = _let(
+            col, lambda x: F.when(x.contains("{{"), _passes(x, rest)).otherwise(x)
+        )
+    col = _passes(col, FILE_PASSES)
+    col = _passes(col, MARKUP_PASSES)
+    col = _markup_iterations(col, iterations - 1)
+    return _passes(col, PROMOTE_PASSES)
 
 
 def _ranges_to_class(ranges: tuple[tuple[int, int], ...]) -> str:
@@ -428,9 +486,11 @@ def cleaning_chain_duckdb_sql(
 # '&' (entities), '<' (comments/tags), '{' (templates/tables), '[' or ']'
 # (links/brackets), '|' / '!' (table cells), or an RE_P17 formatting keyword.
 # Rows without them — most of a clean documents corpus — skip all ~30 regex
-# passes.
-_MARKUP_TRIGGER = (
-    r"[<{\[\]&|!]|bgcolor|colspan|rowspan|style=|class=|align=|scope="
+# passes. The common markup characters come first: the test stops at the
+# first literal found.
+_MARKUP_TRIGGERS = (
+    "[", "<", "{", "]", "&", "|", "!",
+    "bgcolor", "colspan", "rowspan", "style=", "class=", "align=", "scope=",
 )
 
 
@@ -445,12 +505,17 @@ def clean_wiki_body(
 ) -> Column:
     """The full F1-F6 chain in reference order (``filters.py:52-64``).
 
-    The decode+strip portion is gated on one cheap trigger-char scan
-    (``_MARKUP_TRIGGER``); CASE WHEN short-circuits per row, so markup-free
-    rows cost one linear scan instead of the full pass chain. Result-identical
+    The decode+strip portion is gated on one cheap trigger scan
+    (``_MARKUP_TRIGGERS``, see :func:`_holds_any`); CASE WHEN
+    short-circuits per row, so markup-free rows cost a few substring
+    searches instead of the full pass chain. Result-identical
     by construction: every decode/strip pass requires a trigger char to match
-    anything. Prefer passing a plain column reference — a heavy ``col``
-    expression is referenced three times here.
+    anything. Prefer passing a plain column reference — ``col`` is
+    referenced once per trigger literal here, and twice more. Inside the strip, later
+    markup and template iterations are gated the same way per row, on a
+    "let"-bound value that is not copied (see :func:`strip_wiki_markup`),
+    so a row that holds markup pays for iteration 1 and only for the later
+    iterations that can still change it.
 
     ``exact_templates=True`` swaps the regex template fixpoint for the
     nesting-exact Arrow UDF scan (exact reference parity on templates
@@ -459,7 +524,7 @@ def clean_wiki_body(
     stripped = strip_wiki_markup(
         stripped, markup_iterations, exact_templates=exact_templates
     )
-    col = F.when(col.rlike(_MARKUP_TRIGGER), stripped).otherwise(col)
+    col = F.when(_holds_any(col, _MARKUP_TRIGGERS), stripped).otherwise(col)
     col = unicode_whitelist(col, valid_unicodes)
     col = unicode_blacklist(col, invalid_unicodes)
     return collapse_whitespace(col)

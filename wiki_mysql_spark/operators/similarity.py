@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wiki_mysql_spark.functions.vectors import cosine
-from wiki_mysql_spark.session import env_int
+from wiki_mysql_spark.session import env_int, hadoop_fs
 
 
 def brute_force_topk(
@@ -966,7 +966,7 @@ def _index_new_generation(
         meta = {**meta, "schema": _layout_schema(idx)}
     _fs_write_text(spark, _index_child(path, "meta.json"), json.dumps(meta))
     tpath = _index_child(path, "tombstones")
-    fs, hpath = _fs(spark, tpath)
+    fs, hpath = hadoop_fs(spark, tpath)
     if fs.exists(hpath):
         fs.delete(hpath, True)
     _FS_BYTES_CACHE.pop(tpath, None)
@@ -1370,7 +1370,7 @@ def _fs_qualified_uri(spark, path) -> str:
     ``toString()``, not ``toUri()`` — the URI form preserves the
     empty-vs-absent authority distinction (``file:///x`` vs ``file:/x``)
     that path identity must ignore."""
-    fs, hpath = _fs(spark, str(path).rstrip("/") or str(path))
+    fs, hpath = hadoop_fs(spark, str(path).rstrip("/") or str(path))
     return str(fs.makeQualified(hpath))
 
 
@@ -1399,7 +1399,7 @@ def index_retire(spark, pointer: str, roots) -> list[str]:
         current_uri = _fs_qualified_uri(spark, index_current(spark, pointer))
         if _fs_qualified_uri(spark, rr) == current_uri:
             continue
-        fs, hpath = _fs(spark, rr)
+        fs, hpath = hadoop_fs(spark, rr)
         if fs.exists(hpath):
             fs.delete(hpath, True)
             deleted.append(rr)
@@ -1460,7 +1460,7 @@ def index_file_stats(spark, path: str, *, subdir: str) -> dict:
     same listing cost compaction itself pays; run it from the maintenance
     loop (daily), not the query path. Returns ``{n_partitions, n_files,
     max_files, avg_files}`` over leaf directories holding parquet data."""
-    fs, hbase = _fs(spark, _index_child(path, subdir))
+    fs, hbase = hadoop_fs(spark, _index_child(path, subdir))
     if not fs.exists(hbase):
         return {"n_partitions": 0, "n_files": 0, "max_files": 0,
                 "avg_files": 0.0}
@@ -1736,7 +1736,7 @@ def _lsh_probed_bytes(spark, path: str, probe: _LshProbe) -> int:
     size."""
     tpath = _index_child(path, "tombstones")
     size = _tombstone_bytes(spark, tpath) if _fs_exists(spark, tpath) else 0
-    fs, _ = _fs(spark, path)
+    fs, _ = hadoop_fs(spark, path)
     base = _index_child(path, _LSH_INDEX.subdir)
     for t, bs in probe.by_tbl.items():
         pattern = f"{base}/tbl={t}/bucket={{{','.join(map(str, bs))}}}/*"
@@ -2593,7 +2593,7 @@ def _fs_write_text(spark, path: str, text: str) -> None:
     write), so no reader ever sees partial content on any path."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    fs, hpath = _fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     tmp = jvm.org.apache.hadoop.fs.Path(
         path + ".tmp-" + __import__("uuid").uuid4().hex[:12]
     )
@@ -2631,19 +2631,9 @@ def _fs_write_text(spark, path: str, text: str) -> None:
             raise IOError(f"_fs_write_text: rename {tmp} -> {path} failed")
 
 
-def _fs(spark, path: str):
-    """``(fs, hpath)``: the Hadoop FileSystem resolved for ``path``'s
-    scheme, and ``path`` as a Hadoop Path — the layer every index file
-    operation goes through, so headers, tombstones and listings land next
-    to the parquet data on hdfs:// and s3a:// roots too (os.path would
-    only see local paths)."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
 def _fs_exists(spark, path: str) -> bool:
-    """Existence probe through :func:`_fs`."""
-    fs, hpath = _fs(spark, path)
+    """Existence probe through :func:`~wiki_mysql_spark.session.hadoop_fs`."""
+    fs, hpath = hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
 
 
@@ -2657,7 +2647,7 @@ def _fs_bytes(spark, path: str) -> int:
     plan is built, the same way
     :func:`wiki_mysql_spark.sources.tables.is_small_input` byte-gates
     driver-side collects."""
-    fs, hpath = _fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     return int(fs.getContentSummary(hpath).getLength())
 
 
@@ -2666,7 +2656,7 @@ def _has_delta_layer(spark, path: str, subdir: str) -> bool:
     streaming ``batch=<id>/`` delta layer (:func:`_index_write_delta`)
     that compaction has not yet retired. One driver-side directory
     listing, no job."""
-    fs, hpath = _fs(spark, _index_child(path, subdir))
+    fs, hpath = hadoop_fs(spark, _index_child(path, subdir))
     return bool(fs.exists(hpath)) and any(
         st.isDirectory() and st.getPath().getName().startswith("batch=")
         for st in fs.listStatus(hpath)
@@ -2717,7 +2707,7 @@ def _fs_read_text(spark, path: str) -> str:
     import time as _time
 
     jvm = spark._jvm
-    fs, hpath = _fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         cands = fs.globStatus(jvm.org.apache.hadoop.fs.Path(path + ".tmp-*"))
         if cands:

@@ -14,18 +14,21 @@ picked by a probe of the staged frame's size:
 
     driver (small staged frame):
     staged ──narrow Arrow collect──> driver: body ids, redirect walk [A3],
-        article ids, quarantine rules ──> local articles / quarantine
-    staged ⋈ broadcast local (aid, body_id) ──> bodies
+        article ids, quarantine rules ──> Arrow articles / quarantine
+        ──pyarrow parquet, no Spark job──> articles, quarantine sinks
+    staged ⋈ broadcast local (aid, body_id) ──> bodies sink
 
     distributed:
     staged ──dense ids──> bodies ⋈ text;  redirects ──pointer-doubling
         fixpoint [A3]──> extra article rows ──dense ids──> articles
         ──split_quarantine──> articles_ok / bodies_ok / quarantine
 
-A warm ``run_wiki_etl`` on the driver plan runs 5 Spark jobs: the staged
-probe (which computes the staged frame), the collect and the three sink
-writes. The distributed plan adds the id sorts, the fixpoint rounds and the
-quarantine joins.
+A warm ``run_wiki_etl`` on the driver plan runs 3 Spark jobs: the staged
+probe (which computes the staged frame), the narrow collect and the bodies
+write. ``articles`` and ``quarantine`` are built on the driver, so the
+driver writes them itself (:func:`~wiki_mysql_spark.sinks.write_arrow_parquet`).
+The distributed plan writes all three tables with Spark, and adds the id
+sorts, the fixpoint rounds and the quarantine joins.
 
 Differences from the reference, by design:
   * ids are deterministic (ordered by title) instead of insertion-ordered —
@@ -39,7 +42,7 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
-from typing import NamedTuple
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -51,6 +54,9 @@ from wiki_mysql_spark.functions.cleaning import (
 )
 from wiki_mysql_spark.operators.ids import dense_ids
 from wiki_mysql_spark.operators.redirects import resolve_redirects
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # Byte bound of the staged frame for the driver plan: 8 MB, the bound of
 # the distributed path's tightest driver collect (redirects._SMALL_EDGES_BYTES).
@@ -70,14 +76,28 @@ class _WikiFrames(NamedTuple):
     body_octets) are the whole tables, the ``*_ok`` frames and
     ``quarantine`` their :func:`~wiki_mysql_spark.sinks.split_quarantine`
     split, with the staged frame's corrupt captures in ``quarantine``.
-    ``plan`` names the plan the staged probe picked."""
+    ``plan`` names the plan the staged probe picked. The driver plan's
+    ``articles*`` and ``quarantine`` are Arrow tables (see
+    :func:`_frame`); the bodies are always DataFrames."""
 
     plan: str
-    articles: DataFrame
+    articles: DataFrame | pa.Table
     bodies: DataFrame
-    articles_ok: DataFrame
+    articles_ok: DataFrame | pa.Table
     bodies_ok: DataFrame
-    quarantine: DataFrame
+    quarantine: DataFrame | pa.Table
+
+
+def _frame(spark, table: DataFrame | pa.Table) -> DataFrame:
+    """``table`` as a DataFrame: a driver-built ``pyarrow.Table`` becomes a
+    local frame with its own schema, a DataFrame passes through."""
+    if isinstance(table, DataFrame):
+        return table
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from wiki_mysql_spark.sources.tables import local_frame
+
+    return local_frame(spark, table, from_arrow_schema(table.schema))
 
 
 def _corrupt_rows(df: DataFrame) -> DataFrame:
@@ -127,7 +147,8 @@ def _build_wiki_frames(
 
       * ``driver`` (small corpus): one Arrow collect of the staged frame's
         narrow columns, then ids, the redirect walk and the quarantine
-        rules run on the driver (:func:`_driver_frames`); the text is
+        rules run on the driver (:func:`_driver_frames`), which returns
+        ``articles*`` and ``quarantine`` as Arrow tables; the text is
         re-attached by a broadcast join of local ``(aid, body_id)`` rows;
       * ``distributed``: ``dense_ids`` and ``resolve_redirects`` size
         their own inputs, and the split is
@@ -216,14 +237,16 @@ def _driver_frames(
     rounded depth bound as the distributed fixpoint), article ids ordered
     by (title, aid) and the quarantine rules
     (:func:`~wiki_mysql_spark.sinks.split_quarantine_rows`) as plain
-    Python. ``articles*`` and ``quarantine`` are local frames; the bodies
-    are the staged text joined to broadcast local ``(aid, body_id)`` rows.
-    Ties sort nulls first, like Spark's ascending sort."""
+    Python. ``articles*`` and ``quarantine`` are Arrow tables built
+    by :func:`~wiki_mysql_spark.sources.tables.arrow_table`, so the sinks
+    write them without a Spark job; the bodies are the staged text joined to
+    broadcast local ``(aid, body_id)`` rows. Ties sort nulls first, like
+    Spark's ascending sort."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from wiki_mysql_spark.operators.redirects import resolve_chains
     from wiki_mysql_spark.sinks import split_quarantine_rows
-    from wiki_mysql_spark.sources.tables import local_frame
+    from wiki_mysql_spark.sources.tables import arrow_table, local_frame
 
     cols = ["aid", "title", "is_redirect", "redirect_target", "body_octets"]
     if has_corrupt:
@@ -287,14 +310,13 @@ def _driver_frames(
     body_rows = [(r["aid"], bid) for bid, r in pages]
     return _WikiFrames(
         plan="driver",
-        articles=local_frame(spark, articles, art_schema),
+        articles=arrow_table(articles, art_schema),
         bodies=bodies(body_rows),
-        articles_ok=local_frame(spark, articles_ok, art_schema),
+        articles_ok=arrow_table(articles_ok, art_schema),
         bodies_ok=bodies(
             [(aid, bid) for aid, bid in body_rows if bid not in bad_bodies]
         ).select("id", "body"),
-        quarantine=local_frame(
-            spark,
+        quarantine=arrow_table(
             quarantine,
             "table_name string not null, id long, reject_reason string",
         ),
@@ -371,7 +393,10 @@ def build_wiki_tables(
         max_redirect_depth=max_redirect_depth,
         exact_templates=exact_templates,
     )
-    return frames.articles, frames.bodies.select("id", "body")
+    return (
+        _frame(pages.sparkSession, frames.articles),
+        frames.bodies.select("id", "body"),
+    )
 
 
 def parse_unichr_range(txt: str) -> tuple[int, int]:
@@ -421,10 +446,11 @@ def run_wiki_etl(
     """The full CLI workload (``/root/reference/dbfy.py:254-313`` analog):
     dump -> articles/bodies -> quarantine split -> parquet (always) ->
     MySQL via JDBC (when a URL is given). Returns the row counts WRITTEN
-    to each parquet table, observed during the writes themselves (one
-    ``Observation`` per sink frame, counted in the write job's result
-    stage, whose accumulator updates apply once per partition) — the
-    outputs are never read back to count them.
+    to each parquet table, taken during the writes themselves (one
+    ``Observation`` per Spark-written sink frame, counted in the write
+    job's result stage, whose accumulator updates apply once per
+    partition; the row count of a driver-written table) — the outputs are
+    never read back to count them.
 
     ``limit`` caps the number of pages processed — exact-n ``df.limit``
     semantics (the reference's ``--limit`` was off-by-chunk between its
@@ -438,9 +464,16 @@ def run_wiki_etl(
 
     The build runs one of two plans (:func:`_build_wiki_frames`), named on
     stderr as ``# wiki-etl plan: driver|distributed``. On the driver plan
-    (a small staged frame) a warm call runs 5 Spark jobs: the staged probe,
-    one narrow Arrow collect and the three sink writes; the outputs are the
-    same on either plan.
+    (a small staged frame) a warm call runs 3 Spark jobs: the staged probe,
+    one narrow Arrow collect and the bodies write. The driver plan builds
+    ``articles`` and ``quarantine`` on the driver as Arrow tables, and the
+    driver writes them with
+    :func:`~wiki_mysql_spark.sinks.write_arrow_parquet` (no Spark job; the
+    count is the table's row count). One exception: under ``limit=`` the
+    quarantine also holds the raw parse's corrupt rows, which live in
+    Spark, so there it is a Spark write of the driver rows (as a local
+    frame) unioned with those corrupt rows. The outputs are the same on
+    either plan.
 
     ``progress=True`` reports live task progress to stderr while the ETL
     runs — the reference's tqdm bars (``dbfy.py:158,191,231``), Spark-native
@@ -464,6 +497,7 @@ def run_wiki_etl(
     from wiki_mysql_spark.sinks import (
         ARTICLES_DDL,
         BODIES_DDL,
+        write_arrow_parquet,
         write_jdbc,
         write_parquet,
     )
@@ -536,23 +570,34 @@ def run_wiki_etl(
         # structurally-corrupt page records join the quarantine audit (the
         # reference silently drops erroring pages, dbfy.py:142-143); folded
         # into the quarantine WRITE's lineage, so no extra job materializes
-        quarantine = quarantine.unionByName(_corrupt_rows(corrupt_src))
+        quarantine = _frame(spark, quarantine).unionByName(
+            _corrupt_rows(corrupt_src)
+        )
 
     sinks = {
         "articles": frames.articles_ok,
         "bodies": frames.bodies_ok,
         "quarantine": quarantine,
     }
-    observed = {name: Observation() for name in sinks}
+    counts: dict[str, int] = {}
+    observed: dict[str, Observation] = {}
     reporter = (
         job_progress(spark, "wiki-etl") if progress else nullcontext()
     )
     try:
         with reporter:
-            for name, df in sinks.items():
+            for name, table in sinks.items():
+                path = f"{out_dir}/{name}"
+                if not isinstance(table, DataFrame):
+                    # built on the driver: written from it, no Spark job
+                    counts[name] = write_arrow_parquet(spark, table, path)
+                    continue
+                observed[name] = Observation()
                 write_parquet(
-                    df.observe(observed[name], F.count(F.lit(1)).alias("rows")),
-                    f"{out_dir}/{name}",
+                    table.observe(
+                        observed[name], F.count(F.lit(1)).alias("rows")
+                    ),
+                    path,
                     row_group_bytes=rg_bytes,
                 )
 
@@ -581,7 +626,8 @@ def run_wiki_etl(
             else:
                 spark.conf.set(reader_batch_conf, saved_batch)
 
-    return {name: int(obs.get["rows"]) for name, obs in observed.items()}
+    counts.update((name, int(obs.get["rows"])) for name, obs in observed.items())
+    return {name: counts[name] for name in sinks}
 
 
 if __name__ == "__main__":  # pragma: no cover — thin CLI (dbfy.py analog)

@@ -134,6 +134,17 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(fs, hpath)``: the Hadoop FileSystem resolved for ``path``'s
+    scheme under the session's Hadoop configuration, and ``path`` as a
+    Hadoop Path. Every file the engine writes or lists outside a Spark job
+    (index headers, tombstones, listings, driver-written tables) goes
+    through it, so it lands next to the Spark-written parquet on hdfs://
+    and s3a:// paths too (os.path would only see local paths)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def get_session(app_name: str = "wiki_mysql_spark") -> SparkSession:
     """Build (or reuse) a local session sized from the environment.
 

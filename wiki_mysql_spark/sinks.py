@@ -172,6 +172,48 @@ def write_parquet(
     w.parquet(path)
 
 
+def write_arrow_parquet(spark, table, path: str) -> int:
+    """Write a driver-side ``pyarrow.Table`` as a one-file parquet table,
+    with no Spark job; returns ``table.num_rows``.
+
+    The driver twin of :func:`write_parquet` for tables already built on
+    the driver (the small wiki ETL's ``articles`` and ``quarantine``): the
+    same zstd parquet, serialized by ``pyarrow.parquet`` and written
+    through the Hadoop FileSystem of ``path`` (so hdfs:// and s3a://
+    outputs land where Spark's writer would put them). The layout is the
+    one Spark's writer leaves: ``path`` is replaced (deleted first, as
+    ``mode("overwrite")`` does), the file is written under a
+    ``_``-prefixed temp name that readers skip, renamed to
+    ``part-00000-<uuid>-c000.zstd.parquet``, and ``_SUCCESS`` is written
+    last."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wiki_mysql_spark.session import hadoop_fs
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf, compression="zstd")
+    fs, hdir = hadoop_fs(spark, path)
+    if fs.exists(hdir):
+        fs.delete(hdir, True)
+    fs.mkdirs(hdir)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = f"part-00000-{uuid.uuid4()}-c000.zstd.parquet"
+    tmp = Path(hdir, "_" + name)
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray(buf.getvalue().to_pybytes()))
+    finally:
+        out.close()
+    if not fs.rename(tmp, Path(hdir, name)):
+        fs.delete(tmp, False)
+        raise IOError(f"write_arrow_parquet: rename {tmp} -> {name} failed")
+    fs.create(Path(hdir, "_SUCCESS"), True).close()
+    return table.num_rows
+
+
 def execute_ddl(
     spark,
     url: str,
@@ -291,9 +333,9 @@ def compact_parquet(
     """
     import math
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    from wiki_mysql_spark.session import hadoop_fs
+
+    fs, hpath = hadoop_fs(spark, src_path)
     total = fs.getContentSummary(hpath).getLength()
     n = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(src_path)

@@ -69,17 +69,41 @@ _STATS_UNKNOWN = 1 << 50
 PROBE_ROWS = 100_000
 
 
+def arrow_table(data, schema):
+    """``data`` as a ``pyarrow.Table`` of ``schema``: a table passes
+    through as it is; an iterable of row tuples in ``schema`` order is
+    converted column by column to the Arrow types of ``schema`` (a
+    ``StructType`` or a DDL string), names and nullability included. The
+    one row→Arrow conversion for driver-side data, shared by
+    :func:`local_frame` and the driver-written wiki tables."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(data, pa.Table):
+        return data
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*data)) or [()] * len(arrow_schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
 def local_frame(spark: SparkSession, data, schema) -> DataFrame:
     """A DataFrame over driver-side data, always built through Arrow.
 
     ``data`` is a ``pyarrow.Table`` or an iterable of row tuples in
-    ``schema`` order; ``schema`` is a ``StructType`` or a DDL string, and
-    the frame carries it as given (names, types, nullability). The rows
-    travel inside the plan as a ``LocalRelation`` (``LocalTableScan``), so
-    no consumer starts a Python worker. ``spark.createDataFrame`` over
-    Python rows is instead an RDD scan (``applySchemaToPythonRDD``): every
-    job that reads it runs a Python worker stage. Every engine frame built
-    from driver data goes through here.
+    ``schema`` order (converted by :func:`arrow_table`); ``schema`` is a
+    ``StructType`` or a DDL string, and the frame carries it as given
+    (names, types, nullability). The rows travel inside the plan as a
+    ``LocalRelation`` (``LocalTableScan``), so no consumer starts a Python
+    worker. ``spark.createDataFrame`` over Python rows is instead an RDD
+    scan (``applySchemaToPythonRDD``): every job that reads it runs a
+    Python worker stage. Every engine frame built from driver data goes
+    through here.
 
     The relation's plan statistics are ESTIMATED, not measured: Catalyst
     sizes a ``LocalRelation`` as rows x (8 + each type's default size),
@@ -90,20 +114,11 @@ def local_frame(spark: SparkSession, data, schema) -> DataFrame:
     consumes one must bound its real width some other way (today's callers
     hold longs only, or a mapping already admitted by a byte-probed gate).
     """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DataType
 
     if isinstance(schema, str):
         schema = DataType.fromDDL(schema)
-    if not isinstance(data, pa.Table):
-        arrow_schema = to_arrow_schema(schema)
-        cols = list(zip(*data)) or [()] * len(arrow_schema)
-        data = pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
-            schema=arrow_schema,
-        )
-    return spark.createDataFrame(data, schema=schema)
+    return spark.createDataFrame(arrow_table(data, schema), schema=schema)
 
 
 def is_rdd_backed(df: DataFrame) -> bool:
