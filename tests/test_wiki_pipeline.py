@@ -469,8 +469,9 @@ def test_etl_counts_are_rows_written(spark, tmp_path, monkeypatch):
 
 def test_warm_etl_job_budget_and_no_read_back(spark, tmp_path, monkeypatch):
     """A warm run_wiki_etl stays within its job budget, and no job is
-    submitted after the last sink write returns: the counts come from the
-    writes, not from reading the outputs back."""
+    submitted after the last sink write returns, whichever sink (Spark's
+    or the driver's) wrote it: the counts come from the writes, not from
+    reading the outputs back."""
     from wiki_mysql_spark import sinks
     from wiki_mysql_spark.plans.wiki_pipeline import run_wiki_etl
 
@@ -480,13 +481,17 @@ def test_warm_etl_job_budget_and_no_read_back(spark, tmp_path, monkeypatch):
     sc = spark.sparkContext
     group = "test-warm-etl-job-budget"
     at_last_write: list[int] = []
-    write_parquet = sinks.write_parquet
 
-    def recording_write(df, path, **kw):
-        write_parquet(df, path, **kw)
-        at_last_write[:] = sc.statusTracker().getJobIdsForGroup(group)
+    def recording(write):
+        def recording_write(*args, **kw):
+            written = write(*args, **kw)
+            at_last_write[:] = sc.statusTracker().getJobIdsForGroup(group)
+            return written
 
-    monkeypatch.setattr(sinks, "write_parquet", recording_write)
+        return recording_write
+
+    for name in ("write_parquet", "write_arrow_parquet"):
+        monkeypatch.setattr(sinks, name, recording(getattr(sinks, name)))
     sc.setJobGroup(group, group)
     try:
         counts = run_wiki_etl(spark, dump, str(tmp_path / "warm"))
@@ -495,11 +500,83 @@ def test_warm_etl_job_budget_and_no_read_back(spark, tmp_path, monkeypatch):
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert counts == {"articles": 4, "bodies": 3, "quarantine": 2}
-    # the driver plan: the staged probe, the narrow Arrow collect and the
-    # bodies write (articles and quarantine are written from the driver) —
-    # 3 jobs on this fixture and on the 3000-page, 4-shard benchmark dump
-    assert len(jobs) <= 3, sorted(jobs)
-    assert sorted(jobs) == sorted(at_last_write)
+    # the driver plan: one Arrow collect of the staged frame (the three
+    # tables are written from the driver) — 1 job on this fixture and on
+    # the 3000-page, 4-shard benchmark dump
+    assert len(jobs) <= 1, sorted(jobs)
+    assert at_last_write and sorted(jobs) == sorted(at_last_write)
+
+
+def _counting_clean(monkeypatch):
+    """Count the staged cleaning Columns wiki_pipeline builds, from an
+    empty memo."""
+    import wiki_mysql_spark.plans.wiki_pipeline as wp
+
+    built: list[dict] = []
+    clean = wp.clean_wiki_body
+
+    def counting_clean(col, **options):
+        built.append(options)
+        return clean(col, **options)
+
+    monkeypatch.setattr(wp, "clean_wiki_body", counting_clean)
+    monkeypatch.setattr(wp, "_CLEANING", type(wp._CLEANING)())
+    return built
+
+
+def test_warm_etl_builds_the_cleaning_column_once(spark, tmp_path, monkeypatch):
+    """Two run_wiki_etl calls in one session build the staged cleaning
+    Column once: the second call reuses the first call's."""
+    from wiki_mysql_spark.plans.wiki_pipeline import run_wiki_etl
+
+    built = _counting_clean(monkeypatch)
+    dump = _quarantine_dump(tmp_path)
+    for run in ("first", "second"):
+        counts = run_wiki_etl(spark, dump, str(tmp_path / run))
+        assert counts == {"articles": 4, "bodies": 3, "quarantine": 2}, run
+    assert len(built) == 1, built
+
+
+def test_cleaning_memo_keys_by_context_and_options(spark, monkeypatch):
+    """The memo holds one Column per context and option set: each option
+    set is its own entry, cleans as a fresh build does, and is built once;
+    another context key builds its own, and an entry goes with its key."""
+    import gc
+
+    import wiki_mysql_spark.plans.wiki_pipeline as wp
+    from wiki_mysql_spark.functions.cleaning import clean_wiki_body
+
+    built = _counting_clean(monkeypatch)
+    sc = spark.sparkContext
+    option_sets = [
+        {},
+        {"remove_html": False},
+        {"exact_templates": True},
+        {"valid_unicodes": ((0x20, 0x7E),), "invalid_unicodes": ((0x30, 0x39),)},
+    ]
+    texts = spark.createDataFrame(
+        [("a &amp; b {{t|x}} [[L|link]] 12 \u00e9\u00e9",), ("{{a {b}} c}} d",),
+         ("plain 7",), (None,)],
+        "text string",
+    )
+    for options in option_sets:
+        memo = wp._cleaned_text(sc, **options)
+        assert wp._cleaned_text(sc, **options) is memo, options
+        fresh = clean_wiki_body(F.coalesce(F.col("text"), F.lit("")), **options)
+        got = texts.select(memo.alias("m"), fresh.alias("f")).collect()
+        assert [r["m"] for r in got] == [r["f"] for r in got], options
+    assert len(built) == len(option_sets) == len(wp._CLEANING[sc])
+
+    class Context:
+        """A stand-in context key."""
+
+    first, second = Context(), Context()
+    assert wp._cleaned_text(first) is wp._cleaned_text(first)
+    assert wp._cleaned_text(second) is not wp._cleaned_text(first)
+    assert len(built) == len(option_sets) + 2
+    del first
+    gc.collect()
+    assert set(wp._CLEANING) == {sc, second}
 
 
 def _gate_dump(tmp_path):
@@ -571,10 +648,11 @@ def test_wiki_plans_agree_both_sides_of_the_gate(spark, tmp_path, monkeypatch, c
     distributed (the bound at 0) — write identical articles, bodies and
     quarantine rows and schemas from run_wiki_etl under memory and disk
     materialization and limit=, and build identical build_wiki_tables
-    frames. The driver plan writes articles and quarantine from the driver
-    (quarantine under limit= is a Spark write: it unions the raw parse's
-    corrupt rows), the distributed plan writes every table with Spark, so
-    the comparison holds driver-written tables against Spark-written ones.
+    frames. The driver plan writes articles, bodies and quarantine from the
+    driver (quarantine under limit= is a Spark write: it unions the raw
+    parse's corrupt rows), the distributed plan writes every table with
+    Spark, so the comparison holds driver-written tables against
+    Spark-written ones.
     The run names its plan on stderr, and the driver plan reads
     BODY_MAX_BYTES when called."""
     import wiki_mysql_spark.plans.wiki_pipeline as wp
@@ -605,7 +683,7 @@ def test_wiki_plans_agree_both_sides_of_the_gate(spark, tmp_path, monkeypatch, c
                     spark, dump, str(out), max_redirect_depth=2, **kw
                 )
             assert f"# wiki-etl plan: {plan}" in capsys.readouterr().err
-            from_driver = {"articles"} if plan == "driver" else set()
+            from_driver = {"articles", "bodies"} if plan == "driver" else set()
             if plan == "driver" and tag != "limit":
                 from_driver.add("quarantine")
             assert {

@@ -35,16 +35,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def l2_sq(a: Column, b: Column) -> Column:
     """Squared L2 distance (no sqrt) — the PQ subvector metric; same
     sequential fold order as :func:`dot`/:func:`norm`."""

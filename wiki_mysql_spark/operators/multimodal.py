@@ -520,15 +520,6 @@ def _ycbcr_to_rgb(px: "np.ndarray") -> "np.ndarray":
     return np.stack([r, g, b], axis=-1)
 
 
-def _jpeg_component_blocks(plane: "np.ndarray") -> "np.ndarray":
-    """Edge-replicate a (h, w) plane to 8-multiples, return (by, bx, 8, 8)."""
-    h, w = plane.shape
-    ph, pw = -h % 8, -w % 8
-    padded = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
-    bh, bw = padded.shape[0] // 8, padded.shape[1] // 8
-    return padded.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3), bh, bw
-
-
 def encode_jpeg(
     pixels: "np.ndarray", *, quality: int = 95, subsampling: str = "444"
 ) -> bytes:

@@ -13,22 +13,22 @@ picked by a probe of the staged frame's size:
         is_redirect, redirect_target, body_text, body_octets[, corrupt])
 
     driver (small staged frame):
-    staged ──narrow Arrow collect──> driver: body ids, redirect walk [A3],
-        article ids, quarantine rules ──> Arrow articles / quarantine
-        ──pyarrow parquet, no Spark job──> articles, quarantine sinks
-    staged ⋈ broadcast local (aid, body_id) ──> bodies sink
+    staged ──one Arrow collect──> driver: body ids, redirect walk [A3],
+        article ids, quarantine rules ──> Arrow articles / bodies /
+        quarantine ──pyarrow parquet, no Spark job──> the three sinks
 
     distributed:
     staged ──dense ids──> bodies ⋈ text;  redirects ──pointer-doubling
         fixpoint [A3]──> extra article rows ──dense ids──> articles
         ──split_quarantine──> articles_ok / bodies_ok / quarantine
 
-A warm ``run_wiki_etl`` on the driver plan runs 3 Spark jobs: the staged
-probe (which computes the staged frame), the narrow collect and the bodies
-write. ``articles`` and ``quarantine`` are built on the driver, so the
-driver writes them itself (:func:`~wiki_mysql_spark.sinks.write_arrow_parquet`).
-The distributed plan writes all three tables with Spark, and adds the id
-sorts, the fixpoint rounds and the quarantine joins.
+A warm ``run_wiki_etl`` on the driver plan runs 1 Spark job: the collect,
+which computes the staged frame (a probe job runs before it only when
+plan statistics cannot size the frame). All three tables are built on
+the driver, so the driver writes them itself
+(:func:`~wiki_mysql_spark.sinks.write_arrow_parquet`). The distributed
+plan writes all three tables with Spark, and adds the id sorts, the
+fixpoint rounds and the quarantine joins.
 
 Differences from the reference, by design:
   * ids are deterministic (ordered by title) instead of insertion-ordered —
@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import os
 import sys
+import weakref
 from collections.abc import Callable
 from typing import TYPE_CHECKING, NamedTuple
 
@@ -58,8 +59,9 @@ from wiki_mysql_spark.operators.redirects import resolve_redirects
 if TYPE_CHECKING:
     import pyarrow as pa
 
-# Byte bound of the staged frame for the driver plan: 8 MB, the bound of
-# the distributed path's tightest driver collect (redirects._SMALL_EDGES_BYTES).
+# Byte bound of the staged frame for the driver plan, which collects all of
+# it, text included: 8 MB, the bound of the distributed path's tightest
+# driver collect (redirects._SMALL_EDGES_BYTES).
 _STAGED_SMALL_BYTES = 8 << 20
 # The known-stats branch sees COMPRESSED on-disk leaf bytes while the bound
 # is on estimated IN-MEMORY octet lengths; parquet+zstd wiki text expands
@@ -70,6 +72,25 @@ _STAGED_SMALL_BYTES = 8 << 20
 # frame into a driver collect).
 _COMPRESSION_EXPANSION = 4
 
+# The staged cleaning Column per SparkContext, by option set. Building it
+# takes ~2,000 py4j round trips, so later calls reuse the first call's.
+# Weak keys: a stopped context's Columns, which hold its JVM's objects,
+# are never handed to another context.
+_CLEANING: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _cleaned_text(context, **options) -> Column:
+    """``clean_wiki_body(coalesce(text, ''), **options)``, built once per
+    ``context`` (the session's SparkContext) and option set; ``options``
+    must be hashable."""
+    built = _CLEANING.setdefault(context, {})
+    key = tuple(sorted(options.items()))
+    if key not in built:
+        built[key] = clean_wiki_body(
+            F.coalesce(F.col("text"), F.lit("")), **options
+        )
+    return built[key]
+
 
 class _WikiFrames(NamedTuple):
     """The wiki build's outputs: ``articles`` and ``bodies`` (id, body,
@@ -77,14 +98,14 @@ class _WikiFrames(NamedTuple):
     ``quarantine`` their :func:`~wiki_mysql_spark.sinks.split_quarantine`
     split, with the staged frame's corrupt captures in ``quarantine``.
     ``plan`` names the plan the staged probe picked. The driver plan's
-    ``articles*`` and ``quarantine`` are Arrow tables (see
-    :func:`_frame`); the bodies are always DataFrames."""
+    tables are Arrow tables (see :func:`_frame`), the distributed plan's
+    are DataFrames."""
 
     plan: str
     articles: DataFrame | pa.Table
-    bodies: DataFrame
+    bodies: DataFrame | pa.Table
     articles_ok: DataFrame | pa.Table
-    bodies_ok: DataFrame
+    bodies_ok: DataFrame | pa.Table
     quarantine: DataFrame | pa.Table
 
 
@@ -131,9 +152,10 @@ def _build_wiki_frames(
     scratch-IO amplification): the ONLY full-text materialization is the
     ``staged`` frame — parse + redirect split + cleaning fused into one
     pass, holding CLEANED text once (raw text never lands on scratch).
-    Everything downstream of ``staged`` is narrow except exactly one join
-    that re-attaches the text to its body id by aid; body_octets is
-    computed AT STAGING so the quarantine split is a narrow column read.
+    On the distributed plan everything downstream of ``staged`` is narrow
+    except exactly one join that re-attaches the text to its body id by
+    aid; body_octets is computed AT STAGING so the quarantine split is a
+    narrow column read.
 
     ``materializer``: optional ``(df, name) -> df`` that pins the staged
     frame somewhere durable (run_wiki_etl passes its byte-gated
@@ -145,11 +167,10 @@ def _build_wiki_frames(
     One probe of the staged frame picks the plan (bound:
     :data:`_STAGED_SMALL_BYTES`, row cap ``PROBE_ROWS``):
 
-      * ``driver`` (small corpus): one Arrow collect of the staged frame's
-        narrow columns, then ids, the redirect walk and the quarantine
+      * ``driver`` (small corpus): one Arrow collect of the staged frame,
+        text included, then ids, the redirect walk and the quarantine
         rules run on the driver (:func:`_driver_frames`), which returns
-        ``articles*`` and ``quarantine`` as Arrow tables; the text is
-        re-attached by a broadcast join of local ``(aid, body_id)`` rows;
+        every table as an Arrow table;
       * ``distributed``: ``dense_ids`` and ``resolve_redirects`` size
         their own inputs, and the split is
         :func:`~wiki_mysql_spark.sinks.split_quarantine`
@@ -170,6 +191,13 @@ def _build_wiki_frames(
     has_corrupt = "corrupt_record" in pages.columns
     attr = F.col("redirect_title") if has_attr else F.lit(None).cast("string")
     text = F.coalesce(F.col("text"), F.lit(""))  # null revision text -> ""
+    cleaned = _cleaned_text(
+        pages.sparkSession.sparkContext,
+        remove_html=remove_html,
+        valid_unicodes=valid_unicodes,
+        invalid_unicodes=invalid_unicodes,
+        exact_templates=exact_templates,
+    )
     # eqNullSafe: corrupt rows carry null ns and must not look like pages
     is_page = F.col("ns").eqNullSafe(0)
     # Redirect iff the dump attribute says so OR the body matches the
@@ -189,16 +217,7 @@ def _build_wiki_frames(
         # cleaning runs HERE, fused into the staging pass — the staged
         # write is the parse's single consumer, and the cleaned body (the
         # only full-text column kept) is what materializes
-        F.when(
-            is_page & ~is_red,
-            clean_wiki_body(
-                text,
-                remove_html=remove_html,
-                valid_unicodes=valid_unicodes,
-                invalid_unicodes=invalid_unicodes,
-                exact_templates=exact_templates,
-            ),
-        ).alias("body_text"),
+        F.when(is_page & ~is_red, cleaned).alias("body_text"),
     ]
     if has_corrupt:
         cols.append(F.col("corrupt_record"))
@@ -231,24 +250,26 @@ def _build_wiki_frames(
 def _driver_frames(
     staged: DataFrame, has_corrupt: bool, max_redirect_depth: int
 ) -> _WikiFrames:
-    """The driver plan: ONE Arrow collect of the narrow staged columns (the
-    text stays in Spark), then body ids ordered by title, the redirect walk
+    """The driver plan: ONE Arrow collect of the staged columns, the
+    cleaned text included (the staged probe admitted at most
+    :data:`_STAGED_SMALL_BYTES` of it), then body ids ordered by title, the
+    redirect walk
     (:func:`~wiki_mysql_spark.operators.redirects.resolve_chains`, the same
     rounded depth bound as the distributed fixpoint), article ids ordered
     by (title, aid) and the quarantine rules
     (:func:`~wiki_mysql_spark.sinks.split_quarantine_rows`) as plain
-    Python. ``articles*`` and ``quarantine`` are Arrow tables built
-    by :func:`~wiki_mysql_spark.sources.tables.arrow_table`, so the sinks
-    write them without a Spark job; the bodies are the staged text joined to
-    broadcast local ``(aid, body_id)`` rows. Ties sort nulls first, like
-    Spark's ascending sort."""
+    Python. Every table is an Arrow table built by
+    :func:`~wiki_mysql_spark.sources.tables.arrow_table`, so the sinks
+    write them without a Spark job. Ties sort nulls first, like Spark's
+    ascending sort."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from wiki_mysql_spark.operators.redirects import resolve_chains
     from wiki_mysql_spark.sinks import split_quarantine_rows
-    from wiki_mysql_spark.sources.tables import arrow_table, local_frame
+    from wiki_mysql_spark.sources.tables import arrow_table
 
-    cols = ["aid", "title", "is_redirect", "redirect_target", "body_octets"]
+    cols = ["aid", "title", "is_redirect", "redirect_target", "body_text",
+            "body_octets"]
     if has_corrupt:
         cols.append(_corrupt_reason().alias("corrupt_reason"))
     rows = staged.select(*cols).toArrow().to_pylist()
@@ -288,34 +309,22 @@ def _driver_frames(
             if r["corrupt_reason"] is not None
         ]
 
-    spark = staged.sparkSession
-    long_ = lambda name, nullable=False: StructField(name, LongType(), nullable)  # noqa: E731
+    long_ = lambda name: StructField(name, LongType(), False)  # noqa: E731
     art_schema = StructType(
         [long_("id"), staged.schema["aid"], staged.schema["title"], long_("body")]
     )
-    texts = staged.where(F.col("body_text").isNotNull()).select(
-        "aid", "body_text", "body_octets"
-    )
-
-    def bodies(ids: list[tuple]) -> DataFrame:
-        ids_df = local_frame(
-            spark, ids, StructType([staged.schema["aid"], long_("body_id")])
-        )
-        return texts.join(F.broadcast(ids_df), "aid").select(
-            F.col("body_id").alias("id"),
-            F.col("body_text").alias("body"),
-            "body_octets",
-        )
-
-    body_rows = [(r["aid"], bid) for bid, r in pages]
+    bodies = [(bid, r["body_text"], r["body_octets"]) for bid, r in pages]
     return _WikiFrames(
         plan="driver",
         articles=arrow_table(articles, art_schema),
-        bodies=bodies(body_rows),
+        bodies=arrow_table(
+            bodies, "id long not null, body string, body_octets int"
+        ),
         articles_ok=arrow_table(articles_ok, art_schema),
-        bodies_ok=bodies(
-            [(aid, bid) for aid, bid in body_rows if bid not in bad_bodies]
-        ).select("id", "body"),
+        bodies_ok=arrow_table(
+            [(bid, body) for bid, body, _ in bodies if bid not in bad_bodies],
+            "id long not null, body string",
+        ),
         quarantine=arrow_table(
             quarantine,
             "table_name string not null, id long, reject_reason string",
@@ -384,7 +393,8 @@ def build_wiki_tables(
     """pages ``(aid, title, ns, text[, redirect_title])`` ->
     ``(articles, bodies)`` exactly shaped like ``sql/init.sql:5-19``.
     Thin wrapper over :func:`_build_wiki_frames` (which run_wiki_etl uses
-    directly for the quarantine split and the fused corrupt audit)."""
+    directly for the quarantine split and the fused corrupt audit); on the
+    driver plan both frames are local relations (:func:`_frame`)."""
     frames = _build_wiki_frames(
         pages,
         remove_html=remove_html,
@@ -393,9 +403,10 @@ def build_wiki_tables(
         max_redirect_depth=max_redirect_depth,
         exact_templates=exact_templates,
     )
+    spark = pages.sparkSession
     return (
-        _frame(pages.sparkSession, frames.articles),
-        frames.bodies.select("id", "body"),
+        _frame(spark, frames.articles),
+        _frame(spark, frames.bodies).select("id", "body"),
     )
 
 
@@ -464,12 +475,12 @@ def run_wiki_etl(
 
     The build runs one of two plans (:func:`_build_wiki_frames`), named on
     stderr as ``# wiki-etl plan: driver|distributed``. On the driver plan
-    (a small staged frame) a warm call runs 3 Spark jobs: the staged probe,
-    one narrow Arrow collect and the bodies write. The driver plan builds
-    ``articles`` and ``quarantine`` on the driver as Arrow tables, and the
-    driver writes them with
-    :func:`~wiki_mysql_spark.sinks.write_arrow_parquet` (no Spark job; the
-    count is the table's row count). One exception: under ``limit=`` the
+    (a small staged frame) a warm call runs 1 Spark job, the Arrow collect
+    of the staged frame; a staged probe job runs only when the frame's
+    size is not known from plan statistics. The driver plan builds all
+    three tables on the driver as Arrow tables, and the driver writes them
+    with :func:`~wiki_mysql_spark.sinks.write_arrow_parquet` (no Spark job;
+    the count is the table's row count). One exception: under ``limit=`` the
     quarantine also holds the raw parse's corrupt rows, which live in
     Spark, so there it is a Spark write of the driver rows (as a local
     frame) unioned with those corrupt rows. The outputs are the same on
