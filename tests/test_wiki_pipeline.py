@@ -480,12 +480,13 @@ def test_warm_etl_job_budget_and_no_read_back(spark, tmp_path, monkeypatch):
 
     sc = spark.sparkContext
     group = "test-warm-etl-job-budget"
-    at_last_write: list[int] = []
+    # the group's job ids as each sink write returns
+    after_writes: list[list[int]] = []
 
     def recording(write):
         def recording_write(*args, **kw):
             written = write(*args, **kw)
-            at_last_write[:] = sc.statusTracker().getJobIdsForGroup(group)
+            after_writes.append(sc.statusTracker().getJobIdsForGroup(group))
             return written
 
         return recording_write
@@ -504,7 +505,7 @@ def test_warm_etl_job_budget_and_no_read_back(spark, tmp_path, monkeypatch):
     # tables are written from the driver) — 1 job on this fixture and on
     # the 3000-page, 4-shard benchmark dump
     assert len(jobs) <= 1, sorted(jobs)
-    assert at_last_write and sorted(jobs) == sorted(at_last_write)
+    assert len(after_writes) == 3 and sorted(jobs) == sorted(after_writes[-1])
 
 
 def _counting_clean(monkeypatch):
