@@ -75,71 +75,6 @@ def test_arrow_parquet_sink_layout_and_overwrite(spark, tmp_path):
     assert spark.read.parquet(out).count() == 0
 
 
-def test_arrow_parquet_sink_streams_bounded_chunks(spark, tmp_path, monkeypatch):
-    """A table whose parquet file spans several write chunks crosses to
-    the Hadoop stream one bounded chunk per write call, reads back
-    row-identical through Spark, and leaves the same layout: ``_SUCCESS``
-    plus one ``part-*.zstd.parquet`` file, no ``_``-prefixed temp file."""
-    import os
-    import random
-
-    import pyarrow as pa
-
-    from wiki_mysql_spark import session, sinks
-
-    chunk = 1 << 12
-    monkeypatch.setattr(sinks, "_ARROW_WRITE_CHUNK", chunk)
-    writes: list[int] = []
-    hadoop_fs = session.hadoop_fs
-
-    class Stream:
-        def __init__(self, out):
-            self.out = out
-
-        def write(self, data):
-            writes.append(len(data))
-            self.out.write(data)
-
-        def close(self):
-            self.out.close()
-
-    class Fs:
-        def __init__(self, fs):
-            self.fs = fs
-
-        def create(self, *args):
-            return Stream(self.fs.create(*args))
-
-        def __getattr__(self, name):
-            return getattr(self.fs, name)
-
-    def recording_fs(spark, path):
-        fs, hdir = hadoop_fs(spark, path)
-        return Fs(fs), hdir
-
-    monkeypatch.setattr(session, "hadoop_fs", recording_fs)
-    rng = random.Random(7)
-    rows = [
-        (i, "".join(rng.choice("abcdefghij ") for _ in range(rng.randrange(200))))
-        for i in range(400)
-    ]
-    table = pa.table({"id": pa.array([r[0] for r in rows], pa.int64()),
-                      "v": [r[1] for r in rows]})
-    out = str(tmp_path / "t")
-    assert write_arrow_parquet(spark, table, out) == len(rows)
-
-    visible = sorted(os.listdir(out))
-    part = [f for f in visible if f.startswith("part-")]
-    assert [f for f in visible if not f.startswith(".")] == ["_SUCCESS", *part]
-    assert len(part) == 1 and part[0].endswith("-c000.zstd.parquet")
-    size = os.path.getsize(os.path.join(out, part[0]))
-    assert size > 3 * chunk and len(writes) == -(-size // chunk), writes
-    assert max(writes) == chunk and sum(writes) == size
-    back = spark.read.parquet(out)
-    assert back.dtypes == [("id", "bigint"), ("v", "string")]
-    assert sorted(map(tuple, back.collect())) == rows
-
-
 def test_quarantine_split(spark):
     articles = spark.createDataFrame(
         [

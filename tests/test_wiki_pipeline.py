@@ -501,83 +501,59 @@ def test_warm_etl_job_budget_and_no_read_back(spark, tmp_path, monkeypatch):
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert counts == {"articles": 4, "bodies": 3, "quarantine": 2}
-    # the driver plan: one Arrow collect of the staged frame (the three
-    # tables are written from the driver) — 1 job on this fixture and on
-    # the 3000-page, 4-shard benchmark dump
-    assert len(jobs) <= 1, sorted(jobs)
+    # the driver plan: one Arrow collect of the staged frame and the
+    # bodies write (articles and quarantine are written from the driver) —
+    # 2 jobs on this fixture and on the 3000-page, 4-shard benchmark dump
+    assert len(jobs) <= 2, sorted(jobs)
     assert len(after_writes) == 3 and sorted(jobs) == sorted(after_writes[-1])
-
-
-def _counting_clean(monkeypatch):
-    """Count the staged cleaning Columns wiki_pipeline builds, from an
-    empty memo."""
-    import wiki_mysql_spark.plans.wiki_pipeline as wp
-
-    built: list[dict] = []
-    clean = wp.clean_wiki_body
-
-    def counting_clean(col, **options):
-        built.append(options)
-        return clean(col, **options)
-
-    monkeypatch.setattr(wp, "clean_wiki_body", counting_clean)
-    monkeypatch.setattr(wp, "_CLEANING", type(wp._CLEANING)())
-    return built
 
 
 def test_warm_etl_builds_the_cleaning_column_once(spark, tmp_path, monkeypatch):
     """Two run_wiki_etl calls in one session build the staged cleaning
-    Column once: the second call reuses the first call's."""
-    from wiki_mysql_spark.plans.wiki_pipeline import run_wiki_etl
-
-    built = _counting_clean(monkeypatch)
-    dump = _quarantine_dump(tmp_path)
-    for run in ("first", "second"):
-        counts = run_wiki_etl(spark, dump, str(tmp_path / run))
-        assert counts == {"articles": 4, "bodies": 3, "quarantine": 2}, run
-    assert len(built) == 1, built
-
-
-def test_cleaning_memo_keys_by_context_and_options(spark, monkeypatch):
-    """The memo holds one Column per context and option set: each option
-    set is its own entry, cleans as a fresh build does, and is built once;
-    another context key builds its own, and an entry goes with its key."""
-    import gc
-
+    Column once; another option set, or another context key, builds its
+    own, which cleans as a fresh build does."""
     import wiki_mysql_spark.plans.wiki_pipeline as wp
     from wiki_mysql_spark.functions.cleaning import clean_wiki_body
 
-    built = _counting_clean(monkeypatch)
-    sc = spark.sparkContext
-    option_sets = [
-        {},
-        {"remove_html": False},
-        {"exact_templates": True},
-        {"valid_unicodes": ((0x20, 0x7E),), "invalid_unicodes": ((0x30, 0x39),)},
-    ]
+    built: list[dict] = []
+
+    def counting_clean(col, **options):
+        built.append(options)
+        return clean_wiki_body(col, **options)
+
+    monkeypatch.setattr(wp, "clean_wiki_body", counting_clean)
+    monkeypatch.setattr(wp, "_CLEANING", type(wp._CLEANING)())
+    dump = _quarantine_dump(tmp_path)
+    for run in ("first", "second"):
+        counts = wp.run_wiki_etl(spark, dump, str(tmp_path / run))
+        assert counts == {"articles": 4, "bodies": 3, "quarantine": 2}, run
+    assert len(built) == 1, built
+
     texts = spark.createDataFrame(
-        [("a &amp; b {{t|x}} [[L|link]] 12 \u00e9\u00e9",), ("{{a {b}} c}} d",),
-         ("plain 7",), (None,)],
+        [("a &amp; b {{t|x}} [[L|link]] 12 \u00e9",), ("plain 7",), (None,)],
         "text string",
     )
-    for options in option_sets:
-        memo = wp._cleaned_text(sc, **options)
-        assert wp._cleaned_text(sc, **options) is memo, options
-        fresh = clean_wiki_body(F.coalesce(F.col("text"), F.lit("")), **options)
+    sc = spark.sparkContext
+    for options in [(False, (), (), False), (True, (), (), True),
+                    (True, ((0x20, 0x7E),), ((0x30, 0x39),), False)]:
+        memo = wp._cleaned_text(sc, *options)
+        assert wp._cleaned_text(sc, *options) is memo, options
+        fresh = clean_wiki_body(
+            F.coalesce(F.col("text"), F.lit("")),
+            **dict(zip(("remove_html", "valid_unicodes", "invalid_unicodes",
+                        "exact_templates"), options)),
+        )
         got = texts.select(memo.alias("m"), fresh.alias("f")).collect()
         assert [r["m"] for r in got] == [r["f"] for r in got], options
-    assert len(built) == len(option_sets) == len(wp._CLEANING[sc])
+    assert len(built) == 4, built
 
     class Context:
-        """A stand-in context key."""
+        """A stand-in context key (the session's context is not stopped)."""
 
-    first, second = Context(), Context()
-    assert wp._cleaned_text(first) is wp._cleaned_text(first)
-    assert wp._cleaned_text(second) is not wp._cleaned_text(first)
-    assert len(built) == len(option_sets) + 2
-    del first
-    gc.collect()
-    assert set(wp._CLEANING) == {sc, second}
+    other = Context()
+    assert wp._cleaned_text(other, True, (), (), False) is not \
+        wp._cleaned_text(sc, True, (), (), False)
+    assert len(built) == 5, built
 
 
 def _gate_dump(tmp_path):
@@ -649,11 +625,10 @@ def test_wiki_plans_agree_both_sides_of_the_gate(spark, tmp_path, monkeypatch, c
     distributed (the bound at 0) — write identical articles, bodies and
     quarantine rows and schemas from run_wiki_etl under memory and disk
     materialization and limit=, and build identical build_wiki_tables
-    frames. The driver plan writes articles, bodies and quarantine from the
-    driver (quarantine under limit= is a Spark write: it unions the raw
-    parse's corrupt rows), the distributed plan writes every table with
-    Spark, so the comparison holds driver-written tables against
-    Spark-written ones.
+    frames. The driver plan writes articles and quarantine from the driver
+    (quarantine under limit= is a Spark write: it unions the raw parse's
+    corrupt rows), the distributed plan writes every table with Spark, so
+    the comparison holds driver-written tables against Spark-written ones.
     The run names its plan on stderr, and the driver plan reads
     BODY_MAX_BYTES when called."""
     import wiki_mysql_spark.plans.wiki_pipeline as wp
@@ -684,7 +659,7 @@ def test_wiki_plans_agree_both_sides_of_the_gate(spark, tmp_path, monkeypatch, c
                     spark, dump, str(out), max_redirect_depth=2, **kw
                 )
             assert f"# wiki-etl plan: {plan}" in capsys.readouterr().err
-            from_driver = {"articles", "bodies"} if plan == "driver" else set()
+            from_driver = {"articles"} if plan == "driver" else set()
             if plan == "driver" and tag != "limit":
                 from_driver.add("quarantine")
             assert {

@@ -15,20 +15,23 @@ picked by a probe of the staged frame's size:
     driver (small staged frame):
     staged ──one Arrow collect──> driver: body ids, redirect walk [A3],
         article ids, quarantine rules ──> Arrow articles / bodies /
-        quarantine ──pyarrow parquet, no Spark job──> the three sinks
+        quarantine ──pyarrow parquet, no Spark job──> articles, quarantine
+        sinks;  local bodies frame ──Spark write──> bodies sink
 
     distributed:
     staged ──dense ids──> bodies ⋈ text;  redirects ──pointer-doubling
         fixpoint [A3]──> extra article rows ──dense ids──> articles
         ──split_quarantine──> articles_ok / bodies_ok / quarantine
 
-A warm ``run_wiki_etl`` on the driver plan runs 1 Spark job: the collect,
-which computes the staged frame (a probe job runs before it only when
-plan statistics cannot size the frame). All three tables are built on
-the driver, so the driver writes them itself
-(:func:`~wiki_mysql_spark.sinks.write_arrow_parquet`). The distributed
-plan writes all three tables with Spark, and adds the id sorts, the
-fixpoint rounds and the quarantine joins.
+A warm ``run_wiki_etl`` on the driver plan runs 2 Spark jobs: the
+collect, which computes the staged frame (a probe job runs before it only
+when plan statistics cannot size the frame), and the bodies write. All
+three tables are built on the driver; the driver writes ``articles`` and
+``quarantine`` itself (:func:`~wiki_mysql_spark.sinks.write_arrow_parquet`),
+and Spark writes ``bodies`` from a local frame of the collected rows, so
+the one wide table keeps the multi-file layout of a Spark write. The
+distributed plan writes all three tables with Spark, and adds the id
+sorts, the fixpoint rounds and the quarantine joins.
 
 Differences from the reference, by design:
   * ids are deterministic (ordered by title) instead of insertion-ordered —
@@ -79,15 +82,22 @@ _COMPRESSION_EXPANSION = 4
 _CLEANING: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def _cleaned_text(context, **options) -> Column:
-    """``clean_wiki_body(coalesce(text, ''), **options)``, built once per
-    ``context`` (the session's SparkContext) and option set; ``options``
-    must be hashable."""
+def _cleaned_text(
+    context, remove_html, valid_unicodes, invalid_unicodes, exact_templates
+) -> Column:
+    """``clean_wiki_body(coalesce(text, ''), ...)``, built once per
+    ``context`` (the session's SparkContext) and option set; the unicode
+    ranges may come as lists."""
+    key = (remove_html, tuple(map(tuple, valid_unicodes)),
+           tuple(map(tuple, invalid_unicodes)), exact_templates)
     built = _CLEANING.setdefault(context, {})
-    key = tuple(sorted(options.items()))
     if key not in built:
         built[key] = clean_wiki_body(
-            F.coalesce(F.col("text"), F.lit("")), **options
+            F.coalesce(F.col("text"), F.lit("")),
+            remove_html=remove_html,
+            valid_unicodes=valid_unicodes,
+            invalid_unicodes=invalid_unicodes,
+            exact_templates=exact_templates,
         )
     return built[key]
 
@@ -193,10 +203,10 @@ def _build_wiki_frames(
     text = F.coalesce(F.col("text"), F.lit(""))  # null revision text -> ""
     cleaned = _cleaned_text(
         pages.sparkSession.sparkContext,
-        remove_html=remove_html,
-        valid_unicodes=valid_unicodes,
-        invalid_unicodes=invalid_unicodes,
-        exact_templates=exact_templates,
+        remove_html,
+        valid_unicodes,
+        invalid_unicodes,
+        exact_templates,
     )
     # eqNullSafe: corrupt rows carry null ns and must not look like pages
     is_page = F.col("ns").eqNullSafe(0)
@@ -259,9 +269,9 @@ def _driver_frames(
     by (title, aid) and the quarantine rules
     (:func:`~wiki_mysql_spark.sinks.split_quarantine_rows`) as plain
     Python. Every table is an Arrow table built by
-    :func:`~wiki_mysql_spark.sources.tables.arrow_table`, so the sinks
-    write them without a Spark job. Ties sort nulls first, like Spark's
-    ascending sort."""
+    :func:`~wiki_mysql_spark.sources.tables.arrow_table`, so no join
+    re-attaches the text. Ties sort nulls first, like Spark's ascending
+    sort."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from wiki_mysql_spark.operators.redirects import resolve_chains
@@ -475,13 +485,17 @@ def run_wiki_etl(
 
     The build runs one of two plans (:func:`_build_wiki_frames`), named on
     stderr as ``# wiki-etl plan: driver|distributed``. On the driver plan
-    (a small staged frame) a warm call runs 1 Spark job, the Arrow collect
-    of the staged frame; a staged probe job runs only when the frame's
-    size is not known from plan statistics. The driver plan builds all
-    three tables on the driver as Arrow tables, and the driver writes them
-    with :func:`~wiki_mysql_spark.sinks.write_arrow_parquet` (no Spark job;
-    the count is the table's row count). One exception: under ``limit=`` the
-    quarantine also holds the raw parse's corrupt rows, which live in
+    (a small staged frame) a warm call runs 2 Spark jobs: the Arrow collect
+    of the staged frame and the bodies write; a staged probe job runs only
+    when the frame's size is not known from plan statistics. The driver
+    plan builds all three tables on the driver as Arrow tables. The driver
+    writes ``articles`` and ``quarantine`` with
+    :func:`~wiki_mysql_spark.sinks.write_arrow_parquet` (no Spark job; the
+    count is the table's row count). ``bodies`` is always a Spark write,
+    here of its driver rows as a local frame: the wide table keeps one
+    part file per task, the layout of the distributed plan, so a lost file
+    loses a share of the bodies rather than the table. Under ``limit=``
+    the quarantine also holds the raw parse's corrupt rows, which live in
     Spark, so there it is a Spark write of the driver rows (as a local
     frame) unioned with those corrupt rows. The outputs are the same on
     either plan.
@@ -587,7 +601,7 @@ def run_wiki_etl(
 
     sinks = {
         "articles": frames.articles_ok,
-        "bodies": frames.bodies_ok,
+        "bodies": _frame(spark, frames.bodies_ok),
         "quarantine": quarantine,
     }
     counts: dict[str, int] = {}

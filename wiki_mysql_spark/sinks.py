@@ -172,23 +172,16 @@ def write_parquet(
     w.parquet(path)
 
 
-# Bytes per py4j write call of write_arrow_parquet: the serialized file
-# crosses to the JVM in pieces of this size, never as one message.
-_ARROW_WRITE_CHUNK = 1 << 20
-
-
 def write_arrow_parquet(spark, table, path: str) -> int:
     """Write a driver-side ``pyarrow.Table`` as a one-file parquet table,
     with no Spark job; returns ``table.num_rows``.
 
     The driver twin of :func:`write_parquet` for tables already built on
-    the driver (the small wiki ETL's ``articles``, ``bodies`` and
-    ``quarantine``): the same zstd parquet, serialized by
-    ``pyarrow.parquet`` into an Arrow buffer and streamed through the
-    Hadoop FileSystem of ``path`` in :data:`_ARROW_WRITE_CHUNK` pieces (so
-    hdfs:// and s3a:// outputs land where Spark's writer would put them,
-    and no Python copy or py4j message holds the whole file). The layout
-    is the one Spark's writer leaves: ``path`` is replaced (deleted first, as
+    the driver (the small wiki ETL's ``articles`` and ``quarantine``): the
+    same zstd parquet, serialized by ``pyarrow.parquet`` and written
+    through the Hadoop FileSystem of ``path`` (so hdfs:// and s3a://
+    outputs land where Spark's writer would put them). The layout is the
+    one Spark's writer leaves: ``path`` is replaced (deleted first, as
     ``mode("overwrite")`` does), the file is written under a
     ``_``-prefixed temp name that readers skip, renamed to
     ``part-00000-<uuid>-c000.zstd.parquet``, and ``_SUCCESS`` is written
@@ -209,11 +202,9 @@ def write_arrow_parquet(spark, table, path: str) -> int:
     Path = spark._jvm.org.apache.hadoop.fs.Path
     name = f"part-00000-{uuid.uuid4()}-c000.zstd.parquet"
     tmp = Path(hdir, "_" + name)
-    data = memoryview(buf.getvalue())
     out = fs.create(tmp, False)
     try:
-        for at in range(0, len(data), _ARROW_WRITE_CHUNK):
-            out.write(bytearray(data[at:at + _ARROW_WRITE_CHUNK]))
+        out.write(buf.getvalue().to_pybytes())  # bytes cross py4j as byte[]
     finally:
         out.close()
     if not fs.rename(tmp, Path(hdir, name)):
