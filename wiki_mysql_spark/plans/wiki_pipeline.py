@@ -86,10 +86,8 @@ def _cleaned_text(
     context, remove_html, valid_unicodes, invalid_unicodes, exact_templates
 ) -> Column:
     """``clean_wiki_body(coalesce(text, ''), ...)``, built once per
-    ``context`` (the session's SparkContext) and option set; the unicode
-    ranges may come as lists."""
-    key = (remove_html, tuple(map(tuple, valid_unicodes)),
-           tuple(map(tuple, invalid_unicodes)), exact_templates)
+    ``context`` (the session's SparkContext) and option set."""
+    key = (remove_html, valid_unicodes, invalid_unicodes, exact_templates)
     built = _CLEANING.setdefault(context, {})
     if key not in built:
         built[key] = clean_wiki_body(
