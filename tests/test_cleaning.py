@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from wiki_mysql_spark.functions.cleaning import (
     FILE_PASSES,
-    MARKUP_NESTED_PASSES,
     MARKUP_PASSES,
     MARKUP_PRE_PASSES,
     PROMOTE_PASSES,
@@ -111,8 +110,7 @@ def _fixed_count_strip(col, iterations: int = 3):
         + TEMPLATE_PASSES * iterations
         + TEMPLATE_TAIL_PASSES
         + FILE_PASSES
-        + MARKUP_PASSES
-        + MARKUP_NESTED_PASSES * (iterations - 1)
+        + MARKUP_PASSES * iterations
         + PROMOTE_PASSES
     )
     for kind, pat, repl in passes:
@@ -124,7 +122,7 @@ def _fixed_count_strip(col, iterations: int = 3):
 # template passes 2-3; depth 4 reaches the tail pass), and markup that
 # iteration 1 only exposes — the '[]' left by a piped link, and table
 # markers whose trailing newline a '||' -> '\n|' pass of iteration 1
-# creates (see MARKUP_NESTED_PASSES).
+# creates (see _markup_iterations).
 LATER_ITERATION_ROWS = [
     "x {{a {{b}} c}} y",
     "x {{a {{b {{c}} d}} e}} y",

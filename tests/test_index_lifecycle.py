@@ -297,3 +297,103 @@ def test_engine_layers_read_no_environment():
         for fn, line in _sites(p, _is_environment_read)
     ]
     assert not reads, f"environment reads in engine layers: {reads}"
+
+
+def test_cpu_budget_reads_one_spelling_of_the_core_count(monkeypatch):
+    """``SPARK_GRAFT_CPUS`` unset or ``*`` means every core (what
+    ``get_session``'s ``local[*]`` takes); an integer >= 1 reads as is;
+    anything else is a ValueError naming the variable."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session._cpu_budget() == (os.cpu_count() or 1)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "*")
+    assert session._cpu_budget() == (os.cpu_count() or 1)
+    for raw, want in (("1", 1), ("6", 6), ("64", 64)):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+        assert session._cpu_budget() == want, raw
+    for raw in ("0", "-2", "abc", "4k", ""):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            session._cpu_budget()
+
+
+# Top-level definitions that only tests name, each kept on purpose.
+TEST_ONLY_DEFINITIONS = {
+    # the full-parity entity decode the native one is compared against
+    "decode_html_entities_udf": "reference for the cleaning parity tests",
+    # the XML-source readers the splittable reader is compared against
+    "read_wiki_dump": "reference for the parity and chaos tests",
+    "read_wiki_dump_corrupt": "reference for the parity and chaos tests",
+    "zorder_layout": "writes the layout that layout_zorder_stats verifies",
+    "resize_images": "an operator that COVERAGE lists",
+    "compact_parquet": "an operator that COVERAGE lists",
+}
+
+
+def _named(tree: ast.AST) -> set[str]:
+    """Every name ``tree`` refers to: a ``Name``, an ``Attribute``'s
+    attribute or an imported name."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.rsplit(".", 1)[-1])
+    return names
+
+
+def _is_registered(node) -> bool:
+    """Decorated with a ``@query(...)`` registry entry."""
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in node.decorator_list
+    )
+
+
+def test_every_engine_definition_is_reached():
+    """Every top-level ``def``/``class`` under ``wiki_mysql_spark/`` is
+    named by code outside the tests: the engine itself, ``scripts/``,
+    ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``. A definition
+    naming itself does not count, nor does a package ``__init__``'s
+    re-export; a registered query entry is reached through the registry.
+    The only exceptions are :data:`TEST_ONLY_DEFINITIONS`."""
+    package = OPERATORS.parent
+    repo = package.parent
+    files = [
+        *sorted(package.rglob("*.py")),
+        *sorted((repo / "scripts").glob("*.py")),
+        *[p for p in sorted((repo / "perfbench").rglob("*.py"))
+          if "tests" not in p.relative_to(repo).parts],
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    defined = []  # (file, name) of each unregistered engine definition
+    named = []  # (file, enclosing definition or None, names it refers to)
+    for path in files:
+        in_engine = package in path.parents
+        for node in ast.parse(path.read_text(), str(path)).body:
+            own = None
+            if in_engine and isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                own = node.name
+                if not _is_registered(node):
+                    defined.append((path, own))
+            reexport = path.name == "__init__.py" and isinstance(
+                node, (ast.Import, ast.ImportFrom)
+            )
+            named.append((path, own, set() if reexport else _named(node)))
+    assert len(defined) > 100
+    unreached = sorted(
+        name
+        for path, name in defined
+        if not any(
+            name in names and (where, own) != (path, name)
+            for where, own, names in named
+        )
+    )
+    assert unreached == sorted(TEST_ONLY_DEFINITIONS), (
+        f"reached by no entry point: {sorted(set(unreached) - set(TEST_ONLY_DEFINITIONS))}; "
+        f"allowed but now reached or gone: {sorted(set(TEST_ONLY_DEFINITIONS) - set(unreached))}"
+    )

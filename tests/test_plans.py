@@ -1468,26 +1468,26 @@ def test_ivfpq_publish_composition_prunes_partitions(spark, tmp_path):
 
 
 def test_index_autocompact_policy_all_families(spark, tmp_path):
-    """The threshold-gated compaction policy (`index_autocompact` and its
-    family wrappers): below the per-partition file-count threshold the
+    """The threshold-gated compaction policy (`index_autocompact`): below the per-partition file-count threshold the
     call is a pure read (pointer untouched, nothing deleted); at the
     threshold it compacts to the new root, swaps the pointer and retires
     the old generation in one move, and a query through the pointer still
-    answers. Covers the LSH and IVFADC wrappers (the minhash wrapper is
-    driven end to end by the `minhash_index_autocompact` registry entry
-    and the loop bench)."""
+    answers. Covers the LSH (`buckets`) and IVFADC (`codes`) layouts (the
+    minhash wrapper is driven end to end by the `minhash_index_autocompact`
+    registry entry and the loop bench)."""
     from pyspark.sql import functions as F
 
     from wiki_mysql_spark.operators.similarity import (
+        index_autocompact,
         index_current,
         index_publish,
         ivfpq_index_append,
-        ivfpq_index_autocompact,
         ivfpq_index_build,
+        ivfpq_index_compact,
         ivfpq_index_query,
         lsh_index_append,
-        lsh_index_autocompact,
         lsh_index_build,
+        lsh_index_compact,
         lsh_index_query,
     )
 
@@ -1502,17 +1502,17 @@ def test_index_autocompact_policy_all_families(spark, tmp_path):
     lsh_index_append(odd, root)
     pointer = str(tmp_path / "lsh_current.json")
     index_publish(spark, pointer, root)
-    rep = lsh_index_autocompact(
-        spark, pointer, str(tmp_path / "lsh_gen1"),
-        max_files_per_partition=3,
+    rep = index_autocompact(
+        spark, pointer, str(tmp_path / "lsh_gen1"), compact=lsh_index_compact,
+        subdir="buckets", max_files_per_partition=3,
     )
     assert not rep["compacted"] and index_current(spark, pointer) == root
     want = sorted(map(tuple, lsh_index_query(
         spark, root, q, k=5, probe_bits=1
     ).collect()))
-    rep = lsh_index_autocompact(
-        spark, pointer, str(tmp_path / "lsh_gen1"),
-        max_files_per_partition=2,
+    rep = index_autocompact(
+        spark, pointer, str(tmp_path / "lsh_gen1"), compact=lsh_index_compact,
+        subdir="buckets", max_files_per_partition=2,
     )
     assert rep["compacted"] and rep["retired"] == [root]
     assert rep["stats_after"]["max_files"] < rep["stats_before"]["max_files"]
@@ -1531,9 +1531,9 @@ def test_index_autocompact_policy_all_families(spark, tmp_path):
     want = sorted(map(tuple, ivfpq_index_query(
         spark, root, q, k=5, n_probe=2
     ).collect()))
-    rep = ivfpq_index_autocompact(
-        spark, pointer, str(tmp_path / "pq_gen1"),
-        max_files_per_partition=2,
+    rep = index_autocompact(
+        spark, pointer, str(tmp_path / "pq_gen1"), compact=ivfpq_index_compact,
+        subdir="codes", max_files_per_partition=2,
     )
     assert rep["compacted"] and rep["retired"] == [root]
     got = sorted(map(tuple, ivfpq_index_query(

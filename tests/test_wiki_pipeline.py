@@ -165,28 +165,29 @@ def test_etl_disk_materialization_identical(spark, tmp_path, monkeypatch, capsys
     assert outs["memory"] == outs["disk"]
 
 
-def test_fetch_stage_roundtrip(tmp_path):
-    from wiki_mysql_spark.sources.fetch import (
-        check_dump_url,
-        cleanup_dump,
-        download_dump,
-    )
+def test_dump_sizing_reads_uris_and_globs(spark, tmp_path, monkeypatch, capsys):
+    """The dump is sized as Spark reads it: a directory, its ``file://``
+    URI and a glob over its shards give the same bytes, and a path that
+    matches nothing gives 0. With the heap bound at 0, a ``file://`` dump
+    therefore takes the disk materialization."""
+    import bz2
 
-    p = tmp_path / "x.xml.bz2"
-    p.write_bytes(b"data")
-    # file:// and bare paths short-circuit, never deleted (dbfy.py:88-91,100-102)
-    path, rm = download_dump(f"file://{p}")
-    assert path == str(p) and rm is False
-    cleanup_dump(path, rm)
-    assert p.exists()
-    assert download_dump(str(p)) == (str(p), False)
-    assert check_dump_url("https://dumps.wikimedia.org/enwiki-pages.xml.bz2")
-    assert not check_dump_url("ftp://x/y.xml.bz2")
-    assert not check_dump_url("https://x/y.zip")
-    import pytest as _pytest
+    import wiki_mysql_spark.plans.wiki_pipeline as wp
 
-    with _pytest.raises(FileNotFoundError):
-        download_dump("/nonexistent/dump.xml")
+    shards = tmp_path / "dump"
+    shards.mkdir()
+    for i in range(4):
+        (shards / f"part-{i}.xml.bz2").write_bytes(bz2.compress(WIKI_XML.encode()))
+    want = sum(p.stat().st_size for p in shards.iterdir())
+    for path in (str(shards), shards.as_uri(), f"{shards}/*.bz2"):
+        assert wp._dump_bytes(spark, path) == want, path
+    assert wp._dump_bytes(spark, str(tmp_path / "missing.xml.bz2")) == 0
+
+    monkeypatch.setattr(wp, "_MAT_HEAP_FRACTION", 0)
+    dump = tmp_path / "d.xml.bz2"
+    dump.write_bytes(bz2.compress(WIKI_XML.encode()))
+    wp.run_wiki_etl(spark, dump.as_uri(), str(tmp_path / "out"))
+    assert "# wiki-etl materialize: disk" in capsys.readouterr().err
 
 
 def test_cli_flag_parity_limit_and_unicode(spark, tmp_path):
@@ -471,41 +472,49 @@ def test_warm_etl_job_budget_and_no_read_back(spark, tmp_path, monkeypatch):
     """A warm run_wiki_etl stays within its job budget, and no job is
     submitted after the last sink write returns, whichever sink (Spark's
     or the driver's) wrote it: the counts come from the writes, not from
-    reading the outputs back."""
+    reading the outputs back. The budget is 2 jobs on the driver plan:
+    one Arrow collect of the staged frame and the bodies write (articles
+    and quarantine are written from the driver), on this fixture and on
+    the 3000-page, 4-shard benchmark dump. ``limit=`` adds one job for
+    the raw parse it materializes before its exact-n limit."""
     from wiki_mysql_spark import sinks
     from wiki_mysql_spark.plans.wiki_pipeline import run_wiki_etl
 
     dump = _quarantine_dump(tmp_path)
-    run_wiki_etl(spark, dump, str(tmp_path / "cold"))
-
     sc = spark.sparkContext
-    group = "test-warm-etl-job-budget"
-    # the group's job ids as each sink write returns
+    # the current group's job ids as each sink write returns
     after_writes: list[list[int]] = []
 
     def recording(write):
         def recording_write(*args, **kw):
             written = write(*args, **kw)
-            after_writes.append(sc.statusTracker().getJobIdsForGroup(group))
+            group = sc.getLocalProperty("spark.jobGroup.id")
+            if group is not None:
+                after_writes.append(sc.statusTracker().getJobIdsForGroup(group))
             return written
 
         return recording_write
 
     for name in ("write_parquet", "write_arrow_parquet"):
         monkeypatch.setattr(sinks, name, recording(getattr(sinks, name)))
-    sc.setJobGroup(group, group)
-    try:
-        counts = run_wiki_etl(spark, dump, str(tmp_path / "warm"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert counts == {"articles": 4, "bodies": 3, "quarantine": 2}
-    # the driver plan: one Arrow collect of the staged frame and the
-    # bodies write (articles and quarantine are written from the driver) —
-    # 2 jobs on this fixture and on the 3000-page, 4-shard benchmark dump
-    assert len(jobs) <= 2, sorted(jobs)
-    assert len(after_writes) == 3 and sorted(jobs) == sorted(after_writes[-1])
+    for limit, budget in ((None, 2), (3, 3)):
+        run_wiki_etl(spark, dump, str(tmp_path / f"cold_{limit}"), limit=limit)
+        group = f"test-warm-etl-job-budget-{limit}"
+        after_writes.clear()
+        sc.setJobGroup(group, group)
+        try:
+            counts = run_wiki_etl(
+                spark, dump, str(tmp_path / f"warm_{limit}"), limit=limit
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        if limit is None:
+            assert counts == {"articles": 4, "bodies": 3, "quarantine": 2}
+        assert len(jobs) <= budget, (limit, sorted(jobs))
+        assert len(after_writes) == 3, (limit, after_writes)
+        assert sorted(jobs) == sorted(after_writes[-1]), limit
 
 
 def test_warm_etl_builds_the_cleaning_column_once(spark, tmp_path, monkeypatch):
@@ -626,9 +635,10 @@ def test_wiki_plans_agree_both_sides_of_the_gate(spark, tmp_path, monkeypatch, c
     quarantine rows and schemas from run_wiki_etl under memory and disk
     materialization and limit=, and build identical build_wiki_tables
     frames. The driver plan writes articles and quarantine from the driver
-    (quarantine under limit= is a Spark write: it unions the raw parse's
-    corrupt rows), the distributed plan writes every table with Spark, so
-    the comparison holds driver-written tables against Spark-written ones.
+    (under limit= too: the raw parse's corrupt rows reach the quarantine
+    through the staged frame), the distributed plan writes every table
+    with Spark, so the comparison holds driver-written tables against
+    Spark-written ones.
     The run names its plan on stderr, and the driver plan reads
     BODY_MAX_BYTES when called."""
     import wiki_mysql_spark.plans.wiki_pipeline as wp
@@ -659,9 +669,7 @@ def test_wiki_plans_agree_both_sides_of_the_gate(spark, tmp_path, monkeypatch, c
                     spark, dump, str(out), max_redirect_depth=2, **kw
                 )
             assert f"# wiki-etl plan: {plan}" in capsys.readouterr().err
-            from_driver = {"articles"} if plan == "driver" else set()
-            if plan == "driver" and tag != "limit":
-                from_driver.add("quarantine")
+            from_driver = {"articles", "quarantine"} if plan == "driver" else set()
             assert {
                 name: _writer(out / name)
                 for name in ("articles", "bodies", "quarantine")

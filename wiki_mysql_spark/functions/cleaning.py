@@ -266,18 +266,6 @@ _NESTED_TRIGGERS = (
     "bgcolor", "colspan", "rowspan", "style=", "class=", "align=", "scope=",
 )
 
-# Iterations 2..n run the FULL pass list — gensim's exact loop semantics.
-# An earlier optimization ran only the nesting passes (links/tags) here,
-# on the argument that table markup revealed by a removal is consumed in
-# the same iteration; the counterexample is table markers whose REQUIRED
-# trailing newline is only CREATED by a later literal pass ('||' -> '\n|')
-# of the same iteration — gensim's next iteration then strips them, the
-# reduced list never did (adversarial table-token fuzz: 30/400 diffs).
-# Full repetition measured +5% on the sf0.1 documents cleaning pass
-# (0.55s -> 0.58s): the table regexes are cheap scans on real text, so
-# exact parity wins. Fuzz after this change: 0 diffs / 602.
-MARKUP_NESTED_PASSES: list[tuple[str, str, str]] = list(MARKUP_PASSES)
-
 # gensim promote_remaining
 PROMOTE_PASSES: list[tuple[str, str, str]] = [
     ("lit", "[", ""),
@@ -332,14 +320,26 @@ def _markup_iterations(col: Column, rounds: int) -> Column:
     """Markup iterations 2..``rounds + 1`` over ``col``. Each runs only
     where its input holds one of :data:`_NESTED_TRIGGERS`, and the next
     one is nested inside it: an input without a trigger comes out of an
-    iteration unchanged, so every later iteration would skip it too."""
+    iteration unchanged, so every later iteration would skip it too.
+
+    Each iteration runs the FULL :data:`MARKUP_PASSES` list — gensim's
+    exact loop semantics. An earlier optimization ran only the nesting
+    passes (links/tags) here, on the argument that table markup revealed
+    by a removal is consumed in the same iteration; the counterexample is
+    table markers whose REQUIRED trailing newline is only CREATED by a
+    later literal pass ('||' -> '\\n|') of the same iteration — gensim's
+    next iteration then strips them, the reduced list never did
+    (adversarial table-token fuzz: 30/400 diffs). Full repetition measured
+    +5% on the sf0.1 documents cleaning pass (0.55s -> 0.58s): the table
+    regexes are cheap scans on real text, so exact parity wins. Fuzz after
+    that change: 0 diffs / 602."""
     if rounds <= 0:
         return col
     return _let(
         col,
         lambda x: F.when(
             _holds_any(x, _NESTED_TRIGGERS),
-            _markup_iterations(_passes(x, MARKUP_NESTED_PASSES), rounds - 1),
+            _markup_iterations(_passes(x, MARKUP_PASSES), rounds - 1),
         ).otherwise(x),
     )
 
@@ -470,7 +470,7 @@ def cleaning_chain_duckdb_sql(
     for kind, pat, repl in MARKUP_PASSES:
         e = one(e, kind, pat, repl)
     for _ in range(markup_iterations - 1):
-        for kind, pat, repl in MARKUP_NESTED_PASSES:
+        for kind, pat, repl in MARKUP_PASSES:
             e = one(e, kind, pat, repl)
     for kind, pat, repl in PROMOTE_PASSES:
         e = one(e, kind, pat, repl)

@@ -59,14 +59,6 @@ def shingles_of(ws: Column, n: int = 3) -> Column:
     )
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as strings (space-joined), for Jaccard/MinHash.
-
-    Convenience form; in hot paths prefer tokenizing into a real column once
-    and calling ``shingles_of`` (see its docstring for why)."""
-    return shingles_of(words(text), n)
-
-
 def token_count(text: Column) -> Column:
     """BPE-ish token count via regexp (SURVEY/north-star token counting)."""
     return F.regexp_count(text, F.lit(TOKEN_PATTERN)).cast("long")

@@ -67,7 +67,7 @@ def might_contain(col: Column, bloom_words: list[int], *, n_bits: int = 1 << 16,
     # ONE parsed SQL literal for the word array: PySpark's lit(list) builds
     # array(*[lit(x) ...]) — one py4j round trip per element, ~1s of pure
     # driver chatter for the default 1024-word filter at every probe call
-    # site (the same pathology as similarity._lit_vec, measured there at
+    # site (the pathology similarity._sql_vec avoids, measured there at
     # 1.7-3.7s for centroid forests). The parsed Catalyst tree is the
     # identical CreateArray-of-Literal, so plans and results are unchanged.
     arr = F.expr(

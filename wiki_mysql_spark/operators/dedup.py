@@ -76,45 +76,6 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document minhash signature (doc_id, mh0..mh{k-1}).
-
-    Formulated as explode -> hash-once -> groupBy with k min() aggregates:
-    the md5 of each shingle is computed exactly once (array-lambda variants
-    re-evaluate the hash per minhash function — 16x the hashing), and the
-    mins combine map-side, so the shuffle carries one row per (doc,
-    partition) not one per shingle. Docs with no shingles (<3 words) get the
-    sentinel signature (HASH_PRIME everywhere), which can never collide with
-    a real signature since all real values are < HASH_PRIME.
-    """
-    base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    # tokenize into a real column first — inlining words() into the shingle
-    # lambda re-tokenizes per shingle (see shingles_of)
-    hashed = (
-        base.select("doc_id", words(F.col("text")).alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(shingles_of(F.col("ws"), 3))).alias("s"),
-        )
-        .select("doc_id", (hash64(F.col("s")) % HASH_PRIME).alias("h"))
-    )
-    sig = hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % HASH_PRIME).alias(f"mh{i}")
-            for i, (a, b) in enumerate(MINHASH_PARAMS)
-        ]
-    )
-    sentinel = [
-        F.coalesce(f"mh{i}", F.lit(HASH_PRIME).cast("long")).alias(f"mh{i}")
-        for i in range(len(MINHASH_PARAMS))
-    ]
-    return (
-        base.select("doc_id").join(sig, "doc_id", "left").select("doc_id", *sentinel)
-    )
-
-
 def _minhash_shingles_and_bands(base: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The shared front half of every minhash path: the distinct-shingle
     sets (doc_id, sh) and the banded signature rows (doc_id, band, v0, v1)
@@ -545,9 +506,8 @@ def simhash_signatures(
     """Per-document SimHash (doc_id, sh): bit j set iff more than half the
     words have bit j set in their hash.
 
-    Same explode -> hash-once -> groupBy shape as minhash_signatures: one md5
-    per word occurrence, 32 conditional-count aggregates that combine
-    map-side. Wordless docs get signature 0 (matching the sign-sum
+    Formulated as explode -> hash-once -> groupBy: one md5 per word
+    occurrence, 32 conditional-count aggregates that combine map-side. Wordless docs get signature 0 (matching the sign-sum
     definition, where every bit-count is 0)."""
     base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     hashed = base.select(

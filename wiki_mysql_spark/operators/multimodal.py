@@ -372,14 +372,6 @@ def decode_wav(payload: bytes) -> tuple[int, int, "np.ndarray"]:
     return rate, ch, samples.reshape(-1, ch)
 
 
-def audio_features(payload: bytes) -> tuple[int, int, int, float]:
-    """(sample_rate, channels, n_frames, rms) from a real WAV decode."""
-    rate, ch, samples = decode_wav(payload)
-    x = samples.astype(np.float64)
-    rms = float(np.sqrt(np.mean(x * x))) if samples.size else 0.0
-    return rate, ch, samples.shape[0], rms
-
-
 # ---------------------------------------------------------------------------
 # real codec: baseline sequential JPEG (ITU-T T.81 / ISO 10918-1 — the spec
 # is public). Pure numpy + stdlib, same posture as the PNG codec above:

@@ -84,7 +84,7 @@ def _sql_double(x: float) -> str:
     intent): the old per-element ``F.lit`` spelling silently folded
     non-finite plane/centroid components into null buckets or bucket 0,
     which silently degrades recall corpus-wide. Every caller
-    (:func:`lsh_signature` planes, :func:`_lit_vec`/:func:`_lit_centers`/
+    (:func:`lsh_signature` planes, :func:`_lit_centers`/
     :func:`_lit_center_map` centroids and PQ books) receives TRAINED or
     seeded parameters, for which a non-finite component is always an
     upstream corruption bug — fail loudly at plan build, not silently at
@@ -97,21 +97,15 @@ def _sql_double(x: float) -> str:
 
 
 def _sql_vec(vals: list[float]) -> str:
-    return "array(" + ",".join(_sql_double(x) for x in vals) + ")"
-
-
-def _lit_vec(vals: list[float]) -> F.Column:
-    """Literal ``array<double>`` built by parsing ONE rendered SQL
-    expression instead of composing dim ``F.lit`` calls: each ``F.lit`` /
-    ``F.array`` is a py4j round trip, and the per-call forests this module
-    builds (planes, coarse centroids, PQ books — hundreds of vectors per
-    query) measured 1.7-3.7s of pure driver py4j chatter per call site at
-    64-dim/16-center shapes, vs ~10ms for the parsed spelling. The parsed
-    Catalyst tree is the same CreateArray-of-Literal node, so plans,
+    """SQL text of a literal ``array<double>``, for callers to parse with
+    ONE ``F.expr`` instead of composing dim ``F.lit`` calls: each ``F.lit``
+    / ``F.array`` is a py4j round trip, and the per-call forests this
+    module builds (planes, coarse centroids, PQ books — hundreds of vectors
+    per query) measured 1.7-3.7s of pure driver py4j chatter per call site
+    at 64-dim/16-center shapes, vs ~10ms for the parsed spelling. The
+    parsed Catalyst tree is the same CreateArray-of-Literal node, so plans,
     codegen and results are unchanged (oracle-verified)."""
-    if not vals:
-        return F.array()
-    return F.expr(_sql_vec(vals))
+    return "array(" + ",".join(_sql_double(x) for x in vals) + ")"
 
 
 def _lit_centers(centers: list[tuple[int, list[float]]]) -> F.Column:
@@ -122,7 +116,7 @@ def _lit_centers(centers: list[tuple[int, list[float]]]) -> F.Column:
     per-centroid unrolled spelling built — at m=8 subspaces x k'=16 codes
     the unrolled PQ training plan spent ~9 s in analysis/codegen on a
     2k-row fixture (r7 measurement) for math that runs in under a second.
-    Rendered as ONE parsed SQL expression (see :func:`_lit_vec` — the
+    Rendered as ONE parsed SQL expression (see :func:`_sql_vec` — the
     composed spelling was thousands of py4j round trips per call). The
     per-element FP op sequence is IDENTICAL (same fold, same rounding),
     so every oracle replay is unaffected."""
@@ -141,7 +135,7 @@ def _lit_centers(centers: list[tuple[int, list[float]]]) -> F.Column:
 def _lit_center_map(centers: list[tuple[int, list[float]]]) -> F.Column:
     """Literal ``map<long, array<double>>`` of cid -> centroid, rendered
     as ONE parsed SQL expression (same py4j-chatter rationale as
-    :func:`_lit_vec`; the composed ``F.create_map`` spelling of a 16x64
+    :func:`_sql_vec`; the composed ``F.create_map`` spelling of a 16x64
     coarse map measured ~1.8s per call)."""
     return F.expr(
         "map("
@@ -631,7 +625,7 @@ def lsh_signature(vec: F.Column, planes: list[list[float]]) -> F.Column:
     the r8 ivfpq fix removed — measured ~2.8 s of the sf0.01 index build
     before this form). Bit semantics unchanged: dot > 0 strictly sets the
     bit; a null/mismatched vector nulls every dot and folds to bucket 0."""
-    # ONE parsed SQL literal for the whole planes array (see _lit_vec):
+    # ONE parsed SQL literal for the whole planes array (see _sql_vec):
     # the composed per-lit spelling was ~n_planes*dim py4j round trips
     # (~1s per signature site at 8x64) for the identical Catalyst tree.
     P = F.expr("array(" + ",".join(_sql_vec(p) for p in planes) + ")")
@@ -1521,26 +1515,6 @@ def index_autocompact(
         "stats_after": index_file_stats(spark, new_root, subdir=subdir),
         "retired": retired,
     }
-
-
-def lsh_index_autocompact(
-    spark, pointer: str, new_root: str, *, max_files_per_partition: int = 8,
-) -> dict:
-    """:func:`index_autocompact` for the LSH family (buckets layout)."""
-    return index_autocompact(
-        spark, pointer, new_root, compact=lsh_index_compact,
-        subdir="buckets", max_files_per_partition=max_files_per_partition,
-    )
-
-
-def ivfpq_index_autocompact(
-    spark, pointer: str, new_root: str, *, max_files_per_partition: int = 8,
-) -> dict:
-    """:func:`index_autocompact` for the IVFADC family (codes layout)."""
-    return index_autocompact(
-        spark, pointer, new_root, compact=ivfpq_index_compact,
-        subdir="codes", max_files_per_partition=max_files_per_partition,
-    )
 
 
 def lsh_index_query(

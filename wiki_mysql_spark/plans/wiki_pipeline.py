@@ -42,7 +42,6 @@ Differences from the reference, by design:
 
 from __future__ import annotations
 
-import os
 import sys
 import weakref
 from collections.abc import Callable
@@ -426,16 +425,17 @@ def parse_unichr_range(txt: str) -> tuple[int, int]:
     return as_int(lo), as_int(hi)
 
 
-def _dump_bytes(dump_path: str) -> int:
-    if os.path.isdir(dump_path):
-        return sum(
-            os.path.getsize(os.path.join(dump_path, f))
-            for f in os.listdir(dump_path)
-        )
-    try:
-        return os.path.getsize(dump_path)
-    except OSError:
-        return 0
+def _dump_bytes(spark, dump_path: str) -> int:
+    """On-disk bytes of the dump as Spark will read it: a file, a
+    directory, a glob, on any Hadoop FileSystem (local, ``file://``,
+    ``hdfs://``, ``s3a://``). A path that matches nothing sizes as 0."""
+    from wiki_mysql_spark.session import hadoop_fs
+
+    fs, hpath = hadoop_fs(spark, dump_path)
+    return sum(
+        fs.getContentSummary(st.getPath()).getLength()
+        for st in fs.globStatus(hpath) or []
+    )
 
 
 # bz2-compressed wiki text expands ~6-8x; the pipeline holds ONE full-text
@@ -473,7 +473,12 @@ def run_wiki_etl(
 
     ``limit`` caps the number of pages processed — exact-n ``df.limit``
     semantics (the reference's ``--limit`` was off-by-chunk between its
-    1-proc and MP paths; SURVEY documents choosing exact-n).
+    1-proc and MP paths; SURVEY documents choosing exact-n). The corrupt
+    captures are not capped: the first ``limit`` pages and every corrupt
+    record are staged together, the same shape a run without ``limit``
+    stages, and take the same plans and sinks. A ``limit=`` run first
+    materializes the raw parse, so a warm call on the driver plan runs one
+    job more than a run without it.
 
     The dump is parsed by the text-source/``from_xml`` reader, which
     splits WITHIN bz2 files (the XML source reads one task per file — a
@@ -492,11 +497,8 @@ def run_wiki_etl(
     count is the table's row count). ``bodies`` is always a Spark write,
     here of its driver rows as a local frame: the wide table keeps one
     part file per task, the layout of the distributed plan, so a lost file
-    loses a share of the bodies rather than the table. Under ``limit=``
-    the quarantine also holds the raw parse's corrupt rows, which live in
-    Spark, so there it is a Spark write of the driver rows (as a local
-    frame) unioned with those corrupt rows. The outputs are the same on
-    either plan.
+    loses a share of the bodies rather than the table. The outputs are the
+    same on either plan.
 
     ``progress=True`` reports live task progress to stderr while the ETL
     runs — the reference's tqdm bars (``dbfy.py:158,191,231``), Spark-native
@@ -532,7 +534,7 @@ def run_wiki_etl(
         read_wiki_dump_raw_splittable,
     )
 
-    est = _dump_bytes(dump_path) * _MAT_EXPANSION
+    est = _dump_bytes(spark, dump_path) * _MAT_EXPANSION
     mode = "disk" if est > _MAT_HEAP_FRACTION * jvm_max_heap(spark) else "memory"
     print(f"# wiki-etl materialize: {mode}", file=sys.stderr)
     mat_paths: list[str] = []
@@ -570,13 +572,15 @@ def run_wiki_etl(
     raw = read_wiki_dump_raw_splittable(spark, dump_path)
     if limit is not None:
         # exact-n limit must count ns-0 PAGES only, which needs the page
-        # and corrupt branches separated before staging — so a sampling
-        # run materializes the raw parse first (the pre-r8 shape: one
-        # tokenize shared by both branches). Production runs (no limit)
-        # take the fused single-write path below.
+        # and corrupt branches separated before the limit — so a sampling
+        # run materializes the raw parse first (one tokenize shared by
+        # both branches), then rejoins the branches into the staging shape
+        # below: every corrupt capture reaches the staged frame, and so
+        # the quarantine, on both plans.
         raw = mat(raw, "raw")
-        src = project_pages(raw).limit(limit)
-        corrupt_src = project_corrupt(raw)
+        src = project_pages(raw).limit(limit).unionByName(
+            project_corrupt(raw), allowMissingColumns=True
+        )
     else:
         # production path: ONE conditional projection carries ns-0 pages
         # AND corrupt captures into the staged materialization inside
@@ -585,22 +589,13 @@ def run_wiki_etl(
         # the pre-r8 raw+numbered double write was the measured IO
         # amplification behind the 24M-page throughput dip)
         src = project_pages_with_corrupt(raw)
-        corrupt_src = None
     frames = _build_wiki_frames(src, materializer=mat, **build_kwargs)
     print(f"# wiki-etl plan: {frames.plan}", file=sys.stderr)
-    quarantine = frames.quarantine
-    if corrupt_src is not None:
-        # structurally-corrupt page records join the quarantine audit (the
-        # reference silently drops erroring pages, dbfy.py:142-143); folded
-        # into the quarantine WRITE's lineage, so no extra job materializes
-        quarantine = _frame(spark, quarantine).unionByName(
-            _corrupt_rows(corrupt_src)
-        )
 
     sinks = {
         "articles": frames.articles_ok,
         "bodies": _frame(spark, frames.bodies_ok),
-        "quarantine": quarantine,
+        "quarantine": frames.quarantine,
     }
     counts: dict[str, int] = {}
     observed: dict[str, Observation] = {}

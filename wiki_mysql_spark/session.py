@@ -70,10 +70,13 @@ RUNTIME_CONFS["spark.sql.sources.parallelPartitionDiscovery.threshold"] = str(
 
 
 def _cpu_budget() -> int:
-    try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    except ValueError:  # e.g. SPARK_GRAFT_CPUS="*"
-        return os.cpu_count() or 32
+    """The local core count ``SPARK_GRAFT_CPUS`` asks for: unset or ``*``
+    means every core (``os.cpu_count()``, what :func:`get_session`'s
+    ``local[*]`` takes), otherwise an integer >= 1; any other value raises
+    a ValueError naming the variable, as :func:`env_int` does."""
+    if os.environ.get("SPARK_GRAFT_CPUS", "*") == "*":
+        return os.cpu_count() or 1
+    return env_int("SPARK_GRAFT_CPUS", 1, lo=1)
 
 
 # Two parallelism knobs with different consumers:

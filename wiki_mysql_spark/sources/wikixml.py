@@ -63,8 +63,8 @@ def read_wiki_dump_raw(spark: SparkSession, path: str) -> DataFrame:
     off this. Its users are the standalone readers :func:`read_wiki_dump`
     and :func:`read_wiki_dump_corrupt`, and the splittable source's parity
     test (``tests/test_splittable_source.py``). ``run_wiki_etl`` does not
-    use it: it reads through :func:`read_wiki_dump_raw_splittable` on both
-    of its paths."""
+    use it: it reads through :func:`read_wiki_dump_raw_splittable`, with
+    or without ``limit``."""
     return (
         spark.read.format("xml")
         .option("rowTag", "page")
